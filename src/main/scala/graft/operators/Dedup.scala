@@ -199,11 +199,7 @@ object Dedup {
       .agg(sort_array(collect_list(struct(col("doc_id"), col("n_sh"))))
         .as("ds"))
       .filter(col("h").isNotNull && size(col("ds")) >= 2)
-    postings
-      .select(col("ds"), posexplode(col("ds")).as(Seq("i", "a")))
-      .select(col("a"),
-        explode(slice(col("ds"), col("i") + lit(2),
-          greatest(size(col("ds")) - col("i") - lit(1), lit(0)))).as("b"))
+    Relational.suffixPairs(postings, "ds", "a", "b")
       .filter(col("a.doc_id") =!= col("b.doc_id") &&
         col("a.n_sh") * lit(JaccardThreshold) <= col("b.n_sh") &&
         col("b.n_sh") * lit(JaccardThreshold) <= col("a.n_sh"))

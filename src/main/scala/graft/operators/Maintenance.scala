@@ -1587,24 +1587,6 @@ object Maintenance {
   // q_log_merge / q_log_delete — row-level MERGE and DELETE on the log
   // ---------------------------------------------------------------------
 
-  /** MERGE INTO the log — the LWW key-match upsert ([[Relational
-    * .upsertLww]]'s semantics) as a ROW-LEVEL table-format operation.
-    * The full machinery (catalog-prune → semi-join touch detection →
-    * anti-join rewrite → one zero-rename remove+add commit) lives with
-    * the connector in [[graft.sources.GraftLogOps]], where the SQL
-    * DELETE surface shares it.
-    */
-  private[graft] def mergeIntoLog(s: SparkSession, root: String,
-      source: DataFrame, keys: Seq[String]): Int =
-    graft.sources.GraftLogOps.mergeIntoLog(s, root, source, keys)
-
-  /** Row-level DELETE on the log (SQL NULL semantics; no-match =
-    * no-op) — see [[graft.sources.GraftLogOps.deleteFromLog]].
-    */
-  private[graft] def deleteFromLog(s: SparkSession, root: String,
-      cond: Column): Int =
-    graft.sources.GraftLogOps.deleteFromLog(s, root, cond)
-
   /** Lays down (once per JVM) the MERGE fixture: v1 = orders keyed by
     * o_orderkey, Hive-partitioned on bucket = key mod 8 (so per-file
     * manifest statistics carry min=max=bucket); then ONE merge whose
@@ -1632,7 +1614,8 @@ object Maintenance {
         .unionByName(upd.select((-col("o_orderkey")).as("o_orderkey"),
           pmod(-col("o_orderkey"), lit(8L)).as("bucket"),
           col("o_totalprice")))
-      mergeIntoLog(s, root, source, Seq("o_orderkey"))
+      graft.sources.GraftLogOps.mergeIntoLog(s, root, source,
+        Seq("o_orderkey"))
     }
     root
   }
@@ -2501,7 +2484,8 @@ object Maintenance {
         .option("schema",
           "o_orderkey BIGINT, bucket BIGINT, o_totalprice DOUBLE")
         .option("partitionBy", "bucket").mode("append").save()
-      deleteFromLog(s, root, col("o_orderkey") % 16 === 3)
+      graft.sources.GraftLogOps.deleteFromLog(s, root,
+        col("o_orderkey") % 16 === 3)
     }
     root
   }

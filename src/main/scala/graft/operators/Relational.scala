@@ -953,6 +953,21 @@ object Relational {
 
   val AssocTopK = 100
 
+  /** The in-row pair generator: for each element `a` of the array
+    * column `arr`, one row (a, b) per element `b` of a's strict suffix
+    * — every unordered pair once, ordered as in the array (a sorted
+    * array yields a < b). Two chained codegen'd Generates (posexplode +
+    * explode over the element's strict suffix) rather than one nested
+    * transform/flatten/struct pipeline — higher-order functions run
+    * interpreted per row, generators run in whole-stage codegen.
+    */
+  private[operators] def suffixPairs(df: DataFrame, arr: String,
+      a: String, b: String): DataFrame =
+    df.select(col(arr), posexplode(col(arr)).as(Seq("i", a)))
+      .select(col(a),
+        explode(slice(col(arr), col("i") + lit(2),
+          greatest(size(col(arr)) - col("i") - lit(1), lit(0)))).as(b))
+
   /** Market-basket association mining: part pairs co-purchased in ≥
     * [[AssocMinSupport]] orders, with EXACT ppm confidences both ways and
     * lift as an exact rational — the classic support/confidence/lift
@@ -985,17 +1000,7 @@ object Relational {
     val sup = orderParts.select(explode(col("parts")).as("l_partkey"))
       .groupBy(col("l_partkey"))
       .agg(count(lit(1)).as("sup"))
-    // two chained codegen'd Generates (posexplode + explode over the
-    // element's strict suffix) rather than one nested
-    // transform/flatten/struct pipeline — higher-order functions run
-    // interpreted per row, generators run in whole-stage codegen
-    val pairs = orderParts
-      .select(col("parts"), posexplode(col("parts")).as(Seq("i", "p1")))
-      .select(col("p1"),
-        explode(slice(col("parts"), col("i") + lit(2),
-          greatest(size(col("parts")) - col("i") - lit(1), lit(0))))
-          .as("p2"))
-    pairs
+    suffixPairs(orderParts, "parts", "p1", "p2")
       .groupBy(col("p1"), col("p2"))
       .agg(count(lit(1)).as("sup_ab"))
       .filter(col("sup_ab") >= AssocMinSupport)

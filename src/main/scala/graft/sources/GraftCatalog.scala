@@ -207,9 +207,7 @@ class GraftCatalog extends TableCatalog
       s"$root/data/w_create_${java.util.UUID.randomUUID()}",
       Nil, Some(normalized), expectedVersion = Some(1),
       op = Some("create"),
-      extraRows =
-        if (partCols.isEmpty) Nil
-        else Seq(GraftLog.ManifestRow("partcols", partCols.mkString(","))))
+      extraRows = GraftLog.partColsRow(partCols))
     catch {
       // typed, not message-matched: losing the v1 claim to a COMMITTED
       // concurrent CREATE (version mismatch) and losing it to one still

@@ -1,6 +1,7 @@
 package graft.sources
 
 import scala.collection.mutable
+import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -9,36 +10,47 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 
-/** Row-level operations on the transaction log: MERGE (LWW key-match
-  * upsert), DELETE, and OPTIMIZE (compaction), each rewriting ONLY the
-  * files that actually contain affected rows, committed as ONE
-  * remove+add version through the connector's zero-rename publication.
-  * The SQL surface (`DELETE FROM graft.t WHERE ...`, TRUNCATE,
-  * `CALL graft.system.optimize(...)`) delegates here via
-  * [[GraftLogTable]]'s SupportsDelete and the catalog's procedures;
-  * the utility surface (Maintenance.mergeIntoLog / deleteFromLog) is
-  * the same code.
+/** Row-level operations on the transaction log — DELETE, UPDATE and
+  * MERGE (the LWW key-match upsert) — plus OPTIMIZE (compaction) and
+  * VACUUM, each committed as ONE version through the connector's
+  * zero-rename publication. The SQL surface reaches the same code:
+  * `DELETE FROM graft.t WHERE <filter>` through [[GraftLogTable]]'s
+  * SupportsDelete, `CALL graft.system.optimize(...)` / `vacuum(...)`
+  * through the catalog's procedures. (SQL UPDATE, MERGE INTO and
+  * DELETEs no data-source filter expresses run Spark's group-based
+  * rewrite, [[GraftLogRowLevelOperation]].)
   *
-  * Scale shape shared by the row-level operations:
+  * DELETE, UPDATE and MERGE share one core, [[rowLevel]]. Each is a
+  * small [[RowLevelOp]] — its candidate prune, its match over the
+  * masked read of the candidates, the rewrite of a touched file's rows,
+  * the rows merge-on-read re-emits, and (MERGE only) its add-conflict
+  * guard — and one driver resolves the snapshot and runs one of two
+  * write shapes:
+  *
   *  1. catalog-level candidate prune from the per-file manifest
-  *     statistics — PER FILE against the source's key profile (exact
-  *     distinct keys when few, per-range-bucket exact bounds when
-  *     many), so a CDC batch whose keys span the domain still prunes
-  *     to the files that actually overlap them, instead of one global
-  *     [min, max] keeping everything;
-  *  2. exact touch detection: one distributed scan/semi-join whose
-  *     driver-collected result is DISTINCT FILE NAMES — bounded by the
-  *     file count, never row count;
-  *  3. rewrite reads only the touched files (shuffles scale with
-  *     touched data + source, not table size);
-  *  4. one commit: remove touched, add rewritten — the change feed
-  *     shows the version as delete(old file rows) + insert(rewrite).
+  *     statistics: the condition as a data-source filter, or the MERGE
+  *     source's key profile tested PER FILE (exact distinct keys when
+  *     few, per-range-bucket exact bounds when many), so a CDC batch
+  *     whose keys span the domain still prunes to the files that
+  *     actually overlap them — zero data I/O;
+  *  2. one distributed scan of the candidates, deletion vectors
+  *     applied, whose driver-collected result is per-file MATCH COUNTS
+  *     — bounded by the file count, never row count;
+  *  3. COPY-ON-WRITE rewrites every touched file, reading only those
+  *     (shuffles scale with touched data + source, not table size);
+  *     MERGE-ON-READ masks the matched positions of sparsely touched
+  *     files with deletion vectors, rewrites only the densely touched
+  *     ones ([[DvRewriteFraction]]) and appends what the operation
+  *     re-emits (UPDATE's transformed rows, MERGE's source);
+  *  4. one commit — remove + add, plus dv rows — which the change feed
+  *     shows as delete + insert, or, for an all-sparse merge-on-read
+  *     UPDATE or MERGE, as classified update pre/postimages.
   *
   * Concurrency: every operation here is OPTIMISTIC with bounded
-  * auto-retry. The commit revalidates its remove set (and, for MERGE,
-  * concurrently-ADDED files against its source keys — the
-  * write-serializable half) under the version claim; a conflict or a
-  * pending claim releases everything, the operation re-plans against
+  * auto-retry. The commit revalidates its remove set and masked files
+  * (and, for MERGE, concurrently-ADDED files against its source keys —
+  * the write-serializable half) under the version claim; a conflict or
+  * a pending claim releases everything, the operation re-plans against
   * the NEW snapshot, and retries — so two concurrent merges on
   * disjoint keys both land without caller intervention, the way real
   * table formats behave at streaming-ingest commit rates.
@@ -84,54 +96,11 @@ object GraftLogOps {
     throw last
   }
 
-  /** Files of the latest snapshot as stats-bearing
-    * [[GraftLogStats.FileEntry]]s keyed by their manifest-relative
-    * path. Row-level operations REQUIRE a connector-written log:
-    * per-file statistics make "which files could hold these keys" a
-    * catalog read, and per-file manifest rows make "remove exactly
-    * these files" representable. Empty files are skipped (nothing to
-    * match).
-    */
-  private def statsEntries(s: SparkSession, root: String, v: Int)
-      : Seq[(String, GraftLogStats.FileEntry)] = {
-    val conf = s.sessionState.newHadoopConf()
-    GraftLog.liveAdds(conf, root, v)
-      .filter(!_.rows.contains(0L))
-      .map { r =>
-        require(r.rows.isDefined && r.stats.isDefined,
-          s"graftlog row-level op: $root has legacy manifest entries " +
-            s"(no per-file statistics for ${r.file}); row-level MERGE/" +
-            "DELETE requires a connector-written log")
-        (r.file, GraftLog.expandRow(conf, root, r).head)
-      }
-  }
-
-  /** `input_file_name()` URIs → the manifest-relative paths they name,
-    * resolved against the candidate set (URI scheme/authority rendering
-    * differs across filesystems; compare canonical path forms).
-    */
-  private def toRelPaths(root: String, uris: Seq[String],
-      candidates: Seq[String]): Seq[String] = {
-    val norm = uris.map(u => new Path(u).toUri.getPath).toSet
-    candidates.filter(rel =>
-      norm.contains(new Path(s"$root/$rel").toUri.getPath))
-  }
-
   private[sources] def normPath(p: String): String =
     new Path(p).toUri.getPath
 
-  /** Read data files (absolute paths, PHYSICAL schema) with their
-    * DELETION VECTORS applied — the one read primitive every rewrite
-    * (merge, copy-on-write delete, compaction) must use on a DV'd
-    * table: a raw parquet read would RESURRECT masked rows into the
-    * rewrite. `dvByNormPath` maps canonical file path → absolute
-    * sidecar path; files without an entry read mask-free, and an empty
-    * map is the untouched legacy path (no metadata columns, no UDF).
-    * The mask itself is a per-row sorted-array membership test against
-    * the executor-cached sidecar — no join, no shuffle.
-    */
-  /** Per-row sidecar-membership predicate — the ONE mask evaluation
-    * both rewrite-read shapes share.
+  /** Per-row sidecar-membership predicate — the mask evaluation of
+    * [[maskedParquet]].
     */
   private def dvMaskUdf(s: SparkSession,
       dvByNormPath: Map[String, String])
@@ -148,40 +117,52 @@ object GraftLogOps {
     }
   }
 
+  /** The file/position columns [[maskedParquet]] adds to every row. */
+  private val FilePos = Seq(col("_g_file"), col("_g_pos"))
+
+  /** Read data files (absolute paths, PHYSICAL schema) with their
+    * DELETION VECTORS applied — the one read primitive every rewrite
+    * (row-level DML, compaction) must use on a DV'd table: a raw
+    * parquet read would RESURRECT masked rows into the rewrite. Rows
+    * come back under `schema`'s names (a positional cast, so nested
+    * logical names resolve under column mapping), prefixed by their
+    * file and row position (`_g_file`, `_g_pos`, the parquet reader's
+    * own `_metadata` columns — pruned away when unused).
+    * `dvByNormPath` maps canonical file path → absolute sidecar path;
+    * files without an entry read mask-free, and when none of `files`
+    * has one the read is the plain scan (no UDF). The mask itself is a
+    * per-row sorted-array membership test against the executor-cached
+    * sidecar — no join, no shuffle.
+    */
   private[sources] def maskedParquet(s: SparkSession,
-      physSchema: StructType, files: Seq[String],
+      physSchema: StructType, schema: StructType, files: Seq[String],
       dvByNormPath: Map[String, String]): DataFrame = {
     val raw = s.read.schema(physSchema).parquet(files: _*)
-    if (dvByNormPath.isEmpty) raw
+      .select(Seq(col("_metadata.file_path").as("_g_file"),
+        col("_metadata.row_index").as("_g_pos")) ++
+        renamed(physSchema, schema): _*)
+    val read = files.map(normPath).toSet
+    val dvs = dvByNormPath.filter { case (f, _) => read.contains(f) }
+    if (dvs.isEmpty) raw
     else {
-      val masked = dvMaskUdf(s, dvByNormPath)
-      val physCols = physSchema.fieldNames.map(col).toSeq
-      raw.filter(!masked(col("_metadata.file_path"),
-          col("_metadata.row_index")))
-        .select(physCols: _*)
+      val masked = dvMaskUdf(s, dvs)
+      raw.filter(!masked(col("_g_file"), col("_g_pos")))
     }
   }
 
-  /** Absolute-sidecar map for a snapshot's deletion vectors, keyed on
-    * canonical file paths — what [[maskedParquet]] consumes.
-    */
-  private def dvPathMap(root: String,
-      dvs: Map[String, GraftLog.DvDescriptor]): Map[String, String] =
-    dvs.map { case (f, d) =>
-      normPath(s"$root/$f") -> s"$root/${d.dv}" }
-
-  /** Positional rename between the logical and physical schema forms
+  /** The select list renaming `from`'s columns positionally to
+    * `target`'s names, between the logical and physical schema forms
     * at EVERY nesting level: the two differ only in field names, so a
     * struct cast renames nested fields without touching values (a
     * plain `toDF` renames top-level only, which would write a nested
     * rename's files under LOGICAL inner names). Identity-mapped
     * tables hit the no-cast fast path column-for-column.
     */
-  private def renameTo(df: DataFrame, target: StructType): DataFrame =
-    df.select(df.schema.fields.zip(target.fields).map { case (s0, t) =>
-      (if (s0.dataType == t.dataType) col(s0.name)
-       else col(s0.name).cast(t.dataType)).as(t.name)
-    }.toIndexedSeq: _*)
+  private def renamed(from: StructType, target: StructType): Seq[Column] =
+    from.fields.zip(target.fields).map { case (f, t) =>
+      (if (f.dataType == t.dataType) col(f.name)
+       else col(f.name).cast(t.dataType)).as(t.name)
+    }.toSeq
 
   /** A merge key column as a double for range bucketing — only types
     * whose order survives the cast (the bucket BOUNDS stay exact
@@ -280,7 +261,7 @@ object GraftLogOps {
             .map(r => r -> meta.physicalPath(r)).toMap
           GraftLog.renameFilter(f, byRef)
         }
-    } catch { case scala.util.control.NonFatal(_) => None }
+    } catch { case NonFatal(_) => None }
 
   /** Candidate files for a condition: manifest-stats skip when the
     * condition translates; everything otherwise.
@@ -332,75 +313,33 @@ object GraftLogOps {
       mayHoldKeys(schema, keyFilters, fe.stats, fe.rows) }
   }
 
-  /** Write `df` as this row-level operation's new data files — landed
-    * DIRECTLY at their final write-scoped location (`data/w_<op>_<uuid>`,
-    * the connector's zero-rename publication discipline: nothing
-    * references them until the manifest does) — and commit them as one
-    * remove+add version. Per-file statistics are read off each new
-    * file's footer, so the rewritten snapshot plans from the manifest
-    * exactly like any connector write. Empty part-files (a task whose
-    * whole input was deleted) are dropped from the commit and disk. A
-    * refused commit (conflict / pending claim) deletes the staged
-    * files before rethrowing, so the optimistic retry re-plans from a
-    * clean slate.
+  /** Write-shape names for DELETE, UPDATE and MERGE: copy-on-write
+    * rewrites every touched file without (or with transformed) matched
+    * rows — best when matches are dense, the rewrite was going to touch
+    * most bytes anyway; merge-on-read commits DELETION VECTORS instead
+    * — best for SCATTERED matches: a 1-row delete at 100 TB becomes a
+    * KB sidecar + one manifest row, not a full file rewrite. The SQL
+    * front door (`DELETE FROM graft.t WHERE ...`) picks via the
+    * session conf `spark.graft.log.delete.mode`.
     */
-  private def commitRewrite(s: SparkSession, root: String, op: String,
-      df: DataFrame, schema: StructType, removes: Seq[String],
-      meta: GraftLog.TableMeta,
-      addConflict: Option[(Int, GraftLog.ManifestRow => Boolean)] = None,
-      layoutCols: Seq[String] = Nil,
-      readVersion: Option[Int] = None): Int = {
-    val conf = s.sessionState.newHadoopConf()
-    // files are written under PHYSICAL names (positional rename — the
-    // logical/physical schemas differ only in top-level field names);
-    // the manifest records the LOGICAL schema
-    val physSchema = meta.physicalSchema(schema)
-    val staging = s"$root/data/w_${op}_${java.util.UUID.randomUUID()}"
-    renameTo(df, physSchema).write.parquet(staging)
-    val fs = new Path(root).getFileSystem(conf)
-    // Spark's committer drops a _SUCCESS marker; it is never referenced,
-    // but delete it so the write directory holds only committed files
-    fs.delete(new Path(s"$staging/_SUCCESS"), false)
-    // rebuild each path as staging + name (listStatus returns
-    // scheme-qualified URIs; the commit compares raw root-relative
-    // strings) — the rewrite staging directory is flat by construction
-    val files = fs.listStatus(new Path(staging))
-      .toSeq.map(_.getPath.getName)
-      .filter(n => n.endsWith(".parquet") &&
-        !n.startsWith("_") && !n.startsWith("."))
-      .sorted
-      .flatMap { n =>
-        val (rows, bytes, stats) =
-          GraftLogStats.describeFile(conf, s"$staging/$n", physSchema)
-        if (rows == 0L) {
-          fs.delete(new Path(s"$staging/$n"), false)
-          None
-        } else Some(GraftLogFileCommit(s"$staging/$n", rows, bytes,
-          stats))
-      }
-    // the rewrite lands files OUTSIDE the Hive directory layout, which
-    // would erase a path-INFERRED layout for later operations — so the
-    // layout this operation observed is re-recorded as a manifest row
-    // (the same row catalog PARTITIONED BY writes), keeping compaction
-    // grouping and catalog write defaults stable across rewrites
-    val layoutRows =
-      if (layoutCols.isEmpty) Nil
-      else Seq(GraftLog.ManifestRow("partcols", layoutCols.mkString(",")))
-    try GraftLogWrite.commitStaged(conf, root, staging, files,
-      Some(schema), removes = removes, addConflict = addConflict,
-      extraRows = layoutRows, readVersion = readVersion,
-      op = Some(op))
-    catch { case scala.util.control.NonFatal(e) =>
-      fs.delete(new Path(staging), true) // never referenced — clean up
-      throw e
-    }
-  }
+  val DeleteModeCow = "copy-on-write"
+  val DeleteModeMor = "merge-on-read"
+  val DeleteModeConf = "spark.graft.log.delete.mode"
+
+  /** Per-file density cutoff for merge-on-read: a file losing at least
+    * this fraction of its rows is REWRITTEN instead of masked — the
+    * read-side masking tax (row reader + per-row membership) isn't
+    * worth it when most of the file is dead, and the rewrite was
+    * going to read every surviving byte anyway. The same commit may
+    * mix both shapes: dv rows for sparse files, remove+add for dense.
+    */
+  val DvRewriteFraction = 0.5
 
   /** MERGE INTO the log — the LWW key-match upsert as a ROW-LEVEL
     * table-format operation: every table row whose key appears in
     * `source` is replaced by the source row, every unmatched source row
     * inserts, and ONLY the files that actually contain a matched key
-    * are rewritten.
+    * are rewritten (copy-on-write).
     *
     * Contract: `source` columns must match the table schema (the append
     * contract), source keys must be unique (one LWW winner per key —
@@ -435,30 +374,12 @@ object GraftLogOps {
     */
   def mergeIntoLog(s: SparkSession, root: String,
       source: DataFrame, keys: Seq[String], mode: String): Int = {
-    require(mode == DeleteModeCow || mode == DeleteModeMor,
-      s"graftlog merge: unknown mode '$mode' — use $DeleteModeCow " +
-        s"or $DeleteModeMor")
-    val conf = s.sessionState.newHadoopConf()
+    checkMode("merge", mode)
     val src = source.cache()
     try {
       val srcCount = src.count()
-      withRetry { () =>
-        val latest = GraftLog.latestVersion(conf, root)
-        require(latest >= 1, s"no committed versions under $root")
-        val meta = GraftLog.tableMeta(conf, root, latest)
-        val schema = meta.schema
-          .getOrElse(GraftLog.inferSchema(conf, root, latest))
-        // column mapping: files + stats speak PHYSICAL names; the
-        // table, source and keys speak logical — read physical, rename
-        // positionally back to logical, and rename filters/keys when
-        // testing stats (identity everywhere on unmapped tables).
-        // DELETION VECTORS apply at the read: a raw parquet read of a
-        // DV'd file would resurrect its masked rows into the rewrite.
-        val physSchema = meta.physicalSchema(schema)
-        val dvMap = dvPathMap(root,
-          GraftLog.liveState(conf, root, latest).dvs)
-        def readLogical(paths: Seq[String]): DataFrame =
-          renameTo(maskedParquet(s, physSchema, paths, dvMap), schema)
+      rowLevel(s, root, mode) { snap =>
+        val schema = snap.schema
         require(keys.nonEmpty && keys.forall(schema.fieldNames.contains),
           s"merge keys ${keys.mkString(", ")} not all in " +
             s"[${schema.toDDL}]")
@@ -469,114 +390,80 @@ object GraftLogOps {
           s"merge source schema [${source.schema.toDDL}] must match " +
             s"the table schema [${schema.toDDL}] (names and types, in " +
             "order)")
-        if (srcCount == 0) latest // no-op: nothing matched or inserted
+        if (srcCount == 0) None // no-op: nothing matched or inserted
         else {
           require(
             src.select(keys.map(col): _*).distinct().count() == srcCount,
             "merge source keys must be unique (one LWW winner per key)")
-          val entries = statsEntries(s, root, latest)
-          // 1. catalog prune: each file's interval vs the source's key
-          //    profile (exact keys or per-bucket bounds) — zero data I/O
+          // the source's key profile (exact keys or per-bucket bounds),
+          // under the PHYSICAL names the manifest statistics speak
           val keyFilters = sourceKeysFilters(src, schema, keys)
-            .map(_.map(f => GraftLog.renameFilter(f, meta.colMap)))
-          val candidates = entries.filter { case (_, fe) =>
-            mayHoldKeys(physSchema, keyFilters, fe.stats, fe.rows) }
-          val addConflict = Some((latest, (r: GraftLog.ManifestRow) =>
-            !r.rows.contains(0L) && mayHoldKeys(physSchema, keyFilters,
-              r.stats.flatMap(GraftLogStats.parseStats), r.rows)))
-          val layout = layoutPartCols(conf, root, latest,
-            entries.map(_._1), meta)
-          val cols = schema.fieldNames.map(col).toSeq
-          if (mode == DeleteModeMor && candidates.nonEmpty)
-            morMerge(s, root, latest, meta, schema, physSchema, src,
-              keys, candidates, addConflict, layout)
-          else {
-          // 2. exact touched files: distinct file names, never row data
-          val touched: Seq[String] =
-            if (candidates.isEmpty) Seq.empty
-            else toRelPaths(root,
-              readLogical(candidates.map(c => s"$root/${c._1}"))
-                .withColumn("_graft_file", input_file_name())
-                .join(src.select(keys.map(col): _*), keys, "left_semi")
-                .select("_graft_file").distinct()
-                .collect().map(_.getString(0)).toSeq,
-              candidates.map(_._1))
-          // 3. rewrite: unmatched rows of touched files + whole source
-          val rewritten =
-            if (touched.isEmpty) src.select(cols: _*)
-            else readLogical(touched.map(f => s"$root/$f"))
-              .select(cols: _*)
-              .join(src.select(keys.map(col): _*), keys, "left_anti")
-              .unionByName(src.select(cols: _*))
-          // 4. one remove+add commit, add-conflict-guarded: adds
-          //    committed after `latest` whose stats may hold our keys
-          //    refuse → the retry re-plans with those files included
-          commitRewrite(s, root, "merge", rewritten, schema, touched,
-            meta,
-            addConflict = addConflict,
-            layoutCols = layout,
-            readVersion = Some(latest))
-          }
+            .map(_.map(f => GraftLog.renameFilter(f, snap.meta.colMap)))
+          def mayHold(st: Option[GraftLogStats.ColStats],
+              rows: Option[Long]): Boolean =
+            mayHoldKeys(snap.physSchema, keyFilters, st, rows)
+          val srcKeys = src.select(keys.map(col): _*)
+          val srcRows = src.select(snap.cols: _*)
+          Some(RowLevelOp("merge",
+            candidates = snap.entries.filter { case (_, fe) =>
+              mayHold(fe.stats, fe.rows) },
+            matching = _.join(srcKeys, keys, "left_semi")
+              .select(FilePos ++ keys.map(col): _*),
+            rewrite = _.join(srcKeys, keys, "left_anti")
+              .unionByName(srcRows),
+            source = Some(srcRows),
+            // an all-sparse commit splits the source by match, so the
+            // feed tags updates' new versions as postimages and
+            // genuinely-new keys as inserts (the matched keys are
+            // bounded by the source's key cardinality and fold off the
+            // cached match); otherwise the source rides in the dense
+            // rewrite
+            reemit = (matched, classify) =>
+              if (!classify) Nil
+              else {
+                val hit = matched.select(keys.map(col): _*).distinct()
+                Seq(("srcu", src.join(hit, keys, "left_semi")
+                    .select(snap.cols: _*), Some("update_postimage")),
+                  ("srci", src.join(hit, keys, "left_anti")
+                    .select(snap.cols: _*), None))
+              },
+            // adds committed after the read whose stats may hold our
+            // keys refuse → the retry re-plans with those files included
+            addConflict = Some((snap.latest,
+              (r: GraftLog.ManifestRow) => !r.rows.contains(0L) &&
+                mayHold(r.stats.flatMap(GraftLogStats.parseStats),
+                  r.rows)))))
         }
       }
     } finally src.unpersist()
   }
 
-  /** Row-level DELETE on the log: rewrite ONLY the files containing
-    * rows matching `cond` (SQL DELETE semantics — a NULL condition
-    * keeps the row), committed as one remove+add version. Touch
-    * detection is one distributed filtered scan collecting DISTINCT
-    * FILE NAMES (parquet row-group pruning applies, so a selective
-    * condition over a clustered table reads little); the rewrite reads
-    * only the touched files. A delete that matches nothing commits
-    * nothing; a lost write-write race re-plans and retries (concurrent
-    * APPENDS need no check: delete-then-append is a valid serial
-    * order, so appended rows correctly survive). Returns the committed
-    * (or current) version.
+  /** Row-level DELETE on the log, copy-on-write — see the four-argument
+    * form.
     */
   def deleteFromLog(s: SparkSession, root: String, cond: Column): Int =
     deleteFromLog(s, root, cond, DeleteModeCow)
 
-  /** DELETE mode names: copy-on-write rewrites every touched file
-    * without the matched rows (best when deletes are dense — the
-    * rewrite was going to touch most bytes anyway); merge-on-read
-    * commits DELETION VECTORS instead (best for SCATTERED deletes —
-    * a 1-row delete at 100 TB becomes a KB sidecar + one manifest row,
-    * not a full file rewrite). The SQL front door
-    * (`DELETE FROM graft.t WHERE ...`) picks via the session conf
-    * `spark.graft.log.delete.mode`.
-    */
-  val DeleteModeCow = "copy-on-write"
-  val DeleteModeMor = "merge-on-read"
-  val DeleteModeConf = "spark.graft.log.delete.mode"
-
-  /** Per-file density cutoff for merge-on-read: a file losing at least
-    * this fraction of its rows is REWRITTEN instead of masked — the
-    * read-side masking tax (row reader + per-row membership) isn't
-    * worth it when most of the file is dead, and the rewrite was
-    * going to read every surviving byte anyway. The same commit may
-    * mix both shapes: dv rows for sparse files, remove+add for dense.
-    */
-  val DvRewriteFraction = 0.5
-
   /** Row-level DELETE on the log: rewrite or mask ONLY the files
     * containing rows matching `cond` (SQL DELETE semantics — a NULL
     * condition keeps the row), committed as one version. Touch
-    * detection is one distributed filtered scan collecting DISTINCT
-    * FILE NAMES (parquet row-group pruning applies); `mode` picks the
+    * detection is one distributed filtered scan collecting per-file
+    * match counts (parquet row-group pruning applies, so a selective
+    * condition over a clustered table reads little); `mode` picks the
     * write shape per [[DeleteModeCow]]/[[DeleteModeMor]]. A delete
     * matching nothing commits nothing; a lost race re-plans and
     * retries (concurrent APPENDS need no check: delete-then-append is
-    * a valid serial order). Returns the committed (or current)
-    * version.
+    * a valid serial order, so appended rows correctly survive).
+    * Returns the committed (or current) version.
     */
   def deleteFromLog(s: SparkSession, root: String, cond: Column,
-      mode: String): Int = mode match {
-    case DeleteModeCow => cowDelete(s, root, cond)
-    case DeleteModeMor => morDelete(s, root, cond)
-    case other => throw new IllegalArgumentException(
-      s"graftlog delete: unknown mode '$other' — use $DeleteModeCow " +
-        s"or $DeleteModeMor")
+      mode: String): Int = {
+    checkMode("delete", mode)
+    rowLevel(s, root, mode) { snap =>
+      Some(RowLevelOp("delete", snap.pruneBy(cond),
+        matching = _.filter(cond).select(FilePos: _*),
+        rewrite = _.filter(!coalesce(cond, lit(false)))))
+    }
   }
 
   /** Row-level UPDATE on the log: every row matching `cond` gets the
@@ -594,403 +481,324 @@ object GraftLogOps {
       assignments: Map[String, Column],
       mode: String = DeleteModeCow): Int = {
     require(assignments.nonEmpty, "graftlog update: no assignments")
-    mode match {
-      case DeleteModeCow => cowUpdate(s, root, cond, assignments)
-      case DeleteModeMor => morUpdate(s, root, cond, assignments)
-      case other => throw new IllegalArgumentException(
-        s"graftlog update: unknown mode '$other' — use $DeleteModeCow " +
+    checkMode("update", mode)
+    rowLevel(s, root, mode) { snap =>
+      val missing =
+        assignments.keys.filterNot(snap.schema.fieldNames.contains)
+      require(missing.isEmpty,
+        s"graftlog update: assignment column(s) " +
+          s"${missing.mkString(", ")} not in the table schema " +
+          s"[${snap.schema.toDDL}]")
+      // every column of the table: `value(name, assigned)` for the
+      // assigned ones (cast to the column's type), pass-through else
+      def assign(value: (String, Column) => Column): Seq[Column] =
+        snap.schema.fields.toSeq.map { f =>
+          assignments.get(f.name).fold(col(f.name))(v =>
+            value(f.name, v.cast(f.dataType)).as(f.name))
+        }
+      val hit = coalesce(cond, lit(false))
+      Some(RowLevelOp("update", snap.pruneBy(cond),
+        matching = _.filter(cond),
+        // matched rows transform, unmatched pass through — one
+        // conditional projection over exactly the touched files
+        rewrite = _.select(
+          assign((c, v) => when(hit, v).otherwise(col(c))): _*),
+        // matched rows re-enter transformed as new files — classified
+        // as postimages (their masked old versions the preimages) when
+        // the commit classifies at all
+        reemit = (matched, classify) =>
+          Seq(("upd", matched.select(assign((_, v) => v): _*),
+            if (classify) Some("update_postimage") else None))))
+    }
+  }
+
+  private def checkMode(what: String, mode: String): Unit =
+    if (mode != DeleteModeCow && mode != DeleteModeMor)
+      throw new IllegalArgumentException(
+        s"graftlog $what: unknown mode '$mode' — use $DeleteModeCow " +
           s"or $DeleteModeMor")
-    }
-  }
 
-  /** Apply `assignments` to every column of `schema`, unconditionally
-    * (the caller has already filtered to matched rows) — values cast
-    * to the column's type, untouched columns pass through.
+  /** The latest committed snapshot as a row-level operation reads it:
+    * version, metadata, logical and physical schema, and — resolved on
+    * first use, so a no-op never walks them — the deletion vectors,
+    * the stats-bearing live files and the partition layout. Column
+    * mapping: files and statistics speak PHYSICAL names, the table and
+    * its callers logical ones; [[readWithPos]] renames positionally
+    * (identity everywhere on unmapped tables).
     */
-  private def applyAssignments(schema: StructType,
-      assignments: Map[String, Column]): Seq[Column] = {
-    val missing = assignments.keys.filterNot(schema.fieldNames.contains)
-    require(missing.isEmpty,
-      s"graftlog update: assignment column(s) ${missing.mkString(", ")} " +
-        s"not in the table schema [${schema.toDDL}]")
-    schema.fields.toSeq.map { f =>
-      assignments.get(f.name) match {
-        case Some(v) => v.cast(f.dataType).as(f.name)
-        case None    => col(f.name)
-      }
-    }
-  }
-
-  private def cowUpdate(s: SparkSession, root: String, cond: Column,
-      assignments: Map[String, Column]): Int = {
-    val conf = s.sessionState.newHadoopConf()
-    withRetry { () =>
-      val latest = GraftLog.latestVersion(conf, root)
-      require(latest >= 1, s"no committed versions under $root")
-      val meta = GraftLog.tableMeta(conf, root, latest)
-      val schema = meta.schema
-        .getOrElse(GraftLog.inferSchema(conf, root, latest))
-      val physSchema = meta.physicalSchema(schema)
-      val dvMap = dvPathMap(root,
-        GraftLog.liveState(conf, root, latest).dvs)
-      def readLogical(paths: Seq[String]): DataFrame =
-        renameTo(maskedParquet(s, physSchema, paths, dvMap), schema)
-      val entries = statsEntries(s, root, latest)
-      val candidates = pruneByCond(s, entries, schema, physSchema,
-        cond, meta)
-      if (candidates.isEmpty) latest
-      else {
-        val touched = toRelPaths(root,
-          readLogical(candidates.map(e => s"$root/${e._1}"))
-            .withColumn("_graft_file", input_file_name())
-            .filter(cond)
-            .select("_graft_file").distinct()
-            .collect().map(_.getString(0)).toSeq,
-          candidates.map(_._1))
-        if (touched.isEmpty) latest // no-op: nothing matched
-        else {
-          // matched rows transform, unmatched pass through — one
-          // conditional projection over exactly the touched files
-          val matchedCond = coalesce(cond, lit(false))
-          val rewritten = readLogical(touched.map(f => s"$root/$f"))
-            .select(schema.fields.toSeq.map { f =>
-              assignments.get(f.name) match {
-                case Some(v) => when(matchedCond,
-                  v.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
-                case None => col(f.name)
-              }
-            }: _*)
-          commitRewrite(s, root, "update", rewritten, schema, touched,
-            meta,
-            layoutCols = layoutPartCols(conf, root, latest,
-              entries.map(_._1), meta),
-            readVersion = Some(latest))
+  private final class Snapshot(s: SparkSession, val root: String) {
+    val conf: Configuration = s.sessionState.newHadoopConf()
+    val latest: Int = GraftLog.latestVersion(conf, root)
+    require(latest >= 1, s"no committed versions under $root")
+    val meta: GraftLog.TableMeta = GraftLog.tableMeta(conf, root, latest)
+    val schema: StructType =
+      meta.schema.getOrElse(GraftLog.inferSchema(conf, root, latest))
+    val physSchema: StructType = meta.physicalSchema(schema)
+    lazy val dvs: Map[String, GraftLog.DvDescriptor] =
+      GraftLog.liveState(conf, root, latest).dvs
+    /** Absolute-sidecar map of the deletion vectors, keyed on canonical
+      * file paths — what [[maskedParquet]] consumes.
+      */
+    lazy val dvMap: Map[String, String] = dvs.map { case (f, d) =>
+      normPath(s"$root/$f") -> s"$root/${d.dv}" }
+    /** The live files as stats-bearing [[GraftLogStats.FileEntry]]s
+      * keyed by their manifest-relative path. Row-level operations
+      * REQUIRE a connector-written log: per-file statistics make "which
+      * files could hold these keys" a catalog read, and per-file
+      * manifest rows make "remove exactly these files" representable.
+      * Empty files are skipped (nothing to match).
+      */
+    lazy val entries: Seq[(String, GraftLogStats.FileEntry)] =
+      GraftLog.liveAdds(conf, root, latest)
+        .filter(!_.rows.contains(0L))
+        .map { r =>
+          require(r.rows.isDefined && r.stats.isDefined,
+            s"graftlog row-level op: $root has legacy manifest entries " +
+              s"(no per-file statistics for ${r.file}); row-level MERGE/" +
+              "DELETE requires a connector-written log")
+          (r.file, GraftLog.expandRow(conf, root, r).head)
         }
-      }
-    }
+    /** Inferred from the FULL live set, never a pruned subset — a
+      * biased subset could claim a layout the table doesn't uniformly
+      * have.
+      */
+    lazy val layout: Seq[String] =
+      layoutPartCols(conf, root, latest, entries.map(_._1), meta)
+    def cols: Seq[Column] = schema.fieldNames.map(col).toSeq
+
+    def pruneBy(cond: Column): Seq[(String, GraftLogStats.FileEntry)] =
+      pruneByCond(s, entries, schema, physSchema, cond, meta)
+
+    /** The masked logical rows of `rels`, with `_g_file`/`_g_pos`. */
+    def readWithPos(rels: Seq[String]): DataFrame =
+      maskedParquet(s, physSchema, schema, rels.map(r => s"$root/$r"),
+        dvMap)
+
+    def read(rels: Seq[String]): DataFrame =
+      readWithPos(rels).select(cols: _*)
   }
 
-  private def morUpdate(s: SparkSession, root: String, cond: Column,
-      assignments: Map[String, Column]): Int = {
-    val conf = s.sessionState.newHadoopConf()
-    val fs = new Path(root).getFileSystem(conf)
-    withRetry { () =>
-      val latest = GraftLog.latestVersion(conf, root)
-      require(latest >= 1, s"no committed versions under $root")
-      val meta = GraftLog.tableMeta(conf, root, latest)
-      val schema = meta.schema
-        .getOrElse(GraftLog.inferSchema(conf, root, latest))
-      val physSchema = meta.physicalSchema(schema)
-      val dvs = GraftLog.liveState(conf, root, latest).dvs
-      val allEntries = statsEntries(s, root, latest)
-      val entries = pruneByCond(s, allEntries, schema, physSchema,
-        cond, meta)
-      if (entries.isEmpty) return latest
-      val rowsByRel = entries.map(e => (e._1, e._2.rows.get)).toMap
-      val relByNorm = entries.map(e =>
-        (normPath(s"$root/${e._1}"), e._1)).toMap
-      // matched rows WITH positions, prior masks EXCLUDED at the read:
-      // unlike the delete (where re-deleting a masked row is a no-op),
-      // the update APPENDS a transformed copy — transforming an
-      // already-deleted row would resurrect it
-      val matched = maskedParquetWithPos(s, physSchema, schema,
-          entries.map(e => s"$root/${e._1}"), dvPathMap(root, dvs))
-        .filter(cond)
-        .cache()
-      try {
-        val counts = matched.groupBy("_g_file").count().collect()
-          .flatMap(r => relByNorm.get(normPath(r.getString(0)))
-            .map(rel => (rel, r.getLong(1))))
-        if (counts.isEmpty) return latest // no-op: nothing matched
-        val (denseRel, sparseRel) = counts.partition { case (rel, c) =>
-          c >= (rowsByRel(rel) * DvRewriteFraction).ceil.toLong }
-        val staging =
-          s"$root/data/w_update_${java.util.UUID.randomUUID()}"
-        val dvBase = s"$staging/dv"
-        // the change feed CLASSIFIES this commit only when the whole
-        // matched set is sparse (same rule as MERGE): a dense file's
-        // copy-on-write removes surface as plain deletes, so tagging
-        // postimages beside them would leave the counts inconsistent
-        val classify = denseRel.isEmpty
-        // the whole write sequence — sidecars included — sits inside
-        // the cleanup try: a Spark job failure in the SIDECAR write
-        // must delete the staging tree like every other abort path
-        try {
-          val (dvRows, dvFiles) = writeDvSidecars(s, conf, root, dvBase,
-            matched.select(col("_g_file"), col("_g_pos")),
-            sparseRel.map(_._1).toSeq, dvs, relByNorm,
-            cdcClass = if (classify) Some("update_preimage") else None)
-          val cols = schema.fieldNames.map(col).toSeq
-          // ALL matched rows (sparse-masked and dense-removed alike)
-          // re-enter transformed as new files — change-feed-classified
-          // as postimages (their masked old versions being the
-          // preimages) when the commit classifies at all
-          val transformed = matched
-            .select(applyAssignments(schema, assignments): _*)
-          var adds = stageFiles(s, conf, transformed, physSchema,
-            staging, "upd",
-            cdcClass = if (classify) Some("update_postimage") else None)
-          if (denseRel.nonEmpty) {
-            val denseFiles = denseRel.map(e => s"$root/${e._1}").toSeq
-            val kept = renameTo(maskedParquet(s, physSchema, denseFiles,
-                dvPathMap(root, dvs)), schema)
-              .select(cols: _*)
-              .filter(coalesce(cond, lit(false)) === false)
-            adds ++= stageFiles(s, conf, kept, physSchema, staging,
-              "dense")
-          }
-          val layout = layoutPartCols(conf, root, latest,
-            allEntries.map(_._1), meta)
-          GraftLogWrite.commitStaged(conf, root, staging, adds,
-            Some(schema), removes = denseRel.map(_._1).toSeq,
-            extraRows =
-              (if (layout.isEmpty) Nil
-               else Seq(GraftLog.ManifestRow("partcols",
-                 layout.mkString(",")))) ++ dvRows,
-            dvFiles = dvFiles, readVersion = Some(latest),
-            op = Some("update"))
-        } catch { case scala.util.control.NonFatal(e) =>
-          fs.delete(new Path(staging), true)
-          throw e
-        }
-      } finally matched.unpersist()
-    }
-  }
-
-  /** Masked read WITH file/position columns (`_g_file`, `_g_pos`) and
-    * the LOGICAL column names — the matched-row source for
-    * merge-on-read operations that re-emit rows (update) and so must
-    * never see an already-masked one.
-    */
-  private def maskedParquetWithPos(s: SparkSession,
-      physSchema: StructType, schema: StructType, files: Seq[String],
-      dvByNormPath: Map[String, String]): DataFrame = {
-    val logicalCols = physSchema.fields.zip(schema.fields)
-      .map { case (p, l) =>
-        (if (p.dataType == l.dataType) col(p.name)
-         else col(p.name).cast(l.dataType)).as(l.name) }.toSeq
-    val raw = s.read.schema(physSchema).parquet(files: _*)
-      .select(Seq(col("_metadata.file_path").as("_g_file"),
-        col("_metadata.row_index").as("_g_pos")) ++ logicalCols: _*)
-    if (dvByNormPath.isEmpty) raw
-    else {
-      val masked = dvMaskUdf(s, dvByNormPath)
-      raw.filter(!masked(col("_g_file"), col("_g_pos")))
-    }
-  }
-
-  private def cowDelete(s: SparkSession, root: String,
-      cond: Column): Int = {
-    val conf = s.sessionState.newHadoopConf()
-    withRetry { () =>
-      val latest = GraftLog.latestVersion(conf, root)
-      require(latest >= 1, s"no committed versions under $root")
-      val meta = GraftLog.tableMeta(conf, root, latest)
-      val schema = meta.schema
-        .getOrElse(GraftLog.inferSchema(conf, root, latest))
-      val physSchema = meta.physicalSchema(schema)
-      val dvMap = dvPathMap(root,
-        GraftLog.liveState(conf, root, latest).dvs)
-      def readLogical(paths: Seq[String]): DataFrame =
-        renameTo(maskedParquet(s, physSchema, paths, dvMap), schema)
-      val entries = statsEntries(s, root, latest)
-      // catalog prune: each file's manifest interval vs the condition
-      // (zero data I/O) — the touch scan then reads candidates only
-      val candidates = pruneByCond(s, entries, schema, physSchema, cond, meta)
-      if (candidates.isEmpty) latest
-      else {
-        val touched = toRelPaths(root,
-          readLogical(candidates.map(e => s"$root/${e._1}"))
-            .withColumn("_graft_file", input_file_name())
-            .filter(cond)
-            .select("_graft_file").distinct()
-            .collect().map(_.getString(0)).toSeq,
-          candidates.map(_._1))
-        if (touched.isEmpty) latest // no-op: nothing matched
-        else {
-          val cols = schema.fieldNames.map(col).toSeq
-          val kept = readLogical(touched.map(f => s"$root/$f"))
-            .select(cols: _*)
-            .filter(coalesce(cond, lit(false)) === false)
-          commitRewrite(s, root, "delete", kept, schema, touched, meta,
-            layoutCols = layoutPartCols(conf, root, latest,
-              entries.map(_._1), meta),
-            readVersion = Some(latest))
-        }
-      }
-    }
-  }
-
-  /** Merge-on-read DELETE: commit a DELETION-VECTOR sidecar per
-    * sparsely-touched file (complete mask + this commit's delta) and
-    * rewrite only the densely-touched ones ([[DvRewriteFraction]]) —
-    * write amplification proportional to MATCHED rows, not touched
-    * FILES. The scale shape:
+  /** One row-level operation as [[rowLevel]] runs it.
     *
-    *  1. one distributed scan over the candidate files computes
-    *     matched (file, row position) pairs via the parquet reader's
-    *     own `_metadata.row_index` — positions never reach the driver;
-    *  2. per-file matched COUNTS (one row per file) come back to pick
-    *     dense files for rewrite;
-    *  3. executors write one sidecar pair per sparse file
-    *     (prior mask ∪ matches, matches \ prior) under a write-scoped
-    *     `data/dv_<uuid>/` directory — the same zero-rename
-    *     publication data files use: nothing references the sidecars
-    *     until the manifest row does;
-    *  4. ONE commit: `dv` rows for sparse files, remove+add for dense
-    *     ones, guarded by liveness AND dv-conflict revalidation (a
-    *     concurrent re-mask of the same file refuses — complete-mask
-    *     replacement semantics would otherwise lose its deletions).
-    *
-    * The change feed emits the delta positions as delete rows; time
-    * travel before the commit reads the file unmasked; OPTIMIZE folds
-    * the vectors away (the DV'd file compacts, its mask dies with the
-    * remove). Both reader paths mask — the vectorized reader compacts
-    * survivors while the batch fills (≈7% full-scan tax, measured),
-    * so OPTIMIZE's fold is a compaction decision, not a read rescue.
+    * @param candidates the live files whose statistics admit a match
+    * @param matching   the masked read of the candidates (`_g_file`,
+    *                   `_g_pos`, logical columns) → its matched rows,
+    *                   keeping `_g_file`/`_g_pos` and whatever
+    *                   `reemit` reads
+    * @param rewrite    a touched file's logical rows → the rows that
+    *                   replace them
+    * @param source     rows committed even when nothing matches
+    * @param reemit     merge-on-read: (matched rows of the sparsely
+    *                   touched files, does the commit classify) → the
+    *                   rows appended as new files, each as (staging
+    *                   subdirectory, rows, change-feed class)
+    * @param addConflict the commit's guard against concurrently added
+    *                   files (version read, refusing predicate)
     */
-  /** The merge-on-read MERGE body (one optimistic attempt — the caller
-    * holds the retry loop and the cached source): matched table rows
-    * are MASKED via deletion vectors, the whole source appends as new
-    * files, densely-matched files rewrite, all in ONE guarded commit.
-    */
-  private def morMerge(s: SparkSession, root: String, latest: Int,
-      meta: GraftLog.TableMeta, schema: StructType,
-      physSchema: StructType, src: DataFrame, keys: Seq[String],
+  private final case class RowLevelOp(
+      name: String,
       candidates: Seq[(String, GraftLogStats.FileEntry)],
-      addConflict: Option[(Int, GraftLog.ManifestRow => Boolean)],
-      layout: Seq[String]): Int = {
-    val conf = s.sessionState.newHadoopConf()
-    val fs = new Path(root).getFileSystem(conf)
-    val dvs = GraftLog.liveState(conf, root, latest).dvs
-    val cols = schema.fieldNames.map(col).toSeq
-    val rowsByRel = candidates.map(e => (e._1, e._2.rows.get)).toMap
-    val relByNorm = candidates.map(e =>
-      (normPath(s"$root/${e._1}"), e._1)).toMap
-    // matched (file, position) pairs: RAW candidate read (empty dv map
-    // — already-masked rows re-matching is harmless: prior-union
-    // dedups, delta excludes them) semi-joined on the merge keys. The
-    // positional-CAST rename keeps nested logical names resolvable
-    // under column mapping, same as every other DML read.
-    // MASKED read (prior deletion vectors excluded): a key whose only
-    // table occurrences are already-deleted rows must classify as a
-    // plain INSERT in the change feed, not as an update with no
-    // preimage — and the density decision should count LIVE rows.
-    // (writeDvSidecars still unions the prior mask into each complete
-    // sidecar, so excluding masked positions here loses nothing.)
-    // Keys ride along so the classification below can split the source
-    // into updates vs inserts without a second candidate scan.
-    val matched = maskedParquetWithPos(s, physSchema, schema,
-        candidates.map(c => s"$root/${c._1}"), dvPathMap(root, dvs))
-      .join(src.select(keys.map(col): _*), keys, "left_semi")
-      .select(Seq(col("_g_file"), col("_g_pos")) ++ keys.map(col): _*)
-      .cache()
+      matching: DataFrame => DataFrame,
+      rewrite: DataFrame => DataFrame,
+      source: Option[DataFrame] = None,
+      reemit: (DataFrame, Boolean) =>
+        Seq[(String, DataFrame, Option[String])] = (_, _) => Nil,
+      addConflict: Option[(Int, GraftLog.ManifestRow => Boolean)] = None)
+
+  /** The one row-level driver: inside the optimistic retry, resolve the
+    * latest snapshot, let `plan` build the operation against it (None =
+    * no-op), and run it in the requested write shape. Merge-on-read
+    * with no candidate file has nothing to mask, so it takes the
+    * copy-on-write body (which then only commits the source, if any).
+    */
+  private def rowLevel(s: SparkSession, root: String, mode: String)(
+      plan: Snapshot => Option[RowLevelOp]): Int =
+    withRetry { () =>
+      val snap = new Snapshot(s, root)
+      plan(snap) match {
+        case None => snap.latest
+        case Some(op) if mode == DeleteModeMor && op.candidates.nonEmpty =>
+          mergeOnRead(snap, op)
+        case Some(op) => copyOnWrite(snap, op)
+      }
+    }
+
+  /** Per-file counts of `matched` rows as (file URI as read,
+    * manifest-relative path, count), in candidate order — one row per
+    * touched file reaches the driver, never row data. URIs resolve
+    * against the candidates by canonical path (scheme/authority
+    * rendering differs across filesystems).
+    */
+  private def matchCounts(snap: Snapshot, op: RowLevelOp,
+      matched: DataFrame): Seq[(String, String, Long)] = {
+    val hits = matched.groupBy("_g_file").count().collect()
+      .map(r => normPath(r.getString(0)) ->
+        ((r.getString(0), r.getLong(1))))
+      .toMap
+    op.candidates.flatMap { case (rel, _) =>
+      hits.get(normPath(s"${snap.root}/$rel")).map { case (uri, n) =>
+        (uri, rel, n) }
+    }
+  }
+
+  /** Copy-on-write: find the touched files, rewrite them whole, and
+    * commit remove(touched) + add(rewrite) — or, when nothing is
+    * touched, the operation's source alone (nothing at all for DELETE
+    * and UPDATE).
+    */
+  private def copyOnWrite(snap: Snapshot, op: RowLevelOp): Int = {
+    val touched =
+      if (op.candidates.isEmpty) Nil
+      else matchCounts(snap, op, snap.readWithPos(op.candidates.map(_._1))
+        .transform(op.matching)).map(_._2)
+    val rows =
+      if (touched.isEmpty) op.source
+      else Some(op.rewrite(snap.read(touched)))
+    rows.fold(snap.latest)(df =>
+      stageAndCommit(snap, op, removes = touched) { staging =>
+        (stageFiles(snap, df, staging, "rewrite"), Nil, Nil) })
+  }
+
+  /** Merge-on-read: write amplification proportional to MATCHED rows,
+    * not touched FILES. The scale shape:
+    *
+    *  1. one distributed scan over the candidate files computes the
+    *     matched rows with their (file, row position) via the parquet
+    *     reader's own `_metadata.row_index` — cached, since the density
+    *     decision, the sidecar job and the re-emitted rows all read it;
+    *     prior masks apply at the read, so an already-deleted row never
+    *     re-matches (a re-emitted copy would resurrect it) and the
+    *     density decision counts LIVE rows;
+    *  2. per-file matched COUNTS (one row per file) come back to pick
+    *     dense files ([[DvRewriteFraction]]) for a copy-on-write
+    *     rewrite;
+    *  3. executors write one sidecar pair per sparse file (prior mask ∪
+    *     matches, matches \ prior) under the operation's write-scoped
+    *     directory — the same zero-rename publication data files use:
+    *     nothing references the sidecars until the manifest row does;
+    *     the operation's re-emitted rows stage beside them;
+    *  4. ONE commit: `dv` rows for sparse files, remove+add for dense
+    *     ones, adds for the re-emitted rows, guarded by liveness AND
+    *     dv-conflict revalidation (a concurrent re-mask of the same
+    *     file refuses — complete-mask replacement semantics would
+    *     otherwise lose its deletions).
+    *
+    * The change feed emits the delta positions as delete rows — or, when
+    * the commit CLASSIFIES, as update preimages beside the postimages
+    * the operation re-emits. It classifies only when the whole matched
+    * set is sparse: a densely matched file rewrites copy-on-write,
+    * whose removes surface as plain deletes, and tagging postimages
+    * beside them would leave preimage/postimage counts inconsistent, so
+    * mixed commits fall back to the plain delete/insert feed wholesale.
+    * Time travel before the commit reads the file unmasked; OPTIMIZE
+    * folds the vectors away (the DV'd file compacts, its mask dies
+    * with the remove). Both reader paths mask — the vectorized reader
+    * compacts survivors while the batch fills (≈7% full-scan tax,
+    * measured), so OPTIMIZE's fold is a compaction decision, not a
+    * read rescue.
+    */
+  private def mergeOnRead(snap: Snapshot, op: RowLevelOp): Int = {
+    val matched = snap.readWithPos(op.candidates.map(_._1))
+      .transform(op.matching).cache()
     try {
-      val counts = matched.groupBy("_g_file").count().collect()
-        .flatMap(r => relByNorm.get(normPath(r.getString(0)))
-          .map(rel => (rel, r.getLong(1))))
-      val (denseRel, sparseRel) = counts.partition { case (rel, c) =>
-        c >= (rowsByRel(rel) * DvRewriteFraction).ceil.toLong }
-      val staging = s"$root/data/w_merge_${java.util.UUID.randomUUID()}"
-      val dvBase = s"$staging/dv"
-      // sidecar write inside the cleanup try: a failed sidecar job
-      // deletes the staging tree like every other abort path
-      // the change feed CLASSIFIES this commit only when the whole
-      // matched set is sparse: a densely-matched file rewrites
-      // copy-on-write, whose removes surface as plain delete rows —
-      // tagging postimages beside them would leave preimage/postimage
-      // counts inconsistent. All-sparse commits (the MoR shape this
-      // mode exists for) classify exactly; mixed commits fall back to
-      // the plain delete/insert feed wholesale.
-      val classify = denseRel.isEmpty
-      try {
-        val (dvRows, dvFiles) = writeDvSidecars(s, conf, root, dvBase,
-          matched.select(col("_g_file"), col("_g_pos")),
-          sparseRel.map(_._1).toSeq, dvs, relByNorm,
-          cdcClass = if (classify) Some("update_preimage") else None)
-        // the source appends as new files — every insert AND every
-        // update's new version; updates' OLD versions are masked (dv)
-        // or dropped by the dense rewrite. Under classification the
-        // stage SPLITS by match so the feed tags updates' new versions
-        // as postimages and genuinely-new keys as inserts (matchedKeys
-        // is bounded by the source's key cardinality and folds off the
-        // cache; the source itself is caller-cached)
-        var adds =
-          if (!classify)
-            stageFiles(s, conf, src.select(cols: _*), physSchema,
-              staging, "src")
-          else {
-            val matchedKeys = matched.select(keys.map(col): _*)
-              .distinct()
-            stageFiles(s, conf,
-              src.join(matchedKeys, keys, "left_semi").select(cols: _*),
-              physSchema, staging, "srcu",
-              cdcClass = Some("update_postimage")) ++
-            stageFiles(s, conf,
-              src.join(matchedKeys, keys, "left_anti").select(cols: _*),
-              physSchema, staging, "srci")
-          }
-        if (denseRel.nonEmpty) {
-          val denseFiles = denseRel.map(e => s"$root/${e._1}").toSeq
-          val kept = renameTo(maskedParquet(s, physSchema, denseFiles,
-              dvPathMap(root, dvs)), schema)
-            .select(cols: _*)
-            .join(src.select(keys.map(col): _*), keys, "left_anti")
-          adds ++= stageFiles(s, conf, kept, physSchema, staging,
-            "dense")
-        }
-        GraftLogWrite.commitStaged(conf, root, staging, adds,
-          Some(schema), removes = denseRel.map(_._1).toSeq,
-          extraRows =
-            (if (layout.isEmpty) Nil
-             else Seq(GraftLog.ManifestRow("partcols",
-               layout.mkString(",")))) ++ dvRows,
-          dvFiles = dvFiles, addConflict = addConflict,
-          readVersion = Some(latest), op = Some("merge"))
-      } catch { case scala.util.control.NonFatal(e) =>
-        fs.delete(new Path(staging), true) // sidecars live under it too
-        throw e
+      val counts = matchCounts(snap, op, matched)
+      if (counts.isEmpty && op.source.isEmpty) return snap.latest
+      val rowsByRel = op.candidates.map { case (rel, fe) =>
+        rel -> fe.rows.get }.toMap
+      val (dense, sparse) = counts.partition { case (_, rel, n) =>
+        n >= (rowsByRel(rel) * DvRewriteFraction).ceil.toLong }
+      val classify = dense.isEmpty
+      // a dense file's matched rows ride in its rewrite; only the
+      // sparse files' are re-emitted
+      val reemitted = op.reemit(
+        if (classify) matched
+        else matched.filter(col("_g_file").isin(sparse.map(_._1): _*)),
+        classify)
+      stageAndCommit(snap, op, removes = dense.map(_._2)) { staging =>
+        val (dvRows, dvFiles) = writeDvSidecars(snap, s"$staging/dv",
+          matched.select(FilePos: _*), sparse.map(_._2),
+          op.candidates.map(c => normPath(s"${snap.root}/${c._1}") -> c._1)
+            .toMap,
+          cdcClass =
+            if (classify && reemitted.nonEmpty) Some("update_preimage")
+            else None)
+        val adds = reemitted.flatMap { case (sub, df, cdc) =>
+            stageFiles(snap, df, staging, sub, cdc) } ++
+          (if (dense.isEmpty) Nil
+           else stageFiles(snap, op.rewrite(snap.read(dense.map(_._2))),
+             staging, "dense"))
+        (adds, dvRows, dvFiles)
       }
     } finally matched.unpersist()
   }
 
-  /** The deletion-vector WRITE job, shared by merge-on-read DELETE and
-    * MERGE: one sidecar pair (complete mask ∪ prior, this-commit
-    * delta) per sparse file, written by EXECUTORS under the
-    * write-scoped `dvBase` directory — positions never reach the
-    * driver; the returned manifest rows (and the dv-file list the
-    * commit revalidates) are one small row per file. Files whose every
-    * matched position was already masked are no-ops: their sidecars
-    * are deleted and no row is returned.
+  /** Land an operation's new files and sidecars under ONE write-scoped
+    * directory (`data/w_<op>_<uuid>`, the connector's zero-rename
+    * publication: nothing references them until the manifest does) and
+    * commit them as one version — `removes`, the staged adds and dv
+    * rows, and the layout this operation observed, re-recorded as a
+    * `partcols` row (rewrites land files OUTSIDE the Hive directory
+    * layout, which would otherwise erase a path-inferred layout for
+    * later compaction grouping and catalog write defaults). The commit
+    * revalidates removed and re-masked files against concurrent
+    * rewrites and dv commits since the snapshot, plus the operation's
+    * add-conflict guard. Any failure — a staging job or a refused
+    * commit — deletes the directory before rethrowing, so the
+    * optimistic retry re-plans from a clean slate.
     */
-  private def writeDvSidecars(s: SparkSession, conf: Configuration,
-      root: String, dvBase: String, matched: DataFrame,
-      sparseRels: Seq[String],
-      dvs: Map[String, GraftLog.DvDescriptor],
+  private def stageAndCommit(snap: Snapshot, op: RowLevelOp,
+      removes: Seq[String])(stage: String =>
+        (Seq[GraftLogFileCommit], Seq[GraftLog.ManifestRow], Seq[String]))
+      : Int = {
+    val staging =
+      s"${snap.root}/data/w_${op.name}_${java.util.UUID.randomUUID()}"
+    try {
+      val (adds, dvRows, dvFiles) = stage(staging)
+      GraftLogWrite.commitStaged(snap.conf, snap.root, staging, adds,
+        Some(snap.schema), removes = removes,
+        extraRows = GraftLog.partColsRow(snap.layout) ++ dvRows,
+        dvFiles = dvFiles, addConflict = op.addConflict,
+        readVersion = Some(snap.latest), op = Some(op.name))
+    } catch { case NonFatal(e) =>
+      val p = new Path(staging)
+      p.getFileSystem(snap.conf).delete(p, true)
+      throw e
+    }
+  }
+
+  /** The deletion-vector WRITE job of merge-on-read: one sidecar pair
+    * (complete mask ∪ prior, this-commit delta) per sparse file,
+    * written by EXECUTORS under the write-scoped `dvBase` directory —
+    * positions never reach the driver; the returned manifest rows (and
+    * the dv-file list the commit revalidates) are one small row per
+    * file. `matched` comes from the masked read, so its positions are
+    * live at the snapshot — disjoint from each file's prior mask.
+    */
+  private def writeDvSidecars(snap: Snapshot, dvBase: String,
+      matched: DataFrame, sparseRels: Seq[String],
       relByNorm: Map[String, String],
-      cdcClass: Option[String] = None)
+      cdcClass: Option[String])
       : (Seq[GraftLog.ManifestRow], Seq[String]) = {
     if (sparseRels.isEmpty) return (Nil, Nil)
-    val fs = new Path(root).getFileSystem(conf)
-    val cnf = new org.apache.spark.util.SerializableConfiguration(conf)
+    val root = snap.root
+    val fs = new Path(root).getFileSystem(snap.conf)
+    val cnf = new org.apache.spark.util.SerializableConfiguration(snap.conf)
     val priorByNorm: Map[String, String] = sparseRels.flatMap { rel =>
-      dvs.get(rel).map(d =>
+      snap.dvs.get(rel).map(d =>
         (normPath(s"$root/$rel"), s"$root/${d.dv}")) }.toMap
     val sparseNorm = sparseRels.map(r => normPath(s"$root/$r")).toSet
-    import s.implicits._
-    val dvMetaRaw: Array[(String, String, Long, String, Long)] =
+    val spark = matched.sparkSession
+    import spark.implicits._
+    val dvMeta: Array[(String, String, Long, String, Long)] =
       matched.as[(String, Long)]
         .filter(r => sparseNorm.contains(normPath(r._1)))
         .groupByKey(r => normPath(r._1))
         .mapGroups { (fnorm, it) =>
-          val hit = it.map(_._2).toArray
-          java.util.Arrays.sort(hit)
-          val prior = priorByNorm.get(fnorm)
+          val delta = it.map(_._2).toArray
+          java.util.Arrays.sort(delta)
+          val complete = priorByNorm.get(fnorm)
             .map(p => GraftLog.DvSidecarCache.get(cnf.value, p))
-            .getOrElse(Array.empty[Long])
-          val priorSet = prior.toSet
-          val delta = hit.filterNot(priorSet.contains).distinct
-          val complete = (prior ++ delta).distinct
+            .getOrElse(Array.empty[Long]) ++ delta
           java.util.Arrays.sort(complete)
           val tag = java.security.MessageDigest.getInstance("SHA-1")
             .digest(fnorm.getBytes("UTF-8"))
@@ -1010,13 +818,12 @@ object GraftLogOps {
             delta.length.toLong)
         }.collect()
     // LOSER task attempts (retried or speculative) wrote attempt-named
-    // sidecars that no collected row references — and dvBase can be a
-    // PERMANENT directory (morDelete's data/dv_<uuid>). Sweep now:
-    // keep the winning attempts' files, delete the rest. Best-effort
-    // (a zombie attempt may still be writing AFTER this listing — its
-    // debris is then caught by VACUUM's age-guarded orphan sweep);
-    // one listing RPC.
-    val winning = dvMetaRaw.iterator
+    // sidecars that no collected row references — and a committed
+    // staging directory is permanent. Sweep now: keep the winning
+    // attempts' files, delete the rest. Best-effort (a zombie attempt
+    // may still be writing AFTER this listing — its debris is then
+    // caught by VACUUM's age-guarded orphan sweep); one listing RPC.
+    val winning = dvMeta.iterator
       .flatMap(m => Iterator(m._2, m._4))
       .map(p => new Path(p).getName).toSet
     val basePath = new Path(dvBase)
@@ -1025,13 +832,6 @@ object GraftLogOps {
         if (!winning.contains(st.getPath.getName))
           fs.delete(st.getPath, false)
       }
-    // files whose every match was already masked are no-ops — their
-    // just-written sidecars are unreferenced garbage, clean them now
-    val (dvMeta, noop) = dvMetaRaw.partition(_._5 > 0L)
-    noop.foreach { case (_, dv, _, delta, _) =>
-      fs.delete(new Path(dv), false)
-      fs.delete(new Path(delta), false)
-    }
     val rows = dvMeta.toSeq.sortBy(_._1).map {
       case (fnorm, dv, card, delta, dcard) =>
         GraftLog.ManifestRow("dv", relByNorm(fnorm),
@@ -1043,17 +843,30 @@ object GraftLogOps {
   }
 
   /** Stage a DataFrame's rows as committed-shape part-files under
-    * `staging/<sub>` and describe each (the add-row payloads) —
-    * shared by every rewrite that lands files outside the writer
-    * factory path.
+    * `staging/<sub>` (PHYSICAL names — a positional rename; the
+    * manifest records the LOGICAL schema) and describe each.
     */
-  private def stageFiles(s: SparkSession, conf: Configuration,
-      df: DataFrame, physSchema: StructType, staging: String,
+  private def stageFiles(snap: Snapshot, df: DataFrame, staging: String,
       sub: String, cdcClass: Option[String] = None)
       : Seq[GraftLogFileCommit] = {
-    val fs = new Path(staging).getFileSystem(conf)
     val dir = s"$staging/$sub"
-    renameTo(df, physSchema).write.parquet(dir)
+    df.select(renamed(df.schema, snap.physSchema): _*).write.parquet(dir)
+    describeStaged(snap.conf, dir, snap.physSchema, cdcClass)
+  }
+
+  /** The add-row payloads of one freshly written staging directory:
+    * each part-file's rows, bytes and statistics read off its footer,
+    * so the new snapshot plans from the manifest exactly like any
+    * connector write. Spark's `_SUCCESS` marker and empty part-files
+    * (a task whose whole input was deleted) are removed from disk and
+    * the commit. The directory is flat by construction; paths are
+    * rebuilt as dir + name (listings return scheme-qualified URIs, the
+    * commit compares raw root-relative strings).
+    */
+  private def describeStaged(conf: Configuration, dir: String,
+      physSchema: StructType, cdcClass: Option[String] = None)
+      : Seq[GraftLogFileCommit] = {
+    val fs = new Path(dir).getFileSystem(conf)
     fs.delete(new Path(s"$dir/_SUCCESS"), false)
     fs.listStatus(new Path(dir))
       .toSeq.map(_.getPath.getName)
@@ -1084,100 +897,6 @@ object GraftLogOps {
       }
   }
 
-  private def morDelete(s: SparkSession, root: String,
-      cond: Column): Int = {
-    val conf = s.sessionState.newHadoopConf()
-    val fs = new Path(root).getFileSystem(conf)
-    withRetry { () =>
-      val latest = GraftLog.latestVersion(conf, root)
-      require(latest >= 1, s"no committed versions under $root")
-      val meta = GraftLog.tableMeta(conf, root, latest)
-      val schema = meta.schema
-        .getOrElse(GraftLog.inferSchema(conf, root, latest))
-      val physSchema = meta.physicalSchema(schema)
-      val dvs = GraftLog.liveState(conf, root, latest).dvs
-      val allEntries = statsEntries(s, root, latest)
-      // catalog prune (zero data I/O): only files whose statistics
-      // admit a match are scanned for positions
-      val entries = pruneByCond(s, allEntries, schema, physSchema, cond, meta)
-      if (entries.isEmpty) return latest
-      val rowsByRel = entries.map(e => (e._1, e._2.rows.get)).toMap
-      val relByNorm = entries.map(e =>
-        (normPath(s"$root/${e._1}"), e._1)).toMap
-      // matched (file, position) pairs over the RAW files (empty dv
-      // map: prior masks subtract executor-side at sidecar build, so a
-      // re-matched already-deleted row never reaches the delta). The
-      // positional-cast read keeps NESTED logical names resolvable
-      // under column mapping, same as every other DML read.
-      // cached: the matched set feeds BOTH the density decision and
-      // the sidecar job — uncached, the candidate files scan twice
-      val matched = maskedParquetWithPos(s, physSchema, schema,
-          entries.map(e => s"$root/${e._1}"), Map.empty)
-        .filter(cond)
-        .select(col("_g_file"), col("_g_pos"))
-        .cache()
-      try {
-      val counts = matched.groupBy("_g_file").count().collect()
-        .flatMap(r => relByNorm.get(normPath(r.getString(0)))
-          .map(rel => (rel, r.getLong(1))))
-      if (counts.isEmpty) return latest // no-op: nothing matched
-      val (denseRel, sparseRel) = counts.partition { case (rel, c) =>
-        c >= (rowsByRel(rel) * DvRewriteFraction).ceil.toLong }
-      val dvBase = s"$root/data/dv_${java.util.UUID.randomUUID()}"
-      // layout inference must see the FULL live set, not the pruned
-      // candidates — a biased subset could claim a layout the table
-      // doesn't uniformly have
-      val layout = layoutPartCols(conf, root, latest,
-        allEntries.map(_._1), meta)
-      val layoutRows =
-        if (layout.isEmpty) Nil
-        else Seq(GraftLog.ManifestRow("partcols", layout.mkString(",")))
-      // sidecar write inside the cleanup try: dvBase here is PERMANENT
-      // (root/data/dv_<uuid>), so a failed sidecar job must delete it —
-      // partial sidecars there would otherwise be garbage forever
-      try {
-        val (dvRows, dvFiles) = writeDvSidecars(s, conf, root, dvBase,
-          matched, sparseRel.map(_._1).toSeq, dvs, relByNorm)
-        if (denseRel.isEmpty) {
-          if (dvRows.isEmpty) { fs.delete(new Path(dvBase), true); latest }
-          else GraftLogWrite.commitStaged(conf, root,
-            dvBase, Nil, Some(schema),
-            extraRows = layoutRows ++ dvRows,
-            dvFiles = dvFiles,
-            readVersion = Some(latest), op = Some("delete"))
-        } else {
-          // dense files rewrite copy-on-write (masked read — prior
-          // deletions stay deleted), committed TOGETHER with the dv
-          // rows as one version
-          val denseFiles = denseRel.map(e => s"$root/${e._1}").toSeq
-          val cols = schema.fieldNames.map(col).toSeq
-          val kept = renameTo(maskedParquet(s, physSchema, denseFiles,
-              dvPathMap(root, dvs)), schema)
-            .select(cols: _*)
-            .filter(coalesce(cond, lit(false)) === false)
-          val staging = s"$root/data/w_delete_${java.util.UUID
-            .randomUUID()}"
-          val files = stageFiles(s, conf, kept, physSchema, staging,
-            "kept")
-          try GraftLogWrite.commitStaged(conf, root, staging, files,
-            Some(schema), removes = denseRel.map(_._1).toSeq,
-            extraRows = layoutRows ++ dvRows,
-            dvFiles = dvFiles,
-            readVersion = Some(latest), op = Some("delete"))
-          catch { case scala.util.control.NonFatal(e) =>
-            fs.delete(new Path(staging), true)
-            throw e
-          }
-        }
-      } catch { case scala.util.control.NonFatal(e) =>
-        // sidecars are never referenced until the manifest row lands —
-        // a refused commit cleans its own staging
-        fs.delete(new Path(dvBase), true)
-        throw e
-      }
-      } finally matched.unpersist()
-    }
-  }
 
   /** The table's partition columns for LAYOUT purposes: the declared
     * catalog `PARTITIONED BY` (manifest row) when present, else
@@ -1298,20 +1017,11 @@ object GraftLogOps {
   def compactLog(s: SparkSession, root: String,
       smallBytes: Long = 32L * 1024 * 1024,
       targetBytes: Long = 128L * 1024 * 1024,
-      clusterBy: Seq[String] = Nil): Int = {
-    val conf = s.sessionState.newHadoopConf()
+      clusterBy: Seq[String] = Nil): Int =
     withRetry { () =>
-      val latest = GraftLog.latestVersion(conf, root)
-      require(latest >= 1, s"no committed versions under $root")
-      val meta = GraftLog.tableMeta(conf, root, latest)
-      val schema = meta.schema
-        .getOrElse(GraftLog.inferSchema(conf, root, latest))
-      val physSchema = meta.physicalSchema(schema)
-      val dvs = GraftLog.liveState(conf, root, latest).dvs
-      val dvMap = dvPathMap(root, dvs)
-      val entries = statsEntries(s, root, latest)
-      val partCols = layoutPartCols(conf, root, latest,
-        entries.map(_._1), meta) // logical
+      val snap = new Snapshot(s, root)
+      import snap.{conf, dvMap, dvs, entries, latest, meta, physSchema}
+      val partCols = snap.layout // logical
       val partColsPhys = partCols.map(meta.physicalName) // stats keys
       // DV'd files are candidates REGARDLESS of size: OPTIMIZE is how
       // deletion vectors fold away (the rewrite materializes the mask,
@@ -1346,10 +1056,8 @@ object GraftLogOps {
                 // (deletion vectors applied at the read, so a masked
                 // row never survives into the compacted file; bins
                 // without a DV'd file keep the mask-free fast path)
-                val binDv = dvMap.filter { case (k, _) =>
-                  b.exists(f => normPath(s"$root/$f") == k) }
-                val d = maskedParquet(s, physSchema,
-                    b.map(f => s"$root/$f"), binDv)
+                val d = maskedParquet(s, physSchema, physSchema,
+                    b.map(f => s"$root/$f"), dvMap)
                   .select(physCols: _*).coalesce(1)
                 (if (clusterPhys.isEmpty) d
                  else d.sortWithinPartitions(clusterPhys.map(col): _*))
@@ -1358,35 +1066,17 @@ object GraftLogOps {
             })
           }
           tasks.foreach(_.get()) // propagate the first failure
-          val files = bins.indices.flatMap { i =>
-            fs.delete(new Path(s"$staging/bin-$i/_SUCCESS"), false)
-            fs.listStatus(new Path(s"$staging/bin-$i")).toSeq
-              .map(_.getPath.getName)
-              .filter(n => n.endsWith(".parquet") &&
-                !n.startsWith("_") && !n.startsWith("."))
-              .sorted
-              .flatMap { n =>
-                val (rows, bytes, stats) = GraftLogStats.describeFile(
-                  conf, s"$staging/bin-$i/$n", physSchema)
-                if (rows == 0L) {
-                  fs.delete(new Path(s"$staging/bin-$i/$n"), false)
-                  None
-                } else Some(GraftLogFileCommit(s"$staging/bin-$i/$n",
-                  rows, bytes, stats))
-              }
-          }
+          val files = bins.indices.flatMap(i =>
+            describeStaged(conf, s"$staging/bin-$i", physSchema))
           GraftLogWrite.commitStaged(conf, root, staging, files,
-            Some(schema), removes = bins.flatten,
+            Some(snap.schema), removes = bins.flatten,
             readVersion = Some(latest),
             op = Some("compact"),
-            extraRows =
-              (if (partCols.isEmpty) Nil
-               else Seq(GraftLog.ManifestRow("partcols",
-                 partCols.mkString(",")))) ++
+            extraRows = GraftLog.partColsRow(partCols) ++
               (if (meta.colMap.isEmpty && meta.tombstones.isEmpty) Nil
                else Seq(GraftLog.ManifestRow("colmap",
                  GraftLog.encodeColMap(meta.colMap, meta.tombstones)))))
-        } catch { case scala.util.control.NonFatal(e) =>
+        } catch { case NonFatal(e) =>
           // quiesce stragglers BEFORE deleting the staging tree: a
           // plain shutdown() lets still-running bin tasks recreate
           // data/w_compact_* directories under a tree this cleanup
@@ -1407,7 +1097,6 @@ object GraftLogOps {
         } finally pool.shutdown()
       }
     }
-  }
 
   /** VACUUM: expire every version below `keepFrom` and physically
     * delete the data files no RETAINED version references. The

@@ -196,9 +196,7 @@ class GraftLogReplaceDataWrite(root: String, writeSchema: StructType,
       // the operation's snapshot — a concurrent dv commit on one of
       // them would be silently resurrected by this remove+add
       readVersion = op.opMeta.map(_._1),
-      extraRows =
-        if (layout.isEmpty) Nil
-        else Seq(GraftLog.ManifestRow("partcols", layout.mkString(","))))
+      extraRows = GraftLog.partColsRow(layout))
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {

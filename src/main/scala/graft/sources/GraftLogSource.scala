@@ -753,6 +753,13 @@ object GraftLog {
   def partColsFromManifest(conf: Configuration, root: String,
       asOf: Int): Seq[String] = tableMeta(conf, root, asOf).partCols
 
+  /** The `partcols` manifest row recording `cols` as the table's
+    * partition layout — none for an unpartitioned table. Every commit
+    * that records a layout builds the row here.
+    */
+  def partColsRow(cols: Seq[String]): Seq[ManifestRow] =
+    if (cols.isEmpty) Nil else Seq(ManifestRow("partcols", cols.mkString(",")))
+
   /** Catalog-resolved table metadata: the schema, declared partition
     * columns, and (for renamed/dropped-column tables) the COLUMN
     * MAPPING — logical name → stable PHYSICAL name files are written
@@ -941,8 +948,7 @@ object GraftLog {
     val meta = tableMeta(conf, root, k)
     val schemaRow = meta.schema
       .map(s => ManifestRow("schema", s.toDDL)).toSeq
-    val partRow = Some(meta.partCols).filter(_.nonEmpty)
-      .map(cols => ManifestRow("partcols", cols.mkString(","))).toSeq
+    val partRow = partColsRow(meta.partCols)
     val mapRow =
       if (meta.colMap.isEmpty && meta.tombstones.isEmpty) Nil
       else Seq(ManifestRow("colmap",

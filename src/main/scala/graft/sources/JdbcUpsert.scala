@@ -98,11 +98,20 @@ object JdbcUpsert {
   /** DECIMAL(10,2) columns — values at or beyond 10⁸ overflow the target. */
   private val decimalCols = Seq("amount", "amount_abs")
 
-  /** VARCHAR widths for the staging table (Spark's Derby default for
-    * StringType is CLOB, which cannot appear in a MERGE join condition).
+  /** Staging column types for the columns the batch carries (Spark
+    * rejects a listed column the frame lacks): the target's VARCHAR
+    * widths (Spark's Derby default for StringType is CLOB, which cannot
+    * appear in a MERGE join condition) and its DECIMAL(10,2) columns —
+    * Derby's MERGE fails with XSDA7 assigning a DOUBLE staging column
+    * into a DECIMAL(10,2) target once the batch has more than five rows,
+    * and the staging insert truncates to scale 2 exactly as the MERGE
+    * would.
     */
-  private val stagingStringTypes: String =
-    varcharWidths.map { case (c, w) => s"$c VARCHAR($w)" }.mkString(", ")
+  private def stagingColumnTypes(cols: Seq[String]): String =
+    (varcharWidths.map { case (c, w) => c -> s"VARCHAR($w)" } ++
+      decimalCols.map(_ -> "DECIMAL(10,2)"))
+      .collect { case (c, t) if cols.contains(c) => s"$c $t" }
+      .mkString(", ")
 
   /** Deterministic full-row hash for LWW tie-breaks, shared by this
     * upsert and the streaming warehouse merge (Streams.fileWarehouse
@@ -184,7 +193,8 @@ object JdbcUpsert {
       .replace("-", "").take(10)}"
     try {
       aligned.write.mode("overwrite")
-        .option("createTableColumnTypes", stagingStringTypes)
+        .option("createTableColumnTypes",
+          stagingColumnTypes(aligned.columns.toSeq))
         .jdbc(url, stage, props)
     } catch { case e: Throwable =>
       // the write creates the table before inserting partitions — a

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.operators.Maintenance
-import graft.sources.{GraftLog, GraftLogWrite}
+import graft.sources.{GraftLog, GraftLogOps, GraftLogWrite}
 
 /** Row-level MERGE / DELETE on the transaction log: only the files that
   * actually contain matched rows are rewritten, as ONE zero-rename
@@ -40,7 +40,7 @@ class GraftLogMergeSpec extends SparkSpecBase {
     val source = Seq((1L, 1L, -1.0), (5L, 1L, -5.0), (1001L, 1L, -1001.0))
       .toDF("id", "bucket", "v")
     val renamesBefore = GraftLogWrite.commitRenames.get()
-    val v = Maintenance.mergeIntoLog(spark, root, source, Seq("id"))
+    val v = GraftLogOps.mergeIntoLog(spark, root, source, Seq("id"))
     assert(v === 2)
     // in-place publication: the merge commit performed zero renames
     assert(GraftLogWrite.commitRenames.get() === renamesBefore)
@@ -79,17 +79,17 @@ class GraftLogMergeSpec extends SparkSpecBase {
     val root = mkTable()
     val empty = spark.range(0)
       .selectExpr("id", "id AS bucket", "CAST(id AS DOUBLE) AS v")
-    assert(Maintenance.mergeIntoLog(spark, root, empty, Seq("id")) === 1)
+    assert(GraftLogOps.mergeIntoLog(spark, root, empty, Seq("id")) === 1)
     assert(GraftLog.latestVersion(conf, root) === 1)
     val dup = Seq((1L, 1L, 0.0), (1L, 1L, 9.0)).toDF("id", "bucket", "v")
     val e1 = intercept[IllegalArgumentException] {
-      Maintenance.mergeIntoLog(spark, root, dup, Seq("id"))
+      GraftLogOps.mergeIntoLog(spark, root, dup, Seq("id"))
     }
     assert(e1.getMessage.contains("unique"), e1.getMessage)
     assert(GraftLog.latestVersion(conf, root) === 1)
     val drift = Seq((1L, "x")).toDF("id", "name")
     val e2 = intercept[IllegalArgumentException] {
-      Maintenance.mergeIntoLog(spark, root, drift, Seq("id"))
+      GraftLogOps.mergeIntoLog(spark, root, drift, Seq("id"))
     }
     assert(e2.getMessage.contains("must match the"), e2.getMessage)
     // the legacy txn log's manifests carry no per-file statistics —
@@ -97,7 +97,7 @@ class GraftLogMergeSpec extends SparkSpecBase {
     val legacy = Maintenance.txnTableDir(spark, sfDir)
     val before = GraftLog.latestVersion(conf, legacy)
     val e3 = intercept[IllegalArgumentException] {
-      Maintenance.deleteFromLog(spark, legacy, col("o_orderkey") === 1L)
+      GraftLogOps.deleteFromLog(spark, legacy, col("o_orderkey") === 1L)
     }
     assert(e3.getMessage.contains("legacy manifest entries"),
       e3.getMessage)
@@ -156,7 +156,7 @@ class GraftLogMergeSpec extends SparkSpecBase {
     // the merge touches keys living in a PRE-widening file
     val source = Seq((5L, Some(-5.0)), (999L, Some(-999.0)))
       .toDF("id", "v")
-    assert(Maintenance.mergeIntoLog(spark, root, source, Seq("id")) === 3)
+    assert(GraftLogOps.mergeIntoLog(spark, root, source, Seq("id")) === 3)
     def snapshot(): Seq[(Long, Option[Double])] =
       spark.read.format("graftlog").option("path", root).load()
         .collect().map(r => (r.getLong(0),
@@ -169,7 +169,7 @@ class GraftLogMergeSpec extends SparkSpecBase {
     assert(snapshot() === want)
     // delete on the widened column: NULL-condition (pre-widening) rows
     // are kept, matching rows leave
-    Maintenance.deleteFromLog(spark, root, col("v") > 55.0)
+    GraftLogOps.deleteFromLog(spark, root, col("v") > 55.0)
     assert(snapshot() === want.filterNot(_._2.exists(_ > 55.0)))
     // compaction across both generations preserves the null-fill
     val before = snapshot()
@@ -248,7 +248,7 @@ class GraftLogMergeSpec extends SparkSpecBase {
     assert(candidates.exists(_.contains("grp=0")), candidates)
     assert(candidates.exists(_.contains("grp=3")), candidates)
     // and the merge itself rewrites exactly those two files
-    val v2 = Maintenance.mergeIntoLog(spark, root, src, Seq("id"))
+    val v2 = GraftLogOps.mergeIntoLog(spark, root, src, Seq("id"))
     assert(v2 === 2)
     val removes = GraftLog.versionRows(conf, root, 2)
       .filter(_.action == "remove").map(_.file).sorted
@@ -268,7 +268,7 @@ class GraftLogMergeSpec extends SparkSpecBase {
     val threads = Seq(srcA, srcB).map { src =>
       new Thread(() => {
         gate.await()
-        try results.add(Maintenance.mergeIntoLog(spark, root, src,
+        try results.add(GraftLogOps.mergeIntoLog(spark, root, src,
           Seq("id")))
         catch { case t: Throwable => errors.add(t) }
       })
@@ -311,7 +311,7 @@ class GraftLogMergeSpec extends SparkSpecBase {
     }
     assert(e.getMessage.contains("read-write conflict"), e.getMessage)
     // no claim leaked: the next ordinary commit still lands
-    assert(Maintenance.mergeIntoLog(spark, root,
+    assert(GraftLogOps.mergeIntoLog(spark, root,
       Seq((150L, 2L, -150.0)).toDF("id", "bucket", "v"), Seq("id")) === 3)
     val got = spark.read.format("graftlog").option("path", root).load()
       .filter(col("id") === 150L).collect()
@@ -326,13 +326,13 @@ class GraftLogMergeSpec extends SparkSpecBase {
       .toDF("id", "v")
       .write.format("graftlog").option("path", root)
       .option("schema", "id BIGINT, v DOUBLE").mode("append").save()
-    val v2 = Maintenance.deleteFromLog(spark, root, col("v") > 2.0)
+    val v2 = GraftLogOps.deleteFromLog(spark, root, col("v") > 2.0)
     assert(v2 === 2)
     val got = spark.read.format("graftlog").option("path", root).load()
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(got === Seq(1L, 2L)) // id 3 deleted; id 2 (NULL cond) kept
     // idempotent: the same delete again matches nothing → no new version
-    assert(Maintenance.deleteFromLog(spark, root, col("v") > 2.0) === 2)
+    assert(GraftLogOps.deleteFromLog(spark, root, col("v") > 2.0) === 2)
     assert(GraftLog.latestVersion(conf, root) === 2)
   }
 }

@@ -81,6 +81,31 @@ class JdbcUpsertSpec extends SparkSpecBase {
     assert(spark.read.jdbc(url, table, props).count() === 3)
   }
 
+  test("reference-sized batches (≥ 20 rows, fractional cents) insert, " +
+      "then conflict-update") {
+    val t = "txn_sized"
+    // three-decimal amounts: the DECIMAL(10,2) target truncates them, so
+    // the staged values must already be DECIMAL(10,2) for Derby's MERGE
+    // to assign them (a DOUBLE staging column fails once the batch has
+    // more than five rows)
+    val rows = (0 until 24).map(i =>
+      (f"S$i%03d", (i * 1.337 - 7.005) * (if (i % 2 == 0) 1 else -1),
+        "food"))
+    JdbcUpsert.upsert(batch(rows, "2024-07-01 12:00:00"), url, t, props)
+    JdbcUpsert.upsert(
+      batch(rows.map { case (k, a, c) => (k, a + 100.0, c) },
+        "2024-07-01 13:00:00"), url, t, props)
+    val got = spark.read.jdbc(url, t, props)
+      .select(col("transaction_id"), col("amount").cast("double"))
+      .as[(String, Double)].collect().toMap
+    assert(got.size === 24)
+    // Derby truncates to two decimals on the staging insert
+    val want = rows.map { case (k, a, _) =>
+      k -> BigDecimal(a + 100.0).setScale(2, BigDecimal.RoundingMode.DOWN)
+        .toDouble }.toMap
+    assert(got === want)
+  }
+
   test("transform-chain batches (no processed_timestamp) upsert cleanly") {
     val t = "txn_chain"
     val chain = batch(Seq(("C1", 5.0, "food")), "2024-07-01 12:00:00")

@@ -2,6 +2,9 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SQLExecution
+
 /** Dev/measurement main (optimization rounds): dumps
   * `explain("formatted")` for each bench query to one text file per query,
   * so plan shapes (Exchange count, join strategy, PushedFilters,
@@ -29,50 +32,17 @@ object PlanDump {
       case Some(names) => SparkEntry.benchQueries.filter(kv => names(kv._1))
       case None        => SparkEntry.benchQueries
     }
-    // SPARK_GRAFT_PLAN_EXECUTED=1: run the query through the noop sink
-    // and dump the WRITE's OWN executed plan — with AQE on, that is the
-    // final re-optimized plan (materialized query stages, reused stages,
-    // AQEShuffleRead, runtime join rewrites), which the static explain
-    // cannot show. The write creates its own QueryExecution, so the plan
-    // must be captured from a QueryExecutionListener, not from the
-    // read-side df.queryExecution (whose AdaptiveSparkPlan never
-    // executes and stays isFinalPlan=false).
+    // SPARK_GRAFT_PLAN_EXECUTED=1: run the query and dump its final
+    // executed plan (see executedPlan), which the static explain cannot show
     val executed = sys.env.get("SPARK_GRAFT_PLAN_EXECUTED").contains("1")
-    @volatile var lastPlan: String = ""
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit =
-        lastPlan = qe.executedPlan.toString
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    if (executed) spark.listenerManager.register(listener)
     selected.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
         val df = fn(spark, sfDir)
-        val txt = if (executed) {
-          lastPlan = ""
-          df.write.format("noop").mode("overwrite").save()
-          // listener delivery is asynchronous AND earlier fixture
-          // executions may still be in flight: wait until the stream of
-          // onSuccess events has been quiet for a beat, then take the
-          // LAST delivered plan (events are delivered in order, so that
-          // is the noop write's own execution)
-          var waited = 0
-          var seen = lastPlan
-          var stable = 0
-          while ((lastPlan.isEmpty || stable < 6) && waited < 200) {
-            Thread.sleep(50); waited += 1
-            if (lastPlan == seen && lastPlan.nonEmpty) stable += 1
-            else { seen = lastPlan; stable = 0 }
-          }
-          lastPlan
-        } else
+        val txt =
+          if (executed) executedPlan(df)
           // queryExecution.explainString gives the same text explain()
           // prints, without capturing stdout
-          df.queryExecution.explainString(
+          else df.queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode)
         Files.writeString(Paths.get(s"$outDir/$name.txt"), txt)
       } catch { case e: Throwable =>
@@ -80,5 +50,20 @@ object PlanDump {
       }
     }
     spark.stop()
+  }
+
+  /** Runs `df` under its own `QueryExecution` and returns that execution's
+    * final executed-plan string. With AQE on, that is the re-optimized
+    * plan — materialized query stages, reused stages (`ReusedExchange`),
+    * `AQEShuffleRead`, runtime join rewrites — which the read-side
+    * `df.queryExecution` never reaches (its `AdaptiveSparkPlan` does not
+    * execute and stays `isFinalPlan=false`).
+    */
+  def executedPlan(df: DataFrame): String = {
+    val qe = df.queryExecution.sparkSession.sessionState
+      .executePlan(df.queryExecution.logical)
+    SQLExecution.withNewExecutionId(qe)(
+      qe.executedPlan.execute().foreach(_ => ()))
+    qe.executedPlan.toString
   }
 }

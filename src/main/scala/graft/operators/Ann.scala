@@ -478,9 +478,9 @@ object Ann {
 
   /** Connected components over the exact embedding near-dup pairs — the
     * cluster view of the pair report (each semantic duplicate group gets
-    * one id = its minimum member), reusing the document dedup's
-    * alternating large-star/small-star machinery: diameter-independent,
-    * no driver iteration state. Only vectors participating in at least
+    * one id = its minimum member), through the document dedup's
+    * [[Dedup.labelComponents]] (min-label rounds, alternating-star
+    * fallback). Only vectors participating in at least
     * one near-dup pair appear (singletons need no cluster id) — matching
     * the oracle's transitive closure over the edge list.
     *
@@ -586,8 +586,10 @@ object Ann {
     * EMPTY by a round (a dead centroid) is reseeded from the globally
     * farthest-assigned vector (lowest nearest-centroid cosine, ties on
     * vec_id) — the standard k-means empty-cluster repair, so the index
-    * never silently shrinks below K lists. Each round is checkpointed:
-    * plan depth stays one round regardless of `rounds`.
+    * never silently shrinks below K lists. The rounds run through
+    * [[Fixpoint.iterate]] with no stopping test (a fixed round count), and
+    * the result is observed as `lloydRefine` (`rounds`; `converged` is
+    * always false).
     *
     * Gated behind `refineRounds > 0` in [[ivfTopK]] because a
     * cross-partition FP average is not byte-stable under
@@ -597,13 +599,9 @@ object Ann {
     */
   private[graft] def lloydRefine(s: SparkSession, d: String,
       rounds: Int): DataFrame = {
-    var centroids = ivfCentroids(s, d).localCheckpoint()
-    var r = 0
-    while (r < rounds) {
-      centroids = lloydStep(s, d, centroids).localCheckpoint()
-      r += 1
-    }
-    centroids
+    val run = Fixpoint.iterate(ivfCentroids(s, d), rounds, Nil)(
+      (centroids, _) => lloydStep(s, d, centroids))((_, _, _) => false)
+    run.report(run.state, "lloydRefine")
   }
 
   /** One Lloyd round against an explicit centroid set: cell means + dead-
@@ -644,10 +642,6 @@ object Ann {
       .select(col("cid"), col("embedding").as("c_emb"))
     means.unionByName(reseeded)
   }
-
-  /** Single-round form — kept as the spec-facing name. */
-  private[graft] def lloydRefineOnce(s: SparkSession, d: String): DataFrame =
-    lloydRefine(s, d, 1)
 
   /** IVF list assignment: nearest centroid per vector. Broadcast the K
     * centroids, codegen'd cosine, argmax via max(struct) — deterministic

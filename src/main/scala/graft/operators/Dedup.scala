@@ -728,14 +728,9 @@ object Dedup {
 
   val MaxClusterRounds = 20
 
-  /** Dedup clusters: connected components over the near-dup pair graph —
-    * the step that turns pairs into "keep one per cluster" decisions.
-    * Iterative min-label propagation: each round joins labels across edges
-    * and keeps the minimum; converges in O(diameter) rounds (dup clusters
-    * are tiny cliques, so 2-3 rounds in practice; capped + fixpoint-checked,
-    * with the alternating-star algorithm as the arbitrary-diameter
-    * fallback). Each round is a distributed join/agg — the driver only
-    * steers.
+  /** Dedup clusters: connected components over the near-dup pair graph
+    * ([[labelComponents]]) — the step that turns pairs into "keep one per
+    * cluster" decisions.
     */
   def dedupClusters(s: SparkSession, d: String): DataFrame =
     labelComponents(ngramPairs(s, d).select(col("d1"), col("d2")))
@@ -744,19 +739,20 @@ object Dedup {
 
   /** Connected components over an oriented pair list `(d1, d2)` — the
     * shared engine behind [[dedupClusters]] and the embedding cluster
-    * query: min-label propagation (O(diameter) rounds — near-dup
-    * clusters are tiny cliques, 2-3 rounds in practice) with the
-    * alternating-star algorithm as the arbitrary-diameter fallback.
-    * Returns `(node, cluster_id)` with cluster_id = the component's
-    * minimum member. Each round is a distributed join/agg — the driver
-    * only steers.
+    * query: min-label propagation with a pointer hop per round, capped at
+    * [[MaxClusterRounds]], with the alternating-star algorithm as the
+    * fallback for components the cap cuts off. Returns `(node, cluster_id)`
+    * with cluster_id = the component's minimum member, observed as
+    * `labelComponents`: `rounds` and `converged` of the min-label loop, and
+    * `fallback` = 1 when the star path produced the labels.
     */
-  private[operators] def labelComponents(pairs: DataFrame): DataFrame = {
+  private[graft] def labelComponents(pairs: DataFrame): DataFrame = {
     // edges are REPARTITIONED on the per-round join key before caching:
     // every propagation round joins the (large) edge set against the
     // (small, changing) label set on `src`, so establishing the hash
-    // partitioning once lets each round's sort-merge/shuffled-hash join
-    // reuse the cached layout instead of re-exchanging the edges per
+    // partitioning once lets each round's join, when the labels are too
+    // large to broadcast, reuse the cached layout instead of
+    // re-exchanging the edges per
     // round (guide §2.4 — two operations keyed the same way share one
     // exchange; the init aggregate below rides the same partitioning).
     // both orientations come from ONE derivation of the pair subtree
@@ -771,11 +767,6 @@ object Dedup {
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .repartition(col("src"))
       .cache()
-    // every label round is localCheckpoint'd (eager): the plan — and the
-    // recovery lineage — stays ONE round deep regardless of graph diameter,
-    // instead of growing a round-per-iteration expression tree. Superseded
-    // rounds' blocks are released by the context cleaner once unreferenced.
-    //
     // Labels initialize at the NEIGHBORHOOD MIN (min of self and all
     // direct neighbors), which is exactly the state identity-init reaches
     // after its first propagation round: one aggregate over the already
@@ -783,77 +774,57 @@ object Dedup {
     // join + union + aggregate + checkpoint. Near-dup components are
     // cliques, so this init is already the fixpoint and the loop below
     // terminates after ONE confirming round instead of two.
-    var labels = edges.groupBy(col("src")).agg(min(col("dst")).as("nmin"))
+    val init = edges.groupBy(col("src")).agg(min(col("dst")).as("nmin"))
       .select(col("src").as("doc_id"),
         least(col("src"), col("nmin")).as("label"))
       .localCheckpoint()
-    var converged = false
-    var rounds    = 0
-    while (!converged && rounds < MaxClusterRounds) {
-      val viaEdges = edges
-        .join(labels.withColumnRenamed("doc_id", "src"), Seq("src"))
-        .select(col("dst").as("doc_id"), col("label"))
-      // each doc's previous label rides along as `own` (exactly one labels
-      // row per doc; propagated rows carry MaxValue so min() ignores them).
-      // Convergence = no doc improved, observed as a metric on the SAME job
-      // that materializes the checkpoint — one driver action per round, and
-      // `own` is dropped before the checkpoint so the bookkeeping column is
-      // never stored or carried into the next round.
-      val obs = new org.apache.spark.sql.Observation(s"cc_round_$rounds")
-      val prop = labels.withColumn("own", col("label"))
-        .unionByName(viaEdges.withColumn("own", lit(Long.MaxValue)))
-        .groupBy(col("doc_id"))
-        .agg(min(col("label")).as("label"), min(col("own")).as("own"))
-      // pointer-jumping shortcut: follow the propagated label ONE hop
-      // through the previous round's mapping (label values are always
-      // member node ids, so the lookup hits; labels only ever decrease,
-      // so the stale-by-one mapping is safe). Edge propagation alone
-      // needs O(diameter) rounds — a chain-shaped component (embedding
-      // graphs at a loose threshold, unlike near-dup cliques) measured
-      // 16 rounds at sf0.1; the shortcut halves the remaining distance
-      // per round on top of the edge step, for O(log diameter) rounds
-      // at the cost of one |nodes|-sized join against the checkpointed
-      // labels per round (tiny beside the edge join it avoids repeating).
-      val next = prop.as("p")
-        .join(labels.select(col("doc_id").as("l_node"),
-          col("label").as("l_label")),
-          col("p.label") === col("l_node"), "left")
-        .select(col("p.doc_id").as("doc_id"),
-          least(col("p.label"), coalesce(col("l_label"), col("p.label")))
-            .as("label"),
-          col("p.own").as("own"))
-        .observe(obs, count(when(col("label") < col("own"), 1)).as("improved"))
-        .drop("own")
-        .localCheckpoint()
-      converged = obs.get("improved").asInstanceOf[Long] == 0L
-      // dev-only visibility (optimization rounds): per-round improvement
-      // counts make the round count auditable without event logs
-      if (sys.env.contains("SPARK_GRAFT_CC_LOG"))
-        System.err.println(s"[cc] round=$rounds improved=" +
-          s"${obs.get("improved")} converged=$converged")
-      labels = next
-      rounds += 1
-    }
+    // each doc's previous label rides along as `own` (exactly one labels
+    // row per doc; propagated rows carry MaxValue so min() ignores them):
+    // convergence = no doc improved
+    val run = Fixpoint.iterate(init, MaxClusterRounds,
+        Seq(count(when(col("label") < col("own"), 1)).as("improved"))) {
+      (labels, _) =>
+        val viaEdges = edges
+          .join(labels.withColumnRenamed("doc_id", "src"), Seq("src"))
+          .select(col("dst").as("doc_id"), col("label"))
+        val prop = labels.withColumn("own", col("label"))
+          .unionByName(viaEdges.withColumn("own", lit(Long.MaxValue)))
+          .groupBy(col("doc_id"))
+          .agg(min(col("label")).as("label"), min(col("own")).as("own"))
+        // pointer hop: a node takes its propagated label's own label from
+        // the previous round (labels are member ids and only decrease, so
+        // the stale-by-one lookup is safe). It halves the remaining distance
+        // only where ids ascend along a chain (sorted 60-node path: 6
+        // rounds); DedupSpec's path with ids 7·i mod 60 needs 35, and ids
+        // descending away from the minimum one per hop. Embedding graph at
+        // sf0.1: 16 rounds → 11.
+        prop.as("p")
+          .join(labels.select(col("doc_id").as("l_node"),
+            col("label").as("l_label")),
+            col("p.label") === col("l_node"), "left")
+          .select(col("p.doc_id").as("doc_id"),
+            least(col("p.label"), coalesce(col("l_label"), col("p.label")))
+              .as("label"),
+            col("p.own").as("own"))
+    } { (_, _, m) => m("improved") == 0L }
     // an unconverged result is silently WRONG (labels short of the true
-    // component minimum), so never return it: a component of diameter >
-    // MaxClusterRounds (pathological for near-dup cliques, but legal input)
-    // falls back to the alternating-star algorithm, whose round count is
-    // logarithmic in component size instead of linear in diameter. The
-    // fallback reads the CACHED edge set (connectedComponents tolerates the
-    // bidirectional form — it re-orients and distincts on entry), not a
-    // re-derivation of the pair join: re-running the most expensive stage
-    // exactly on the pathological inputs that trigger the fallback would
-    // double its cost. Both branches materialize eagerly via localCheckpoint
-    // before this function returns, so the unpersist below never exposes a
+    // component minimum), so never return it: fall back to the
+    // alternating-star algorithm, whose round count is logarithmic in
+    // component size. The fallback reads the CACHED edge set
+    // (connectedComponents tolerates the bidirectional form — it
+    // re-orients and distincts on entry), not a re-derivation of the pair
+    // join: re-running the most expensive stage exactly on the inputs
+    // that trigger the fallback would double its cost. Both branches read
+    // only checkpointed state, so the unpersist below never exposes a
     // lazy consumer to a cold recompute.
     val out =
-      if (!converged)
-        connectedComponents(edges.select(col("src").as("u"), col("dst").as("v")))
-          .select(col("node"), col("label").as("cluster_id"))
-      else labels.select(col("doc_id").as("node"),
+      if (run.converged) run.state.select(col("doc_id").as("node"),
         col("label").as("cluster_id"))
+      else connectedComponents(edges.select(col("src").as("u"), col("dst").as("v")))
+        .select(col("node"), col("label").as("cluster_id"))
     edges.unpersist()
-    out
+    run.report(out, "labelComponents",
+      lit(if (run.converged) 0 else 1).as("fallback"))
   }
 
   /** Rounds cap for [[connectedComponents]] — a safety net, not a tuning
@@ -866,7 +837,7 @@ object Dedup {
 
   /** Connected components over an undirected edge list (u, v) by
     * alternating large-star / small-star rounds — the diameter-independent
-    * scale path behind [[dedupClusters]]'s min-label fast path.
+    * scale path behind [[labelComponents]]' min-label fast path.
     *
     * Each round is two bounded-fan-in distributed steps:
     *  - large-star: every node connects its strictly-larger neighbors to
@@ -875,62 +846,58 @@ object Dedup {
     *    (and itself) to that minimum.
     * Both only ever REPLACE an edge endpoint with a smaller one, so edge
     * count never grows, and the fixpoint is a star per component centered
-    * on its minimum. Convergence is detected from a (count, hash-sum)
+    * on its minimum. Convergence is screened by a (rows, hash-sum)
     * signature observed on the same job that materializes each round's
-    * checkpoint — one driver action per round, same as the min-label loop.
-    * Output: (node, label) with label = component minimum.
+    * checkpoint, then confirmed exactly.
+    * Output: (node, label) with label = component minimum, observed as
+    * `connectedComponents` (`rounds`, `converged`).
     */
   private[graft] def connectedComponents(edges0: DataFrame): DataFrame = {
     def swap(e: DataFrame) = e.select(col("v").as("u"), col("u").as("v"))
     def neighborhoodMin(bidir: DataFrame): DataFrame =
       bidir.groupBy(col("u")).agg(min(col("v")).as("mv"))
         .select(col("u"), least(col("mv"), col("u")).as("m"))
-    var edges = edges0.select(col("u"), col("v"))
+    val init = edges0.select(col("u"), col("v"))
       .filter(col("u") =!= col("v")).distinct().localCheckpoint()
-    var prev      = (-1L, -1L)
-    var converged = false
-    var rounds    = 0
-    while (!converged && rounds < CcMaxRounds) {
-      val bidir = edges.union(swap(edges))
-      val large = bidir.join(neighborhoodMin(bidir), Seq("u"))
-        .filter(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .filter(col("u") =!= col("v"))
-        .distinct()
-      // small-star runs on large-star's output, oriented u = max endpoint
-      val dir = large.select(greatest(col("u"), col("v")).as("u"),
-        least(col("u"), col("v")).as("v"))
-      val smins = dir.groupBy(col("u")).agg(min(col("v")).as("m"))
-      val small = dir.join(smins, Seq("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .union(smins.select(col("u"), col("m").as("v")))
-        .filter(col("u") =!= col("v"))
-        .distinct()
-      val obs = new org.apache.spark.sql.Observation(s"cc_star_$rounds")
-      // the hash-sum stays in pmod range so the ANSI sum cannot overflow
-      val next = small.observe(obs,
-        count(lit(1)).as("n"),
-        sum(pmod(xxhash64(col("u"), col("v")), lit(1000000007L))).as("chk"))
-        .localCheckpoint()
-      val sig = (obs.get("n").asInstanceOf[Long],
-        Option(obs.get("chk")).map(_.asInstanceOf[Long]).getOrElse(0L))
+    var prev = (-1L, -1L)
+    // the hash-sum stays in pmod range so the ANSI sum cannot overflow
+    val chk = sum(pmod(xxhash64(col("u"), col("v")), lit(1000000007L)))
+    val run = Fixpoint.iterate(init, CcMaxRounds, Seq(chk.as("chk"))) {
+      (edges, _) =>
+        val bidir = edges.union(swap(edges))
+        val large = bidir.join(neighborhoodMin(bidir), Seq("u"))
+          .filter(col("v") > col("u"))
+          .select(col("v").as("u"), col("m").as("v"))
+          .filter(col("u") =!= col("v"))
+          .distinct()
+        // small-star runs on large-star's output, oriented u = max endpoint
+        val dir = large.select(greatest(col("u"), col("v")).as("u"),
+          least(col("u"), col("v")).as("v"))
+        val smins = dir.groupBy(col("u")).agg(min(col("v")).as("m"))
+        dir.join(smins, Seq("u"))
+          .select(col("v").as("u"), col("m").as("v"))
+          .union(smins.select(col("u"), col("m").as("v")))
+          .filter(col("u") =!= col("v"))
+          .distinct()
+    } { (edges, next, m) =>
+      val sig = (m("rows").asInstanceOf[Long],
+        Option(m("chk")).map(_.asInstanceOf[Long]).getOrElse(0L))
       // the signature is only a cheap screen: candidate convergence is
       // confirmed EXACTLY (both sides are distinct sets with equal counts,
       // so next ⊆ edges ⇔ equality) — a hash-sum collision must not end
       // the loop on a non-fixpoint, which would return wrong labels. The
       // except job runs once, at convergence, over two checkpointed sets.
-      converged = sig == prev && next.except(edges).isEmpty
+      val same = sig == prev && next.except(edges).isEmpty
       prev = sig
-      edges = next
-      rounds += 1
+      same
     }
-    if (!converged) throw new IllegalStateException(
+    if (!run.converged) throw new IllegalStateException(
       s"connectedComponents: no fixpoint in $CcMaxRounds rounds")
     // at the fixpoint each component is a star around its minimum, so one
     // neighborhood-min pass reads off every node's label
-    val bidir = edges.union(swap(edges))
-    neighborhoodMin(bidir)
-      .select(col("u").as("node"), col("m").as("label"))
+    val bidir = run.state.union(swap(run.state))
+    run.report(neighborhoodMin(bidir)
+      .select(col("u").as("node"), col("m").as("label")), "connectedComponents")
   }
 
   /** Oracle: transitive closure by recursive CTE over the same pair SQL. */

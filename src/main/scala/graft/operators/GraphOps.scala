@@ -341,7 +341,8 @@ object GraphOps {
   /** Depth bound for [[bfsLevels]] (co-purchase graphs are small-world;
     * every reachable node is found well inside this on the testdata, and
     * the bound keeps the driver loop — and the oracle's recursion —
-    * finite regardless of input pathology).
+    * finite regardless of input pathology). When the last allowed round
+    * still adds nodes, the result reports `cut` = 1.
     */
   val BfsMaxDepth = 6
 
@@ -351,52 +352,36 @@ object GraphOps {
     * don't cover: correctness is the MINIMUM level per node, which the
     * expansion gets for free by anti-joining each frontier against the
     * visited set (a node never re-enters, so its first level is its
-    * final level). Each of the ≤ [[BfsMaxDepth]] driver-bounded rounds
-    * is one frontier⋈edges hash join + distinct + one LeftAnti — all
-    * keyed on node, nothing quadratic — and each frontier materializes
-    * before the next round (the CC write-once discipline) so lineage
-    * stays flat. The DuckDB oracle is an independent WITH RECURSIVE
+    * final level). The state is one `(node, level)` frame; [[Fixpoint]]
+    * round `l` expands the level `l − 1` frontier with one frontier⋈edges
+    * hash join + distinct + one LeftAnti — all keyed on node, nothing
+    * quadratic — and the first round that adds nothing ends it. The
+    * histogram is observed as `bfsLevels` (`rounds`, `converged`, `cut`).
+    * The DuckDB oracle is an independent WITH RECURSIVE
     * expansion + min-per-node regroup; per-level id sums travel as a
     * checksum so a single misplaced node hash-fails.
     */
   def bfsLevels(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
     val (_, edges) = edgeTable(s, d)
-    val src = edges.agg(min(col("p1"))).collect()(0).getLong(0)
-    var visited = Seq((src, 0L)).toDF("node", "level")
-    var frontier = visited.select(col("node"))
-    val pinned = scala.collection.mutable.ListBuffer[DataFrame]()
-    var l = 1
-    var grew = true
-    while (grew && l <= BfsMaxDepth) {
-      val next = edges
-        .join(frontier.withColumnRenamed("node", "p1"), Seq("p1"))
+    val seed = edges.agg(min(col("p1")).as("node"))
+      .select(col("node"), lit(0L).as("level"))
+    // `fresh` marks the round's new nodes for the signal only; Fixpoint
+    // drops it before the checkpoint
+    val run = Fixpoint.iterate(seed, BfsMaxDepth,
+        Seq(count(when(col("fresh"), 1)).as("added"))) { (visited, l) =>
+      val frontier = visited.filter(col("level") === l - 1)
+        .select(col("node").as("p1"))
+      val next = edges.join(frontier, Seq("p1"))
         .select(col("p2").as("node")).distinct()
         .join(visited, Seq("node"), "left_anti")
-        .withColumn("level", lit(l.toLong))
-        .persist()
-      // materialize (flat lineage round-over-round); an empty frontier
-      // ends the traversal — the remaining rounds would only re-join
-      // nothing, and the result is identical by construction
-      grew = next.count() > 0
-      pinned += next
-      visited = visited.unionByName(next)
-      frontier = next.select(col("node"))
-      l += 1
-    }
-    // the histogram is ≤ depth+1 rows — take it eagerly so every pinned
-    // frontier can unpersist NOW (leaving 2·depth cached frontiers per
-    // invocation measurably pressured storage memory for every query
-    // that ran after this one in a bench sweep)
-    val hist = visited.groupBy(col("level"))
+        .select(col("node"), lit(l.toLong).as("level"), lit(true).as("fresh"))
+      visited.withColumn("fresh", lit(false)).unionByName(next)
+    } { (_, _, m) => m("added") == 0L }
+    val hist = run.state.groupBy(col("level"))
       .agg(count(lit(1)).as("n_nodes"),
         min(col("node")).as("min_node"),
         sum(col("node")).as("node_id_sum"))
-      .orderBy(col("level"))
-      .collect().toSeq
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    pinned.foreach(_.unpersist(blocking = false))
-    hist.toDF("level", "n_nodes", "min_node", "node_id_sum")
+    run.report(hist, "bfsLevels", lit(if (run.converged) 0 else 1).as("cut"))
       .orderBy(col("level"))
   }
 

@@ -1,8 +1,10 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Sort}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Sort, Statistics}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.classic.Dataset
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Bridge into `private[sql]` Dataset construction, used by Bench to
   * measure the PRODUCTION form of each query: every query in the driver
@@ -21,6 +23,19 @@ object PlanBridge {
       plan: LogicalPlan): DataFrame =
     Dataset.ofRows(
       s.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** A checkpointed frame sized by its counted `rows`, not by its source
+    * plan's estimate (a join's is the product of its inputs' sizes).
+    */
+  def withRowCount(df: DataFrame, rows: Long): DataFrame = {
+    val r = df.queryExecution.logical.asInstanceOf[LogicalRDD]
+    val s = df.sparkSession.asInstanceOf[
+      org.apache.spark.sql.classic.SparkSession]
+    val stats = Statistics(
+      sizeInBytes = EstimationUtils.getSizePerRow(r.output) * rows,
+      rowCount = Some(rows))
+    Dataset.ofRows(s, r.copy()(s, Some(stats), None))
+  }
 
   def stripPresentationSort(df: DataFrame): DataFrame = {
     val stripped = df.queryExecution.logical match {

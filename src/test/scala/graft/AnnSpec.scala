@@ -170,7 +170,7 @@ class AnnSpec extends SparkSpecBase {
     assert(ivf === truth)
     // the refinement is not a no-op: cell means differ from the seed
     // vectors they replace
-    val refined = Ann.lloydRefineOnce(spark, sfDir)
+    val refined = Ann.lloydRefine(spark, sfDir, 1)
       .select("cid", "c_emb").as[(Long, Array[Float])].collect().toMap
     val seeds = Tables.embeddings(spark, sfDir)
       .filter(col("vec_id") >= Ann.NumQueries &&

@@ -195,6 +195,28 @@ class DedupSpec extends SparkSpecBase {
     assert(got === Map(3L -> 3L, 5L -> 3L, 9L -> 3L, 20L -> 20L, 21L -> 20L))
   }
 
+  test("min-label components hand a long path with ids against its " +
+      "direction to the star fallback, and report it") {
+    // a 60-node path with ids 7·i mod 60 along it: min-label with its
+    // pointer hop needs 35 rounds here (a local replay of the update rule;
+    // sorted ids need 6), past the MaxClusterRounds cap, so the
+    // labels must come from the alternating-star fallback
+    val ids = (0 until 60).map(i => 7L * i % 60)
+    val df = Dedup.labelComponents(ids.zip(ids.tail).toDF("d1", "d2"))
+    val labels = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(labels === ids.map(_ -> 0L).toMap)
+    val m = df.queryExecution.observedMetrics("labelComponents")
+    assert(m.getAs[Int]("fallback") === 1)
+    assert(m.getAs[Int]("rounds") === Dedup.MaxClusterRounds)
+    assert(!m.getAs[Boolean]("converged"))
+    // the near-dup cliques of the testdata never take the fallback
+    val clusters = Dedup.dedupClusters(spark, sfDir)
+    assert(clusters.collect().nonEmpty)
+    val dm = clusters.queryExecution.observedMetrics("labelComponents")
+    assert(dm.getAs[Int]("fallback") === 0)
+    assert(dm.getAs[Boolean]("converged"))
+  }
+
   test("alternating-star components agree with min-label clusters on the " +
       "driver testdata") {
     val viaLabels = Dedup.dedupClusters(spark, sfDir)

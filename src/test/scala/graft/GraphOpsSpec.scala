@@ -146,7 +146,8 @@ class GraphOpsSpec extends SparkSpecBase {
 
   test("bfs levels match an exhaustive local traversal: minimum level " +
       "per node, level-0 is exactly the source, frontiers are disjoint") {
-    val got = GraphOps.bfsLevels(spark, sfDir).collect()
+    val bfs = GraphOps.bfsLevels(spark, sfDir)
+    val got = bfs.collect()
       .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2), r.getLong(3))))
     assert(got.nonEmpty && got.head._1 == 0L && got.head._2._1 == 1L)
     // local replay over the same edge derivation
@@ -171,5 +172,9 @@ class GraphOpsSpec extends SparkSpecBase {
       (ns.length.toLong, ns.map(_._1).min, ns.map(_._1).sum)
     }.toSeq.sortBy(_._1)
     assert(got.toSeq == want)
+    // the traversal ended on an empty frontier, not on the depth cap
+    val m = bfs.queryExecution.observedMetrics("bfsLevels")
+    assert(m.getAs[Int]("cut") === 0)
+    assert(m.getAs[Boolean]("converged"))
   }
 }

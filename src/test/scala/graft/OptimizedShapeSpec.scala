@@ -1,7 +1,10 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.execution.window.WindowExec
 
 /** Round-16 optimization round: pins the PLAN SHAPES the single-pass
   * rewrites bought, so a refactor cannot silently reintroduce the
@@ -20,34 +23,38 @@ class OptimizedShapeSpec extends SparkSpecBase {
       case r: LogicalRelation => r
     }.size
 
-  /** Executes df through the noop sink and returns the WRITE's own final
-    * executed-plan string — with AQE on, that is where stage reuse
-    * (ReusedExchange) is visible; the read-side df.queryExecution never
-    * executes and cannot show it. Same capture as PlanDump.
+  /** The physical plan's unpartitioned windows (`Window.partitionBy()`,
+    * which run in ONE task), each paired with whether some path from it
+    * down to a leaf crosses no aggregate — i.e. whether it can see an
+    * input of scan size rather than aggregate size.
     */
-  private def executedPlan(df: DataFrame): String = {
-    @volatile var last = ""
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          d: Long): Unit = last = qe.executedPlan.toString
-      override def onFailure(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          e: Exception): Unit = ()
+  private def unpartitionedWindows(df: DataFrame): Seq[Boolean] = {
+    def unaggregated(p: SparkPlan): Boolean = p match {
+      case _: BaseAggregateExec => false
+      case leaf if leaf.children.isEmpty => true
+      case other => other.children.exists(unaggregated)
     }
-    spark.listenerManager.register(listener)
-    try {
-      df.write.format("noop").mode("overwrite").save()
-      var waited = 0
-      var seen = last
-      var stable = 0
-      while ((last.isEmpty || stable < 6) && waited < 200) {
-        Thread.sleep(50); waited += 1
-        if (last == seen && last.nonEmpty) stable += 1
-        else { seen = last; stable = 0 }
-      }
-      last
-    } finally spark.listenerManager.unregister(listener)
+    df.queryExecution.sparkPlan.collect {
+      case w: WindowExec if w.partitionSpec.isEmpty => unaggregated(w.child)
+    }
+  }
+
+  test("freshness and drift run their unpartitioned windows only above " +
+      "an aggregate") {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{count, lit}
+    // control: the same window straight over the scan is flagged
+    val raw = Tables.events(spark, sfDir)
+      .withColumn("n", count(lit(1)).over(Window.partitionBy()))
+    assert(unpartitionedWindows(raw) == Seq(true))
+    Seq("q_freshness" -> operators.EventOps.freshness(spark, sfDir),
+        "q_drift_tv" -> operators.Drift.driftTv(spark, sfDir)).foreach {
+      case (name, df) =>
+        val windows = unpartitionedWindows(df)
+        assert(windows.nonEmpty, s"$name has no unpartitioned window left")
+        assert(!windows.contains(true),
+          s"$name runs an unpartitioned window over an unaggregated input")
+    }
   }
 
   test("funnel reads the event table exactly once") {
@@ -71,7 +78,8 @@ class OptimizedShapeSpec extends SparkSpecBase {
     // own subtree; the single-scan guarantee is an AQE stage-reuse
     // property (every arm sits on the canonically identical docCounts
     // exchange), so the pin is on the EXECUTED final plan
-    val fin = executedPlan(functions.TextAnalysis.lmScore(spark, sfDir))
+    val fin = PlanDump.executedPlan(
+      functions.TextAnalysis.lmScore(spark, sfDir))
       .split("== Initial Plan ==")(0)
     val scans = "FileScan parquet".r.findAllIn(fin).size
     val reuses = "ReusedExchange".r.findAllIn(fin).size

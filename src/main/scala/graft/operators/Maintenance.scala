@@ -710,25 +710,41 @@ object Maintenance {
   /** Data files per logged snapshot write (hash buckets of the key). */
   val TxnBuckets = 4
 
-  /** Commit one log version: the action list (add/remove, file) lands as
-    * `_log/v<N>/` parquet, then the `v<N>._ok` MARKER makes it visible —
-    * the same two-phase protocol the streaming sinks use (Streams'
-    * marker discipline), batch-shaped: a crash between the write and the
-    * marker leaves the table at version N−1, and readers never see a
-    * torn manifest. Manifest rows are file-COUNT-sized (catalog data,
-    * not row data), so the single-file coalesce is free at any scale.
+  /** Stage `parts`, one part-file each, with Spark's own parquet writer
+    * under a fresh write-scoped `data/w_<tag>_<uuid>/` directory of
+    * `root`, described the way every connector rewrite describes its
+    * files.
     */
-  private def commitVersion(s: SparkSession, root: String, v: Int,
-      adds: Seq[String], removes: Seq[String]): Unit = {
-    import s.implicits._
-    (adds.map(("add", _)) ++ removes.map(("remove", _)))
-      .toDF("action", "file").coalesce(1)
-      .write.mode("overwrite").parquet(s"$root/_log/v$v")
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sessionState.newHadoopConf())
-    fs.create(new org.apache.hadoop.fs.Path(s"$root/_log/v$v._ok"), true)
-      .close()
+  private def stageParts(s: SparkSession, root: String, tag: String,
+      parts: Seq[DataFrame])
+      : (String, Seq[graft.sources.GraftLogFileCommit]) =
+    graft.sources.GraftLogOps.stageParquet(s.sessionState.newHadoopConf(),
+      root, tag, parts.head.schema)(parts.map(p =>
+        (dir: String) => p.coalesce(1).write.parquet(dir)): _*)
+
+  /** Commit staged parts through the connector's one commit path
+    * ([[graft.sources.GraftLogWrite.commitStaged]]) as a version that
+    * also removes `removes`, prepared against version `base`. Returns
+    * the committed version and its added files, root-relative.
+    */
+  private def commitParts(s: SparkSession, root: String,
+      staged: (String, Seq[graft.sources.GraftLogFileCommit]),
+      schema: org.apache.spark.sql.types.StructType, op: String,
+      removes: Seq[String] = Nil, base: Option[Int] = None)
+      : (Int, Seq[String]) = {
+    val (staging, files) = staged
+    val v = graft.sources.GraftLogWrite.commitStaged(
+      s.sessionState.newHadoopConf(), root, staging, files, Some(schema),
+      removes = removes, readVersion = base, op = Some(op))
+    (v, files.map(_.file.stripPrefix(s"$root/")))
   }
+
+  /** The orders split into its [[TxnBuckets]] hash buckets of the key —
+    * one part-file each once staged.
+    */
+  private def buckets(df: DataFrame): Seq[DataFrame] =
+    (0 until TxnBuckets).map(i =>
+      df.filter(pmod(col("o_orderkey"), lit(TxnBuckets)) === i))
 
   /** Latest COMMITTED version: max N whose marker exists. A manifest
     * directory without its marker (a torn commit) is invisible.
@@ -765,40 +781,43 @@ object Maintenance {
       .option("path", root).option("version", v).load()
 
   /** Lays down (once per JVM) the logged orders table — three committed
-    * versions over the SAME log:
-    *   v1: snapshot A (keys ≢0 mod 10 — [[Relational.snapshotDiff]]'s
-    *       derivation, so the oracle replays it) as [[TxnBuckets]] files;
-    *   v2: the A→B transition (deletes ≡0 mod 13, priority reclass
-    *       ≡0 mod 7) as a remove-all/add-all commit;
-    *   v3: COMPACTION — a content-preserving rewrite of v2's live set
-    *       into one file, committed as remove+add. MaintenanceSpec pins
-    *       read(v3) ≡ read(v2) and that a marker-less manifest is
-    *       invisible.
+    * versions over the SAME log, all through the connector's commit
+    * path ([[buildTxnLog]]). MaintenanceSpec pins read(v3) ≡ read(v2)
+    * and that a marker-less manifest is invisible.
     */
   private[graft] def txnTableDir(s: SparkSession, d: String): String = {
     val root = SetupOnce.runtimeDir(d, "orders_txnlog")
-    SetupOnce(root) {
-      val o = Tables.orders(s, d)
-      def writeSnap(df: DataFrame, tag: String): Seq[String] = {
-        df.withColumn("bucket", pmod(col("o_orderkey"), lit(TxnBuckets)))
-          .write.mode("overwrite").partitionBy("bucket")
-          .parquet(s"$root/data_$tag")
-        (0 until TxnBuckets).map(i => s"data_$tag/bucket=$i")
-      }
-      val a = o.filter(col("o_orderkey") % 10 =!= 0)
-      val b = o.filter(col("o_orderkey") % 13 =!= 0)
-        .withColumn("o_orderpriority",
-          when(col("o_orderkey") % 7 === 0, lit("9-RECLASS"))
-            .otherwise(col("o_orderpriority")))
-      val v1Files = writeSnap(a, "a")
-      commitVersion(s, root, 1, v1Files, Nil)
-      val v2Files = writeSnap(b, "b")
-      commitVersion(s, root, 2, v2Files, v1Files)
-      readVersion(s, root, 2).coalesce(1)
-        .write.mode("overwrite").parquet(s"$root/data_c")
-      commitVersion(s, root, 3, Seq("data_c"), v2Files)
-    }
+    SetupOnce(root)(buildTxnLog(s, d, root))
     root
+  }
+
+  /** The three commits both time-travel fixtures share:
+    *   v1: snapshot A (keys ≢0 mod 10 — [[Relational.snapshotDiff]]'s
+    *       derivation, so the oracle replays it), one part-file per
+    *       [[TxnBuckets]] bucket;
+    *   v2: the A→B transition (deletes ≡0 mod 13, priority reclass
+    *       ≡0 mod 7) as a remove-all/add-all commit, again one file per
+    *       bucket;
+    *   v3: a content-preserving rewrite of v2's live set into one
+    *       file, committed as a plain remove+add `overwrite` — NOT a
+    *       `compact`, so the change feed still shows its delete and
+    *       insert rows.
+    */
+  private def buildTxnLog(s: SparkSession, d: String, root: String): Unit = {
+    val o = Tables.orders(s, d)
+    val a = o.filter(col("o_orderkey") % 10 =!= 0)
+    val b = o.filter(col("o_orderkey") % 13 =!= 0)
+      .withColumn("o_orderpriority",
+        when(col("o_orderkey") % 7 === 0, lit("9-RECLASS"))
+          .otherwise(col("o_orderpriority")))
+    val (_, v1Files) = commitParts(s, root,
+      stageParts(s, root, "a", buckets(a)), o.schema, "append")
+    val (_, v2Files) = commitParts(s, root,
+      stageParts(s, root, "b", buckets(b)), o.schema, "overwrite",
+      removes = v1Files)
+    commitParts(s, root, stageParts(s, root, "c",
+      Seq(readVersion(s, root, 2))), o.schema, "overwrite",
+      removes = v2Files)
   }
 
   /** Time travel: the CDC diff between versions 1 and 2 of the SAME
@@ -894,32 +913,14 @@ object Maintenance {
 
   /** The vacuumed twin of [[txnTableDir]] — its OWN fixture root (the
     * time-travel query must keep reading v1 of the shared one), built
-    * with the same three commits, then vacuumed to keepFrom = 2 with
+    * by the same [[buildTxnLog]], then vacuumed to keepFrom = 2 with
     * the audit row persisted beside the log.
     */
   private[graft] def vacuumedTableDir(s: SparkSession, d: String): String = {
     import s.implicits._
     val root = SetupOnce.runtimeDir(d, "orders_txnlog_vac")
     SetupOnce(root) {
-      val o = Tables.orders(s, d)
-      def writeSnap(df: DataFrame, tag: String): Seq[String] = {
-        df.withColumn("bucket", pmod(col("o_orderkey"), lit(TxnBuckets)))
-          .write.mode("overwrite").partitionBy("bucket")
-          .parquet(s"$root/data_$tag")
-        (0 until TxnBuckets).map(i => s"data_$tag/bucket=$i")
-      }
-      val a = o.filter(col("o_orderkey") % 10 =!= 0)
-      val b = o.filter(col("o_orderkey") % 13 =!= 0)
-        .withColumn("o_orderpriority",
-          when(col("o_orderkey") % 7 === 0, lit("9-RECLASS"))
-            .otherwise(col("o_orderpriority")))
-      val v1Files = writeSnap(a, "a")
-      commitVersion(s, root, 1, v1Files, Nil)
-      val v2Files = writeSnap(b, "b")
-      commitVersion(s, root, 2, v2Files, v1Files)
-      readVersion(s, root, 2).coalesce(1)
-        .write.mode("overwrite").parquet(s"$root/data_c")
-      commitVersion(s, root, 3, Seq("data_c"), v2Files)
+      buildTxnLog(s, d, root)
       val (nDeleted, nRetained) = vacuumLog(s, root, keepFrom = 2)
       Seq((2, 3, nDeleted, nRetained)).toDF("kept_from", "v_latest",
           "n_files_deleted", "n_files_retained").coalesce(1)
@@ -1047,11 +1048,10 @@ object Maintenance {
     * commit version. Summarized per (version, change type) with exact
     * cents, so the oracle can state the whole history in closed form:
     * v1 inserts snapshot A; v2 is a remove-all/add-all transition
-    * (delete A, insert B); v3 is a compaction (delete B, insert B —
-    * content-identical by the log's own law; it surfaces here because
-    * this fixture's commits are LEGACY manifests with no operation
-    * row — connector compactions are excluded from the feed, pinned
-    * by q_log_cdc_rename's silent v7). A CDC bug anywhere — a
+    * (delete A, insert B); v3 rewrites B into one file (delete B,
+    * insert B — content-identical, but committed as an `overwrite`, so
+    * it surfaces here; a `compact` commit is excluded from the feed,
+    * pinned by q_log_cdc_rename's silent v7). A CDC bug anywhere — a
     * lost remove, a version tag off by one, a delete row read from the
     * wrong file — hash-fails. GraftLogManifestSpec additionally pins
     * the row-level fold of this feed equals the latest snapshot.
@@ -2528,160 +2528,19 @@ object Maintenance {
   // q_occ_log — optimistic concurrency: conflict-detected commits
   // ---------------------------------------------------------------------
 
-  /** The dir/marker log above serializes writers by construction (one
-    * process lays versions down in order). Real multi-writer tables need
-    * OPTIMISTIC commits: each writer prepares against the version it
-    * read, attempts to claim the next number, and on losing the race
-    * must decide — rebase (its file actions don't overlap the winner's)
-    * or abort (write-write conflict). This section implements that
-    * protocol the way single-file table formats do:
-    *
-    *  - a version is ONE manifest file `_log/v<N>.txt`, claimed by
-    *    `fs.create(..., overwrite = false)` — atomic put-if-absent, so
-    *    exactly one writer ever owns a number and there is no
-    *    claim/manifest gap to recover;
-    *  - the manifest is action lines (`add <file>` / `remove <file>`)
-    *    sealed by a terminal `commit <n>` line. A manifest whose action
-    *    count does not match its seal (writer died mid-stream) is TORN:
-    *    readers treat the log as ending at the version before, and
-    *    [[occRecover]] may delete it once the writer is known dead —
-    *    the put-if-absent claim means only ONE writer can have been
-    *    writing it.
-    *  - [[occCommit]] loops: read latest, try claim(latest+1); on
-    *    losing, diff the winner's actions against its own — any file
-    *    this writer REMOVES that the winner also removed (or rewrote) is
-    *    a real write-write conflict ⇒ [[OccConflictException]]; winners
-    *    that only touched other files are rebased past automatically.
-    *
-    * Scale: manifests are catalog data (bytes per file action); the
-    * claim is one filesystem round-trip per attempt. Readers fold
-    * manifests exactly like [[liveFiles]] — versions × actions rows.
-    */
-  object Occ {
-    final class OccConflictException(msg: String)
-      extends RuntimeException(msg)
-
-    private def fsOf(s: SparkSession, root: String) =
-      new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sessionState.newHadoopConf())
-
-    private def manifestPath(root: String, v: Int) =
-      new org.apache.hadoop.fs.Path(s"$root/_log/v$v.txt")
-
-    /** Parse a manifest: Some(actions) if sealed, None if torn. */
-    private[operators] def readManifest(s: SparkSession, root: String,
-        v: Int): Option[Seq[(String, String)]] = {
-      val fs = fsOf(s, root)
-      val p  = manifestPath(root, v)
-      if (!fs.exists(p)) return None
-      val in = fs.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .mkString finally in.close()
-      val lines = text.split("\n").filter(_.nonEmpty).toSeq
-      val actions = lines.takeWhile(!_.startsWith("commit "))
-        .map { l =>
-          val Array(a, f) = l.split(" ", 2); (a, f)
-        }
-      val sealed_ = lines.drop(actions.length) match {
-        case Seq(seal) => seal == s"commit ${actions.length}"
-        case _         => false
-      }
-      if (sealed_) Some(actions) else None
-    }
-
-    /** Highest version whose manifest exists AND is sealed; a torn
-      * manifest ends the log at the version before it.
-      */
-    def latest(s: SparkSession, root: String): Int = {
-      var v = 0
-      var sealedNext = true
-      while (sealedNext) {
-        sealedNext = readManifest(s, root, v + 1).isDefined
-        if (sealedNext) v += 1
-      }
-      v
-    }
-
-    /** Try to claim version v with the given actions. True = committed;
-      * false = lost the race (someone else owns v).
-      */
-    private def tryClaim(s: SparkSession, root: String, v: Int,
-        adds: Seq[String], removes: Seq[String]): Boolean = {
-      val fs = fsOf(s, root)
-      fs.mkdirs(new org.apache.hadoop.fs.Path(s"$root/_log"))
-      val out =
-        try fs.create(manifestPath(root, v), false)
-        catch { case _: java.io.IOException => return false }
-      val actions = adds.map(f => s"add $f") ++
-        removes.map(f => s"remove $f")
-      try {
-        out.write((actions :+ s"commit ${actions.length}")
-          .mkString("", "\n", "\n").getBytes("UTF-8"))
-        true
-      } finally out.close()
-    }
-
-    /** Optimistic commit: prepared against `base`, claims upward until
-      * it wins, conflict-checking every intervening winner. Returns the
-      * committed version. Throws [[OccConflictException]] when an
-      * intervening commit removed (or rewrote) a file this commit also
-      * removes — the prepared actions were derived from files that no
-      * longer exist, so rebasing would corrupt the table.
-      */
-    def occCommit(s: SparkSession, root: String, base: Int,
-        adds: Seq[String], removes: Seq[String]): Int = {
-      var v = base + 1
-      while (!tryClaim(s, root, v, adds, removes)) {
-        readManifest(s, root, v) match {
-          case Some(winner) =>
-            val winnerTouched = winner.map(_._2).toSet
-            val mine = removes.toSet
-            val clash = mine.intersect(winnerTouched)
-            if (clash.nonEmpty)
-              throw new OccConflictException(
-                s"v$v touched ${clash.toSeq.sorted.mkString(", ")} " +
-                  s"which this commit (base v$base) also removes")
-            v += 1 // disjoint — rebase past the winner
-          case None =>
-            // torn claim in our way: surface it; recovery is explicit
-            throw new OccConflictException(
-              s"v$v is a torn manifest; run occRecover first")
-        }
-      }
-      v
-    }
-
-    /** Delete a torn manifest so the version number can be re-claimed.
-      * Only valid once the claiming writer is known dead — put-if-absent
-      * guarantees a single owner, so there is nothing else to race.
-      */
-    def occRecover(s: SparkSession, root: String, v: Int): Boolean =
-      readManifest(s, root, v) match {
-        case None => fsOf(s, root).delete(manifestPath(root, v), false)
-        case Some(_) => false
-      }
-
-    /** Live files at the latest committed version. */
-    def liveAt(s: SparkSession, root: String, asOf: Int): Seq[String] = {
-      val live = scala.collection.mutable.LinkedHashSet[String]()
-      (1 to asOf).foreach { v =>
-        readManifest(s, root, v).getOrElse(Seq.empty).foreach {
-          case ("add", f)    => live += f
-          case ("remove", f) => live -= f
-          case _             => ()
-        }
-      }
-      live.toSeq
-    }
-  }
-
-  /** Lays down (once per JVM) the two-writer race this query reads:
-    *   v1: snapshot A (keys ≢0 mod 10, [[TxnBuckets]] bucket files);
-    *   writer A (base v1): compacts bucket 0 — removes it, adds a
-    *     rewrite without the mod-13 keys; wins v2;
-    *   writer B (base v1, CONCURRENT — prepared before A committed):
-    *     adds the mod-10 keys as a new file; loses the v2 claim,
-    *     rebases (disjoint: B removes nothing) and lands v3.
+  /** Lays down (once per JVM) a two-writer race on the log. Writers
+    * commit OPTIMISTICALLY through the connector's one commit path: the
+    * version number is claimed put-if-absent (`_log/v<N>._claim`), a
+    * loser of the claim rebases past a committed winner, and a commit
+    * whose remove set a concurrent winner already removed refuses with
+    * a write-write conflict ([[graft.sources.GraftLogConflictException]]).
+    *   v1: snapshot A (keys ≢0 mod 10, one part-file per [[TxnBuckets]]
+    *       bucket);
+    *   writer A (base v1): rewrites bucket 0 without the mod-13 keys —
+    *     removes its file, adds the rewrite; wins v2;
+    *   writer B (base v1, CONCURRENT — staged before A committed): adds
+    *     the mod-10 keys as a new file; its claim rebases past A's
+    *     committed v2 (disjoint: B removes nothing) and lands v3.
     * The final live set is therefore derivable in pure SQL, which is
     * what lets the DuckDB oracle hash-check a CONCURRENCY protocol.
     */
@@ -2689,42 +2548,36 @@ object Maintenance {
     val root = SetupOnce.runtimeDir(d, "orders_occ")
     SetupOnce(root) {
       val o = Tables.orders(s, d)
-      o.filter(col("o_orderkey") % 10 =!= 0)
-        .withColumn("bucket", pmod(col("o_orderkey"), lit(TxnBuckets)))
-        .write.mode("overwrite").partitionBy("bucket")
-        .parquet(s"$root/data_v1")
-      val v1Files = (0 until TxnBuckets).map(i => s"data_v1/bucket=$i")
-      val v1 = Occ.occCommit(s, root, 0, v1Files, Nil)
+      val a = o.filter(col("o_orderkey") % 10 =!= 0)
+      val (v1, v1Files) = commitParts(s, root,
+        stageParts(s, root, "v1", buckets(a)), o.schema, "append")
       require(v1 == 1)
-      // both writers prepare against v1
-      val base = Occ.latest(s, root)
-      s.read.parquet(s"$root/data_v1/bucket=0")
-        .filter(col("o_orderkey") % 13 =!= 0)
-        .write.mode("overwrite").parquet(s"$root/data_a_b0")
-      o.filter(col("o_orderkey") % 10 === 0)
-        .write.mode("overwrite").parquet(s"$root/data_b_new")
-      val vA = Occ.occCommit(s, root, base,
-        Seq("data_a_b0"), Seq("data_v1/bucket=0"))
-      val vB = Occ.occCommit(s, root, base, Seq("data_b_new"), Nil)
+      // both writers stage against v1 before either commits
+      val stagedA = stageParts(s, root, "a", Seq(
+        buckets(a).head.filter(col("o_orderkey") % 13 =!= 0)))
+      val stagedB = stageParts(s, root, "b",
+        Seq(o.filter(col("o_orderkey") % 10 === 0)))
+      val (vA, _) = commitParts(s, root, stagedA, o.schema, "overwrite",
+        removes = Seq(v1Files.head), base = Some(v1))
+      val (vB, _) = commitParts(s, root, stagedB, o.schema, "append",
+        base = Some(v1))
       require(vA == 2 && vB == 3, s"race landed at vA=$vA vB=$vB")
     }
     root
   }
 
-  /** The post-race table through the OCC log: priority-grouped counts
-    * and exact cents over the live files at the latest version, READ
-    * THROUGH the `graftlog` DSv2 connector (which auto-detects the OCC
-    * text-manifest protocol and folds only SEALED manifests — a torn
-    * claim ends the log exactly as [[Occ.latest]] says). A protocol bug
-    * anywhere (lost commit, double-applied rebase, torn manifest read)
-    * changes the row set and hash-fails against the oracle's
-    * closed-form derivation of the same live set. Only 2 of the 6
-    * columns survive the scan: MaintenanceSpec pins that the pruning
-    * reached the connector's parquet projection.
+  /** The post-race table: priority-grouped counts and exact cents over
+    * the live files at the latest version, READ THROUGH the `graftlog`
+    * DSv2 connector. A protocol bug anywhere (lost commit,
+    * double-applied rebase, a torn version read) changes the row set
+    * and hash-fails against the oracle's closed-form derivation of the
+    * same live set. Only 2 of the 6 columns survive the scan:
+    * GraftLogSourceSpec pins that the pruning reached the connector's
+    * parquet projection.
     */
   def occLog(s: SparkSession, d: String): DataFrame = {
     val root = occTableDir(s, d)
-    val latest = Occ.latest(s, root)
+    val latest = latestVersion(s, root)
     s.read.format(graft.sources.GraftLog.Format).option("path", root)
       .load()
       .groupBy(col("o_orderpriority"))

@@ -117,22 +117,17 @@ class GraftCatalog extends TableCatalog
     * commit time is the `committs` micros recorded IN the version's
     * manifest (strictly increasing by construction at commit, so two
     * versions landing within one filesystem-clock second still
-    * resolve correctly — object-store mtimes are second-granular);
-    * legacy/OCC versions without the row fall back to the marker
-    * mtime, which is non-decreasing too (versions commit strictly in
-    * claim order).
+    * resolve correctly — object-store mtimes are second-granular).
     */
   override def loadTable(ident: Identifier, timestamp: Long): Table = {
     val c = conf
     val root = rootOf(ident)
     val latest = GraftLog.latestVersion(c, root)
     if (latest == 0) throw new NoSuchTableException(ident)
-    val fs = new Path(root).getFileSystem(c)
-    val occ = fs.exists(new Path(s"$root/_log/v1.txt"))
     def commitMicros(v: Int): Long =
-      GraftLog.commitInstantMicros(c, root, v, occ).getOrElse(
+      GraftLog.commitMicros(c, root, v).getOrElse(
         throw new IllegalStateException(
-          s"graft catalog: version $v of $root has no commit marker"))
+          s"graft catalog: version $v of $root records no commit time"))
     // commit times are non-decreasing in v: binary-search the newest
     // version committed at or before the instant — O(log V) manifest/
     // status probes, not a newest-first linear walk (O(V) at

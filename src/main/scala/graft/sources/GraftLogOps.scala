@@ -541,23 +541,17 @@ object GraftLogOps {
       */
     lazy val dvMap: Map[String, String] = dvs.map { case (f, d) =>
       normPath(s"$root/$f") -> s"$root/${d.dv}" }
-    /** The live files as stats-bearing [[GraftLogStats.FileEntry]]s
-      * keyed by their manifest-relative path. Row-level operations
-      * REQUIRE a connector-written log: per-file statistics make "which
-      * files could hold these keys" a catalog read, and per-file
-      * manifest rows make "remove exactly these files" representable.
-      * Empty files are skipped (nothing to match).
+    /** The live files as [[GraftLogStats.FileEntry]]s keyed by their
+      * manifest-relative path: per-file statistics make "which files
+      * could hold these keys" a catalog read (a file without column
+      * statistics is always a candidate), and per-file manifest rows
+      * make "remove exactly these files" representable. Empty files
+      * are skipped (nothing to match).
       */
     lazy val entries: Seq[(String, GraftLogStats.FileEntry)] =
       GraftLog.liveAdds(conf, root, latest)
         .filter(!_.rows.contains(0L))
-        .map { r =>
-          require(r.rows.isDefined && r.stats.isDefined,
-            s"graftlog row-level op: $root has legacy manifest entries " +
-              s"(no per-file statistics for ${r.file}); row-level MERGE/" +
-              "DELETE requires a connector-written log")
-          (r.file, GraftLog.expandRow(conf, root, r).head)
-        }
+        .map(r => (r.file, GraftLog.fileEntry(root, r)))
     /** Inferred from the FULL live set, never a pruned subset — a
       * biased subset could claim a layout the table doesn't uniformly
       * have.
@@ -854,6 +848,23 @@ object GraftLogOps {
     describeStaged(snap.conf, dir, snap.physSchema, cdcClass)
   }
 
+  /** Stage parquet written by Spark's own writer for ONE commit: each
+    * `write` lands its part-files in its own subdirectory of a fresh
+    * write-scoped `data/w_<tag>_<uuid>/` directory, and every file is
+    * described off its footer ([[describeStaged]]). Returns the staging
+    * directory and its files for [[GraftLogWrite.commitStaged]].
+    */
+  private[graft] def stageParquet(conf: Configuration, root: String,
+      tag: String, schema: StructType)(writes: (String => Unit)*)
+      : (String, Seq[GraftLogFileCommit]) = {
+    val staging = s"$root/data/w_${tag}_${java.util.UUID.randomUUID()}"
+    val files = writes.zipWithIndex.flatMap { case (write, i) =>
+      write(s"$staging/$i")
+      describeStaged(conf, s"$staging/$i", schema)
+    }
+    (staging, files)
+  }
+
   /** The add-row payloads of one freshly written staging directory:
     * each part-file's rows, bytes and statistics read off its footer,
     * so the new snapshot plans from the manifest exactly like any
@@ -863,7 +874,7 @@ object GraftLogOps {
     * rebuilt as dir + name (listings return scheme-qualified URIs, the
     * commit compares raw root-relative strings).
     */
-  private def describeStaged(conf: Configuration, dir: String,
+  private[graft] def describeStaged(conf: Configuration, dir: String,
       physSchema: StructType, cdcClass: Option[String] = None)
       : Seq[GraftLogFileCommit] = {
     val fs = new Path(dir).getFileSystem(conf)
@@ -1149,19 +1160,10 @@ object GraftLogOps {
     val deleted = dead.count { f =>
       fs.delete(new Path(s"$root/$f"), true)
     }
-    // phase 3: sweep uncommitted orphans under data/ (referenced =
-    // exact path OR any ancestor directory — legacy manifest rows can
-    // reference directories)
+    // phase 3: sweep uncommitted orphans under data/
     val cutoff = System.currentTimeMillis() - orphanAgeMs
-    def referenced(rel: String): Boolean = {
-      if (keep.contains(rel) || expired.contains(rel)) return true
-      var p = rel
-      while (p.contains('/')) {
-        p = p.substring(0, p.lastIndexOf('/'))
-        if (keep.contains(p) || expired.contains(p)) return true
-      }
-      false
-    }
+    def referenced(rel: String): Boolean =
+      keep.contains(rel) || expired.contains(rel)
     var orphans = 0
     val dataRoot = new Path(s"$root/data")
     if (fs.exists(dataRoot)) {

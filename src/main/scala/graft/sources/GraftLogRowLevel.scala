@@ -82,14 +82,6 @@ class GraftLogRowLevelOperation(root: String,
     val c = conf.value
     val latest = GraftLog.latestVersion(c, root)
     require(latest >= 1, s"no committed versions under $root")
-    // row-level SQL needs per-file manifest rows (to remove exactly the
-    // touched files) and their statistics (to prune candidates); legacy
-    // logs refuse at ANALYSIS, before any job runs
-    val adds = GraftLog.liveAdds(c, root, latest)
-    require(adds.forall(r => r.rows.isDefined && r.stats.isDefined),
-      s"graftlog row-level SQL: $root has legacy manifest entries " +
-        "(no per-file statistics); UPDATE/MERGE/DELETE-rewrite require " +
-        "a connector-written log")
     val meta = GraftLog.tableMeta(c, root, latest)
     opMeta = Some((latest, meta))
     val schema = meta.schema
@@ -133,7 +125,7 @@ class GraftLogReplaceDataWrite(root: String, writeSchema: StructType,
   // contract): if a plan shape ever carried a scan-synthesized
   // metadata attribute into the write schema, silently dropping it
   // would misalign every row's ordinals against the writer's schema —
-  // refuse loudly instead. A legacy table whose OWN schema uses a
+  // refuse loudly instead. A table whose OWN schema uses a
   // meta-like name passes, because the comparison is against the
   // table's recorded schema, not a name blacklist.
   {

@@ -14,7 +14,7 @@ import org.apache.parquet.hadoop.api.ReadSupport
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType, Type}
+import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -58,24 +58,24 @@ import graft.sources.GraftLogStats.{ColStats, FileEntry}
   *    reader; all filters are ALSO returned as residual — exactly
   *    Spark's own parquet discipline, because row-group stats are
   *    coarse, so correctness never depends on the pushdown.
-  *  - MANIFEST STATISTICS (round 12): manifests written by the
-  *    connector carry per-file row counts, byte sizes and column
-  *    min/max ([[GraftLogStats]]), so `estimateStatistics` and the
-  *    file-level skip are pure catalog reads — the plan-time
-  *    footer-per-live-file walk survives only as the fallback for
-  *    legacy manifests. At a 10⁵-file snapshot this is the difference
-  *    between one manifest fold and minutes of serial driver I/O.
+  *  - MANIFEST STATISTICS (round 12): every add row carries its
+  *    file's row count and byte size, and usually column min/max
+  *    ([[GraftLogStats]]), so `estimateStatistics` and the file-level
+  *    skip are pure catalog reads. At a 10⁵-file snapshot this is the
+  *    difference between one manifest fold and minutes of serial
+  *    driver I/O.
   *  - CDC READS: `option("readChangeFeed", true)` turns the same log
   *    into a change feed — each version's adds emit as `insert` rows
   *    and its removes as `delete` rows, tagged `_change_type` /
   *    `_commit_version`, batch and streaming both.
   *
-  * Both log protocols are served by protocol auto-detection:
-  * the marker protocol (`_log/v<N>/` parquet manifest + `v<N>._ok`
-  * marker — Maintenance.commitVersion) and the OCC protocol
-  * (`_log/v<N>.txt` sealed text manifests claimed put-if-absent —
-  * Maintenance.Occ). Torn commits are invisible in both: an unmarked
-  * manifest dir, or an unsealed text manifest, ends the log.
+  * One commit protocol writes every log ([[GraftLogWrite.commitStaged]]):
+  * claim `_log/v<N>._claim` put-if-absent, write
+  * `_log/v<N>/manifest.parquet` (schema, commit time and one
+  * statistics-bearing row per file), then drop the `v<N>._ok` marker.
+  * A version without its marker is torn and ends the log. Anything
+  * else under `_log/` (a manifest this protocol did not write, an add
+  * row without rows/bytes) refuses loudly when read, naming the file.
   *
   * Scale notes: manifests are catalog-sized (file actions, not rows),
   * fold on the driver in one pass, and are immutable once committed —
@@ -153,10 +153,8 @@ object GraftLog {
   /** Test hook: forget every cached manifest/checkpoint, as a fresh
     * driver would (cold-plan simulation).
     */
-  def clearPlanCaches(): Unit = {
+  def clearPlanCaches(): Unit =
     manifestCache.synchronized { manifestCache.clear() }
-    occCache.synchronized { occCache.clear() }
-  }
 
   /** One manifest row: action ∈ {add, remove, schema, txn, ...}; adds
     * written by the connector carry exact per-file statistics.
@@ -178,10 +176,6 @@ object GraftLog {
   private def fsOf(conf: Configuration, root: String): FileSystem =
     new Path(root).getFileSystem(conf)
 
-  /** OCC protocol iff version 1 was claimed as a text manifest. */
-  private[sources] def isOcc(conf: Configuration, root: String): Boolean =
-    fsOf(conf, root).exists(new Path(s"$root/_log/v1.txt"))
-
   /** One `_log` directory listing — serves the latest-version walk, the
     * vacuum watermark AND checkpoint discovery without a per-version
     * existence RPC (O(versions) round-trips per read was the r11 shape).
@@ -194,27 +188,17 @@ object GraftLog {
     else fs.listStatus(logPath).iterator.map(_.getPath.getName).toSet
   }
 
-  private def latestFromNames(conf: Configuration, root: String,
-      names: Set[String]): Int =
-    if (names.contains("v1.txt")) {
-      val fs = fsOf(conf, root)
-      Iterator.from(1)
-        .takeWhile(v => names.contains(s"v$v.txt") &&
-          readOccManifest(fs, root, v).isDefined)
-        .foldLeft(0)((_, v) => v)
-    } else {
-      Iterator.from(1)
-        .takeWhile(v => names.contains(s"v$v._ok"))
-        .foldLeft(0)((_, v) => v)
-    }
+  private def latestFromNames(names: Set[String]): Int =
+    Iterator.from(1)
+      .takeWhile(v => names.contains(s"v$v._ok"))
+      .foldLeft(0)((_, v) => v)
 
-  /** Highest COMMITTED version: marker protocol = max N with `v<N>._ok`;
-    * OCC = max N with a SEALED `v<N>.txt`. Torn commits end the log.
-    * Driven by a single `_log` listing (plus, for OCC, the seal check
-    * each candidate manifest needs anyway).
+  /** Highest COMMITTED version: max N with `v1._ok` .. `v<N>._ok` all
+    * present — a torn commit ends the log. Driven by a single `_log`
+    * listing.
     */
   def latestVersion(conf: Configuration, root: String): Int =
-    latestFromNames(conf, root, listLogNames(conf, root))
+    latestFromNames(listLogNames(conf, root))
 
   /** Newest COMMITTED checkpoint at or below `asOf`, from the one
     * listing: `_ckpt_v<K>` directory plus its `_ckpt_v<K>._ok` marker
@@ -245,39 +229,6 @@ object GraftLog {
         n.stripPrefix("_vacuum_v").toInt }
       .foldLeft(1)(math.max)
 
-  /** Sealed OCC manifest actions, or None if absent/torn. Cached on the
-    * manifest FILE's (length, mtime) — immutable once sealed, and a
-    * torn file that later completes changes both, so stale entries are
-    * unreachable.
-    */
-  private def readOccManifest(fs: FileSystem, root: String,
-      v: Int): Option[Seq[(String, String)]] = {
-    val p = new Path(s"$root/_log/v$v.txt")
-    planControlReads.incrementAndGet()
-    val st =
-      try fs.getFileStatus(p)
-      catch { case _: java.io.FileNotFoundException => return None }
-    val key = s"${p.toString}@${st.getLen}:${st.getModificationTime}"
-    occCache.synchronized {
-      val hit = occCache.get(key)
-      if (hit != null) return hit
-    }
-    planControlReads.incrementAndGet()
-    val in = fs.open(p)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-    val lines = text.split("\n").filter(_.nonEmpty).toSeq
-    val actions = lines.takeWhile(!_.startsWith("commit "))
-      .map { l => val Array(a, f) = l.split(" ", 2); (a, f) }
-    val sealed_ = lines.drop(actions.length) match {
-      case Seq(seal) => seal == s"commit ${actions.length}"
-      case _         => false
-    }
-    val res = if (sealed_) Some(actions) else None
-    occCache.synchronized { occCache.put(key, res) }
-    res
-  }
-
   // committed manifests and checkpoints are immutable (the `._ok`
   // marker is only ever dropped after the file is fully written, and
   // nothing rewrites a committed one in place), so a bounded
@@ -292,15 +243,6 @@ object GraftLog {
         64, 0.75f, true) {
       override def removeEldestEntry(
           e: java.util.Map.Entry[String, Seq[ManifestRow]]): Boolean =
-        size() > 4096
-    }
-
-  private val occCache =
-    new java.util.LinkedHashMap[String, Option[Seq[(String, String)]]](
-        64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, Option[Seq[(String, String)]]])
-          : Boolean =
         size() > 4096
     }
 
@@ -331,51 +273,44 @@ object GraftLog {
   }
 
   /** Read the rows of one manifest-shaped directory (`_log/v<N>` or
-    * `_log/_ckpt_v<K>`) through the cache. The connector writes the
-    * single file `manifest.parquet`, probed directly (ONE status RPC,
-    * zero reads on a cache hit); legacy manifests (a Spark
-    * `coalesce(1)` write) fall back to a directory listing.
+    * `_log/_ckpt_v<K>`) through the cache: the single file
+    * `manifest.parquet` the commit protocol writes, probed directly
+    * (ONE status RPC, zero reads on a cache hit). The one check on
+    * foreign logs lives here, so every fold sees it: a committed
+    * directory without that file, or an add row without its rows and
+    * bytes, was not written through the commit protocol and refuses,
+    * naming the root and the file — it is never guessed at.
     */
   private def readManifestDir(conf: Configuration, root: String,
       rel: String): Seq[ManifestRow] = {
-    val fs = fsOf(conf, root)
-    val direct = new Path(s"$root/$rel/manifest.parquet")
+    val f = new Path(s"$root/$rel/manifest.parquet")
     planControlReads.incrementAndGet()
-    val files: Seq[(Path, Long, Long)] =
-      try {
-        val st = fs.getFileStatus(direct)
-        Seq((direct, st.getLen, st.getModificationTime))
-      } catch {
-        case _: java.io.FileNotFoundException =>
-          planControlReads.incrementAndGet()
-          try fs.listStatus(new Path(s"$root/$rel")).toSeq
-            .sortBy(_.getPath.getName)
-            .collect { case st if !st.isDirectory &&
-              st.getPath.getName.endsWith(".parquet") &&
-              !st.getPath.getName.startsWith("_") &&
-              !st.getPath.getName.startsWith(".") =>
-              (st.getPath, st.getLen, st.getModificationTime) }
-          catch { case _: java.io.FileNotFoundException => return Seq.empty }
+    val st =
+      try fsOf(conf, root).getFileStatus(f)
+      catch { case e: java.io.FileNotFoundException =>
+        throw new IllegalStateException(s"graftlog: $root commits $rel " +
+          s"without $f — not a log written through the commit protocol", e)
       }
-    if (files.isEmpty) return Seq.empty
-    val key = files.map { case (p, l, m) => s"$p@$l:$m" }.mkString(";")
+    val key = s"$f@${st.getLen}:${st.getModificationTime}"
     manifestCache.synchronized {
       val hit = manifestCache.get(key)
       if (hit != null) return hit
     }
-    val rows = files.flatMap { case (p, _, _) =>
-      decodeManifestFile(conf, p) }
+    val rows = decodeManifestFile(conf, f)
+    rows.foreach(r => require(
+      r.action != "add" || (r.rows.isDefined && r.bytes.isDefined),
+      s"graftlog: $f (table $root) adds ${r.file} without rows/bytes " +
+        "— not a manifest written through the commit protocol"))
     manifestCache.synchronized { manifestCache.put(key, rows) }
     rows
   }
 
-  /** Marker-protocol manifest rows: the `_log/v<N>/` parquet read
-    * through the same Group reader the data path uses — a plain footer+
-    * column decode, NO Spark job (the r10 utility ran one job per
-    * version just to read catalog rows). Legacy manifests carry
-    * (action, file) alone; connector-written ones add rows/bytes/stats.
+  /** One committed version's manifest rows: the `_log/v<N>/` parquet
+    * read through the same Group reader the data path uses — a plain
+    * footer+column decode, NO Spark job (the r10 utility ran one job
+    * per version just to read catalog rows).
     */
-  private def readMarkerManifest(conf: Configuration, root: String,
+  def versionRows(conf: Configuration, root: String,
       v: Int): Seq[ManifestRow] =
     readManifestDir(conf, root, s"_log/v$v")
 
@@ -389,48 +324,6 @@ object GraftLog {
       val rows = readManifestDir(conf, root, s"_log/_ckpt_v$k")
       if (rows.isEmpty) None else Some(rows)
     } catch { case scala.util.control.NonFatal(_) => None }
-
-  /** Manifest rows of ONE committed version, protocol-dispatched. */
-  def versionRows(conf: Configuration, root: String,
-      v: Int): Seq[ManifestRow] =
-    versionRows(conf, root, v, isOcc(conf, root))
-
-  /** Protocol-known variant: a caller iterating MANY versions (the
-    * history audit, the CDC fold) resolves the protocol once instead
-    * of paying an existence RPC per version.
-    */
-  def versionRows(conf: Configuration, root: String, v: Int,
-      occ: Boolean): Seq[ManifestRow] =
-    if (occ)
-      readOccManifest(fsOf(conf, root), root, v).getOrElse(Seq.empty)
-        .map { case (a, f) => ManifestRow(a, f) }
-    else readMarkerManifest(conf, root, v)
-
-  /** The instant version `v` became VISIBLE, in micros: the manifest's
-    * committs row (strictly increasing by construction at commit),
-    * falling back to the commit marker's mtime for legacy/OCC versions
-    * — the ONE resolution rule TIMESTAMP AS OF, the history audit, and
-    * the commit-time monotonicity clamp all share.
-    */
-  def commitInstantMicros(conf: Configuration, root: String, v: Int,
-      occ: Boolean = false): Option[Long] =
-    versionRows(conf, root, v, occ).collectFirst {
-      case ManifestRow("committs", t, _, _, _) => t.toLong
-    }.orElse {
-      val marker =
-        if (occ) new Path(s"$root/_log/v$v.txt")
-        else new Path(s"$root/_log/v$v._ok")
-      try Some(fsOf(conf, root).getFileStatus(marker)
-        .getModificationTime * 1000L)
-      catch { case _: java.io.FileNotFoundException => None }
-    }
-
-  /** Action list of ONE committed version — the streaming tail's unit
-    * of progress (legacy tuple surface over [[versionRows]]).
-    */
-  def versionActions(conf: Configuration, root: String,
-      v: Int): Seq[(String, String)] =
-    versionRows(conf, root, v).map(r => (r.action, r.file))
 
   /** A DELETION VECTOR attached to one live data file — the
     * merge-on-read half of row-level DELETE: instead of rewriting the
@@ -553,15 +446,14 @@ object GraftLog {
     * file); `remove` drops the file AND its DV; `dv` binds the file's
     * CURRENT complete mask (each commit's mask replaces the previous
     * wholesale). No checkpoint (or an unreadable one) falls back to
-    * the full v1..asOf fold; OCC logs always full-fold.
+    * the full v1..asOf fold.
     */
   def liveState(conf: Configuration, root: String,
       asOf: Int): LiveState = {
     val names = listLogNames(conf, root)
-    val latest = latestFromNames(conf, root, names)
+    val latest = latestFromNames(names)
     require(asOf >= 1 && asOf <= latest,
       s"version $asOf not committed under $root (latest: $latest)")
-    val occ = names.contains("v1.txt")
     val live = mutable.LinkedHashMap[String, ManifestRow]()
     val dvs = mutable.LinkedHashMap[String, DvDescriptor]()
     def fold(rows: Seq[ManifestRow]): Unit = rows.foreach {
@@ -572,7 +464,7 @@ object GraftLog {
       case _ => ()
     }
     val start =
-      (if (occ) None else checkpointAt(names, asOf)) match {
+      checkpointAt(names, asOf) match {
         case Some(k) => readCheckpoint(conf, root, k) match {
           case Some(rows) => fold(rows); k + 1
           case None       => 1
@@ -583,8 +475,8 @@ object GraftLog {
     LiveState(live.values.toSeq, dvs.toMap)
   }
 
-  /** Live ADD rows (as logged — file or directory paths relative to
-    * root, with manifest statistics when present) as of `asOf`.
+  /** Live ADD rows (file paths relative to root, with their manifest
+    * statistics) as of `asOf`.
     * NOTE: callers that READ data through raw parquet must consult
     * [[liveState]] for deletion vectors — a DV'd file's rows are not
     * all live.
@@ -611,59 +503,36 @@ object GraftLog {
       st.dvs.values.flatMap(d => Seq(d.dv, d.delta)) ++ deltas
   }
 
-  /** Expand a single logged entry (file or directory) to part-files. */
-  def expandEntry(conf: Configuration, root: String,
-      entry: String): Seq[String] =
-    listParquetFiles(fsOf(conf, root), new Path(s"$root/$entry"))
-      .map(_._1.toString)
-
-  /** Expand one manifest row to concrete [[FileEntry]]s with ABSOLUTE
-    * paths. A stats-bearing row IS a file (the connector's write path
-    * logs part-files individually) — no filesystem round-trip at all;
-    * a bare row may be a Hive-partitioned directory and lists (byte
-    * lengths captured from the listing the walk pays anyway, so the
-    * scan can SPLIT large legacy files without another RPC).
+  /** One live add row as a [[FileEntry]] with an ABSOLUTE path — every
+    * add row is one part-file carrying its statistics, so this is
+    * pure manifest data, no filesystem round-trip.
     */
-  def expandRow(conf: Configuration, root: String,
-      row: ManifestRow): Seq[FileEntry] =
-    if (row.rows.isDefined)
-      Seq(FileEntry(s"$root/${row.file}", row.rows, row.bytes,
-        row.stats.flatMap(GraftLogStats.parseStats)))
-    else listParquetFiles(fsOf(conf, root), new Path(s"$root/${row.file}"))
-      .map { case (p, len) => FileEntry(p.toString, bytes = Some(len)) }
+  def fileEntry(root: String, row: ManifestRow): FileEntry =
+    FileEntry(s"$root/${row.file}", row.rows, row.bytes,
+      row.stats.flatMap(GraftLogStats.parseStats))
 
-  /** Live part-files as [[FileEntry]]s (absolute paths, stats when the
-    * manifest carries them) — what the scan plans from.
-    */
+  /** Live part-files as [[FileEntry]]s — what the scan plans from. */
   def dataFileEntries(conf: Configuration, root: String,
       asOf: Int): Seq[FileEntry] =
-    liveAdds(conf, root, asOf).flatMap(expandRow(conf, root, _))
+    liveAdds(conf, root, asOf).map(fileEntry(root, _))
 
   /** Live part-file paths (absolute). */
   def dataFiles(conf: Configuration, root: String,
       asOf: Int): Seq[String] =
     dataFileEntries(conf, root, asOf).map(_.path)
 
-  private def listParquetFiles(fs: FileSystem,
-      p: Path): Seq[(Path, Long)] =
-    if (!fs.exists(p)) Seq.empty
-    else {
-      val st = fs.getFileStatus(p)
-      if (st.isFile) Seq((p, st.getLen))
-      else fs.listStatus(p).toSeq.sortBy(_.getPath.getName).flatMap { c =>
-        val n = c.getPath.getName
-        if (c.isDirectory) listParquetFiles(fs, c.getPath)
-        else if (n.endsWith(".parquet") && !n.startsWith("_") &&
-          !n.startsWith(".")) Seq((c.getPath, c.getLen))
-        else Seq.empty
-      }
-    }
-
-  /** Checked version resolve: default latest; refuse below watermark. */
+  /** Checked version resolve: default latest; refuse below watermark.
+    * A `_log` with entries but no `v1._ok` (say, text manifests of some
+    * other protocol) refuses naming them.
+    */
   def resolveVersion(conf: Configuration, root: String,
       requested: Option[Int]): Int = {
-    val latest = latestVersion(conf, root)
-    require(latest >= 1, s"no committed versions under $root")
+    val names = listLogNames(conf, root)
+    val latest = latestFromNames(names)
+    require(latest >= 1, s"no committed versions under $root" +
+      (if (names.isEmpty) ""
+       else s" — _log holds ${names.toSeq.sorted.take(3).mkString(", ")}" +
+         " but no v1._ok commit marker"))
     val v = requested.getOrElse(latest)
     require(v >= 1 && v <= latest,
       s"version $v not committed under $root (latest: $latest)")
@@ -727,7 +596,6 @@ object GraftLog {
     // the whole checkpoint tail hunting for partcols/colmap rows an
     // ordinary table never has
     val names = listLogNames(conf, root)
-    if (names.contains("v1.txt")) return None // OCC: actions only
     val ckpt = checkpointAt(names, asOf)
     val ckptRows = ckpt.flatMap(k => readCheckpoint(conf, root, k))
     val floor = if (ckptRows.isDefined) ckpt.get else 0
@@ -885,8 +753,6 @@ object GraftLog {
   def tableMeta(conf: Configuration, root: String,
       asOf: Int): TableMeta = {
     val names = listLogNames(conf, root)
-    val occ = names.contains("v1.txt")
-    if (occ) return TableMeta(None, Nil) // OCC manifests: actions only
     val ckpt = checkpointAt(names, asOf)
     val ckptRows = ckpt.flatMap(k => readCheckpoint(conf, root, k))
     val floor = if (ckptRows.isDefined) ckpt.get else 0
@@ -917,10 +783,10 @@ object GraftLog {
       colMap, tombs)
   }
 
-  /** Commit timestamp (micros) recorded in version `v`'s manifest row —
-    * present on every connector commit since the row was introduced,
-    * absent on legacy/OCC versions (callers fall back to marker
-    * mtimes). Strictly increasing in `v` by construction at commit.
+  /** The instant version `v` became visible, in micros: its manifest's
+    * `committs` row, recorded by every commit and strictly increasing
+    * in `v` by construction — the ONE resolution rule TIMESTAMP AS OF,
+    * the history audit and the commit-time monotonicity clamp share.
     */
   def commitMicros(conf: Configuration, root: String,
       v: Int): Option[Long] =
@@ -943,8 +809,6 @@ object GraftLog {
     val latest = latestVersion(conf, root)
     require(k >= 1 && k <= latest,
       s"cannot checkpoint uncommitted version $k of $root (latest $latest)")
-    require(!isOcc(conf, root),
-      s"graftlog: OCC logs are utility-managed; no checkpoints")
     val meta = tableMeta(conf, root, k)
     val schemaRow = meta.schema
       .map(s => ManifestRow("schema", s.toDDL)).toSeq
@@ -966,130 +830,24 @@ object GraftLog {
     fs.create(new Path(s"$root/_log/_ckpt_v$k._ok"), true).close()
   }
 
-  /** Spark schema of the snapshot: the manifest's recorded DDL when
-    * present (zero data-file I/O), else the footer of the first live
-    * part-file (the log's commit discipline keeps versions
-    * schema-consistent).
+  /** Spark schema of the snapshot: the DDL the newest manifest at or
+    * below `asOf` records — every commit records one, so this is zero
+    * data-file I/O.
     */
   def inferSchema(conf: Configuration, root: String, asOf: Int): StructType =
-    schemaFromManifest(conf, root, asOf).getOrElse {
-      val first = dataFiles(conf, root, asOf).headOption.getOrElse(
-        throw new IllegalArgumentException(
-          s"version $asOf of $root has no data files"))
-      planFooterReads.incrementAndGet()
-      val footer = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new Path(first), conf))
-      val msg = try footer.getFileMetaData.getSchema finally footer.close()
-      StructType(msg.getFields.toArray(Array.empty[Type]).map { t =>
-        StructField(t.getName, toSparkTypeAny(t), nullable = true)
-      })
-    }
+    schemaFromManifest(conf, root, asOf).getOrElse(
+      throw new IllegalStateException(
+        s"graftlog: no version of $root at or below $asOf records a schema"))
 
-  /** Parquet type (primitive or group) → Spark type: the standard LIST
-    * and MAP annotations plus plain struct groups, recursively.
-    */
-  private def toSparkTypeAny(t: Type): DataType = t match {
-    case p: PrimitiveType => toSparkType(p)
-    case g: org.apache.parquet.schema.GroupType =>
-      g.getLogicalTypeAnnotation match {
-        case _: LogicalTypeAnnotation.ListLogicalTypeAnnotation =>
-          val repeated = g.getType(0).asGroupType()
-          ArrayType(toSparkTypeAny(repeated.getType(0)),
-            containsNull = true)
-        case _: LogicalTypeAnnotation.MapLogicalTypeAnnotation =>
-          val kv = g.getType(0).asGroupType()
-          MapType(toSparkTypeAny(kv.getType(0)),
-            toSparkTypeAny(kv.getType(1)), valueContainsNull = true)
-        case _ =>
-          StructType(g.getFields.toArray(Array.empty[Type]).map { f =>
-            StructField(f.getName, toSparkTypeAny(f), nullable = true)
-          })
-      }
-  }
-
-  private def toSparkType(p: PrimitiveType): DataType = {
-    import PrimitiveType.PrimitiveTypeName._
-    val ann = p.getLogicalTypeAnnotation
-    def dec(d: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation) =
-      DecimalType(d.getPrecision, d.getScale)
-    p.getPrimitiveTypeName match {
-      case INT64 => ann match {
-        case ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-          require(ts.getUnit ==
-            LogicalTypeAnnotation.TimeUnit.MICROS,
-            s"unsupported timestamp unit ${ts.getUnit} for ${p.getName}")
-          if (ts.isAdjustedToUTC) TimestampType else TimestampNTZType
-        case d: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation =>
-          dec(d)
-        case _ => LongType
-      }
-      case INT32 => ann match {
-        case _: LogicalTypeAnnotation.DateLogicalTypeAnnotation => DateType
-        case d: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation =>
-          dec(d)
-        case _ => IntegerType
-      }
-      case FIXED_LEN_BYTE_ARRAY => ann match {
-        case d: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation =>
-          dec(d)
-        case other => throw new IllegalArgumentException(
-          s"graftlog: unsupported fixed binary annotation $other " +
-            s"for ${p.getName}")
-      }
-      // legacy 12-byte Spark/Impala timestamp (julian day + nanos) —
-      // still what some writers emit; maps to session-adjusted
-      // TimestampType exactly as Spark's own reader does
-      case INT96   => TimestampType
-      case DOUBLE  => DoubleType
-      case FLOAT   => FloatType
-      case BOOLEAN => BooleanType
-      case BINARY => ann match {
-        case _: LogicalTypeAnnotation.StringLogicalTypeAnnotation =>
-          StringType
-        case d: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation =>
-          dec(d)
-        case _ => BinaryType
-      }
-      case other => throw new IllegalArgumentException(
-        s"graftlog: unsupported parquet type $other for ${p.getName}")
-    }
-  }
-
-  /** Columns stored as legacy INT96 in the first live file — excluded
-    * from filter pushdown (INT96 has no usable min/max ordering in
-    * row-group stats; parquet itself refuses predicates on it) and
-    * decoded via the julian-day + nanos conversion in the reader.
-    * A manifest-described table (connector-written: the writer never
-    * emits INT96) skips the probe entirely; this set is a PLANNING
-    * heuristic either way — the reader re-checks ITS OWN file's footer
-    * and drops the pushed predicate per-file on any INT96 overlap, so
-    * mixed-encoding logs stay correct regardless of what the first
-    * file says.
-    */
-  def int96Columns(conf: Configuration, root: String,
-      asOf: Int): Set[String] = {
-    if (schemaFromManifest(conf, root, asOf).isDefined) return Set.empty
-    val first = dataFiles(conf, root, asOf).headOption.getOrElse(
-      return Set.empty)
-    planFooterReads.incrementAndGet()
-    val footer = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new Path(first), conf))
-    val msg = try footer.getFileMetaData.getSchema finally footer.close()
-    msg.getFields.toArray(Array.empty[Type]).collect {
-      case t: PrimitiveType if t.getPrimitiveTypeName ==
-        PrimitiveType.PrimitiveTypeName.INT96 => t.getName
-    }.toSet
-  }
-
-  /** File-level statistics skip FALLBACK for legacy manifest entries
-    * (no recorded stats): keep the file iff at least one of its row
-    * groups MAY match the predicate, per parquet's own StatisticsFilter
-    * over the footer min/max. Conservative by construction (the reader
+  /** File-level statistics skip for an add row that carries no column
+    * statistics: keep the file iff at least one of its row groups MAY
+    * match the predicate, per parquet's own StatisticsFilter over the
+    * footer min/max. Conservative by construction (the reader
     * re-checks row groups and Spark re-applies residuals) and
     * failure-safe: any validation surprise (predicate column absent
     * from this file's schema, stats missing) KEEPS the file.
-    * Stats-bearing manifests never reach this path — their skip
-    * decision is [[GraftLogStats.mayMatch]], zero footer I/O.
+    * Stats-bearing rows never reach this path — their skip decision is
+    * [[GraftLogStats.mayMatch]], zero footer I/O.
     */
   def fileMayMatch(conf: Configuration, file: String,
       predicate: FilterPredicate): Boolean =
@@ -1418,7 +1176,7 @@ case class GraftLogTable(root: String, asOfVersion: Int,
 
   /** `_file` — file provenance per row, and the group identity Spark's
     * row-level commands runtime-filter on. Hidden when the table's OWN
-    * schema uses the name (legacy data wins, same policy as the CDC
+    * schema uses the name (stored data wins, same policy as the CDC
     * meta names).
     */
   override def metadataColumns()
@@ -1520,11 +1278,6 @@ class GraftLogScanBuilder(root: String, version: Int, tableSchema: StructType,
   private var accepted: Array[Filter] = Array.empty
   private var skipOnly: Array[Filter] = Array.empty
 
-  // catalog-cheap probe (manifest-described tables skip even this):
-  // INT96-backed columns take no pushdown
-  private lazy val int96 =
-    GraftLog.int96Columns(conf.value, root, version)
-
   override def pruneColumns(requiredSchema: StructType): Unit =
     pruned = requiredSchema
 
@@ -1547,8 +1300,7 @@ class GraftLogScanBuilder(root: String, version: Int, tableSchema: StructType,
     accepted =
       if (rowLevel) Array.empty
       else filters.filter(f =>
-        f.references.forall(c => !int96.contains(phys(c))) &&
-          GraftLog.toParquetPredicate(dataSchema, physFilter(f)).isDefined)
+        GraftLog.toParquetPredicate(dataSchema, physFilter(f)).isDefined)
     val acceptedSet = accepted.toSet
     // NESTED references resolve through the schema walk (dot-joined
     // struct paths — "meta.score"), not the top-level name list: the
@@ -1556,7 +1308,7 @@ class GraftLogScanBuilder(root: String, version: Int, tableSchema: StructType,
     // their physical dotted paths, so a predicate on a nested training
     // -metadata field prunes files exactly like a top-level one
     skipOnly = filters.filter(f => !acceptedSet.contains(f) &&
-      f.references.forall(c => !int96.contains(phys(c)) &&
+      f.references.forall(c =>
         GraftLogStats.fieldAt(dataSchema,
           colMap.getOrElse(c, c)).isDefined))
     filters
@@ -1612,9 +1364,8 @@ class GraftLogScanBuilder(root: String, version: Int, tableSchema: StructType,
       case _: CountStar => false
       case _            => true
     }) return None
-    val entries = st.adds.flatMap(GraftLog.expandRow(conf.value, root, _))
-    if (!entries.forall(e => e.rows.isDefined && e.stats.isDefined))
-      return None
+    val entries = st.adds.map(GraftLog.fileEntry(root, _))
+    if (!entries.forall(_.stats.isDefined)) return None
     val totalRows = entries.iterator.map(_.rows.get).sum - maskedRows
     def dtOf(c: String): Option[DataType] =
       dataSchema.fields.find(_.name == c).map(_.dataType)
@@ -1701,8 +1452,7 @@ class GraftLogScanBuilder(root: String, version: Int, tableSchema: StructType,
       val predicate = acceptedPhys
         .flatMap(f => GraftLog.toParquetPredicate(dataSchema, f))
         .reduceOption(FilterApi.and)
-      val scan = GraftLogScan(root, version, dataSchema, int96,
-        physSchema(pruned),
+      val scan = GraftLogScan(root, version, dataSchema, physSchema(pruned),
         accepted.map(_.toString), predicate, acceptedPhys, conf, cdc,
         cdcStart, columnar, maxVersionsPerTrigger,
         skipOnly.map(physFilter), streamStart, rowLevel,
@@ -1750,7 +1500,7 @@ case class GraftLogAggReaderFactory(schema: StructType)
 }
 
 case class GraftLogScan(root: String, version: Int, full: StructType,
-    int96: Set[String], pruned: StructType,
+    pruned: StructType,
     pushedDesc: Array[String], predicate: Option[FilterPredicate],
     staticFilters: Array[Filter], conf: SerializableConfiguration,
     cdc: Boolean, cdcStart: Int, columnar: Boolean,
@@ -1767,7 +1517,7 @@ case class GraftLogScan(root: String, version: Int, full: StructType,
   // LOGICAL field names Spark binds the output to (positionally
   // identical to `pruned`). Runtime filters arrive logical and are
   // renamed at the door. Identity-mapped tables pass presented=None
-  // and colMap=empty — every legacy path byte-identical.
+  // and colMap=empty — every unmapped path byte-identical.
 
   /** Runtime filters (DPP-style: Spark hands them to the scan after the
     * build side of a join resolves) join the static set for BOTH the
@@ -1807,11 +1557,10 @@ case class GraftLogScan(root: String, version: Int, full: StructType,
   override def filterAttributes():
       Array[org.apache.spark.sql.connector.expressions.NamedReference] = {
     // advertised in LOGICAL names (Spark resolves them against the
-    // relation's output); the int96 exclusion keys on the PHYSICAL name
+    // relation's output)
     val names =
       if (rowLevel) Array(GraftLog.FileCol)
       else presented.getOrElse(pruned).fieldNames
-        .filterNot(n => int96.contains(colMap.getOrElse(n, n)))
     names.map(org.apache.spark.sql.connector.expressions.Expressions.column)
   }
 
@@ -1832,8 +1581,7 @@ case class GraftLogScan(root: String, version: Int, full: StructType,
     // before anything file-facing consumes them
     val usable = dataFilters
       .map(f => if (colMap.isEmpty) f else GraftLog.renameFilter(f, colMap))
-      .filter(f => f.references.forall(c => !int96.contains(c) &&
-        full.fieldNames.contains(c)))
+      .filter(f => f.references.forall(full.fieldNames.contains))
     if (usable.nonEmpty) {
       runtimeFilters ++= usable
       runtimeDesc ++= usable.map(_.toString)
@@ -1891,20 +1639,25 @@ case class GraftLogScan(root: String, version: Int, full: StructType,
   private lazy val entries: Seq[PlannedFile] =
     if (!cdc) {
       val st = GraftLog.liveState(conf.value, root, version)
-      st.adds.flatMap { r =>
+      st.adds.map { r =>
         val dv = st.dvs.get(r.file)
-        GraftLog.expandRow(conf.value, root, r).map(e =>
-          PlannedFile(e,
-            dvMask = dv.map(d => s"$root/${d.dv}"),
-            maskedRows = dv.map(_.card).getOrElse(0L)))
+        PlannedFile(GraftLog.fileEntry(root, r),
+          dvMask = dv.map(d => s"$root/${d.dv}"),
+          maskedRows = dv.map(_.card).getOrElse(0L))
       }
     } else {
-      // the DV state folds from v1 (a vector committed BEFORE the read
-      // range still masks the remove rows a later rewrite emits); the
-      // feed itself starts at cdcStart
+      // the live state folds from v1: a vector committed BEFORE the
+      // read range still masks the remove rows a later rewrite emits,
+      // and a removed or re-masked file is described by its live add
+      // row; the feed itself starts at cdcStart
+      val live = mutable.HashMap[String, GraftLog.ManifestRow]()
       val running = mutable.HashMap[String, GraftLog.DvDescriptor]()
-      if (cdcStart > 1)
-        running ++= GraftLog.liveState(conf.value, root, cdcStart - 1).dvs
+      if (cdcStart > 1) {
+        val st = GraftLog.liveState(conf.value, root, cdcStart - 1)
+        live ++= st.adds.map(r => r.file -> r)
+        running ++= st.dvs
+      }
+      val fs = new Path(root).getFileSystem(conf.value)
       (cdcStart to version).flatMap { v =>
         val rows = GraftLog.versionRows(conf.value, root, v)
         // CONTENT-PRESERVING rewrites (compaction / OPTIMIZE, named by
@@ -1915,35 +1668,42 @@ case class GraftLogScan(root: String, version: Int, full: StructType,
         // same way). The dv/live bookkeeping still folds — a folded
         // file's mask dies with its remove — and the skipped version's
         // removed files are never opened, so the feed stays
-        // reconstructible even after they are vacuumed. Legacy commits
-        // without an op row keep the old delete+insert behavior.
+        // reconstructible even after they are vacuumed. Every other
+        // commit, with or without an op row, emits delete+insert.
         val preserving = rows.exists(r =>
           r.action == "op" && r.file == "compact")
         rows.flatMap {
           case r @ GraftLog.ManifestRow("add", f, _, _, _) =>
+            live(f) = r
             running -= f
             if (preserving) Seq.empty
             // a MoR update/merge writes its transformed-row files with
             // a change-feed class in the stats JSON — surface it;
             // untagged adds are plain inserts
-            else GraftLog.expandRow(conf.value, root, r)
-              .map(e => PlannedFile(e,
+            else {
+              val e = GraftLog.fileEntry(root, r)
+              Seq(PlannedFile(e,
                 Some((e.stats.flatMap(_.cdcClass).getOrElse("insert"),
                   v.toLong))))
+            }
           case GraftLog.ManifestRow("remove", f, _, _, _) =>
             // delete rows for the file's LIVE remainder: positions
             // already masked by an earlier dv commit were emitted as
             // deletes THEN and must not re-delete here
             val mask = running.remove(f)
+            val added = live.remove(f)
             if (preserving) Seq.empty
             else {
-              val expanded = GraftLog.expandEntry(conf.value, root, f)
-              if (expanded.isEmpty) throw new IllegalStateException(
-                s"graftlog CDC: version $v removes $f but the file is gone " +
-                  "(compacted away and vacuumed?) — the change feed for " +
-                  "this range is no longer reconstructible; raise " +
-                  "startingVersion past it")
-              expanded.map(p => PlannedFile(FileEntry(p),
+              if (!fs.exists(new Path(s"$root/$f")))
+                throw new IllegalStateException(
+                  s"graftlog CDC: version $v removes $f but the file is " +
+                    "gone (compacted away and vacuumed?) — the change " +
+                    "feed for this range is no longer reconstructible; " +
+                    "raise startingVersion past it")
+              Seq(PlannedFile(GraftLog.fileEntry(root, added.getOrElse(
+                  throw new IllegalStateException(
+                    s"graftlog CDC: version $v removes $f, which is not " +
+                      "live"))),
                 Some(("delete", v.toLong)),
                 dvMask = mask.map(d => s"$root/${d.dv}")))
             }
@@ -1953,7 +1713,7 @@ case class GraftLogScan(root: String, version: Int, full: StructType,
             // the newly-masked positions ARE this version's deletes —
             // or, for a MoR update/merge, the UPDATE PREIMAGES (the
             // descriptor carries the class)
-            Seq(PlannedFile(FileEntry(s"$root/$f"),
+            Seq(PlannedFile(GraftLog.fileEntry(root, live(f)),
               Some((d.cdcClass.getOrElse("delete"), v.toLong)),
               dvEmit = Some(s"$root/${d.delta}")))
           case _ => Seq.empty
@@ -1969,30 +1729,19 @@ case class GraftLogScan(root: String, version: Int, full: StructType,
   // satisfied without consulting the dv state at all.
 
   /** Planner-visible stats for the snapshot: exact row count and bytes
-    * from the MANIFEST when every live file carries them (the
-    * connector write path guarantees it), footers only as the legacy
-    * fallback; bytes scaled by the pruned-column fraction, the same
-    * heuristic Spark's FileScan uses. This is what lets a small log
-    * snapshot broadcast correctly when joined against a large fact
-    * table — and at 10⁵ files it is a manifest fold, not a footer walk.
+    * from the MANIFEST (every add row carries them — the manifest read
+    * refuses one that does not); bytes scaled by the pruned-column
+    * fraction, the same heuristic Spark's FileScan uses. This is what
+    * lets a small log snapshot broadcast correctly when joined against
+    * a large fact table — and at 10⁵ files it is a manifest fold, not
+    * a footer walk.
     */
   private lazy val memoStats: Statistics = {
     var bytes = 0L
     var rows = 0L
     entries.foreach { pf =>
-      val e = pf.entry
-      (e.rows, e.bytes) match {
-        case (Some(r), Some(b)) => rows += r; bytes += b
-        case _ =>
-          val c = conf.value
-          val p = new Path(e.path)
-          bytes += p.getFileSystem(c).getFileStatus(p).getLen
-          GraftLog.planFooterReads.incrementAndGet()
-          val footer =
-            ParquetFileReader.open(HadoopInputFile.fromPath(p, c))
-          try rows += footer.getRecordCount finally footer.close()
-      }
-      rows -= pf.maskedRows // deletion-vector'd rows are not served
+      rows += pf.entry.rows.get - pf.maskedRows // dv'd rows: not served
+      bytes += pf.entry.bytes.get
     }
     val dataPrunedWidth = pruned.fields.count(f => !cdc ||
       (f.name != GraftLog.ChangeTypeCol &&
@@ -2085,8 +1834,9 @@ case class GraftLogScan(root: String, version: Int, full: StructType,
     * combined (static + runtime) filters are never scheduled at all —
     * at 100 TB a selective key predicate over a clustered log version
     * scans only the matching files. Stats-bearing manifest entries
-    * decide from the manifest alone; legacy entries fall back to
-    * parquet's own footer-level RowGroupFilter.
+    * decide from the manifest alone; an add row without column
+    * statistics falls back to parquet's own footer-level
+    * RowGroupFilter.
     */
   /** Files a copy-on-write plan actually covered (manifest-relative,
     * post every skip including the runtime group filter) — the EXACT
@@ -2335,9 +2085,9 @@ class GraftLogMicroBatchStream(root: String, pruned: StructType,
       //    masked old positions are deletions, which an append-only
       //    tail cannot retract — documented semantics, and a consumer
       //    that needs them tails the change feed instead;
-      //  - any OTHER remove (copy-on-write DML, a legacy commit with
-      //    no op row) still refuses loudly: its adds mix re-housed and
-      //    new rows, so neither skipping nor emitting is correct.
+      //  - any OTHER remove (copy-on-write DML, an overwrite) still
+      //    refuses loudly: its adds mix re-housed and new rows, so
+      //    neither skipping nor emitting is correct.
       val preserving = removed.nonEmpty && opRow.contains("compact")
       if (removed.nonEmpty && !preserving && !cdc)
         throw new IllegalStateException(
@@ -2355,8 +2105,8 @@ class GraftLogMicroBatchStream(root: String, pruned: StructType,
       val adds =
         if (preserving) Seq.empty
         else rows.collect {
-          case r @ GraftLog.ManifestRow("add", _, _, _, _) => r }
-          .flatMap(GraftLog.expandRow(c, root, _))
+          case r @ GraftLog.ManifestRow("add", _, _, _, _) =>
+            GraftLog.fileEntry(root, r) }
           .map(fe => GraftLogInputPartition(fe.path,
             if (cdc) Some((fe.stats.flatMap(_.cdcClass)
               .getOrElse("insert"), v.toLong))
@@ -2368,11 +2118,10 @@ class GraftLogMicroBatchStream(root: String, pruned: StructType,
       val dels =
         if (!cdc) Seq.empty
         else if (preserving) { removed.foreach(running.remove); Seq.empty }
-        else removed.flatMap { f =>
+        else removed.map { f =>
           val mask = running.remove(f)
-          GraftLog.expandEntry(c, root, f).map(p =>
-            GraftLogInputPartition(p, Some(("delete", v.toLong)),
-              dvMask = mask.map(d => s"$root/${d.dv}")))
+          GraftLogInputPartition(s"$root/$f", Some(("delete", v.toLong)),
+            dvMask = mask.map(d => s"$root/${d.dv}"))
         }
       val dvDels =
         if (!cdc) Seq.empty
@@ -2410,7 +2159,7 @@ case class GraftLogReaderFactory(pruned: StructType,
 
   // the meta names are only scan-synthesized when the SCAN says so
   // (CDC partitions; `_file` when the table schema doesn't shadow it) —
-  // a legacy table whose OWN schema uses them reads them as data
+  // a table whose OWN schema uses them reads them as data
   private def dataFieldCount: Int =
     pruned.fields.count(f =>
       (!cdc || (f.name != GraftLog.ChangeTypeCol &&
@@ -2487,7 +2236,7 @@ class GraftLogPartitionReader(file: String, pruned: StructType,
   // metadata columns are scan-synthesized constants at their pruned
   // positions — CDC tags only on CDC partitions (cdcMeta set), `_file`
   // only when the scan says the table schema doesn't shadow it; a
-  // legacy table whose own schema uses the names reads them as data
+  // table whose own schema uses the names reads them as data
   private val metaConst: Map[Int, Any] = {
     val cdcConsts = cdcMeta match {
       case Some((ct, v)) => pruned.fields.zipWithIndex.collect {

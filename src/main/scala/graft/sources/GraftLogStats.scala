@@ -149,9 +149,11 @@ object GraftLogStats {
       java.util.Base64.getDecoder.decode(s)
   }
 
-  /** One live data file as the manifest describes it. Legacy manifests
-    * (and directory entries) carry the path alone; connector-written
-    * manifests carry exact row/byte counts and column bounds.
+  /** One live data file as its manifest add row describes it: the
+    * absolute path, the exact row and byte counts every add row
+    * carries (the manifest read refuses one without them), and the
+    * column bounds when the writer recorded them (`stats` may be
+    * None — consumers then treat the file conservatively).
     */
   case class FileEntry(path: String, rows: Option[Long] = None,
       bytes: Option[Long] = None, stats: Option[ColStats] = None)

@@ -34,7 +34,7 @@ import org.apache.spark.util.SerializableConfiguration
   *     statistics (rows, bytes, column min/max —
   *     [[GraftLogStats.describeFile]]);
   *  2. the driver CLAIMS the next version number put-if-absent
-  *     (`_log/v<N>._claim` with overwrite=false — the OCC protocol's
+  *     (`_log/v<N>._claim` with overwrite=false — optimistic concurrency's
   *     atomicity primitive, so concurrent writers serialize without a
   *     coordinator), writes the manifest — ONE ROW PER COMMITTED FILE
   *     carrying its statistics, plus the schema DDL — and only then
@@ -65,13 +65,13 @@ import org.apache.spark.util.SerializableConfiguration
   * `_ok` (the r11 shape) left a crash window where the replay
   * re-committed the same rows as a duplicate version.
   *
-  * Appends only, and only on marker-protocol logs: a write to an OCC
-  * root refuses loudly (its committed-version derivation would never
-  * see a marker-protocol commit — a silently invisible write, and a
-  * claim an OCC writer could later fork). Overwrite would be a
-  * remove+add rewrite, which the snapshot streaming tail correctly
-  * refuses — maintenance rewrites stay with the explicit utilities
-  * (Maintenance.vacuumLog/compaction). A brand new table bootstraps by
+  * [[GraftLogWrite.commitStaged]] is the ONE commit path: appends,
+  * row-level rewrites, compaction, catalog DDL and the maintenance
+  * fixtures all claim, write the manifest and mark through it, with
+  * their files staged under `data/`. The DataFrame writer appends
+  * only: overwrite would be a remove+add rewrite, which the snapshot
+  * streaming tail correctly refuses — rewrites stay with the explicit
+  * utilities ([[GraftLogOps]]). A brand new table bootstraps by
   * passing `option("schema", <ddl>)` on the first write (a
   * TableProvider has no catalog to CREATE through). Every subsequent
   * append resolves against the TABLE schema (from the manifest — the
@@ -260,11 +260,6 @@ object GraftLogWrite {
     * is known dead) is explicit, the OCC discipline.
     */
   private def claimVersion(conf: Configuration, root: String): Int = {
-    if (GraftLog.isOcc(conf, root)) throw new IllegalStateException(
-      s"graftlog write: $root is an OCC-protocol log (_log/v1.txt) — " +
-        "a marker-protocol append would be invisible to its readers " +
-        "and its version number forkable by the next OCC writer; " +
-        "commit through Maintenance.Occ instead")
     val fs = new Path(root).getFileSystem(conf)
     fs.mkdirs(new Path(s"$root/_log"))
     var n = GraftLog.latestVersion(conf, root) + 1
@@ -350,14 +345,6 @@ object GraftLogWrite {
           adds.map(fc => GraftLog.ManifestRow("add", fc.file,
             Some(fc.rows), Some(fc.bytes), fc.stats))))
 
-  /** Filesystem renames performed inside commit windows — the metric
-    * the in-place publication design drives to zero for connector
-    * writes (GraftLogManifestSpec pins it): at a 10⁵-file epoch or
-    * compaction commit, per-file renames are minutes inside the commit
-    * window, and on object stores each is a copy+delete.
-    */
-  val commitRenames = new java.util.concurrent.atomic.AtomicLong(0L)
-
   /** Driver-side commit: claim; publish the COMMITTED files (and only
     * those — the manifest is the visibility gate, so only the
     * commit-message set ever becomes readable); manifest (stats +
@@ -374,9 +361,8 @@ object GraftLogWrite {
     * leaves a torn, invisible version); a retried or speculative LOSER
     * attempt's files are deleted by its own task-level abort, and a
     * crashed executor's orphans are simply never referenced (job-level
-    * abort removes the whole write directory). Staging directories
-    * OUTSIDE `data/` (maintenance utilities, tests) keep the legacy
-    * per-file-rename publication into `data_v<N>/`.
+    * abort removes the whole write directory). Staging outside
+    * `$root/data/` is refused: no commit ever renames a file.
     */
   private[graft] def commitStaged(conf: Configuration, root: String,
       staging: String, files: Seq[GraftLogFileCommit],
@@ -391,6 +377,8 @@ object GraftLogWrite {
       readVersion: Option[Int] = None,
       op: Option[String] = None)
       : Int = {
+    require(staging.startsWith(s"$root/data/"),
+      s"graftlog write: staging $staging is not under $root/data/")
     val fs = new Path(root).getFileSystem(conf)
     val n = claimVersion(conf, root)
     // EXPECTED-VERSION gate under the claim: CREATE TABLE commits "the
@@ -537,47 +525,21 @@ object GraftLogWrite {
         case None => s0
       }
     }
-    val inPlace = staging.startsWith(s"$root/data/")
-    val manifestAdds =
-      if (files.isEmpty) Nil
-      // an empty write is still a committed (empty) version: readers
-      // of v<N> see exactly what the writer wrote — nothing
-      else if (inPlace)
-        // files already live at their final unique paths; the manifest
-        // row IS the publication — no filesystem mutation at all
-        files.map { fc =>
-          require(fc.file.startsWith(staging),
-            s"graftlog write: staged file ${fc.file} outside $staging")
-          fc.copy(file = fc.file.stripPrefix(root).stripPrefix("/"))
-        }
-      else {
-        val dataDir = s"data_v$n"
-        fs.mkdirs(new Path(s"$root/$dataDir"))
-        files.map { fc =>
-          val src = new Path(fc.file)
-          val rel = fc.file.stripPrefix(staging).stripPrefix("/")
-          require(rel.nonEmpty && !rel.startsWith("/") &&
-            fc.file.startsWith(staging),
-            s"graftlog write: staged file ${fc.file} outside $staging")
-          val dst = new Path(s"$root/$dataDir/$rel")
-          fs.mkdirs(dst.getParent)
-          commitRenames.incrementAndGet()
-          require(fs.rename(src, dst),
-            s"graftlog write: rename $src -> $dst failed")
-          fc.copy(file = s"$dataDir/$rel")
-        }
-      }
+    // files already live at their final unique paths; the manifest
+    // row IS the publication — no filesystem mutation at all (an empty
+    // write is still a committed, empty version)
+    val manifestAdds = files.map { fc =>
+      require(fc.file.startsWith(staging),
+        s"graftlog write: staged file ${fc.file} outside $staging")
+      fc.copy(file = fc.file.stripPrefix(root).stripPrefix("/"))
+    }
     // strictly increasing across versions even under wall-clock
     // retrograde (NTP step-back): TIMESTAMP AS OF binary-searches these
     // micros, and versions commit strictly in claim order, so the
-    // recorded sequence must be monotone regardless of the host clock.
-    // A LEGACY previous version (no committs row — resolution falls
-    // back to its marker mtime) clamps against that same mtime, so the
-    // boundary between old-binary and new-binary commits stays
-    // monotone too.
+    // recorded sequence must be monotone regardless of the host clock
     val prevMicros: Option[Long] =
       if (n <= 1) None
-      else GraftLog.commitInstantMicros(conf, root, n - 1)
+      else GraftLog.commitMicros(conf, root, n - 1)
     val commitMicros = math.max(System.currentTimeMillis() * 1000L,
       prevMicros.map(_ + 1L).getOrElse(Long.MinValue))
     // the OPERATION row names what this commit did ("append",
@@ -585,16 +547,12 @@ object GraftLogWrite {
     // CONTENT-PRESERVING rewrites (compaction, optimize — same logical
     // rows, different files) from genuine data change (DML) read it:
     // the snapshot streaming tail skips preserving rewrites instead of
-    // refusing, and the change feed classifies update commits. Old
-    // versions without the row stay "unknown" — every consumer falls
-    // back to its conservative pre-op behavior.
+    // refusing, and the change feed classifies update commits. A
+    // commit without the row stays "unknown" — every consumer falls
+    // back to its conservative behavior.
     writeManifest(conf, root, n, manifestAdds, recordedSchema,
       removes, op.map(GraftLog.ManifestRow("op", _)).toSeq ++ extraRows,
       commitMicros)
-    // legacy staging: drop loser-attempt remnants. In-place staging IS
-    // the final directory — deleting it would delete the committed
-    // files; losers there were removed by their own task aborts.
-    if (!inPlace) fs.delete(new Path(staging), true)
     beforeOk(n)
     fs.create(new Path(s"$root/_log/v$n._ok"), true).close()
     // every CheckpointInterval commits, consolidate the live set so
@@ -832,29 +790,23 @@ class GraftLogStreamingWrite(root: String, schema: StructType,
     val fs = new Path(root).getFileSystem(c)
     val marker = epochMarker(epochId)
     if (fs.exists(marker)) {
-      // the marker names the version this epoch claimed; _ok decides
-      // whether that commit completed. An EMPTY marker is the legacy
-      // (pre-atomic) protocol, which only ever wrote the marker AFTER
-      // a successful commit — the epoch is in the log, drop the replay.
+      // the marker names the version this epoch claimed (written
+      // atomically, so always a number); _ok decides whether that
+      // commit completed
       val in = fs.open(marker)
-      val content = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .mkString.trim finally in.close()
-      content.toIntOption match {
-        case Some(v) if fs.exists(new Path(s"$root/_log/v$v._ok")) =>
-          // replayed epoch (crash between version commit and checkpoint
-          // advance): the version is in the log — drop the replay
-          dropReplay(fs, messages)
-          return
-        case Some(_) =>
-          // crashed between marker and _ok: the version is torn
-          // (invisible); clear the marker and redo the commit (the torn
-          // claim, if still present, blocks loudly with its documented
-          // recovery)
-          fs.delete(marker, false)
-        case None =>
-          dropReplay(fs, messages)
-          return // legacy committed marker
+      val v = try scala.io.Source.fromInputStream(in, "UTF-8")
+        .mkString.trim.toInt finally in.close()
+      if (fs.exists(new Path(s"$root/_log/v$v._ok"))) {
+        // replayed epoch (crash between version commit and checkpoint
+        // advance): the version is in the log — drop the replay
+        dropReplay(fs, messages)
+        return
       }
+      // crashed between marker and _ok: the version is torn
+      // (invisible); clear the marker and redo the commit (the torn
+      // claim, if still present, blocks loudly with its documented
+      // recovery)
+      fs.delete(marker, false)
     }
     GraftLogWrite.commitStaged(c, root, staging(epochId),
       messages.flatMap(_.asInstanceOf[GraftLogCommitMessage].files).toSeq,

@@ -157,7 +157,7 @@ private[sources] object GraftProcedures {
 
   /** `history(table [, max_versions])` — one row per RETAINED version,
     * newest first: version number, commit timestamp (the manifest's
-    * committs micros; marker mtime for legacy versions), adds/removes
+    * committs micros), adds/removes
     * counts, and the operation class derivable from the manifest
     * shape. The audit surface real formats call DESCRIBE HISTORY —
     * folded entirely from the log's control plane, zero data I/O. The
@@ -195,7 +195,6 @@ private[sources] object GraftProcedures {
             s"graft catalog: history max_versions must be positive")
           val wm = math.max(GraftLog.vacuumWatermark(conf, root),
             if (latest - maxV + 1 > 0) latest - maxV + 1 else 1)
-          val occ = GraftLog.isOcc(conf, root) // resolved ONCE
           val schema = StructType(Seq(
             StructField("version", LongType, nullable = false),
             StructField("committed_at", TimestampType, nullable = true),
@@ -203,12 +202,12 @@ private[sources] object GraftProcedures {
             StructField("n_added", LongType, nullable = false),
             StructField("n_removed", LongType, nullable = false)))
           def ddlOf(v: Int): Option[String] =
-            GraftLog.versionRows(conf, root, v, occ).collectFirst {
+            GraftLog.versionRows(conf, root, v).collectFirst {
               case GraftLog.ManifestRow("schema", d, _, _, _) => d }
           val rows = (latest to wm by -1).map { v =>
-            val mrows = GraftLog.versionRows(conf, root, v, occ)
+            val mrows = GraftLog.versionRows(conf, root, v)
             // the ONE commit-instant rule TIMESTAMP AS OF uses
-            val micros = GraftLog.commitInstantMicros(conf, root, v, occ)
+            val micros = GraftLog.commitMicros(conf, root, v)
             val adds = mrows.count(_.action == "add").toLong
             val removes = mrows.count(_.action == "remove").toLong
             // an empty commit is ALTER only when the recorded DDL
@@ -223,8 +222,8 @@ private[sources] object GraftProcedures {
             }
             // the commit's own OPERATION row names what happened
             // (DELETE vs COMPACT vs MERGE — distinctions the row mix
-            // can't recover); legacy versions without one fall back to
-            // the shape-inferred class
+            // can't recover); a commit without one falls back to the
+            // shape-inferred class
             val op = mrows.collectFirst {
               case GraftLog.ManifestRow("op", o, _, _, _) =>
                 o.toUpperCase(java.util.Locale.ROOT)
@@ -273,17 +272,8 @@ private[sources] object GraftProcedures {
           val latest = GraftLog.latestVersion(conf, root)
           val st = GraftLog.liveState(conf, root, latest)
           val meta = GraftLog.tableMeta(conf, root, latest)
-          // expand to CONCRETE files so legacy/directory manifest rows
-          // count correctly, and fall back to the filesystem length for
-          // any entry without recorded bytes — the audit row must state
-          // the table's real footprint, never a silently low number
-          val entries = st.adds.flatMap(GraftLog.expandRow(conf, root, _))
-          val bytes = entries.iterator.map { e =>
-            e.bytes.getOrElse {
-              val p = new org.apache.hadoop.fs.Path(e.path)
-              p.getFileSystem(conf).getFileStatus(p).getLen
-            }
-          }.sum
+          // every add row is one file recording its own byte size
+          val bytes = st.adds.iterator.map(_.bytes.get).sum
           val ckpt = GraftLog.newestCheckpointAt(conf, root, latest)
           result(StructType(Seq(
             StructField("format", StringType, nullable = false),
@@ -301,7 +291,7 @@ private[sources] object GraftProcedures {
             StructField("tombstoned_columns", LongType,
               nullable = false))),
             UTF8String.fromString(GraftLog.ShortName), latest.toLong,
-            entries.size.toLong, bytes,
+            st.adds.size.toLong, bytes,
             st.dvs.size.toLong, st.dvs.values.map(_.card).sum,
             UTF8String.fromString(meta.partCols.mkString(",")),
             ckpt.getOrElse(0).toLong,
@@ -353,7 +343,7 @@ private[sources] object GraftProcedures {
           val tblSchema = meta.schema.getOrElse(
             GraftLog.inferSchema(conf, root, latest))
           val entries = GraftLog.liveState(conf, root, latest).adds
-            .flatMap(GraftLog.expandRow(conf, root, _))
+            .map(GraftLog.fileEntry(root, _))
           val described = entries.filterNot(_.rows.contains(0L))
           // logical leaf paths in schema order (struct leaves dotted;
           // array/map interiors carry no single per-row value)
@@ -419,7 +409,6 @@ private[sources] object GraftProcedures {
           val root = rootOf(input.getUTF8String(0).toString)
           val conf = s.sessionState.newHadoopConf()
           val latest = GraftLog.latestVersion(conf, root)
-          val occ = GraftLog.isOcc(conf, root)
           val schema = StructType(Seq(
             StructField("version", LongType, nullable = false),
             StructField("schema_ddl", StringType, nullable = false),
@@ -431,7 +420,7 @@ private[sources] object GraftProcedures {
           // watermark would misreport an identity mapping
           var prev: Option[(String, String)] = None
           val rows = (1 to latest).flatMap { v =>
-            val mrows = GraftLog.versionRows(conf, root, v, occ)
+            val mrows = GraftLog.versionRows(conf, root, v)
             val ddl = mrows.collectFirst {
               case GraftLog.ManifestRow("schema", d, _, _, _) => d }
             val cmap = mrows.collectFirst {

@@ -31,7 +31,7 @@ class GraftLogCheckpointSpec extends SparkSpecBase {
     * exactly as the connector write path does.
     */
   private def append(root: String, ids: Seq[Long]): Int = {
-    val staging = s"$root/_staging_spec_${java.util.UUID.randomUUID()}"
+    val staging = s"$root/data/w_spec_${java.util.UUID.randomUUID()}"
     val f = s"$staging/part-0-0.parquet"
     val w = GraftLogWrite.groupWriter(new Path(f), msg,
       new org.apache.hadoop.conf.Configuration(conf))
@@ -42,18 +42,6 @@ class GraftLogCheckpointSpec extends SparkSpecBase {
     val (r, by, st) = GraftLogStats.describeFile(conf, f, schema)
     GraftLogWrite.commitStaged(conf, root, staging,
       Seq(GraftLogFileCommit(f, r, by, st)), Some(schema))
-  }
-
-  /** A hand-written LEGACY version (marker protocol, no claim, no
-    * schema row, no stats) — removes and adds by relative path.
-    */
-  private def legacyCommit(root: String, v: Int, adds: Seq[String],
-      removes: Seq[String]): Unit = {
-    GraftLogWrite.writeManifestRows(conf,
-      new Path(s"$root/_log/v$v/manifest.parquet"),
-      adds.map(GraftLog.ManifestRow("add", _)) ++
-        removes.map(GraftLog.ManifestRow("remove", _)))
-    fs(root).create(new Path(s"$root/_log/v$v._ok"), true).close()
   }
 
   private def readIds(root: String, version: Option[Int] = None): Seq[Long] = {
@@ -99,10 +87,12 @@ class GraftLogCheckpointSpec extends SparkSpecBase {
     val root = Files.createTempDirectory("graft_ckptfold").toString
     // v1..v12: connector appends (checkpoint lands at v10)
     (1 to 12).foreach(v => append(root, Seq(100L + v)))
-    // v13: a LEGACY remove of v2's file (no schema row, no stats)
+    // v13: a remove-only commit of v2's file
     val v2File = GraftLog.versionRows(conf, root, 2)
       .collectFirst { case GraftLog.ManifestRow("add", f, _, _, _) => f }.get
-    legacyCommit(root, 13, Nil, Seq(v2File))
+    assert(GraftLogWrite.commitStaged(conf, root,
+      s"$root/data/w_spec_rm", Nil, Some(schema),
+      removes = Seq(v2File)) === 13)
     // v14..v20: more connector appends — the v20 checkpoint must bake
     // in the remove
     (14 to 20).foreach(v => append(root, Seq(100L + v)))
@@ -127,11 +117,10 @@ class GraftLogCheckpointSpec extends SparkSpecBase {
       "and widening across the boundary keeps each version's own schema") {
     val root = Files.createTempDirectory("graft_ckptschema").toString
     (1 to 10).foreach(v => append(root, Seq(v.toLong))) // ckpt@10
-    // v11: legacy add (no schema row) — the backward walk stops at the
-    // checkpoint instead of descending to v1
-    spark.range(50, 53).selectExpr("id").coalesce(1)
-      .write.mode("overwrite").parquet(s"$root/extra")
-    legacyCommit(root, 11, Seq("extra"), Nil)
+    // v11: a Spark-written file committed past the checkpoint — the
+    // backward walk stops at the newest manifest, never descending to v1
+    commitParquet(root, schema)(dir =>
+      spark.range(50, 53).selectExpr("id").coalesce(1).write.parquet(dir))
     GraftLog.clearPlanCaches()
     val before = GraftLog.planControlReads.get()
     assert(GraftLog.schemaFromManifest(conf, root, 11).get.toDDL

@@ -4,7 +4,6 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.Maintenance
 import graft.sources.{GraftLog, GraftLogOps, GraftLogWrite}
 
 /** Row-level MERGE / DELETE on the transaction log: only the files that
@@ -39,11 +38,8 @@ class GraftLogMergeSpec extends SparkSpecBase {
     // update ids 1 and 5 (both in the bucket=1 file), insert id 1001
     val source = Seq((1L, 1L, -1.0), (5L, 1L, -5.0), (1001L, 1L, -1001.0))
       .toDF("id", "bucket", "v")
-    val renamesBefore = GraftLogWrite.commitRenames.get()
     val v = GraftLogOps.mergeIntoLog(spark, root, source, Seq("id"))
     assert(v === 2)
-    // in-place publication: the merge commit performed zero renames
-    assert(GraftLogWrite.commitRenames.get() === renamesBefore)
     // exactly ONE file removed — the bucket=1 file; buckets 0/2/3 keep
     // their original files untouched
     val removes = GraftLog.versionRows(conf, root, 2)
@@ -92,16 +88,23 @@ class GraftLogMergeSpec extends SparkSpecBase {
       GraftLogOps.mergeIntoLog(spark, root, drift, Seq("id"))
     }
     assert(e2.getMessage.contains("must match the"), e2.getMessage)
-    // the legacy txn log's manifests carry no per-file statistics —
-    // row-level ops refuse with the connector-written requirement
-    val legacy = Maintenance.txnTableDir(spark, sfDir)
-    val before = GraftLog.latestVersion(conf, legacy)
+    // a manifest whose add row carries no rows/bytes was not written
+    // through the commit protocol — the manifest read refuses it, so
+    // row-level ops refuse before anything is staged or committed
+    val legacy = Files.createTempDirectory("graft_merge_legacy").toString
+    GraftLogWrite.writeManifestRows(conf,
+      new org.apache.hadoop.fs.Path(s"$legacy/_log/v1/manifest.parquet"),
+      Seq(GraftLog.ManifestRow("schema", "id BIGINT, bucket BIGINT, v DOUBLE"),
+        GraftLog.ManifestRow("add", "data_a/part-0.parquet")))
+    new org.apache.hadoop.fs.Path(legacy).getFileSystem(conf)
+      .create(new org.apache.hadoop.fs.Path(s"$legacy/_log/v1._ok"))
+      .close()
     val e3 = intercept[IllegalArgumentException] {
-      GraftLogOps.deleteFromLog(spark, legacy, col("o_orderkey") === 1L)
+      GraftLogOps.deleteFromLog(spark, legacy, col("id") === 1L)
     }
-    assert(e3.getMessage.contains("legacy manifest entries"),
-      e3.getMessage)
-    assert(GraftLog.latestVersion(conf, legacy) === before)
+    assert(e3.getMessage.contains("without rows/bytes") &&
+      e3.getMessage.contains(legacy), e3.getMessage)
+    assert(GraftLog.latestVersion(conf, legacy) === 1)
   }
 
   test("SQL DELETE FROM routes through the metadata-path rewrite for " +
@@ -236,7 +239,7 @@ class GraftLogMergeSpec extends SparkSpecBase {
       .option("schema", "id BIGINT, grp BIGINT, v DOUBLE")
       .option("partitionBy", "grp").mode("append").save()
     val entries = GraftLog.liveAdds(conf, root, 1)
-      .map(r => (r.file, GraftLog.expandRow(conf, root, r).head))
+      .map(r => (r.file, GraftLog.fileEntry(root, r)))
     assert(entries.size === 4)
     val src = Seq((3L, 0L, -3.0), (97L, 3L, -97.0)).toDF("id", "grp", "v")
     val schema = org.apache.spark.sql.types.StructType.fromDDL(

@@ -76,14 +76,10 @@ class GraftLogNestedSpec extends SparkSpecBase {
       "legacy version reads through the connector (schema inferred from " +
       "the footer, nested decode per-file)") {
     val root = Files.createTempDirectory("graft_nestedlegacy").toString
-    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(conf)
-    nestedDf(0, 100).coalesce(1)
-      .write.mode("overwrite").parquet(s"$root/data_a")
-    graft.sources.GraftLogWrite.writeManifestRows(conf,
-      new org.apache.hadoop.fs.Path(s"$root/_log/v1/manifest.parquet"),
-      Seq(GraftLog.ManifestRow("add", "data_a")))
-    fs.create(new org.apache.hadoop.fs.Path(s"$root/_log/v1._ok"), true)
-      .close()
+    // Spark's own writer lays the nested file down; the commit records
+    // the DataFrame's schema, and the reader decodes the file per-file
+    commitParquet(root, nestedDf(0, 100).schema)(dir =>
+      nestedDf(0, 100).coalesce(1).write.parquet(dir))
     val back = spark.read.format("graftlog").option("path", root).load()
     val orig = nestedDf(0, 100)
     assert(back.schema.map(_.name) === orig.schema.map(_.name))

@@ -352,51 +352,60 @@ class MaintenanceSpec extends SparkSpecBase {
   test("occ: the version claim is put-if-absent (one winner), disjoint " +
       "losers rebase, overlapping losers get a conflict, torn manifests " +
       "end the log and recover explicitly") {
-    import Maintenance.Occ
+    // optimistic concurrency on the connector's one commit path
+    import graft.sources.{GraftLogClaimPendingException, GraftLogConflictException, GraftLogOps, GraftLogWrite}
     val root = java.nio.file.Files
       .createTempDirectory("graft_occ_spec").toString
-    // writer 1 commits v1
-    assert(Occ.occCommit(spark, root, 0, Seq("f1", "f2"), Nil) == 1)
-    assert(Occ.latest(spark, root) == 1)
-    assert(Occ.liveAt(spark, root, 1).sorted == Seq("f1", "f2"))
-    // two writers prepare against v1; A wins v2, B (disjoint) rebases to v3
-    val vA = Occ.occCommit(spark, root, 1, Seq("f2c"), Seq("f2"))
-    val vB = Occ.occCommit(spark, root, 1, Seq("f3"), Nil)
-    assert(vA == 2 && vB == 3)
-    assert(Occ.liveAt(spark, root, 3).sorted == Seq("f1", "f2c", "f3"))
-    // writer C also prepared against v1 and ALSO removes f2 — the race
+    val conf = spark.sessionState.newHadoopConf()
+    val schema = org.apache.spark.sql.types.StructType.fromDDL("id BIGINT")
+    def ids(from: Long, until: Long): String => Unit =
+      dir => spark.range(from, until).coalesce(1).write.parquet(dir)
+    def stage(from: Long, until: Long) =
+      GraftLogOps.stageParquet(conf, root, "occ", schema)(ids(from, until))
+    def commit(staged: (String, Seq[graft.sources.GraftLogFileCommit]),
+        removes: Seq[String] = Nil): Int =
+      GraftLogWrite.commitStaged(conf, root, staged._1, staged._2,
+        Some(schema), removes = removes, readVersion = Some(1))
+    def rel(staged: (String, Seq[graft.sources.GraftLogFileCommit])) =
+      staged._2.map(_.file.stripPrefix(s"$root/"))
+    def live(v: Int): Set[String] =
+      graft.sources.GraftLog.liveEntries(conf, root, v).toSet
+    // writer 1 commits v1 = f1 + f2
+    val Seq(f1, f2) = commitParquet(root, schema)(ids(0, 10), ids(10, 20))
+    assert(Maintenance.latestVersion(spark, root) == 1)
+    // two writers stage against v1; A (rewrites f2) wins v2, B
+    // (disjoint: adds only) rebases past it to v3
+    val a = stage(10, 15)
+    val b = stage(20, 30)
+    assert(commit(a, removes = Seq(f2)) == 2)
+    assert(commit(b) == 3)
+    assert(live(3) == Set(f1) ++ rel(a) ++ rel(b))
+    // writer C also staged against v1 and ALSO removes f2 — the race
     // loser must see the write-write conflict, not blindly rebase
-    val e = intercept[Occ.OccConflictException] {
-      Occ.occCommit(spark, root, 1, Seq("f2x"), Seq("f2"))
+    val e = intercept[GraftLogConflictException] {
+      commit(stage(10, 12), removes = Seq(f2))
     }
-    assert(e.getMessage.contains("f2"))
-    // conflict detection walks EVERY intervening version: a remove of
-    // v3's f3 (not just v2's files) must also conflict
-    val e2 = intercept[Occ.OccConflictException] {
-      Occ.occCommit(spark, root, 1, Nil, Seq("f3"))
+    assert(e.getMessage.contains(f2))
+    assert(Maintenance.latestVersion(spark, root) == 3)
+    // one winner per version: every committed number keeps its claim,
+    // so no later writer can claim it again
+    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(conf)
+    (1 to 3).foreach { v =>
+      intercept[java.io.IOException] {
+        fs.create(new org.apache.hadoop.fs.Path(s"$root/_log/v$v._claim"),
+          false)
+      }
     }
-    assert(e2.getMessage.contains("f3"))
-    // torn manifest: a claimed-but-unsealed v4 is invisible to readers
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val torn = new org.apache.hadoop.fs.Path(s"$root/_log/v4.txt")
-    val out = fs.create(torn, false)
-    out.write("add f4\n".getBytes("UTF-8")) // no terminal commit line
-    out.close()
-    assert(Occ.latest(spark, root) == 3)
-    assert(!Occ.liveAt(spark, root, Occ.latest(spark, root))
-      .contains("f4"))
-    // and it blocks the number until explicitly recovered
-    val e3 = intercept[Occ.OccConflictException] {
-      Occ.occCommit(spark, root, 3, Seq("f5"), Nil)
-    }
-    assert(e3.getMessage.contains("torn"))
-    assert(Occ.occRecover(spark, root, 4))
-    assert(Occ.occCommit(spark, root, 3, Seq("f5"), Nil) == 4)
-    assert(Occ.liveAt(spark, root, 4).sorted ==
-      Seq("f1", "f2c", "f3", "f5"))
-    // recovery refuses to delete a SEALED manifest
-    assert(!Occ.occRecover(spark, root, 4))
+    // a torn claim (claimed, never committed) ends the log and blocks
+    // its number until explicitly recovered
+    val torn = new org.apache.hadoop.fs.Path(s"$root/_log/v4._claim")
+    fs.create(torn, false).close()
+    assert(Maintenance.latestVersion(spark, root) == 3)
+    val next = stage(200, 210)
+    intercept[GraftLogClaimPendingException] { commit(next) }
+    assert(fs.delete(torn, false))
+    assert(commit(next) == 4)
+    assert(live(4) == live(3) ++ rel(next))
   }
 
   test("vacuum sweeps crashed-writer orphans under data/ by AGE: old " +

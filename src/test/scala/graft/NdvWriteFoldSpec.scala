@@ -58,7 +58,7 @@ class NdvWriteFoldSpec extends SparkSpecBase {
         "inner: STRUCT<deep: BIGINT>>, arr ARRAY<BIGINT>")
       .mode("append").save()
     val entries = GraftLog.liveState(conf, root, 1).adds
-      .flatMap(GraftLog.expandRow(conf, root, _))
+      .map(GraftLog.fileEntry(root, _))
     assert(entries.size === 2)
     entries.foreach { e =>
       val folded = e.stats.get.ndv

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.StructType
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,6 +11,23 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpecBase.session
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Commit parquet written by Spark's own writer as ONE new version of
+    * the log at `root`, through the connector's commit path: each
+    * `write` lands part-files in the staging directory it is handed
+    * (under `root/data/`), and the version records `schema` and
+    * removes `removes`. Returns the added files, root-relative.
+    */
+  def commitParquet(root: String, schema: StructType,
+      removes: Seq[String] = Nil, op: Option[String] = None)(
+      writes: (String => Unit)*): Seq[String] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val (staging, files) = graft.sources.GraftLogOps.stageParquet(conf,
+      root, "test", schema)(writes: _*)
+    graft.sources.GraftLogWrite.commitStaged(conf, root, staging, files,
+      Some(schema), removes = removes, op = op)
+    files.map(_.file.stripPrefix(s"$root/"))
+  }
 }
 
 object SparkSpecBase {

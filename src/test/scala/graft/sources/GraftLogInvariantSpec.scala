@@ -43,7 +43,7 @@ class GraftLogInvariantSpec extends graft.SparkSpecBase {
       "filtering may only narrow the planned file set)") {
     val root = mkTable("graft_prov")
     val schema = GraftLog.inferSchema(conf, root, 2)
-    val scan = GraftLogScan(root, 2, schema, Set.empty, schema,
+    val scan = GraftLogScan(root, 2, schema, schema,
       Array.empty, None, Array.empty,
       new SerializableConfiguration(conf), cdc = false, cdcStart = 1,
       columnar = false, rowLevel = true)
@@ -93,7 +93,7 @@ class GraftLogInvariantSpec extends graft.SparkSpecBase {
     val meta = GraftLog.tableMeta(conf, root, 1)
     val schema = GraftLog.inferSchema(conf, root, 1)
     val entries = GraftLog.liveAdds(conf, root, 1)
-      .map(r => (r.file, GraftLog.expandRow(conf, root, r).head))
+      .map(r => (r.file, GraftLog.fileEntry(root, r)))
     assert(entries.size >= 4)
     // bucket = 2 translates -> exactly the bucket=2 file(s) survive
     val pruned = GraftLogOps.pruneByCond(spark, entries, schema,
@@ -124,7 +124,7 @@ class GraftLogInvariantSpec extends graft.SparkSpecBase {
         .mode("append").save()
     }
     val nentries = GraftLog.liveAdds(conf, nroot, 2)
-      .map(r => (r.file, GraftLog.expandRow(conf, nroot, r).head))
+      .map(r => (r.file, GraftLog.fileEntry(nroot, r)))
     nentries.foreach { case (f, fe) =>
       val st = fe.stats.get
       assert(st.min.contains("meta.score"), (f, st.min.keys))

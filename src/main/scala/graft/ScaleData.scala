@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Deterministic scale-up generator for the `documents` / `embeddings`
   * tables (the two tables behind the heavy dedup/ANN family), mimicking the
   * driver testdata's shape at an arbitrary multiple: same 30-word vocabulary,

@@ -1,7 +1,9 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -53,7 +55,35 @@ case class PolyCharHash(child: Expression, base: Long, mod: Long, padTo: Int)
       newChild: Expression): PolyCharHash = copy(child = newChild)
 }
 
+/** The fold, plus the token hash SimHash (`Dedup`) and the feature hash
+  * (`TextAnalysis`) share. It lives here because this object refers to
+  * no other engine object: when two object initializers reach each
+  * other, threads that touch them first at the same time deadlock.
+  */
 object PolyCharHash {
+
+  private[graft] val TokLen = 16
+  private[graft] val PA     = 1000000007L
+
+  /** Portable 30-bit polynomial character hash of a token (right-padded /
+    * truncated to [[TokLen]] chars) — the same left fold DuckDB writes as
+    * nested arithmetic, so the whole signature is oracle-checkable
+    * (xxhash64 is not): one fused codegen'd loop per token instead of
+    * the 2×16 substr/ascii/pmod expression nodes the first version
+    * generated.
+    */
+  private[graft] def polyHash(tok: Column, base: Long, p: Long): Column =
+    ColumnBridge.column(
+      PolyCharHash(ColumnBridge.expression(tok), base, p, TokLen))
+
+  /** [[polyHash]] as SQL text, for the DuckDB oracles. */
+  private[graft] def polyHashSql(tok: String, base: Long, p: Long): String = {
+    val padded = s"rpad($tok, $TokLen, ' ')"
+    (1 to TokLen).foldLeft("CAST(0 AS BIGINT)") { (acc, i) =>
+      s"(($acc * $base + ascii(substr($padded, $i, 1))) % $p)"
+    }
+  }
+
   /** Static fold shared by codegen and any Scala-side caller; the JIT
     * inlines this tight loop (one call per row beats 32+ generated
     * expression nodes both in code size and in compile time).

@@ -1390,7 +1390,7 @@ object TextAnalysis {
     * AND stays in one simple pass (diversity); not here.
     */
   def featureHash(s: SparkSession, d: String): DataFrame = {
-    import graft.operators.Dedup.{polyHash, PA}
+    import PolyCharHash.{polyHash, PA}
     val D = FeatureDim
     Tables.documents(s, d)
       .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
@@ -1405,8 +1405,7 @@ object TextAnalysis {
 
   val featureHashSql: String = {
     val D = FeatureDim
-    val h = graft.operators.Dedup.polyHashSql("tok", 31L,
-      graft.operators.Dedup.PA)
+    val h = PolyCharHash.polyHashSql("tok", 31L, PolyCharHash.PA)
     s"""WITH toks AS (
        |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
        |  FROM documents

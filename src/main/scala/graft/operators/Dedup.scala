@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.PolyCharHash.{polyHash, polyHashSql, PA}
 
 /** Document deduplication for LLM training-data pipelines, over the
   * `documents` table: exact (hash groupBy), n-gram Jaccard (inverted-index
@@ -1158,22 +1159,7 @@ object Dedup {
     * the output equals an all-pairs scan and is oracle-checkable.
     */
   val SimHammingMax = 3L
-  private[graft] val TokLen = 16
-  private[graft] val PA     = 1000000007L
   private val PB     = 998244353L
-
-  /** Portable 30-bit polynomial character hash of a token (right-padded /
-    * truncated to 16 chars) — the same left fold DuckDB writes as nested
-    * arithmetic, so the whole signature is oracle-checkable (xxhash64 is
-    * not). Implemented by the native [[graft.functions.PolyCharHash]]
-    * expression: one fused codegen'd loop per token instead of the 2×16
-    * substr/ascii/pmod expression nodes the first version generated.
-    */
-  private[graft] def polyHash(tok: Column, base: Long, p: Long): Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      graft.functions.PolyCharHash(
-        org.apache.spark.sql.graft.ColumnBridge.expression(tok),
-        base, p, TokLen))
 
   /** Whole-string mode (padTo = -1): fold every byte, no padding. */
   private def polyHashFull(c: Column, base: Long, p: Long): Column =
@@ -1181,13 +1167,6 @@ object Dedup {
       graft.functions.PolyCharHash(
         org.apache.spark.sql.graft.ColumnBridge.expression(c),
         base, p, -1))
-
-  private[graft] def polyHashSql(tok: String, base: Long, p: Long): String = {
-    val padded = s"rpad($tok, $TokLen, ' ')"
-    (1 to TokLen).foldLeft("CAST(0 AS BIGINT)") { (acc, i) =>
-      s"(($acc * $base + ascii(substr($padded, $i, 1))) % $p)"
-    }
-  }
 
   /** Per-doc 60-bit SimHash over the token multiset via explode + 60
     * conditional sums (each token-hash bit votes ±1 on its lane; the

@@ -385,8 +385,8 @@ class GraftCatalog extends TableCatalog
           l != n && !l.startsWith(prefix) }
       case t: TableChange.UpdateColumnType =>
         // TYPE WIDENING: the per-version schema machinery already
-        // returns each version's own schema, and both readers decode
-        // per THIS FILE's physical type — so a widening commit needs
+        // returns each version's own schema, and Spark's parquet reader
+        // decodes per THIS FILE's physical type — so a widening commit needs
         // no rewrite: old files' values up-cast at the read boundary
         // (INT32→long, FLOAT→double, decimal precision growth at the
         // same scale keeps the physical decode keyed on the file).

@@ -328,7 +328,7 @@ object GraftLogOps {
 
   /** Per-file density cutoff for merge-on-read: a file losing at least
     * this fraction of its rows is REWRITTEN instead of masked — the
-    * read-side masking tax (row reader + per-row membership) isn't
+    * read-side masking tax (row index + per-row membership) isn't
     * worth it when most of the file is dead, and the rewrite was
     * going to read every surviving byte anyway. The same commit may
     * mix both shapes: dv rows for sparse files, remove+add for dense.
@@ -686,10 +686,9 @@ object GraftLogOps {
     * mixed commits fall back to the plain delete/insert feed wholesale.
     * Time travel before the commit reads the file unmasked; OPTIMIZE
     * folds the vectors away (the DV'd file compacts, its mask dies
-    * with the remove). Both reader paths mask — the vectorized reader
-    * compacts survivors while the batch fills (≈7% full-scan tax,
-    * measured), so OPTIMIZE's fold is a compaction decision, not a
-    * read rescue.
+    * with the remove). The scan masks inside Spark's vectorized reader
+    * (a row selection over each batch), so OPTIMIZE's fold is a
+    * compaction decision, not a read rescue.
     */
   private def mergeOnRead(snap: Snapshot, op: RowLevelOp): Int = {
     val matched = snap.readWithPos(op.candidates.map(_._1))

@@ -87,8 +87,7 @@ class GraftLogRowLevelOperation(root: String,
     val schema = meta.schema
       .getOrElse(GraftLog.inferSchema(c, root, latest))
     new GraftLogScanBuilder(root, latest, schema, conf, cdc = false,
-      cdcStart = 1, columnar = options.getBoolean("columnar", true),
-      rowLevel = true, onBuild = { s =>
+      cdcStart = 1, rowLevel = true, onBuild = { s =>
         scanBuilds.incrementAndGet(); cowScan = Some(s)
       }, colMap = meta.colMap)
   }

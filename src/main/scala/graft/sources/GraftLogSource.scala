@@ -6,28 +6,27 @@ import scala.collection.mutable
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.filter2.compat.FilterCompat
-import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
-import org.apache.parquet.hadoop.api.ReadSupport
+import org.apache.parquet.hadoop.{ParquetInputFormat, ParquetReader}
 import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.MessageType
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{streaming, Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportStatistics}
+import org.apache.spark.sql.execution.datasources.PartitionedFile
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetOptions, ParquetReadSupport, ParquetWriteSupport}
+import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.vectorized.{ColumnarArray, ColumnarBatch, ColumnarMap, ColumnVector}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.sources.GraftLogStats.{ColStats, FileEntry}
+import graft.sources.GraftLogStats.FileEntry
 
 /** The versioned transaction log as a REAL engine surface: a
   * DataSourceV2 `TableProvider` registered as `format("graftlog")`, so
@@ -49,15 +48,14 @@ import graft.sources.GraftLogStats.{ColStats, FileEntry}
   *    watermark refuses at `load()` (clean IllegalArgumentException),
   *    never mid-scan on a deleted file.
   *  - COLUMN PRUNING (`SupportsPushDownRequiredColumns`): the pruned
-  *    schema becomes the parquet projection (`parquet.read.schema`),
+  *    schema becomes the parquet reader's requested schema,
   *    so untouched columns are never decoded — at 100 TB a 2-column
   *    query over a 6-column log table reads a third of the bytes.
-  *  - FILTER PUSHDOWN (`SupportsPushDownFilters`): supported
-  *    predicates convert to parquet `FilterPredicate`s evaluated
-  *    against row-group statistics (and record assembly) inside each
-  *    reader; all filters are ALSO returned as residual — exactly
-  *    Spark's own parquet discipline, because row-group stats are
-  *    coarse, so correctness never depends on the pushdown.
+  *  - FILTER PUSHDOWN (`SupportsPushDownFilters`): pushed filters
+  *    skip row groups inside Spark's parquet reader, converted per
+  *    file; all filters are ALSO returned as residual — exactly Spark's
+  *    own parquet discipline, because row-group stats are coarse, so
+  *    correctness never depends on the pushdown.
   *  - MANIFEST STATISTICS (round 12): every add row carries its
   *    file's row count and byte size, and usually column min/max
   *    ([[GraftLogStats]]), so `estimateStatistics` and the file-level
@@ -84,11 +82,9 @@ import graft.sources.GraftLogStats.{ColStats, FileEntry}
   * part-file, and files larger than the session's maxPartitionBytes
   * split into byte ranges (row groups assigned by midpoint — Spark's
   * own FileScan discipline), so a 10 GB compacted file is ~80 tasks,
-  * not one. Readers use parquet-hadoop's public column-IO path —
-  * the default factory (batch AND streaming micro-batches) is the
-  * vectorized [[GraftLogColumnarReader]], with the row-at-a-time Group
-  * reader serving nested projections and the rare
-  * empty-projection-under-predicate edge.
+  * not one. Every data read — batch, streaming micro-batch, change
+  * feed — decodes through Spark's own parquet reader
+  * ([[GraftLogReaderFactory]]).
   */
 object GraftLog {
 
@@ -117,24 +113,6 @@ object GraftLog {
     * contain matched rows.
     */
   val FileCol = "_file"
-
-  /** Plan-time data-file footer opens — the metric the manifest-stats
-    * design exists to drive to zero. Incremented at every driver-side
-    * footer read that serves PLANNING (schema inference, stats, file
-    * skip); never by executor-side data reads. GraftLogSourceSpec pins
-    * that planning over a stats-bearing manifest leaves it untouched.
-    */
-  val planFooterReads = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Scan-side I/O instrumentation (folded once per reader close, so
-    * the hot loops never touch an atomic): row groups the vectorized
-    * reader actually decoded, and records the row reader actually
-    * assembled. GraftLogDvSpec pins that a selective pushed predicate
-    * keeps BOTH small on a deletion-vector'd file — row-group skips
-    * and record filtering must survive the mask.
-    */
-  val scanRowGroupsRead = new java.util.concurrent.atomic.AtomicLong(0L)
-  val scanRecordsRead = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Plan-time CONTROL-PLANE round-trips — one increment per `_log`
     * listing, per manifest/checkpoint status probe, and per manifest/
@@ -306,7 +284,7 @@ object GraftLog {
   }
 
   /** One committed version's manifest rows: the `_log/v<N>/` parquet
-    * read through the same Group reader the data path uses — a plain
+    * read through parquet-hadoop's Group reader — a plain
     * footer+column decode, NO Spark job (the r10 utility ran one job
     * per version just to read catalog rows).
     */
@@ -839,179 +817,24 @@ object GraftLog {
       throw new IllegalStateException(
         s"graftlog: no version of $root at or below $asOf records a schema"))
 
-  /** File-level statistics skip for an add row that carries no column
-    * statistics: keep the file iff at least one of its row groups MAY
-    * match the predicate, per parquet's own StatisticsFilter over the
-    * footer min/max. Conservative by construction (the reader
-    * re-checks row groups and Spark re-applies residuals) and
-    * failure-safe: any validation surprise (predicate column absent
-    * from this file's schema, stats missing) KEEPS the file.
-    * Stats-bearing rows never reach this path — their skip decision is
-    * [[GraftLogStats.mayMatch]], zero footer I/O.
+  /** Is `name` a column the scan synthesizes instead of reading: the
+    * CDC tags on a change-feed read, and `_file` unless the data schema
+    * `data` holds the name itself (stored data wins)?
     */
-  def fileMayMatch(conf: Configuration, file: String,
-      predicate: FilterPredicate): Boolean =
-    try {
-      planFooterReads.incrementAndGet()
-      val footer = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new Path(file), conf))
-      try {
-        val meta = footer.getFooter
-        !org.apache.parquet.filter2.compat.RowGroupFilter
-          .filterRowGroups(FilterCompat.get(predicate), meta.getBlocks,
-            meta.getFileMetaData.getSchema)
-          .isEmpty
-      } finally footer.close()
-    } catch { case _: Exception => true }
+  def synthesized(name: String, cdc: Boolean, data: StructType): Boolean =
+    (cdc && (name == ChangeTypeCol || name == CommitVersionCol)) ||
+      (name == FileCol && !data.fieldNames.contains(FileCol))
 
-  /** INT96 → micros since epoch: little-endian nanos-of-day (8 bytes)
-    * + little-endian julian day (4 bytes); epoch = julian 2440588.
+  /** May `f` go to the parquet reader's row-group filter? Every
+    * reference must resolve in the data schema `schema`, and none may be
+    * a DECIMAL: a file written before a precision widening stores the
+    * narrow physical, and parquet's filter conversion checks only the
+    * scale, so a wide literal would truncate into a wrong row-group
+    * skip. The manifest-stats file skip takes decimal filters either way.
     */
-  def int96ToMicros(b: Array[Byte]): Long = {
-    val buf = java.nio.ByteBuffer.wrap(b)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val nanosOfDay = buf.getLong(0)
-    val julianDay = buf.getInt(8)
-    (julianDay - 2440588L) * 86400000000L + nanosOfDay / 1000L
-  }
-
-  /** Spark source Filter -> parquet FilterPredicate, for the subset with
-    * exact row-group-statistics semantics. Unconvertible filters are
-    * simply not pushed (they stay residual like everything else).
-    */
-  def toParquetPredicate(schema: StructType,
-      f: Filter): Option[FilterPredicate] = {
-    // dotted paths resolve through the schema walk, so STRUCT-LEAF
-    // predicates push too — parquet's FilterApi column factories take
-    // dot-joined paths natively, and record-level filtering handles
-    // nested columns; the row reader (which owns every nested
-    // projection) drops the predicate per-file when the file predates
-    // the leaf or stores it narrower
-    def typeOf(c: String): Option[DataType] =
-      GraftLogStats.fieldAt(schema, c).map(_.dataType)
-    def longVal(v: Any): Option[java.lang.Long] = v match {
-      case n: Number => Some(java.lang.Long.valueOf(n.longValue()))
-      case t: java.sql.Timestamp =>
-        Some(java.lang.Long.valueOf(
-          org.apache.spark.sql.catalyst.util.DateTimeUtils
-            .fromJavaTimestamp(t)))
-      case i: java.time.Instant =>
-        Some(java.lang.Long.valueOf(
-          org.apache.spark.sql.catalyst.util.DateTimeUtils.instantToMicros(i)))
-      case l: java.time.LocalDateTime => // TimestampNTZ filter values
-        Some(java.lang.Long.valueOf(
-          org.apache.spark.sql.catalyst.util.DateTimeUtils
-            .localDateTimeToMicros(l)))
-      case _ => None
-    }
-    def intVal(dt: DataType, v: Any): Option[Integer] = (dt, v) match {
-      case (DateType, d: java.sql.Date) =>
-        Some(Integer.valueOf(d.toLocalDate.toEpochDay.toInt))
-      case (DateType, d: java.time.LocalDate) =>
-        Some(Integer.valueOf(d.toEpochDay.toInt))
-      case (_, n: Number) => Some(Integer.valueOf(n.intValue()))
-      case _ => None
-    }
-    def cmp(c: String, v: Any,
-        mk: (DataType, Any) => Option[FilterPredicate]) =
-      typeOf(c).flatMap(dt => mk(dt, v))
-    f match {
-      case And(l, r) => for {
-        lp <- toParquetPredicate(schema, l)
-        rp <- toParquetPredicate(schema, r)
-      } yield FilterApi.and(lp, rp)
-      case Or(l, r) => for {
-        lp <- toParquetPredicate(schema, l)
-        rp <- toParquetPredicate(schema, r)
-      } yield FilterApi.or(lp, rp)
-      case Not(c) => toParquetPredicate(schema, c).map(FilterApi.not)
-      case IsNull(c) => typeOf(c).flatMap {
-        case LongType | TimestampType | TimestampNTZType =>
-          Some(FilterApi.eq(FilterApi.longColumn(c), null: java.lang.Long))
-        case IntegerType | DateType =>
-          Some(FilterApi.eq(FilterApi.intColumn(c), null: Integer))
-        case DoubleType =>
-          Some(FilterApi.eq(FilterApi.doubleColumn(c),
-            null: java.lang.Double))
-        case StringType | BinaryType =>
-          Some(FilterApi.eq(FilterApi.binaryColumn(c), null: Binary))
-        case _ => None
-      }
-      case IsNotNull(c) =>
-        toParquetPredicate(schema, IsNull(c)).map(FilterApi.not)
-      case EqualTo(c, v) if v != null => cmp(c, v, {
-        case (LongType | TimestampType | TimestampNTZType, x) =>
-          longVal(x).map(FilterApi.eq(FilterApi.longColumn(c), _))
-        case (dt @ (IntegerType | DateType), x) =>
-          intVal(dt, x).map(FilterApi.eq(FilterApi.intColumn(c), _))
-        case (DoubleType, x: Number) =>
-          Some(FilterApi.eq(FilterApi.doubleColumn(c),
-            java.lang.Double.valueOf(x.doubleValue())))
-        case (StringType, x: String) =>
-          Some(FilterApi.eq(FilterApi.binaryColumn(c),
-            Binary.fromString(x)))
-        case _ => None
-      })
-      case GreaterThan(c, v) if v != null => cmp(c, v, {
-        case (LongType | TimestampType | TimestampNTZType, x) =>
-          longVal(x).map(FilterApi.gt(FilterApi.longColumn(c), _))
-        case (dt @ (IntegerType | DateType), x) =>
-          intVal(dt, x).map(FilterApi.gt(FilterApi.intColumn(c), _))
-        case (DoubleType, x: Number) =>
-          Some(FilterApi.gt(FilterApi.doubleColumn(c),
-            java.lang.Double.valueOf(x.doubleValue())))
-        case (StringType, x: String) =>
-          Some(FilterApi.gt(FilterApi.binaryColumn(c),
-            Binary.fromString(x)))
-        case _ => None
-      })
-      case GreaterThanOrEqual(c, v) if v != null => cmp(c, v, {
-        case (LongType | TimestampType | TimestampNTZType, x) =>
-          longVal(x).map(FilterApi.gtEq(FilterApi.longColumn(c), _))
-        case (dt @ (IntegerType | DateType), x) =>
-          intVal(dt, x).map(FilterApi.gtEq(FilterApi.intColumn(c), _))
-        case (DoubleType, x: Number) =>
-          Some(FilterApi.gtEq(FilterApi.doubleColumn(c),
-            java.lang.Double.valueOf(x.doubleValue())))
-        case (StringType, x: String) =>
-          Some(FilterApi.gtEq(FilterApi.binaryColumn(c),
-            Binary.fromString(x)))
-        case _ => None
-      })
-      case LessThan(c, v) if v != null => cmp(c, v, {
-        case (LongType | TimestampType | TimestampNTZType, x) =>
-          longVal(x).map(FilterApi.lt(FilterApi.longColumn(c), _))
-        case (dt @ (IntegerType | DateType), x) =>
-          intVal(dt, x).map(FilterApi.lt(FilterApi.intColumn(c), _))
-        case (DoubleType, x: Number) =>
-          Some(FilterApi.lt(FilterApi.doubleColumn(c),
-            java.lang.Double.valueOf(x.doubleValue())))
-        case (StringType, x: String) =>
-          Some(FilterApi.lt(FilterApi.binaryColumn(c),
-            Binary.fromString(x)))
-        case _ => None
-      })
-      case LessThanOrEqual(c, v) if v != null => cmp(c, v, {
-        case (LongType | TimestampType | TimestampNTZType, x) =>
-          longVal(x).map(FilterApi.ltEq(FilterApi.longColumn(c), _))
-        case (dt @ (IntegerType | DateType), x) =>
-          intVal(dt, x).map(FilterApi.ltEq(FilterApi.intColumn(c), _))
-        case (DoubleType, x: Number) =>
-          Some(FilterApi.ltEq(FilterApi.doubleColumn(c),
-            java.lang.Double.valueOf(x.doubleValue())))
-        case (StringType, x: String) =>
-          Some(FilterApi.ltEq(FilterApi.binaryColumn(c),
-            Binary.fromString(x)))
-        case _ => None
-      })
-      case In(c, vs) if vs != null && vs.nonEmpty && vs.forall(_ != null)
-          && vs.length <= 20 =>
-        vs.toSeq.map(v => toParquetPredicate(schema, EqualTo(c, v)))
-          .reduce((a, b) => for { x <- a; y <- b }
-            yield FilterApi.or(x, y))
-      case _ => None
-    }
-  }
+  def readerPushable(schema: StructType, f: Filter): Boolean =
+    f.references.forall(c => GraftLogStats.fieldAt(schema, c)
+      .exists(!_.dataType.isInstanceOf[DecimalType]))
 }
 
 /** `format("graftlog")` entry point (registered via
@@ -1019,8 +842,7 @@ object GraftLog {
   *
   * Read options: `path` (required), `version` (AS-OF snapshot, default
   * latest), `readChangeFeed` (CDC rows instead of a snapshot),
-  * `startingVersion` (CDC range start, default the vacuum watermark),
-  * `columnar` (default true — vectorized batch reads).
+  * `startingVersion` (CDC range start, default the vacuum watermark).
   * Write options: `schema` (bootstrap DDL for the first commit),
   * `partitionBy` (comma-separated Hive-layout partition columns).
   */
@@ -1159,8 +981,7 @@ case class GraftLogTable(root: String, asOfVersion: Int,
     require(asOfVersion >= 1,
       s"no committed versions under $root — write one first")
     new GraftLogScanBuilder(root, asOfVersion, tableSchema, conf, cdc,
-      cdcStart, options.getBoolean("columnar", true),
-      Option(options.get("maxVersionsPerTrigger")).map(_.toInt),
+      cdcStart, Option(options.get("maxVersionsPerTrigger")).map(_.toInt),
       if (cdc) None
       else Option(options.get("startingVersion")).map(_.toInt),
       colMap = colMap)
@@ -1238,7 +1059,7 @@ case class GraftLogTable(root: String, asOfVersion: Int,
 
 class GraftLogScanBuilder(root: String, version: Int, tableSchema: StructType,
     conf: SerializableConfiguration, cdc: Boolean, cdcStart: Int,
-    columnar: Boolean, maxVersionsPerTrigger: Option[Int] = None,
+    maxVersionsPerTrigger: Option[Int] = None,
     streamStart: Option[Int] = None, rowLevel: Boolean = false,
     onBuild: GraftLogScan => Unit = _ => (),
     colMap: Map[String, String] = Map.empty)
@@ -1281,36 +1102,32 @@ class GraftLogScanBuilder(root: String, version: Int, tableSchema: StructType,
   override def pruneColumns(requiredSchema: StructType): Unit =
     pruned = requiredSchema
 
-  /** Accept what converts; return EVERYTHING as residual — row-group
-    * statistics are coarse, so Spark must re-apply (the same contract
-    * its built-in parquet source uses). Filters that DON'T convert to a
-    * parquet predicate (a literal 1000-value IN list, say) are still
-    * tracked for the MANIFEST-STATS file skip, which handles a wider
-    * shape set than row-group predicate trees ([[GraftLogStats
-    * .mayMatch]] is per-file map lookups and conservatively keeps
-    * anything it can't rule out) — without this, a static large IN
-    * prunes files only when it arrives as a runtime filter.
+  /** Accept what the parquet reader can skip row groups on; return
+    * EVERYTHING as residual — row-group statistics are coarse, so Spark
+    * must re-apply (the same contract its built-in parquet source uses).
+    * Every filter whose references resolve in the data schema also
+    * drives the MANIFEST-STATS file skip ([[GraftLogStats.mayMatch]] is
+    * per-file map lookups and conservatively keeps anything it can't
+    * rule out). NESTED references resolve through the schema walk
+    * (dot-joined struct paths — "meta.score"): the manifest carries
+    * min/max/null statistics for struct LEAVES under their physical
+    * dotted paths, so a predicate on a nested training-metadata field
+    * prunes files exactly like a top-level one.
     */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    // COPY-ON-WRITE scans (rowLevel): a pushed parquet predicate would
-    // drop the KEPT rows of a partially-matching row group — the
-    // rewrite must read every row of every touched file, so filters
-    // participate in the FILE-level skip only (a wholly-pruned file is
-    // neither read nor removed — still live, still correct)
+    val usable = filters.filter(f => f.references.forall(c =>
+      GraftLogStats.fieldAt(dataSchema, colMap.getOrElse(c, c)).isDefined))
+    // COPY-ON-WRITE scans (rowLevel): a row-group skip would drop the
+    // KEPT rows of a partially-matching row group — the rewrite must
+    // read every row of every touched file, so filters participate in
+    // the FILE-level skip only (a wholly-pruned file is neither read
+    // nor removed — still live, still correct)
     accepted =
       if (rowLevel) Array.empty
-      else filters.filter(f =>
-        GraftLog.toParquetPredicate(dataSchema, physFilter(f)).isDefined)
+      else usable.filter(f =>
+        GraftLog.readerPushable(dataSchema, physFilter(f)))
     val acceptedSet = accepted.toSet
-    // NESTED references resolve through the schema walk (dot-joined
-    // struct paths — "meta.score"), not the top-level name list: the
-    // manifest carries min/max/null statistics for struct LEAVES under
-    // their physical dotted paths, so a predicate on a nested training
-    // -metadata field prunes files exactly like a top-level one
-    skipOnly = filters.filter(f => !acceptedSet.contains(f) &&
-      f.references.forall(c =>
-        GraftLogStats.fieldAt(dataSchema,
-          colMap.getOrElse(c, c)).isDefined))
+    skipOnly = usable.filterNot(acceptedSet.contains)
     filters
   }
 
@@ -1448,15 +1265,17 @@ class GraftLogScanBuilder(root: String, version: Int, tableSchema: StructType,
     case Some((schema, values)) =>
       GraftLogAggScan(root, version, schema, values)
     case None =>
-      val acceptedPhys = accepted.map(physFilter)
-      val predicate = acceptedPhys
-        .flatMap(f => GraftLog.toParquetPredicate(dataSchema, f))
-        .reduceOption(FilterApi.and)
-      val scan = GraftLogScan(root, version, dataSchema, physSchema(pruned),
-        accepted.map(_.toString), predicate, acceptedPhys, conf, cdc,
-        cdcStart, columnar, maxVersionsPerTrigger,
+      // data columns first, scan-synthesized ones (CDC tags, `_file`)
+      // last: the order Spark's parquet reader emits data and partition
+      // columns in (Spark binds the scan output to readSchema by name)
+      val (meta, data) = pruned.fields.partition(f =>
+        GraftLog.synthesized(f.name, cdc, dataSchema))
+      val ordered = StructType(data ++ meta)
+      val scan = GraftLogScan(root, version, dataSchema, physSchema(ordered),
+        accepted.map(_.toString), accepted.map(physFilter), conf, cdc,
+        cdcStart, maxVersionsPerTrigger,
         skipOnly.map(physFilter), streamStart, rowLevel,
-        presented = if (colMap.isEmpty) None else Some(pruned),
+        presented = if (colMap.isEmpty) None else Some(ordered),
         colMap = colMap)
       onBuild(scan)
       scan
@@ -1501,9 +1320,9 @@ case class GraftLogAggReaderFactory(schema: StructType)
 
 case class GraftLogScan(root: String, version: Int, full: StructType,
     pruned: StructType,
-    pushedDesc: Array[String], predicate: Option[FilterPredicate],
+    pushedDesc: Array[String],
     staticFilters: Array[Filter], conf: SerializableConfiguration,
-    cdc: Boolean, cdcStart: Int, columnar: Boolean,
+    cdc: Boolean, cdcStart: Int,
     maxVersionsPerTrigger: Option[Int] = None,
     skipOnlyFilters: Array[Filter] = Array.empty,
     streamStart: Option[Int] = None, rowLevel: Boolean = false,
@@ -1513,17 +1332,18 @@ case class GraftLogScan(root: String, version: Int, full: StructType,
     with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering {
 
   // COLUMN MAPPING: `full`/`pruned`/`staticFilters` arrive in PHYSICAL
-  // (file-side) terms from the builder; `presented` carries the
-  // LOGICAL field names Spark binds the output to (positionally
-  // identical to `pruned`). Runtime filters arrive logical and are
+  // (file-side) terms from the builder, `pruned` with its
+  // scan-synthesized columns last; `presented` carries the LOGICAL
+  // field names Spark binds the output to (positionally identical to
+  // `pruned`). Runtime filters arrive logical and are
   // renamed at the door. Identity-mapped tables pass presented=None
   // and colMap=empty — every unmapped path byte-identical.
 
   /** Runtime filters (DPP-style: Spark hands them to the scan after the
     * build side of a join resolves) join the static set for BOTH the
-    * file-level stats skip and the per-reader row-group/record
-    * filtering. Conservative superset semantics — the join itself
-    * still applies the exact condition.
+    * file-level stats skip and the reader's row-group skip.
+    * Conservative superset semantics — the join itself still applies
+    * the exact condition.
     */
   private var runtimeFilters: Array[Filter] = Array.empty
   private[sources] var runtimeDesc: Array[String] = Array.empty
@@ -1534,13 +1354,6 @@ case class GraftLogScan(root: String, version: Int, full: StructType,
     * (scheme/authority rendering varies across filesystems).
     */
   private var fileFilter: Option[Set[String]] = None
-
-  /** Does the `_file` metadata column synthesize on this scan? (Never
-    * when the table's own schema shadows the name.)
-    */
-  private def synthFile: Boolean =
-    pruned.fieldNames.contains(GraftLog.FileCol) &&
-      !full.fieldNames.contains(GraftLog.FileCol)
 
   private def normPath(p: String): String = new Path(p).toUri.getPath
 
@@ -1588,32 +1401,18 @@ case class GraftLogScan(root: String, version: Int, full: StructType,
     }
   }
 
-  /** Static + runtime parquet predicate (the convertible subset), for
-    * reader-level row-group skipping and record filtering. A COPY-ON-
-    * WRITE scan never pushes a record predicate: the rewrite must read
-    * every row of every touched file (file-level skip still applies).
+  /** Static + runtime filters for the reader's row-group skip. A
+    * COPY-ON-WRITE scan passes none: the rewrite must read every row of
+    * every touched file (file-level skip still applies).
     */
-  private def effectivePredicate: Option[FilterPredicate] =
-    if (rowLevel) None
-    else (staticFilters ++ runtimeFilters).toSeq
-      .flatMap(f => GraftLog.toParquetPredicate(full, f))
-      .reduceOption(FilterApi.and)
-
-  /** Columns the effective predicate references — the reader drops the
-    * pushed predicate for any FILE whose footer stores one of them as
-    * INT96 (mixed-encoding logs decode per-file; a pushed longColumn
-    * predicate against an INT96 chunk would fail parquet's schema
-    * validator at reader build).
-    */
-  private def predicateRefs: Set[String] =
-    if (rowLevel) Set.empty
-    else (staticFilters ++ runtimeFilters).iterator
-      .filter(f => GraftLog.toParquetPredicate(full, f).isDefined)
-      .flatMap(_.references).toSet
+  private def readerFilters: Array[Filter] =
+    if (rowLevel) Array.empty
+    else staticFilters ++
+      runtimeFilters.filter(GraftLog.readerPushable(full, _))
 
   /** Every filter usable for the manifest-stats file skip (wider than
-    * the parquet-convertible set: large In()s — both literal and DPP
-    * runtime ones — included).
+    * the reader's set: decimal filters and every filter of a
+    * copy-on-write scan included).
     */
   private def skipFilters: Array[Filter] =
     staticFilters ++ skipOnlyFilters ++ runtimeFilters
@@ -1721,13 +1520,6 @@ case class GraftLogScan(root: String, version: Int, full: StructType,
       }
     }
 
-  // deletion vectors apply on BOTH reader paths (the row reader tracks
-  // positions through the record stream; the columnar reader compacts
-  // survivors while the batch fills, per-group rowIndexOffset-exact),
-  // so a DV'd snapshot keeps the vectorized plan — no scan-wide
-  // fallback, and Spark's one-columnar-decision-per-scan rule is
-  // satisfied without consulting the dv state at all.
-
   /** Planner-visible stats for the snapshot: exact row count and bytes
     * from the MANIFEST (every add row carries them — the manifest read
     * refuses one that does not); bytes scaled by the pruned-column
@@ -1830,14 +1622,6 @@ case class GraftLogScan(root: String, version: Int, full: StructType,
 
   override def toBatch: Batch = this
 
-  /** Files whose statistics rule out every matching row under the
-    * combined (static + runtime) filters are never scheduled at all —
-    * at 100 TB a selective key predicate over a clustered log version
-    * scans only the matching files. Stats-bearing manifest entries
-    * decide from the manifest alone; an add row without column
-    * statistics falls back to parquet's own footer-level
-    * RowGroupFilter.
-    */
   /** Files a copy-on-write plan actually covered (manifest-relative,
     * post every skip including the runtime group filter) — the EXACT
     * remove set the paired replace-data write commits: a file that was
@@ -1853,32 +1637,31 @@ case class GraftLogScan(root: String, version: Int, full: StructType,
   @volatile private[sources] var plannedRelFiles: Seq[String] = Seq.empty
   @volatile private[sources] var planCount: Int = 0
 
+  /** Files whose statistics rule out every matching row under the
+    * combined (static + runtime) filters are never scheduled at all —
+    * at 100 TB a selective key predicate over a clustered log version
+    * scans only the matching files. The decision is the manifest's
+    * alone; an add row without column statistics is planned, and the
+    * reader skips its row groups at task time.
+    */
   override def planInputPartitions(): Array[InputPartition] = {
     val filters = skipFilters
-    val pred = effectivePredicate
     // a 10 GB compacted file must not become one task: surviving files
     // above the session's maxPartitionBytes split into byte ranges
     // (parquet assigns each row group to the range holding its
     // midpoint, so a covering range set reads every row exactly once —
     // the same discipline Spark's own FileScan uses). Byte lengths
-    // come from the manifest (or the expansion listing) — no extra RPC.
+    // come from the manifest — no extra RPC.
     val maxSplit = SparkSession.getActiveSession
       .map(_.sessionState.conf.filesMaxPartitionBytes)
       .getOrElse(128L * 1024 * 1024)
     val survivors = entries.filter { pf =>
       val e = pf.entry
-      fileFilter.forall(_.contains(normPath(e.path))) && {
-        if (filters.isEmpty) true
-        else e.stats match {
-          case Some(st) =>
-            // stats describe the UNMASKED file — a superset of the
-            // served rows, so the skip stays conservative under DVs
-            filters.forall(f =>
-              GraftLogStats.mayMatch(full, st, e.rows, f))
-          case None =>
-            pred.forall(p => GraftLog.fileMayMatch(conf.value, e.path, p))
-        }
-      }
+      // stats describe the UNMASKED file — a superset of the served
+      // rows, so the skip stays conservative under DVs
+      fileFilter.forall(_.contains(normPath(e.path))) &&
+        e.stats.forall(st =>
+          filters.forall(f => GraftLogStats.mayMatch(full, st, e.rows, f)))
     }
     if (rowLevel) this.synchronized {
       val rel = survivors.map { pf =>
@@ -1900,24 +1683,21 @@ case class GraftLogScan(root: String, version: Int, full: StructType,
     }
     survivors.flatMap { pf =>
       val e = pf.entry
-      e.bytes match {
-        case Some(len) if len > maxSplit =>
-          val n = ((len + maxSplit - 1) / maxSplit).toInt
-          (0 until n).map { i =>
-            val s = i * maxSplit
-            GraftLogInputPartition(e.path, pf.cdcMeta,
-              Some((s, math.min(s + maxSplit, len))),
-              dvMask = pf.dvMask, dvEmit = pf.dvEmit)
-          }
-        case _ => Seq(GraftLogInputPartition(e.path, pf.cdcMeta, None,
-          dvMask = pf.dvMask, dvEmit = pf.dvEmit))
-      }
+      val len = e.bytes.get
+      def part(range: Option[(Long, Long)]) = GraftLogInputPartition(
+        e.path, len, pf.cdcMeta, range, pf.dvMask, pf.dvEmit)
+      if (len <= maxSplit) Seq(part(None))
+      else (0L until len by maxSplit).map(s =>
+        part(Some((s, math.min(s + maxSplit, len)))))
     }.map(p => p: InputPartition).toArray
   }
 
+  // Spark's reader settles vectorized-or-not once per factory; deletion
+  // vectors ask for the row index only when this scan covers a DV'd file
   override def createReaderFactory(): PartitionReaderFactory =
-    GraftLogReaderFactory(pruned, effectivePredicate, predicateRefs,
-      conf, columnar, cdc, synthFile)
+    GraftLogReaderFactory(full, pruned, readerFilters, conf, cdc,
+      withRowIndex = entries.exists(pf =>
+        pf.dvMask.isDefined || pf.dvEmit.isDefined))
 
   /** The log as a STREAM: each committed version is a micro-batch —
     * `readStream.format("graftlog")` tails the commit log the way
@@ -1933,12 +1713,15 @@ case class GraftLogScan(root: String, version: Int, full: StructType,
     */
   override def toMicroBatchStream(
       checkpointLocation: String): streaming.MicroBatchStream =
-    new GraftLogMicroBatchStream(root, pruned, effectivePredicate,
-      predicateRefs, conf, cdc, cdcStart, maxVersionsPerTrigger,
-      streamStart, columnar, synthFile)
+    new GraftLogMicroBatchStream(root, full, pruned, readerFilters, conf,
+      cdc, cdcStart, maxVersionsPerTrigger, streamStart)
 }
 
-case class GraftLogInputPartition(file: String,
+/** One read task: a data file (absolute path) with its manifest byte
+  * size, the CDC tag of a change-feed read, the byte range of a split,
+  * and the deletion vector to apply (see [[GraftLogReaderFactory]]).
+  */
+case class GraftLogInputPartition(file: String, bytes: Long,
     cdcMeta: Option[(String, Long)] = None,
     range: Option[(Long, Long)] = None,
     dvMask: Option[String] = None,
@@ -1979,12 +1762,11 @@ case class GraftLogOffset(version: Int)
   * 100 TB, "read 10 000 versions in one trigger" is a driver OOM, not
   * a plan).
   */
-class GraftLogMicroBatchStream(root: String, pruned: StructType,
-    predicate: Option[FilterPredicate], predicateRefs: Set[String],
+class GraftLogMicroBatchStream(root: String, full: StructType,
+    pruned: StructType, filters: Array[Filter],
     conf: SerializableConfiguration, cdc: Boolean, cdcStart: Int = 1,
     maxVersionsPerTrigger: Option[Int] = None,
-    streamStart: Option[Int] = None, columnar: Boolean = false,
-    synthFile: Boolean = false)
+    streamStart: Option[Int] = None)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming
       .SupportsTriggerAvailableNow {
@@ -2059,13 +1841,19 @@ class GraftLogMicroBatchStream(root: String, pruned: StructType,
         s"${s + 1}, but the vacuum watermark is $wm — the expired " +
         "versions' files may be gone, and skipping them would be " +
         "silent data loss; start a fresh stream from a snapshot")
-    // DV state as of the batch start, so a rewrite's remove rows don't
-    // re-delete positions an earlier dv commit already emitted
-    lazy val running = {
-      val m = mutable.HashMap[String, GraftLog.DvDescriptor]()
-      if (cdc && s >= 1) m ++= GraftLog.liveState(c, root, s).dvs
-      m
-    }
+    // live state as of the batch start: the add rows describe the
+    // files later versions remove or mask, and the DVs keep a
+    // rewrite's remove rows from re-deleting positions an earlier dv
+    // commit already emitted
+    lazy val st =
+      if (cdc && s >= 1) GraftLog.liveState(c, root, s)
+      else GraftLog.LiveState(Nil, Map.empty)
+    lazy val live = mutable.HashMap(st.adds.map(r => r.file -> r): _*)
+    lazy val running = mutable.HashMap(st.dvs.toSeq: _*)
+    def entry(v: Int, f: String) = GraftLog.fileEntry(root,
+      live.getOrElse(f, throw new IllegalStateException(
+        s"graftlog stream: version $v removes or masks $f, which is not " +
+          "live")))
     (s + 1 to e).flatMap { v =>
       val rows = GraftLog.versionRows(c, root, v)
       val removed = rows.collect {
@@ -2107,27 +1895,32 @@ class GraftLogMicroBatchStream(root: String, pruned: StructType,
         else rows.collect {
           case r @ GraftLog.ManifestRow("add", _, _, _, _) =>
             GraftLog.fileEntry(root, r) }
-          .map(fe => GraftLogInputPartition(fe.path,
+          .map(fe => GraftLogInputPartition(fe.path, fe.bytes.get,
             if (cdc) Some((fe.stats.flatMap(_.cdcClass)
               .getOrElse("insert"), v.toLong))
             else None))
-      if (cdc) rows.foreach {
-        case GraftLog.ManifestRow("add", f, _, _, _) => running -= f
-        case _ => ()
-      }
       val dels =
         if (!cdc) Seq.empty
-        else if (preserving) { removed.foreach(running.remove); Seq.empty }
-        else removed.map { f =>
+        else removed.flatMap { f =>
           val mask = running.remove(f)
-          GraftLogInputPartition(s"$root/$f", Some(("delete", v.toLong)),
-            dvMask = mask.map(d => s"$root/${d.dv}"))
+          val e = entry(v, f)
+          live -= f
+          if (preserving) None
+          else Some(GraftLogInputPartition(e.path, e.bytes.get,
+            Some(("delete", v.toLong)),
+            dvMask = mask.map(d => s"$root/${d.dv}")))
         }
+      if (cdc) rows.foreach {
+        case r @ GraftLog.ManifestRow("add", f, _, _, _) =>
+          live(f) = r; running -= f
+        case _ => ()
+      }
       val dvDels =
         if (!cdc) Seq.empty
         else dvRows.map { case (f, d) =>
           running(f) = d
-          GraftLogInputPartition(s"$root/$f",
+          val e = entry(v, f)
+          GraftLogInputPartition(e.path, e.bytes.get,
             Some((d.cdcClass.getOrElse("delete"), v.toLong)),
             dvEmit = Some(s"$root/${d.delta}"))
         }
@@ -2136,398 +1929,218 @@ class GraftLogMicroBatchStream(root: String, pruned: StructType,
   }
 
   // the micro-batch tail reads through the SAME factory the batch scan
-  // uses, vectorized included — supportColumnarReads routes nested
-  // projections and the empty-projection-under-predicate edge to the
-  // row reader per the same rules, so a streaming epoch's plan carries
-  // the identical ColumnarToRow span a batch read of that version would
-  // (StreamingSpec pins plan shape and batch/stream row parity); dv
-  // partitions (CDC delta deletes, masked removes) read vectorized too
+  // uses, so a streaming epoch's plan carries the identical
+  // ColumnarToRow span a batch read of that version would (StreamingSpec
+  // pins plan shape and batch/stream row parity). Only a change feed
+  // carries deletion vectors (masked removes, delta deletes); a
+  // snapshot tail emits adds only.
   override def createReaderFactory(): PartitionReaderFactory =
-    GraftLogReaderFactory(pruned, predicate, predicateRefs, conf,
-      columnar, cdc, synthFile)
+    GraftLogReaderFactory(full, pruned, filters, conf, cdc,
+      withRowIndex = cdc)
 
   override def commit(end: Offset): Unit = ()
 
   override def stop(): Unit = ()
 }
 
-case class GraftLogReaderFactory(pruned: StructType,
-    predicate: Option[FilterPredicate], predicateRefs: Set[String],
-    conf: SerializableConfiguration, columnar: Boolean,
-    cdc: Boolean = false, synthFile: Boolean = false)
+/** The one parquet decoder of `graftlog`: Spark's own
+  * `ParquetPartitionReaderFactory`, with the Hadoop conf prepared the
+  * way `ParquetScan.createReaderFactory` prepares it. Spark's reader is
+  * vectorized for flat and nested columns alike, decodes INT96 and
+  * INT64 timestamps and narrow-to-wide physicals (a file written before
+  * an ALTER COLUMN TYPE or a widening append) per file, null-fills
+  * columns a file predates, and skips row groups on the pushed
+  * `Filter`s, converting them per file. `graftlog` keeps what is its
+  * own:
+  *  - each [[GraftLogInputPartition]] is one `PartitionedFile` — its
+  *    byte range, or the whole file by its manifest bytes — whose
+  *    partition values are the scan-synthesized columns (the CDC tags,
+  *    `_file`), so they ride Spark's constant partition columns;
+  *  - deletion vectors: when the scan covers a DV'd file, Spark's
+  *    row-index column (file-absolute under row-group skips and byte
+  *    ranges, ParquetRowIndexSpec) is read too and each row is tested
+  *    against the sidecar — `dvMask` drops the listed rows, `dvEmit`
+  *    keeps only them. The index column never leaves the reader, and a
+  *    batch with masked rows is narrowed by a row selection over its
+  *    vectors, so a DV'd snapshot keeps its vectorized plan.
+  */
+case class GraftLogReaderFactory(inner: ParquetPartitionReaderFactory,
+    output: StructType, partitionNames: Seq[String], rowIndex: Option[Int])
     extends PartitionReaderFactory {
 
-  // the meta names are only scan-synthesized when the SCAN says so
-  // (CDC partitions; `_file` when the table schema doesn't shadow it) —
-  // a table whose OWN schema uses them reads them as data
-  private def dataFieldCount: Int =
-    pruned.fields.count(f =>
-      (!cdc || (f.name != GraftLog.ChangeTypeCol &&
-        f.name != GraftLog.CommitVersionCol)) &&
-        (!synthFile || f.name != GraftLog.FileCol))
+  private def fileOf(p: GraftLogInputPartition): PartitionedFile = {
+    val values = InternalRow.fromSeq(partitionNames.map {
+      case GraftLog.ChangeTypeCol    => UTF8String.fromString(p.cdcMeta.get._1)
+      case GraftLog.CommitVersionCol => p.cdcMeta.get._2
+      case _                         => UTF8String.fromString(p.file)
+    })
+    val (start, end) = p.range.getOrElse((0L, p.bytes))
+    PartitionedFile(values, SparkPath.fromPathString(p.file), start,
+      end - start)
+  }
 
-  /** Vectorized reads whenever the projection has data columns to
-    * drive batch row counts OR no predicate needs record-level care;
-    * the one edge kept on the row reader is an empty data projection
-    * under a predicate (the runtime-filter-after-prune case), where
-    * the row reader's read-full-schema fallback is the simple correct
-    * answer. NESTED projections (array/map/struct columns) read through
-    * the row reader — their repetition-level assembly is the Group
-    * walk's job; the vectorized path stays flat-primitive-only. The
-    * decision depends only on (pruned, predicate), so it is constant
-    * across partitions — Spark requires that.
-    */
+  /** Row-index test of the partition's deletion vector, if it has one. */
+  private def dvKeep(p: GraftLogInputPartition): Option[Long => Boolean] =
+    p.dvMask.orElse(p.dvEmit).map { sidecar =>
+      val positions = GraftLog.DvSidecarCache.get(
+        inner.broadcastedConf.value.value, sidecar)
+      val emit = p.dvEmit.isDefined
+      (i: Long) => (java.util.Arrays.binarySearch(positions, i) >= 0) == emit
+    }
+
   override def supportColumnarReads(partition: InputPartition): Boolean =
-    columnar && !(dataFieldCount == 0 && predicate.isDefined) &&
-      pruned.fields.forall(f => f.dataType match {
-        case _: ArrayType | _: MapType | _: StructType => false
-        case _ => true
-      })
+    inner.supportColumnarReads(partition)
 
   override def createReader(
       partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[GraftLogInputPartition]
-    new GraftLogPartitionReader(p.file, pruned, predicate, predicateRefs,
-      conf.value, p.cdcMeta, p.range, synthFile, p.dvMask, p.dvEmit)
+    val rows = inner.buildReader(fileOf(p))
+    rowIndex match {
+      case None => rows
+      case Some(ix) =>
+        val keep = dvKeep(p).getOrElse((_: Long) => true)
+        val out = ProjectingInternalRow(output,
+          (0 to output.length).filter(_ != ix))
+        new PartitionReader[InternalRow] {
+          override def next(): Boolean = {
+            while (rows.next()) {
+              val r = rows.get()
+              if (keep(r.getLong(ix))) { out.project(r); return true }
+            }
+            false
+          }
+          override def get(): InternalRow = out
+          override def close(): Unit = rows.close()
+        }
+    }
   }
 
   override def createColumnarReader(partition: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
+      : PartitionReader[ColumnarBatch] = {
     val p = partition.asInstanceOf[GraftLogInputPartition]
-    new GraftLogColumnarReader(p.file, pruned, predicate, predicateRefs,
-      conf.value, p.cdcMeta, p.range, synthFile, p.dvMask, p.dvEmit)
+    val batches = inner.buildColumnarReader(fileOf(p))
+    rowIndex match {
+      case None => batches
+      case Some(ix) =>
+        val keep = dvKeep(p)
+        new PartitionReader[ColumnarBatch] {
+          private var sel = new Array[Int](0)
+          private var current: ColumnarBatch = _
+          override def next(): Boolean = {
+            while (batches.next()) {
+              val b = batches.get()
+              val n = b.numRows
+              val cols = (0 until b.numCols).filter(_ != ix).map(b.column)
+              var kept = n
+              if (keep.isDefined) {
+                val index = b.column(ix)
+                if (sel.length < n) sel = new Array[Int](n)
+                kept = 0
+                var i = 0
+                while (i < n) {
+                  if (keep.get(index.getLong(i))) { sel(kept) = i; kept += 1 }
+                  i += 1
+                }
+              }
+              if (kept > 0) {
+                current = new ColumnarBatch((
+                  if (kept == n) cols
+                  else cols.map(c => new SelectedVector(c, sel, kept))).toArray,
+                  kept)
+                return true
+              }
+            }
+            false
+          }
+          override def get(): ColumnarBatch = current
+          override def close(): Unit = batches.close()
+        }
+    }
   }
 }
 
-/** Per-file ROW reader: footer-driven projection (only the pruned
-  * columns are decoded) + the pushed parquet predicate (row-group
-  * skipping and record filtering happen inside parquet-hadoop, before
-  * any row reaches Spark). Streaming tails and the rare
-  * empty-projection-under-predicate batch edge read through this;
-  * everything else reads through [[GraftLogColumnarReader]].
-  */
-class GraftLogPartitionReader(file: String, pruned: StructType,
-    predicate: Option[FilterPredicate], predicateRefs: Set[String],
-    baseConf: Configuration, cdcMeta: Option[(String, Long)] = None,
-    range: Option[(Long, Long)] = None, synthFile: Boolean = false,
-    dvMask: Option[String] = None, dvEmit: Option[String] = None)
-    extends PartitionReader[InternalRow] {
+object GraftLogReaderFactory {
 
-  private val conf = new Configuration(baseConf)
-
-  // DELETION-VECTOR mode: dvMask SKIPS the sidecar's positions (a
-  // snapshot read of a DV'd file), dvEmit emits ONLY them (the change
-  // feed's delete rows for a dv commit). Positions are file-absolute
-  // row indexes, tracked via parquet's OWN per-record row index
-  // (`ParquetReader.getCurrentRowIndex` — file-absolute under
-  // record-level filtering, row-group skips and byte-range reads
-  // alike, pinned by ParquetRowIndexSpec), so the pushed predicate
-  // stays live on DV'd files: row groups skip and records filter
-  // exactly as on unmasked ones. Sidecar loads go through the
-  // executor-wide [[GraftLog.DvSidecarCache]]: a large file split N
-  // ways reads its sidecar once per executor, not once per split.
-  private val dvPositions: Array[Long] =
-    dvMask.orElse(dvEmit)
-      .map(p => GraftLog.DvSidecarCache.get(conf, p))
-      .getOrElse(Array.empty)
-  private val dvActive = dvMask.isDefined || dvEmit.isDefined
-  private val dvSelect = dvEmit.isDefined // emit-only vs skip mode
-
-  // metadata columns are scan-synthesized constants at their pruned
-  // positions — CDC tags only on CDC partitions (cdcMeta set), `_file`
-  // only when the scan says the table schema doesn't shadow it; a
-  // table whose own schema uses the names reads them as data
-  private val metaConst: Map[Int, Any] = {
-    val cdcConsts = cdcMeta match {
-      case Some((ct, v)) => pruned.fields.zipWithIndex.collect {
-        case (f, i) if f.name == GraftLog.ChangeTypeCol =>
-          i -> UTF8String.fromString(ct)
-        case (f, i) if f.name == GraftLog.CommitVersionCol => i -> (v: Any)
-      }.toMap
-      case None => Map.empty[Int, Any]
-    }
-    val fileConsts =
-      if (!synthFile) Map.empty[Int, Any]
-      else pruned.fields.zipWithIndex.collect {
-        case (f, i) if f.name == GraftLog.FileCol =>
-          i -> (UTF8String.fromString(file): Any)
-      }.toMap
-    cdcConsts ++ fileConsts
-  }
-  private val dataFields: Array[(StructField, Int)] =
-    pruned.fields.zipWithIndex.filter { case (f, _) =>
-      (cdcMeta.isEmpty || !(f.name == GraftLog.ChangeTypeCol ||
-        f.name == GraftLog.CommitVersionCol)) &&
-        (!synthFile || f.name != GraftLog.FileCol) }
-
-  // captured from this FILE's footer so mixed-encoding logs (INT96 in
-  // one snapshot, INT64 micros in another) decode correctly per file
-  // (the decoders key on the file's own parquet types), and columns a
-  // WIDENING appended after this file was written are null-filled
-  // instead of looked up
-  private var cachedFileSchema: MessageType = _
-  // pruned data columns present in THIS file, with their output index;
-  // group field order == this array's order
-  private var present: Array[(StructField, Int)] = Array.empty
-
-  private val reader: ParquetReader[Group] = {
-    val footer = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new Path(file), conf))
-    val fileSchema = try footer.getFileMetaData.getSchema
-    finally footer.close()
-    cachedFileSchema = fileSchema
-    present = dataFields.filter { case (f, _) =>
-      fileSchema.containsField(f.name) }
-    // per-file predicate drop (Spark re-applies all filters as
-    // residuals either way; deletion vectors do NOT drop it — the mask
-    // keys on parquet's own per-record row index, which stays
-    // file-absolute under record filtering and row-group skips,
-    // ParquetRowIndexSpec):
-    def resolveFilePath(path: String)
-        : Option[org.apache.parquet.schema.Type] = {
-      val segs = path.split('.')
-      var cur: org.apache.parquet.schema.Type = fileSchema
-      var i = 0
-      while (i < segs.length) {
-        cur match {
-          case g: org.apache.parquet.schema.GroupType
-            if g.containsField(segs(i)) =>
-            cur = g.getType(g.getFieldIndex(segs(i))); i += 1
-          case _ => return None
-        }
-      }
-      Some(cur)
-    }
-    // a ref (dotted struct-leaf paths included) drops the predicate
-    // for THIS file when it is absent here (written before a column or
-    // struct-field widening — null for every row), INT96 here, or
-    // stored under a NARROWER physical than the predicate was built
-    // against (written before an ALTER COLUMN TYPE) — the validator
-    // would reject the column mismatch at build either way
-    def predicateDrops(r: String): Boolean =
-      resolveFilePath(r) match {
-        case Some(t) if t.isPrimitive =>
-          val actual = t.asPrimitiveType().getPrimitiveTypeName
-          actual == org.apache.parquet.schema.PrimitiveType
-            .PrimitiveTypeName.INT96 ||
-            !GraftLogStats.fieldAt(pruned, r).exists { pf =>
-              val expected = GraftLogWrite.toParquetType(
-                r.split('.').last, pf.dataType)
-              expected.isPrimitive &&
-                expected.asPrimitiveType().getPrimitiveTypeName == actual
-            }
-        case _ => true // absent, or a group — no pushable value here
-      }
-    val filt =
-      if (predicateRefs.exists(predicateDrops)) None
-      else predicate
-    // projection = the file's OWN field definitions filtered to the
-    // pruned names present here (guaranteed physical-type compatible);
-    // an empty projection (a bare count, or a read of only-widened
-    // columns) still needs one column to drive row iteration — take the
-    // first field, UNLESS a predicate exists (a runtime filter can
-    // arrive after pruning): parquet's filter validator requires every
-    // predicate column in the read schema, so that rare case reads the
-    // full schema rather than failing
-    val wanted =
-      if (present.nonEmpty) present.map(_._1.name).toSeq
-      else if (filt.isDefined)
-        fileSchema.getFields.toArray(
-          Array.empty[org.apache.parquet.schema.Type]).map(_.getName).toSeq
-      else Seq(fileSchema.getFields.get(0).getName)
-    val projection = new MessageType(fileSchema.getName,
-      wanted.map(n =>
-        fileSchema.getType(fileSchema.getFieldIndex(n))): _*)
-    conf.set(ReadSupport.PARQUET_READ_SCHEMA, projection.toString)
-    var b = ParquetReader.builder(new GroupReadSupport(), new Path(file))
-      .withConf(conf)
-    range.foreach { case (s, e) => b = b.withFileRange(s, e) }
-    filt.fold(b)(p => b.withFilter(FilterCompat.get(p))).build()
-  }
-
-  /** Recursive decoder for one (Spark type, file parquet type) pair —
-    * `(parent group, field index, repetition index) => Spark value`.
-    * Primitives decode per THIS file's physical encoding (INT96
-    * timestamps via julian-day+nanos); the standard nested encodings
-    * recurse: LIST's `list/element` levels, MAP's `key_value`, and
-    * plain struct groups (struct subfields absent from this file —
-    * written before a widening — null-fill by name).
+  /** The factory for one scan: `pruned` lists the data columns first
+    * and the scan-synthesized ones (CDC tags, `_file`) last, which is
+    * the order Spark's reader emits data and partition columns in.
+    * `filters` (physical names) skip row groups; `withRowIndex` asks
+    * for the row index deletion vectors test against.
     */
-  private def decoderFor(dt: DataType,
-      pt: org.apache.parquet.schema.Type): (Group, Int, Int) => Any =
-    (dt, pt) match {
-      case (TimestampType, p: org.apache.parquet.schema.PrimitiveType)
-        if p.getPrimitiveTypeName ==
-          org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT96 =>
-        (g, i, r) => GraftLog.int96ToMicros(g.getInt96(i, r).getBytes)
-      case (dec: DecimalType, p: org.apache.parquet.schema.PrimitiveType) =>
-        import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-        p.getPrimitiveTypeName match {
-          case INT32 => (g, i, r) =>
-            org.apache.spark.sql.types.Decimal(
-              BigDecimal(BigInt(g.getInteger(i, r)), dec.scale),
-              dec.precision, dec.scale)
-          case INT64 => (g, i, r) =>
-            org.apache.spark.sql.types.Decimal(
-              BigDecimal(BigInt(g.getLong(i, r)), dec.scale),
-              dec.precision, dec.scale)
-          case FIXED_LEN_BYTE_ARRAY | BINARY => (g, i, r) =>
-            org.apache.spark.sql.types.Decimal(
-              BigDecimal(BigInt(new java.math.BigInteger(
-                g.getBinary(i, r).getBytes)), dec.scale),
-              dec.precision, dec.scale)
-          case other => throw new IllegalArgumentException(
-            s"graftlog: unsupported decimal physical type $other")
-        }
-      // TYPE-WIDENING boundary: files written before an ALTER COLUMN
-      // TYPE store the NARROW physical — up-cast value-exactly here
-      case (LongType, p: org.apache.parquet.schema.PrimitiveType)
-        if p.getPrimitiveTypeName ==
-          org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT32 =>
-        (g, i, r) => g.getInteger(i, r).toLong
-      case (DoubleType, p: org.apache.parquet.schema.PrimitiveType)
-        if p.getPrimitiveTypeName ==
-          org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.FLOAT =>
-        (g, i, r) => g.getFloat(i, r).toDouble
-      case (LongType | TimestampType | TimestampNTZType, _) =>
-        (g, i, r) => g.getLong(i, r)
-      case (IntegerType | DateType, _) => (g, i, r) => g.getInteger(i, r)
-      case (DoubleType, _)  => (g, i, r) => g.getDouble(i, r)
-      case (FloatType, _)   => (g, i, r) => g.getFloat(i, r)
-      case (BooleanType, _) => (g, i, r) => g.getBoolean(i, r)
-      case (StringType, _)  => (g, i, r) =>
-        UTF8String.fromBytes(g.getBinary(i, r).getBytes)
-      case (BinaryType, _)  => (g, i, r) => g.getBinary(i, r).getBytes
-      case (ArrayType(et, _), gt: org.apache.parquet.schema.GroupType) =>
-        val repeated = gt.getType(0).asGroupType() // "list"
-        val elem = decoderFor(et, repeated.getType(0))
-        (g, i, r) => {
-          val outer = g.getGroup(i, r)
-          val n = outer.getFieldRepetitionCount(0)
-          val out = new Array[Any](n)
-          var j = 0
-          while (j < n) {
-            val entry = outer.getGroup(0, j)
-            out(j) =
-              if (entry.getFieldRepetitionCount(0) == 0) null
-              else elem(entry, 0, 0)
-            j += 1
-          }
-          new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-        }
-      case (MapType(kt, vt, _), gt: org.apache.parquet.schema.GroupType) =>
-        val kv = gt.getType(0).asGroupType() // "key_value"
-        val keyDec = decoderFor(kt, kv.getType(0))
-        val valDec = decoderFor(vt, kv.getType(1))
-        (g, i, r) => {
-          val outer = g.getGroup(i, r)
-          val n = outer.getFieldRepetitionCount(0)
-          val keys = new Array[Any](n)
-          val vals = new Array[Any](n)
-          var j = 0
-          while (j < n) {
-            val entry = outer.getGroup(0, j)
-            keys(j) = keyDec(entry, 0, 0)
-            vals(j) =
-              if (entry.getFieldRepetitionCount(1) == 0) null
-              else valDec(entry, 1, 0)
-            j += 1
-          }
-          new org.apache.spark.sql.catalyst.util.ArrayBasedMapData(
-            new org.apache.spark.sql.catalyst.util.GenericArrayData(keys),
-            new org.apache.spark.sql.catalyst.util.GenericArrayData(vals))
-        }
-      case (st: StructType, gt: org.apache.parquet.schema.GroupType) =>
-        val subs: Array[Option[(Int, (Group, Int, Int) => Any)]] =
-          st.fields.map { f =>
-            if (gt.containsField(f.name)) {
-              val idx = gt.getFieldIndex(f.name)
-              Some((idx, decoderFor(f.dataType, gt.getType(idx))))
-            } else None
-          }
-        (g, i, r) => {
-          val nested = g.getGroup(i, r)
-          val row = new GenericInternalRow(st.length)
-          var j = 0
-          while (j < st.length) {
-            subs(j) match {
-              case Some((idx, dec))
-                if nested.getFieldRepetitionCount(idx) > 0 =>
-                row.update(j, dec(nested, idx, 0))
-              case _ => () // absent or null subfield stays null
-            }
-            j += 1
-          }
-          row
-        }
-      case (other, p) => throw new IllegalArgumentException(
-        s"graftlog: unsupported read type $other (parquet $p)")
-    }
-
-  private lazy val getters: Array[(Group, Int, Int) => Any] =
-    present.map { case (f, _) =>
-      decoderFor(f.dataType, cachedFileSchema.getType(
-        cachedFileSchema.getFieldIndex(f.name)))
-    }
-
-  private var current: Group = _
-
-  // cursor into the sorted dv positions array — parquet's per-record
-  // row index advances monotonically (even across row-group skips and
-  // filtered records), so membership is a pointer walk, never a search
-  private var dvIdx: Int = 0
-
-  /** Is file-row `p` in the deletion vector? (Pointer walk.) */
-  private def dvContains(p: Long): Boolean = {
-    while (dvIdx < dvPositions.length && dvPositions(dvIdx) < p)
-      dvIdx += 1
-    dvIdx < dvPositions.length && dvPositions(dvIdx) == p
+  def apply(full: StructType, pruned: StructType, filters: Array[Filter],
+      conf: SerializableConfiguration, cdc: Boolean,
+      withRowIndex: Boolean): GraftLogReaderFactory = {
+    val spark = SparkSession.active
+    val sqlConf = spark.sessionState.conf
+    val (meta, data) = pruned.fields.partition(f =>
+      GraftLog.synthesized(f.name, cdc, full))
+    // the row index is absent from every file, which Spark's reader
+    // allows only for a nullable column; it fills the index in
+    val readData = StructType(
+      if (withRowIndex) data :+ StructField(
+        ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME, LongType)
+      else data)
+    val json = readData.json
+    val hadoopConf = new Configuration(conf.value)
+    hadoopConf.set(ParquetInputFormat.READ_SUPPORT_CLASS,
+      classOf[ParquetReadSupport].getName)
+    hadoopConf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, json)
+    hadoopConf.set(ParquetWriteSupport.SPARK_ROW_SCHEMA, json)
+    hadoopConf.set(SQLConf.SESSION_LOCAL_TIMEZONE.key,
+      sqlConf.sessionLocalTimeZone)
+    hadoopConf.setBoolean(SQLConf.NESTED_SCHEMA_PRUNING_ENABLED.key,
+      sqlConf.nestedSchemaPruningEnabled)
+    hadoopConf.setBoolean(SQLConf.CASE_SENSITIVE.key,
+      sqlConf.caseSensitiveAnalysis)
+    hadoopConf.setBoolean(SQLConf.PARQUET_BINARY_AS_STRING.key,
+      sqlConf.isParquetBinaryAsString)
+    hadoopConf.setBoolean(SQLConf.PARQUET_INT96_AS_TIMESTAMP.key,
+      sqlConf.isParquetINT96AsTimestamp)
+    hadoopConf.setBoolean(SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key,
+      sqlConf.parquetInferTimestampNTZEnabled)
+    hadoopConf.setBoolean(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key,
+      sqlConf.legacyParquetNanosAsLong)
+    hadoopConf.setBoolean(
+      SQLConf.PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION.key,
+      sqlConf.parquetReaderRespectUnknownTypeAnnotation)
+    // the connector's writer stores proleptic-Gregorian values with no
+    // Spark version in the footer, so its dates and timestamps read
+    // CORRECTED (files Spark wrote carry their own rebase metadata)
+    val options = new ParquetOptions(Map(
+      ParquetOptions.DATETIME_REBASE_MODE -> "CORRECTED",
+      ParquetOptions.INT96_REBASE_MODE -> "CORRECTED"), sqlConf)
+    val inner = ParquetPartitionReaderFactory(sqlConf,
+      spark.sparkContext.broadcast(new SerializableConfiguration(hadoopConf)),
+      full, readData, StructType(meta), filters, None, options)
+    GraftLogReaderFactory(inner, StructType(data ++ meta),
+      meta.map(_.name).toSeq, Option.when(withRowIndex)(data.length))
   }
+}
 
-  // records parquet actually assembled for this reader (post record
-  // filtering), folded into GraftLog.scanRecordsRead at close
-  private var recordsRead = 0L
-
-  override def next(): Boolean = {
-    if (!dvActive) {
-      current = reader.read()
-      if (current != null) recordsRead += 1
-      current != null
-    } else {
-      // skip masked records (or, in emit mode, unmasked ones), keyed
-      // on the FILE-ABSOLUTE row index parquet reports for the record
-      // it just returned — exact under the pushed predicate's
-      // row-group skips and record filtering, and under range splits
-      while ({ current = reader.read(); current != null }) {
-        recordsRead += 1
-        val p = reader.getCurrentRowIndex
-        require(p >= 0L,
-          s"graftlog: $file reader reports no row index — cannot " +
-            "apply a deletion vector to its records")
-        val in = dvContains(p)
-        if (in == dvSelect) return true
-      }
-      false
-    }
-  }
-
-  override def get(): InternalRow = {
-    // GenericInternalRow initializes every slot null — absent (widened)
-    // columns need no explicit fill
-    val row = new GenericInternalRow(pruned.length)
-    metaConst.foreach { case (i, v) => row.update(i, v) }
-    var d = 0
-    while (d < present.length) {
-      val outIdx = present(d)._2
-      if (current.getFieldRepetitionCount(d) == 0) row.update(outIdx, null)
-      else row.update(outIdx, getters(d)(current, d, 0))
-      d += 1
-    }
-    row
-  }
-
-  override def close(): Unit = {
-    GraftLog.scanRecordsRead.addAndGet(recordsRead)
-    reader.close()
-  }
+/** Rows `sel(0 until n)` of `base`, as a column vector: the survivors of
+  * one batch under a deletion vector, with no value copied.
+  */
+private final class SelectedVector(base: ColumnVector, sel: Array[Int],
+    n: Int) extends ColumnVector(base.dataType) {
+  private val children = mutable.HashMap[Int, ColumnVector]()
+  override def close(): Unit = ()
+  override def hasNull: Boolean = base.hasNull
+  override def numNulls: Int = (0 until n).count(i => base.isNullAt(sel(i)))
+  override def isNullAt(i: Int): Boolean = base.isNullAt(sel(i))
+  override def getBoolean(i: Int): Boolean = base.getBoolean(sel(i))
+  override def getByte(i: Int): Byte = base.getByte(sel(i))
+  override def getShort(i: Int): Short = base.getShort(sel(i))
+  override def getInt(i: Int): Int = base.getInt(sel(i))
+  override def getLong(i: Int): Long = base.getLong(sel(i))
+  override def getFloat(i: Int): Float = base.getFloat(sel(i))
+  override def getDouble(i: Int): Double = base.getDouble(sel(i))
+  override def getArray(i: Int): ColumnarArray = base.getArray(sel(i))
+  override def getMap(i: Int): ColumnarMap = base.getMap(sel(i))
+  override def getDecimal(i: Int, precision: Int, scale: Int): Decimal =
+    base.getDecimal(sel(i), precision, scale)
+  override def getUTF8String(i: Int): UTF8String = base.getUTF8String(sel(i))
+  override def getBinary(i: Int): Array[Byte] = base.getBinary(sel(i))
+  override def getChild(ordinal: Int): ColumnVector =
+    children.getOrElseUpdate(ordinal,
+      new SelectedVector(base.getChild(ordinal), sel, n))
 }

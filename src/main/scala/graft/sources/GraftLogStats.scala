@@ -496,8 +496,9 @@ object GraftLogStats {
     case _                                   => stored
   }
 
-  /** Filter value → canonical comparison form (mirrors the pushdown's
-    * value conversions in [[GraftLog.toParquetPredicate]]).
+  /** Filter value → canonical comparison form: the form the manifest
+    * stores bounds in (longs for integral, date and timestamp columns,
+    * doubles, decimals, strings and booleans).
     */
   private def canonical(dt: DataType, v: Any): Option[Any] = (dt, v) match {
     case (LongType | IntegerType, n: Number) => Some(n.longValue())

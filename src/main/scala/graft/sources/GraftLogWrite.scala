@@ -34,9 +34,9 @@ import org.apache.spark.util.SerializableConfiguration
   *     statistics (rows, bytes, column min/max —
   *     [[GraftLogStats.describeFile]]);
   *  2. the driver CLAIMS the next version number put-if-absent
-  *     (`_log/v<N>._claim` with overwrite=false — optimistic concurrency's
-  *     atomicity primitive, so concurrent writers serialize without a
-  *     coordinator), writes the manifest — ONE ROW PER COMMITTED FILE
+  *     (`_log/v<N>._claim`, an O_EXCL create on `file:` roots —
+  *     optimistic concurrency's atomicity primitive, so concurrent
+  *     writers serialize without a coordinator), writes the manifest — ONE ROW PER COMMITTED FILE
   *     carrying its statistics, plus the schema DDL — and only then
   *     drops the `v<N>._ok` marker that makes the version visible.
   *     Publication is the manifest row: commit performs ZERO renames
@@ -262,11 +262,20 @@ object GraftLogWrite {
   private def claimVersion(conf: Configuration, root: String): Int = {
     val fs = new Path(root).getFileSystem(conf)
     fs.mkdirs(new Path(s"$root/_log"))
+    // put-if-absent: on `file:` roots Hadoop's create(overwrite = false)
+    // is check-then-create, so two writers can both "create" one claim;
+    // an O_EXCL create is atomic there (FileAlreadyExistsException is
+    // an IOException, handled below like any lost claim)
+    def create(claim: Path): Unit =
+      if (fs.getScheme == "file")
+        java.nio.file.Files.createFile(
+          java.nio.file.Paths.get(fs.makeQualified(claim).toUri))
+      else fs.create(claim, false).close()
     var n = GraftLog.latestVersion(conf, root) + 1
     var attempts = 0
     while (attempts < 1000) {
       try {
-        fs.create(new Path(s"$root/_log/v$n._claim"), false).close()
+        create(new Path(s"$root/_log/v$n._claim"))
         return n
       } catch {
         case _: java.io.IOException =>
@@ -326,8 +335,7 @@ object GraftLogWrite {
     */
   private def writeManifest(conf: Configuration, root: String, n: Int,
       adds: Seq[GraftLogFileCommit], schema: Option[StructType],
-      removes: Seq[String] = Nil,
-      extraRows: Seq[GraftLog.ManifestRow] = Nil,
+      removes: Seq[String], extraRows: Seq[GraftLog.ManifestRow],
       commitMicros: Long): Unit =
     writeManifestRows(conf, new Path(s"$root/_log/v$n/manifest.parquet"),
       // the commit timestamp lives IN the manifest: object-store marker

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.functions._
-
 import graft.sources.{GraftCatalog, GraftLog}
 
 /** COLUMN MAPPING: ALTER TABLE RENAME/DROP COLUMN without rewriting a

@@ -105,15 +105,10 @@ class GraftLogDvSpec extends SparkSpecBase {
     GraftLogOps.deleteFromLog(spark, root, col("id") % 16 === 3,
       GraftLogOps.DeleteModeMor)
     val want = snap(root).collect().map(_.toSeq).sortBy(_.toString)
-    // the DV'd scan stays VECTORIZED (the columnar reader compacts
-    // survivors while the batch fills) and the ROW reader — the nested
-    // -projection path — masks identically: the two paths must agree
-    // row-for-row on a masked snapshot
+    // the DV'd scan stays VECTORIZED (survivors are a row selection
+    // over each batch's vectors)
     val planDv = snap(root).queryExecution.executedPlan.toString
     assert(planDv.contains("ColumnarToRow"), planDv.take(800))
-    val rowPath = spark.read.format("graftlog").option("path", root)
-      .option("columnar", false).load()
-    assert(rowPath.collect().map(_.toSeq).sortBy(_.toString) === want)
     val v = GraftLogOps.compactLog(spark, root)
     assert(GraftLog.liveState(conf, root, v).dvs.isEmpty)
     assert(snap(root).collect().map(_.toSeq).sortBy(_.toString) === want)
@@ -151,14 +146,6 @@ class GraftLogDvSpec extends SparkSpecBase {
       assert(split.rdd.getNumPartitions > 1)
       assert(split.agg(count(lit(1)), sum(col("id"))).head() === whole)
       assert(split.filter(col("id") % 1000 === 7).count() === 0L)
-      // the ROW reader's midpoint start-row computation under the same
-      // splits (the columnar path keys on per-group rowIndexOffset,
-      // the row path on footer-block prefix sums — both must agree)
-      val rowSplit = spark.read.format("graftlog").option("path", root)
-        .option("columnar", false).load()
-      assert(rowSplit.agg(count(lit(1)), sum(col("id"))).head()
-        === whole)
-      assert(rowSplit.filter(col("id") % 1000 === 7).count() === 0L)
     } finally spark.conf.set(key, prev)
   }
 
@@ -565,25 +552,16 @@ class GraftLogDvSpec extends SparkSpecBase {
     val want = snap(root).collect().toSeq
       .filter(_.getLong(0) >= 39000L).map(_.toSeq).sortBy(_.toString)
     assert(want.size === 999) // 1000 rows minus the masked id=39000
-    // vectorized path: row groups SKIP despite the mask
-    GraftLog.scanRowGroupsRead.set(0L)
-    val gotVec = snap(root).filter(pred).collect()
-      .map(_.toSeq).sortBy(_.toString)
-    val groupsRead = GraftLog.scanRowGroupsRead.get()
-    assert(gotVec === want)
-    assert(groupsRead > 0 && groupsRead < totalGroups / 2,
-      s"expected row-group skips on the DV'd file: read $groupsRead " +
-        s"of $totalGroups")
-    // row path: record-level filtering stays live despite the mask
-    GraftLog.scanRecordsRead.set(0L)
-    val gotRow = spark.read.format("graftlog").option("path", root)
-      .option("columnar", false).load()
-      .filter(pred).collect().map(_.toSeq).sortBy(_.toString)
-    val recs = GraftLog.scanRecordsRead.get()
-    assert(gotRow === want)
-    assert(recs > 0 && recs < 5000L,
-      s"expected record filtering on the DV'd file: assembled $recs " +
-        "of 40000")
+    // row groups SKIP despite the mask, and the plan stays vectorized
+    val filtered = snap(root).filter(pred)
+    val plan = filtered.queryExecution.executedPlan.toString
+    assert(plan.contains("ColumnarToRow"), plan.take(800))
+    val (got, recs) = recordsRead(
+      filtered.collect().map(_.toSeq).sortBy(_.toString))
+    assert(got === want)
+    assert(recs > 0 && recs < 40000L / 2,
+      s"expected row-group skips on the DV'd file: read $recs of 40000 " +
+        s"records ($totalGroups row groups)")
     // change-feed delete rows (dvEmit) honor the same pushed predicate
     val feed = spark.read.format("graftlog").option("path", root)
       .option("readChangeFeed", true).option("startingVersion", 2).load()

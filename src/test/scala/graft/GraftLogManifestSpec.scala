@@ -13,8 +13,8 @@ import graft.sources.{GraftLog, GraftLogScan, GraftLogStats, GraftLogWrite}
   * refusal of manifests not written through the commit protocol,
   * per-file INT96 pushdown safety on mixed-encoding logs, Hive-layout
   * partitioned writes whose pruning IS the stats skip, CDC reads (batch
-  * fold-to-snapshot and the streaming tail over a compaction),
-  * columnar/row reader equality, and the atomic streaming-epoch marker.
+  * fold-to-snapshot and the streaming tail over a compaction), the
+  * vectorized read path, and the atomic streaming-epoch marker.
   */
 class GraftLogManifestSpec extends SparkSpecBase {
 
@@ -34,7 +34,6 @@ class GraftLogManifestSpec extends SparkSpecBase {
       .repartitionByRange(4, col("id")).sortWithinPartitions(col("id"))
       .write.format("graftlog").option("path", root)
       .option("schema", "id BIGINT, name STRING").mode("append").save()
-    val before = GraftLog.planFooterReads.get()
     val all = spark.read.format("graftlog").option("path", root).load()
     assert(all.schema.fieldNames.toSeq === Seq("id", "name"))
     val allScan = scanOf(all)
@@ -53,10 +52,6 @@ class GraftLogManifestSpec extends SparkSpecBase {
       .filter(col("name") === "zzz")
     assert(scanOf(none).toBatch.planInputPartitions().isEmpty)
     assert(none.count() === 0L)
-    // the whole exercise — schema inference, stats, skip, execution —
-    // opened NO data-file footer on the plan path
-    assert(GraftLog.planFooterReads.get() === before,
-      s"plan-time footer reads: ${GraftLog.planFooterReads.get() - before}")
   }
 
   test("append schema contract: a drifted schema refuses loudly BEFORE " +
@@ -115,7 +110,6 @@ class GraftLogManifestSpec extends SparkSpecBase {
   test("mixed INT96/INT64 timestamp encodings: a filter pushed because " +
       "the FIRST file is INT64 is dropped per-file for the INT96 one — " +
       "the scan neither errors nor loses rows") {
-    import spark.implicits._
     val root = Files.createTempDirectory("graft_manmixed").toString
     def rows(from: Long, until: Long) = spark.range(from, until)
       .selectExpr("id", "timestamp_micros(id * 1000000L) AS ts")
@@ -163,7 +157,6 @@ class GraftLogManifestSpec extends SparkSpecBase {
       .filter(_.getName.startsWith("w_")).head
     val dirs = fs.listStatus(writeDir).map(_.getPath.getName).sorted
     assert(dirs.toSeq === Seq("bucket=0", "bucket=1", "bucket=2"))
-    val before = GraftLog.planFooterReads.get()
     val all = spark.read.format("graftlog").option("path", root).load()
     assert(all.count() === 300L)
     // the write REQUIRES clustering+ordering by the partition columns,
@@ -177,8 +170,6 @@ class GraftLogManifestSpec extends SparkSpecBase {
     assert(kept === 1, s"partition pruning kept $kept of $allParts")
     val got = one.collect()
     assert(got.length === 100 && got.forall(_.getInt(1) == 1))
-    assert(GraftLog.planFooterReads.get() === before,
-      "partition pruning opened data-file footers at plan time")
   }
 
   test("CDC batch read: the change feed folds to the latest snapshot, " +
@@ -223,7 +214,6 @@ class GraftLogManifestSpec extends SparkSpecBase {
 
   test("CDC streaming tail consumes a compaction (remove+add) as " +
       "delete+insert rows instead of refusing") {
-    import spark.implicits._
     val root = Files.createTempDirectory("graft_mancdcs").toString
     val ckp = Files.createTempDirectory("graft_mancdcs_ckp").toString
     val out = Files.createTempDirectory("graft_mancdcs_out").toString
@@ -254,7 +244,6 @@ class GraftLogManifestSpec extends SparkSpecBase {
   test("columnar reader is the default batch path (plan shows " +
       "ColumnarToRow), equals the row reader value-for-value, and " +
       "null handling matches") {
-    import spark.implicits._
     val root = Files.createTempDirectory("graft_mancol").toString
     // nullable columns of every supported family
     spark.range(2000).selectExpr(
@@ -271,26 +260,23 @@ class GraftLogManifestSpec extends SparkSpecBase {
       .option("schema", "id BIGINT, i INT, d DOUBLE, s STRING, " +
         "b BOOLEAN, ts TIMESTAMP, dt DATE")
       .mode("append").save()
-    def readWith(columnar: Boolean) =
-      spark.read.format("graftlog").option("path", root)
-        .option("columnar", columnar).load()
-        .filter(col("id") >= 100L)
-    val colDf = readWith(true)
+    val colDf = spark.read.format("graftlog").option("path", root).load()
+      .filter(col("id") >= 100L)
     assert(colDf.queryExecution.executedPlan.toString
       .contains("ColumnarToRow"),
       colDf.queryExecution.executedPlan.toString.take(1200))
+    // the same rows, nulls included, as Spark's reader over the files
+    def native = spark.read.parquet(GraftLog.dataFiles(conf, root, 1): _*)
     val a = colDf.collect().map(_.toSeq).sortBy(_.head.toString)
-    val b = readWith(false).collect().map(_.toSeq).sortBy(_.head.toString)
+    val b = native.filter(col("id") >= 100L)
+      .collect().map(_.toSeq).sortBy(_.head.toString)
     assert(a.length === 1900 && a.toSeq === b.toSeq)
-    // pruned projection through the columnar path
-    val two = spark.read.format("graftlog").option("path", root).load()
-      .select(sum(col("d")).as("sd"), count(col("s")).as("cs"))
-      .collect().head
-    val twoRow = spark.read.format("graftlog").option("path", root)
-      .option("columnar", false).load()
-      .select(sum(col("d")).as("sd"), count(col("s")).as("cs"))
-      .collect().head
-    assert(two === twoRow)
+    // pruned projection
+    def two(df: org.apache.spark.sql.DataFrame) =
+      df.select(sum(col("d")).as("sd"), count(col("s")).as("cs"))
+        .collect().head
+    assert(two(spark.read.format("graftlog").option("path", root).load())
+      === two(native))
   }
 
   test("review hardening: reserved CDC names refuse on write but read " +
@@ -424,12 +410,6 @@ class GraftLogManifestSpec extends SparkSpecBase {
     assert(rows.length === 30)
     assert(rows.take(10).forall(_._2 == null), "old files must null-fill")
     assert(rows.drop(10).forall { case (id, t) => t == s"t-$id" })
-    // both reader paths agree
-    val rowPath = spark.read.format("graftlog").option("path", root)
-      .option("columnar", false).load().collect()
-      .map(r => (r.getLong(0), if (r.isNullAt(1)) null else r.getString(1)))
-      .sortBy(_._1)
-    assert(rowPath.toSeq === rows.toSeq)
     // filters on the widened column: pushed predicate must not break
     // the old file (column absent there — predicate dropped per-file)
     assert(latest.filter(col("tag") === "t-15").count() === 1L)
@@ -462,7 +442,6 @@ class GraftLogManifestSpec extends SparkSpecBase {
   test("large files split into byte-range partitions (row groups " +
       "assigned by midpoint): every row read exactly once, on both the " +
       "columnar and row paths, legacy and manifest-stats entries alike") {
-    import spark.implicits._
     val root = Files.createTempDirectory("graft_mansplit").toString
     // one ~1.5MB file with MANY small row groups, written by Spark's
     // own parquet writer and committed with its manifest statistics
@@ -473,21 +452,19 @@ class GraftLogManifestSpec extends SparkSpecBase {
     val prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
     try {
       spark.conf.set("spark.sql.files.maxPartitionBytes", "131072")
-      def read(columnar: Boolean) = spark.read.format("graftlog")
-        .option("path", root).option("columnar", columnar).load()
-      val parts = scanOf(read(true)).toBatch.planInputPartitions()
+      def read() = spark.read.format("graftlog")
+        .option("path", root).load()
+      val parts = scanOf(read()).toBatch.planInputPartitions()
       assert(parts.length > 2, s"no split: ${parts.length} partitions")
       assert(parts.forall(_.asInstanceOf[graft.sources.GraftLogInputPartition]
         .range.isDefined))
-      Seq(true, false).foreach { columnar =>
-        val ids = read(columnar).collect().map(_.getLong(0)).sorted
-        assert(ids.length === 200000,
-          s"columnar=$columnar read ${ids.length} rows (lost or doubled " +
-            "row groups at range boundaries)")
-        assert(ids.toSeq === (0L until 200000L), s"columnar=$columnar")
-      }
+      val ids = read().collect().map(_.getLong(0)).sorted
+      assert(ids.length === 200000,
+        s"read ${ids.length} rows (lost or doubled row groups at range " +
+          "boundaries)")
+      assert(ids.toSeq === (0L until 200000L))
       // a filtered ranged read still returns exactly the matching rows
-      val f = read(true).filter(col("id") >= 150000L)
+      val f = read().filter(col("id") >= 150000L)
       assert(f.collect().map(_.getLong(0)).sorted.toSeq ===
         (150000L until 200000L))
     } finally spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
@@ -508,7 +485,6 @@ class GraftLogManifestSpec extends SparkSpecBase {
       .option("schema",
         "id BIGINT, d DOUBLE, empty_col BIGINT, dt DATE")
       .mode("append").save()
-    val before = GraftLog.planFooterReads.get()
     val agg = spark.read.format("graftlog").option("path", root).load()
       .agg(count(lit(1)).as("n"), count(col("d")).as("nd"),
         min(col("id")).as("mn"), max(col("id")).as("mx"),
@@ -523,8 +499,6 @@ class GraftLogManifestSpec extends SparkSpecBase {
     assert(r.isNullAt(4), "min of an all-null column must be null")
     assert(r.getDate(5).toString === "2021-03-01")
     assert(r.getDate(6).toString === "2021-06-08") // +99 days
-    assert(GraftLog.planFooterReads.get() === before,
-      "aggregate pushdown opened data-file footers")
     // inexact/unservable shapes fall back to the ordinary scan:
     def planOf(df: org.apache.spark.sql.DataFrame): String =
       df.queryExecution.executedPlan.toString
@@ -546,7 +520,6 @@ class GraftLogManifestSpec extends SparkSpecBase {
       "of a vacuumed log refuses unless startingVersion acknowledges " +
       "the gap, a checkpoint below the watermark refuses loudly, and " +
       "maxVersionsPerTrigger bounds each micro-batch") {
-    import spark.implicits._
     val root = Files.createTempDirectory("graft_mantailvac").toString
     def commit(from: Long, until: Long): Unit = {
       val data = spark.range(from, until).selectExpr("id")
@@ -565,12 +538,13 @@ class GraftLogManifestSpec extends SparkSpecBase {
     // versions 1..wm-1 are expired, and silently starting at the
     // watermark would omit rows those versions added (the identical
     // gap a below-watermark checkpoint already refuses on)
-    def mkStream(start: Option[Int]) =
-      new graft.sources.GraftLogMicroBatchStream(root,
-        org.apache.spark.sql.types.StructType.fromDDL("id BIGINT"), None,
-        Set.empty,
+    def mkStream(start: Option[Int]) = {
+      val schema = org.apache.spark.sql.types.StructType.fromDDL("id BIGINT")
+      new graft.sources.GraftLogMicroBatchStream(root, schema, schema,
+        Array.empty,
         new org.apache.spark.util.SerializableConfiguration(conf),
         cdc = false, streamStart = start)
+    }
     val cold = intercept[IllegalStateException] { mkStream(None).initialOffset() }
     assert(cold.getMessage.contains("startingVersion") &&
       cold.getMessage.contains("expired"), cold.getMessage)
@@ -604,36 +578,6 @@ class GraftLogManifestSpec extends SparkSpecBase {
     }
     assert(e.getMessage.contains("watermark") &&
       e.getMessage.contains("silent data loss"), e.getMessage)
-  }
-
-  test("connector-scan microbench: the vectorized reader is not slower " +
-      "than row-at-a-time Group assembly on a full-decode aggregate " +
-      "(typically ~2x faster; the bound here is lenient for CI noise)") {
-    val root = Files.createTempDirectory("graft_mancolbench").toString
-    spark.range(2000000)
-      .selectExpr("id", "id * 0.5 AS d", "concat('name-', id % 1000) AS s")
-      .repartition(8)
-      .write.format(graft.sources.GraftLog.Format).option("path", root)
-      .option("schema", "id BIGINT, d DOUBLE, s STRING")
-      .mode("append").save()
-    def run(columnar: Boolean): (Long, org.apache.spark.sql.Row) = {
-      val df = spark.read.format("graftlog").option("path", root)
-        .option("columnar", columnar).load()
-        .select(sum(col("id")).as("si"), sum(col("d")).as("sd"),
-          count(col("s")).as("cs"))
-      val t0 = System.nanoTime()
-      val r = df.collect().head
-      ((System.nanoTime() - t0) / 1000000L, r)
-    }
-    run(columnar = true); run(columnar = false) // JIT + page-cache warm
-    val (tCol, rCol) = Seq(run(columnar = true), run(columnar = true))
-      .minBy(_._1)
-    val (tRow, rRow) = Seq(run(columnar = false), run(columnar = false))
-      .minBy(_._1)
-    assert(rCol === rRow)
-    info(s"columnar ${tCol}ms vs row ${tRow}ms over 2M rows x 3 cols")
-    assert(tCol <= tRow * 1.3 + 150,
-      s"vectorized read slower than row path: ${tCol}ms vs ${tRow}ms")
   }
 
   test("streaming epoch marker is atomic with the version commit: a " +

@@ -8,18 +8,15 @@ import graft.sources.{GraftLog, GraftLogOps}
 
 /** TYPE-WIDENING schema evolution: `ALTER TABLE ... ALTER COLUMN ...
   * TYPE` commits a new schema WITHOUT rewriting a byte — old files keep
-  * their narrow physical (INT32 / FLOAT / short decimal) and both
-  * reader paths up-cast value-exactly at the file boundary. Pinned
-  * here:
+  * their narrow physical (INT32 / FLOAT / short decimal) and the reader
+  * up-casts value-exactly at the file boundary. Pinned here:
   *
-  *  - INT→BIGINT and FLOAT→DOUBLE reads agree across both reader paths
-  *    and equal the values written;
+  *  - INT→BIGINT and FLOAT→DOUBLE reads equal the values written;
   *  - DECIMAL precision growth at the same scale widens; scale changes
   *    and narrowings refuse loudly;
   *  - a pushed predicate on the widened column still answers correctly
-  *    over mixed physicals (dropped per-file on the narrow generation,
-  *    live on the wide one — Spark's residual re-application covers
-  *    the dropped file);
+  *    over mixed physicals (converted per file by Spark's reader, and
+  *    re-applied as a residual either way);
   *  - point-in-time reads return each version's OWN types;
   *  - DML (MoR delete) masks rows in both generations, and OPTIMIZE
   *    lands everything under the wide physical type.
@@ -68,7 +65,7 @@ class GraftLogWidenSpec extends SparkSpecBase {
     assert(df.schema.map(f => f.dataType.simpleString) ===
       Seq("bigint", "double", "decimal(18,2)"))
     assert(df.count() === 210L)
-    // old-generation values up-cast EXACTLY (columnar path)
+    // old-generation values up-cast EXACTLY
     assert(df.agg(sum(col("k"))).head().getLong(0) ===
       (0L until 200L).sum + (0L until 10L).map(_ + 3000000000L).sum)
     assert(df.filter(col("f") === 7.0).count() === 1L) // float 7.0 == 7.0d
@@ -76,11 +73,6 @@ class GraftLogWidenSpec extends SparkSpecBase {
       new java.math.BigDecimal("12345678901234567.80")
         .add(java.math.BigDecimal.valueOf((0 until 200).sum.toLong, 0)
           .setScale(2)))
-    // row path agrees value-for-value
-    val rowPath = spark.read.format("graftlog").option("path", root)
-      .option("columnar", false).load()
-    assert(rowPath.collect().map(_.toSeq).sortBy(_.toString) ===
-      df.collect().map(_.toSeq).sortBy(_.toString))
     // a pushed equality on the widened key answers over MIXED physicals
     assert(df.filter(col("k") === 42L).count() === 1L) // narrow file
     assert(df.filter(col("k") === 3000000001L).count() === 1L) // wide

@@ -406,6 +406,54 @@ class MaintenanceSpec extends SparkSpecBase {
     assert(fs.delete(torn, false))
     assert(commit(next) == 4)
     assert(live(4) == live(3) ++ rel(next))
+    // CONCURRENT committers: a fixed six threads race for the claim,
+    // over repeated trials. The claim is the only serialization, so
+    // every commit lands exactly once, versions stay dense and no row is
+    // lost; a loser rebases past a committed winner, or sees the named
+    // pending-claim exception and retries
+    val committers = 6
+    (1 to 5).foreach { trial =>
+      val race = java.nio.file.Files
+        .createTempDirectory("graft_occ_race").toString
+      val base = commitParquet(race, schema)(ids(0, 10))
+      val staged = (1 to committers).map(i =>
+        GraftLogOps.stageParquet(conf, race, "race", schema)(
+          ids(100L * i, 100L * i + 10)))
+      val go = new java.util.concurrent.CountDownLatch(1)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(committers)
+      try {
+        val versions = staged.map { st =>
+          pool.submit(new java.util.concurrent.Callable[Int] {
+            override def call(): Int = {
+              val c = new org.apache.hadoop.conf.Configuration(conf)
+              go.await()
+              var attempts = 0
+              var v = -1
+              while (v < 0) {
+                try v = GraftLogWrite.commitStaged(c, race, st._1, st._2,
+                  Some(schema))
+                catch {
+                  case _: GraftLogClaimPendingException if attempts < 500 =>
+                    attempts += 1
+                    Thread.sleep(2)
+                }
+              }
+              v
+            }
+          })
+        }
+        go.countDown()
+        val got = versions.map(
+          _.get(120, java.util.concurrent.TimeUnit.SECONDS)).sorted
+        assert(got === (2 to committers + 1), s"trial $trial")
+        assert(Maintenance.latestVersion(spark, race) == committers + 1)
+        assert(graft.sources.GraftLog.liveEntries(conf, race, committers + 1)
+          .toSet == (base ++ staged.flatMap(_._2.map(
+            _.file.stripPrefix(s"$race/")))).toSet, s"trial $trial")
+        assert(spark.read.format("graftlog").option("path", race).load()
+          .count() == 10L * (committers + 1), s"trial $trial")
+      } finally pool.shutdownNow()
+    }
   }
 
   test("vacuum sweeps crashed-writer orphans under data/ by AGE: old " +

@@ -24,7 +24,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *  2. `ParquetReader.getCurrentRowIndex` returns the FILE-ABSOLUTE
   *     index of the record just returned — under record-level
   *     filtering, with filtering disabled, and under byte-range reads —
-  *     so the row reader can mask from parquet's own counter instead
+  *     so a row-at-a-time reader can mask from parquet's own counter instead
   *     of a stream-relative one that desyncs the moment a row group
   *     or record is skipped.
   *

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev scratchpad: print plan + timing for one named query. */
 object Scratch {
   def main(args: Array[String]): Unit = {

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.StructType
 import org.scalatest.BeforeAndAfterAll
@@ -27,6 +31,26 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
     graft.sources.GraftLogWrite.commitStaged(conf, root, staging, files,
       Some(schema), removes = removes, op = op)
     files.map(_.file.stripPrefix(s"$root/"))
+  }
+
+  /** `body`'s result with the records Spark's tasks report reading
+    * while it runs (`inputMetrics.recordsRead`, summed over tasks).
+    */
+  def recordsRead[T](body: => T): (T, Long) = {
+    val sc = spark.sparkContext
+    val n = new AtomicLong(0L)
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m =>
+          n.addAndGet(m.inputMetrics.recordsRead))
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      ListenerBusDrain(sc)
+      (r, n.get)
+    } finally sc.removeSparkListener(listener)
   }
 }
 

@@ -23,6 +23,11 @@ import org.apache.spark.util.SerializableConfiguration
   *     stale — the documented object-store assumption) and that the
   *     protocol's own maintenance operations never touch a committed
   *     manifest's identity.
+  *  3. ONE DECODER — a snapshot read equals [[GraftLogOps.maskedParquet]]
+  *     (Spark's reader plus the deletion-vector mask, what every
+  *     rewrite reads) over the same live files, on the fixtures that
+  *     stress decoding: deletion vectors, widened columns, nested
+  *     columns, mixed INT96/INT64 timestamps and byte-range splits.
   */
 class GraftLogInvariantSpec extends graft.SparkSpecBase {
 
@@ -44,9 +49,9 @@ class GraftLogInvariantSpec extends graft.SparkSpecBase {
     val root = mkTable("graft_prov")
     val schema = GraftLog.inferSchema(conf, root, 2)
     val scan = GraftLogScan(root, 2, schema, schema,
-      Array.empty, None, Array.empty,
+      Array.empty, Array.empty,
       new SerializableConfiguration(conf), cdc = false, cdcStart = 1,
-      columnar = false, rowLevel = true)
+      rowLevel = true)
     scan.planInputPartitions()
     assert(scan.plannedRelFiles.size >= 2) // multiple part-files live
     // simulate Spark having first planned NARROW (post-group-filter),
@@ -208,5 +213,104 @@ class GraftLogInvariantSpec extends graft.SparkSpecBase {
     // recovery knob for anything that must re-read: clearPlanCaches
     GraftLog.clearPlanCaches()
     assert(GraftLog.versionRows(conf, root, 2) === want)
+  }
+
+  test("a snapshot read equals maskedParquet over the same live files: " +
+      "deletion vectors, widening, nesting, INT96/INT64, byte ranges") {
+    def tmp(p: String) = Files.createTempDirectory(p).toString
+    def assertSameAsMasked(root: String): Unit = {
+      val v = GraftLog.latestVersion(conf, root)
+      val st = GraftLog.liveState(conf, root, v)
+      val schema = GraftLog.inferSchema(conf, root, v)
+      val files = st.adds.map(GraftLog.fileEntry(root, _).path)
+      val dvs = st.dvs.map { case (f, d) =>
+        GraftLogOps.normPath(s"$root/$f") -> s"$root/${d.dv}" }
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.select(schema.fieldNames.map(col): _*).collect()
+          .map(_.toSeq).sortBy(_.toString).toSeq
+      val snapshot =
+        rows(spark.read.format("graftlog").option("path", root).load())
+      assert(snapshot.nonEmpty, root)
+      assert(snapshot ===
+        rows(GraftLogOps.maskedParquet(spark, schema, schema, files, dvs)),
+        root)
+    }
+    // deletion vectors on a partitioned table
+    val dv = tmp("graft_dec_dv")
+    spark.range(0, 400).selectExpr("id", "id % 4 AS bucket")
+      .write.format("graftlog").option("path", dv)
+      .option("schema", "id BIGINT, bucket BIGINT")
+      .option("partitionBy", "bucket").mode("append").save()
+    GraftLogOps.deleteFromLog(spark, dv, col("id") % 16 === 3,
+      GraftLogOps.DeleteModeMor)
+    assert(GraftLog.liveState(conf, dv, 2).dvs.nonEmpty)
+    assertSameAsMasked(dv)
+    // without whole-stage codegen Spark's reader hands out rows, not
+    // batches: the row-at-a-time mask
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    try {
+      val plan = spark.read.format("graftlog").option("path", dv).load()
+        .queryExecution.executedPlan.toString
+      assert(!plan.contains("ColumnarToRow"), plan)
+      assertSameAsMasked(dv)
+    } finally spark.conf.unset("spark.sql.codegen.wholeStage")
+    // widened: INT -> BIGINT in place, then a wide append
+    val widened = tmp("graft_dec_widen")
+    spark.range(0, 50).selectExpr("CAST(id AS INT) AS k")
+      .write.format("graftlog").option("path", widened)
+      .option("schema", "k INT").mode("append").save()
+    spark.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.graft.warehouse",
+      widened.substring(0, widened.lastIndexOf('/')))
+    spark.sql("ALTER TABLE graft.`" +
+      widened.substring(widened.lastIndexOf('/') + 1) +
+      "` ALTER COLUMN k TYPE BIGINT")
+    spark.range(0, 50).selectExpr("id + 3000000000 AS k")
+      .write.format("graftlog").option("path", widened)
+      .option("schema", "k BIGINT").mode("append").save()
+    assertSameAsMasked(widened)
+    // nested columns
+    val nested = tmp("graft_dec_nested")
+    spark.range(0, 100).selectExpr("id",
+        "array(CAST(id AS FLOAT), CAST(id + 1 AS FLOAT)) AS emb",
+        "map('k', id) AS props",
+        "named_struct('score', id * 0.5, 'tag', CAST(id % 3 AS STRING))" +
+          " AS meta")
+      .write.format("graftlog").option("path", nested)
+      .option("schema", "id BIGINT, emb ARRAY<FLOAT>, " +
+        "props MAP<STRING, BIGINT>, meta STRUCT<score: DOUBLE, tag: STRING>")
+      .mode("append").save()
+    assertSameAsMasked(nested)
+    // mixed INT96 / INT64 timestamp encodings, committed as two versions
+    val mixed = tmp("graft_dec_ts")
+    def ts(from: Long, tsType: String): Unit = {
+      val df = spark.range(from, from + 100)
+        .selectExpr("id", "timestamp_micros(id * 1000000L) AS ts")
+      val key = "spark.sql.parquet.outputTimestampType"
+      val prev = spark.conf.getOption(key)
+      spark.conf.set(key, tsType)
+      try commitParquet(mixed, df.schema)(dir =>
+        df.coalesce(1).write.parquet(dir))
+      finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+    ts(0, "TIMESTAMP_MICROS")
+    ts(100, "INT96")
+    assertSameAsMasked(mixed)
+    // byte-range splits of one many-row-group file, with a vector on it
+    val split = tmp("graft_dec_split")
+    val data = spark.range(0, 100000).selectExpr("id", "id * 3 AS v")
+    commitParquet(split, data.schema)(dir =>
+      data.coalesce(1).write.option("parquet.block.size", "65536")
+        .parquet(dir))
+    GraftLogOps.deleteFromLog(spark, split, col("id") % 1000 === 7,
+      GraftLogOps.DeleteModeMor)
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prev = spark.conf.get(key)
+    try {
+      spark.conf.set(key, "131072")
+      assert(spark.read.format("graftlog").option("path", split).load()
+        .rdd.getNumPartitions > 1)
+      assertSameAsMasked(split)
+    } finally spark.conf.set(key, prev)
   }
 }

@@ -6,7 +6,9 @@ import scala.util.control.NonFatal
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.KnownNullable
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 
@@ -132,7 +134,11 @@ object GraftLogOps {
     * files without an entry read mask-free, and when none of `files`
     * has one the read is the plain scan (no UDF). The mask itself is a
     * per-row sorted-array membership test against the executor-cached
-    * sidecar — no join, no shuffle.
+    * sidecar — no join, no shuffle. Columns that hold a DECIMAL read
+    * through an opaque identity, so no predicate on them reaches
+    * parquet's row-group filter ([[GraftLog.readerPushable]]'s rule:
+    * after a precision widening a wide literal would truncate against
+    * a narrow file and skip row groups that hold matches).
     */
   private[sources] def maskedParquet(s: SparkSession,
       physSchema: StructType, schema: StructType, files: Seq[String],
@@ -140,7 +146,7 @@ object GraftLogOps {
     val raw = s.read.schema(physSchema).parquet(files: _*)
       .select(Seq(col("_metadata.file_path").as("_g_file"),
         col("_metadata.row_index").as("_g_pos")) ++
-        renamed(physSchema, schema): _*)
+        renamed(physSchema, schema, GraftLog.holdsDecimal): _*)
     val read = files.map(normPath).toSet
     val dvs = dvByNormPath.filter { case (f, _) => read.contains(f) }
     if (dvs.isEmpty) raw
@@ -156,12 +162,20 @@ object GraftLogOps {
     * struct cast renames nested fields without touching values (a
     * plain `toDF` renames top-level only, which would write a nested
     * rename's files under LOGICAL inner names). Identity-mapped
-    * tables hit the no-cast fast path column-for-column.
+    * tables hit the no-cast fast path column-for-column. A column
+    * whose type is `opaque` is wrapped in `KnownNullable` (every log
+    * column is nullable already), which Spark's filter translation does
+    * not see through: a predicate on it stays above the scan.
     */
-  private def renamed(from: StructType, target: StructType): Seq[Column] =
+  private def renamed(from: StructType, target: StructType,
+      opaque: DataType => Boolean = _ => false): Seq[Column] =
     from.fields.zip(target.fields).map { case (f, t) =>
-      (if (f.dataType == t.dataType) col(f.name)
-       else col(f.name).cast(t.dataType)).as(t.name)
+      val c =
+        if (f.dataType == t.dataType) col(f.name)
+        else col(f.name).cast(t.dataType)
+      (if (!opaque(f.dataType)) c
+       else ColumnBridge.column(KnownNullable(ColumnBridge.expression(c))))
+        .as(t.name)
     }.toSeq
 
   /** A merge key column as a double for range bucketing — only types

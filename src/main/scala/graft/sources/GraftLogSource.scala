@@ -415,16 +415,28 @@ object GraftLog {
   case class LiveState(adds: Seq[ManifestRow],
       dvs: Map[String, DvDescriptor])
 
+  /** One manifest row's step of a live state: `add` (re)binds the file
+    * and clears any DV (a re-added path is a fresh file); `remove`
+    * drops the file AND its DV; `dv` binds the file's CURRENT complete
+    * mask (each commit's mask replaces the previous wholesale).
+    */
+  private def step(live: mutable.Map[String, ManifestRow],
+      dvs: mutable.Map[String, DvDescriptor], r: ManifestRow): Unit =
+    r match {
+      case ManifestRow("add", f, _, _, _)    => live(f) = r; dvs -= f
+      case ManifestRow("remove", f, _, _, _) => live -= f; dvs -= f
+      case ManifestRow("dv", f, _, _, Some(json)) =>
+        dvs(f) = decodeDv(json)
+      case _ => ()
+    }
+
   /** Live ADD rows and DELETION VECTORS as of `asOf`: the newest
     * committed CHECKPOINT at or below `asOf` (its add/dv rows ARE the
     * live state as of its version) plus a fold of the tail manifests
-    * — O(1 + tail ≤ [[CheckpointInterval]]) control-plane reads,
-    * independent of the table's version count. Fold rules: `add`
-    * (re)binds the file and clears any DV (a re-added path is a fresh
-    * file); `remove` drops the file AND its DV; `dv` binds the file's
-    * CURRENT complete mask (each commit's mask replaces the previous
-    * wholesale). No checkpoint (or an unreadable one) falls back to
-    * the full v1..asOf fold.
+    * through [[step]] — O(1 + tail ≤ [[CheckpointInterval]])
+    * control-plane reads, independent of the table's version count. No
+    * checkpoint (or an unreadable one) falls back to the full v1..asOf
+    * fold.
     */
   def liveState(conf: Configuration, root: String,
       asOf: Int): LiveState = {
@@ -434,13 +446,7 @@ object GraftLog {
       s"version $asOf not committed under $root (latest: $latest)")
     val live = mutable.LinkedHashMap[String, ManifestRow]()
     val dvs = mutable.LinkedHashMap[String, DvDescriptor]()
-    def fold(rows: Seq[ManifestRow]): Unit = rows.foreach {
-      case r @ ManifestRow("add", f, _, _, _) => live(f) = r; dvs -= f
-      case ManifestRow("remove", f, _, _, _)  => live -= f; dvs -= f
-      case ManifestRow("dv", f, _, _, Some(json)) =>
-        dvs(f) = decodeDv(json)
-      case _ => ()
-    }
+    def fold(rows: Seq[ManifestRow]): Unit = rows.foreach(step(live, dvs, _))
     val start =
       checkpointAt(names, asOf) match {
         case Some(k) => readCheckpoint(conf, root, k) match {
@@ -451,6 +457,81 @@ object GraftLog {
       }
     (start to asOf).foreach(v => fold(versionRows(conf, root, v)))
     LiveState(live.values.toSeq, dvs.toMap)
+  }
+
+  /** The files versions `from..to` changed, as reads: the ONE fold the
+    * batch change feed, the streaming change feed and the append-only
+    * snapshot tail replay the log through. It seeds from the live state
+    * as of `from - 1` (a vector committed before the range still masks
+    * the removes a later rewrite emits; a removed or re-masked file is
+    * described by its live add row) and walks every row through
+    * [[step]]. An `add` emits its file — in the change feed tagged
+    * `insert`, or the class a merge-on-read UPDATE/MERGE wrote into its
+    * stats. In the change feed a `remove` emits delete rows for the
+    * file's LIVE remainder (positions an earlier vector masked were
+    * emitted as deletes then), and a `dv` its newly masked positions as
+    * deletes or update preimages; the snapshot tail emits neither. A
+    * CONTENT-PRESERVING rewrite (compaction / OPTIMIZE, named by the
+    * commit's op row) emits nothing: the same rows merely moved files
+    * (Delta's change feed skips dataChange=false actions the same way),
+    * and its removed files are never opened, so the range stays
+    * replayable after they are vacuumed. Refusals, all at planning: a
+    * removed data file that is gone, a `remove` or `dv` of a file that
+    * is not live, and in snapshot mode any other remove (its adds mix
+    * re-housed and new rows, so the append-only tail can neither skip
+    * nor emit them).
+    */
+  def changes(conf: Configuration, root: String, from: Int, to: Int,
+      cdc: Boolean): Seq[PlannedFile] = {
+    val st =
+      if (from > 1) liveState(conf, root, from - 1) else LiveState(Nil, Map.empty)
+    val live = mutable.HashMap(st.adds.map(r => r.file -> r): _*)
+    val dvs = mutable.HashMap(st.dvs.toSeq: _*)
+    lazy val fs = fsOf(conf, root)
+    (from to to).flatMap { v =>
+      val rows = versionRows(conf, root, v)
+      val preserving = rows.exists(r => r.action == "op" && r.file == "compact")
+      val removed = rows.collect { case ManifestRow("remove", f, _, _, _) => f }
+      if (!cdc && !preserving && removed.nonEmpty)
+        throw new IllegalStateException(
+          s"graftlog stream: version $v of $root is not append-only " +
+            s"(${removed.map("removes " + _).take(3).mkString(", ")}...); " +
+            "the tail emits appended rows only — run maintenance rewrites " +
+            "on a separate log, start a fresh stream from a snapshot, or " +
+            "tail with option(\"readChangeFeed\", true) to consume " +
+            "removes as delete rows")
+      def tag(kind: String) = Option.when(cdc)((kind, v.toLong))
+      rows.flatMap { r =>
+        def described = fileEntry(root, live.getOrElse(r.file,
+          throw new IllegalStateException(s"graftlog: version $v of " +
+            s"$root removes or masks ${r.file}, which is not live")))
+        val planned = r match {
+          case ManifestRow("add", _, _, _, _) if !preserving =>
+            val e = fileEntry(root, r)
+            Some(PlannedFile(e,
+              tag(e.stats.flatMap(_.cdcClass).getOrElse("insert"))))
+          case ManifestRow("remove", f, _, _, _) =>
+            val e = described
+            val emits = cdc && !preserving
+            if (emits && !fs.exists(new Path(s"$root/$f")))
+              throw new IllegalStateException(
+                s"graftlog CDC: version $v removes $f but the file is " +
+                  "gone (compacted away and vacuumed?) — the change " +
+                  "feed for this range is no longer reconstructible; " +
+                  "raise startingVersion past it")
+            Option.when(emits)(PlannedFile(e, tag("delete"),
+              dvMask = dvs.get(f).map(d => s"$root/${d.dv}")))
+          case ManifestRow("dv", _, _, _, Some(json)) =>
+            val (e, d) = (described, decodeDv(json))
+            Option.when(cdc)(PlannedFile(e,
+              tag(d.cdcClass.getOrElse("delete")),
+              dvEmit = Some(s"$root/${d.delta}")))
+          case _ => None
+        }
+        step(live, dvs, r)
+        planned
+      }
+    }
   }
 
   /** Live ADD rows (file paths relative to root, with their manifest
@@ -835,6 +916,16 @@ object GraftLog {
   def readerPushable(schema: StructType, f: Filter): Boolean =
     f.references.forall(c => GraftLogStats.fieldAt(schema, c)
       .exists(!_.dataType.isInstanceOf[DecimalType]))
+
+  /** Is a column of type `dt` a DECIMAL or a struct with a DECIMAL leaf
+    * — may a predicate on it (or on a leaf, by dotted path) be one
+    * [[readerPushable]] keeps from the reader?
+    */
+  def holdsDecimal(dt: DataType): Boolean = dt match {
+    case _: DecimalType => true
+    case st: StructType => st.fields.exists(f => holdsDecimal(f.dataType))
+    case _              => false
+  }
 }
 
 /** `format("graftlog")` entry point (registered via
@@ -1318,6 +1409,27 @@ case class GraftLogAggReaderFactory(schema: StructType)
     }
 }
 
+/** One file a read covers: its entry (with manifest statistics when
+  * recorded), the CDC (change_type, version) tag when reading a change
+  * feed, and — under merge-on-read deletes — the deletion vector to
+  * apply: `dvMask` skips the sidecar's positions (snapshot reads of a
+  * DV'd file, the change feed's delete rows for a removed one),
+  * `dvEmit` emits ONLY them (the change feed's delete rows for a dv
+  * commit). Sidecar paths are absolute.
+  */
+case class PlannedFile(entry: FileEntry,
+    cdcMeta: Option[(String, Long)] = None,
+    dvMask: Option[String] = None, dvEmit: Option[String] = None,
+    maskedRows: Long = 0L)
+
+/** The data scan of a log table, and the ONE planner of its data reads
+  * (stats file skip, byte-range splits above `maxPartitionBytes`, the
+  * row index only when a planned file carries a deletion vector). Its
+  * files are the snapshot as of `version`, or — for a change feed and
+  * for a micro-batch of the streaming tail (`tail`, a `copy` bounded to
+  * the batch) — the changes of versions `cdcStart..version`
+  * ([[GraftLog.changes]]).
+  */
 case class GraftLogScan(root: String, version: Int, full: StructType,
     pruned: StructType,
     pushedDesc: Array[String],
@@ -1327,7 +1439,8 @@ case class GraftLogScan(root: String, version: Int, full: StructType,
     skipOnlyFilters: Array[Filter] = Array.empty,
     streamStart: Option[Int] = None, rowLevel: Boolean = false,
     presented: Option[StructType] = None,
-    colMap: Map[String, String] = Map.empty)
+    colMap: Map[String, String] = Map.empty,
+    tail: Boolean = false)
     extends Scan with Batch with SupportsReportStatistics
     with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering {
 
@@ -1419,24 +1532,12 @@ case class GraftLogScan(root: String, version: Int, full: StructType,
 
   override def readSchema(): StructType = presented.getOrElse(pruned)
 
-  /** One file this scan covers: its entry (with manifest statistics
-    * when recorded), the CDC (change_type, version) tag when reading a
-    * change feed, and — under merge-on-read deletes — the deletion
-    * vector to apply: `dvMask` skips the sidecar's positions (snapshot
-    * reads of a DV'd file), `dvEmit` emits ONLY them (the change feed's
-    * delete rows for a dv commit). Sidecar paths are absolute.
-    */
-  private[sources] case class PlannedFile(entry: FileEntry,
-      cdcMeta: Option[(String, Long)] = None,
-      dvMask: Option[String] = None, dvEmit: Option[String] = None,
-      maskedRows: Long = 0L)
-
   /** The files this scan covers. Computed ONCE per scan from the
     * manifest fold; this is the control-plane read that replaces the
     * per-file footer walk.
     */
   private lazy val entries: Seq[PlannedFile] =
-    if (!cdc) {
+    if (!cdc && !tail) {
       val st = GraftLog.liveState(conf.value, root, version)
       st.adds.map { r =>
         val dv = st.dvs.get(r.file)
@@ -1444,81 +1545,7 @@ case class GraftLogScan(root: String, version: Int, full: StructType,
           dvMask = dv.map(d => s"$root/${d.dv}"),
           maskedRows = dv.map(_.card).getOrElse(0L))
       }
-    } else {
-      // the live state folds from v1: a vector committed BEFORE the
-      // read range still masks the remove rows a later rewrite emits,
-      // and a removed or re-masked file is described by its live add
-      // row; the feed itself starts at cdcStart
-      val live = mutable.HashMap[String, GraftLog.ManifestRow]()
-      val running = mutable.HashMap[String, GraftLog.DvDescriptor]()
-      if (cdcStart > 1) {
-        val st = GraftLog.liveState(conf.value, root, cdcStart - 1)
-        live ++= st.adds.map(r => r.file -> r)
-        running ++= st.dvs
-      }
-      val fs = new Path(root).getFileSystem(conf.value)
-      (cdcStart to version).flatMap { v =>
-        val rows = GraftLog.versionRows(conf.value, root, v)
-        // CONTENT-PRESERVING rewrites (compaction / OPTIMIZE, named by
-        // the commit's op row) emit NOTHING in the change feed: the
-        // same logical rows merely moved files, and at 100 TB a single
-        // OPTIMIZE must not re-emit the whole table as delete+insert
-        // churn (Delta's CDF excludes dataChange=false actions the
-        // same way). The dv/live bookkeeping still folds — a folded
-        // file's mask dies with its remove — and the skipped version's
-        // removed files are never opened, so the feed stays
-        // reconstructible even after they are vacuumed. Every other
-        // commit, with or without an op row, emits delete+insert.
-        val preserving = rows.exists(r =>
-          r.action == "op" && r.file == "compact")
-        rows.flatMap {
-          case r @ GraftLog.ManifestRow("add", f, _, _, _) =>
-            live(f) = r
-            running -= f
-            if (preserving) Seq.empty
-            // a MoR update/merge writes its transformed-row files with
-            // a change-feed class in the stats JSON — surface it;
-            // untagged adds are plain inserts
-            else {
-              val e = GraftLog.fileEntry(root, r)
-              Seq(PlannedFile(e,
-                Some((e.stats.flatMap(_.cdcClass).getOrElse("insert"),
-                  v.toLong))))
-            }
-          case GraftLog.ManifestRow("remove", f, _, _, _) =>
-            // delete rows for the file's LIVE remainder: positions
-            // already masked by an earlier dv commit were emitted as
-            // deletes THEN and must not re-delete here
-            val mask = running.remove(f)
-            val added = live.remove(f)
-            if (preserving) Seq.empty
-            else {
-              if (!fs.exists(new Path(s"$root/$f")))
-                throw new IllegalStateException(
-                  s"graftlog CDC: version $v removes $f but the file is " +
-                    "gone (compacted away and vacuumed?) — the change " +
-                    "feed for this range is no longer reconstructible; " +
-                    "raise startingVersion past it")
-              Seq(PlannedFile(GraftLog.fileEntry(root, added.getOrElse(
-                  throw new IllegalStateException(
-                    s"graftlog CDC: version $v removes $f, which is not " +
-                      "live"))),
-                Some(("delete", v.toLong)),
-                dvMask = mask.map(d => s"$root/${d.dv}")))
-            }
-          case GraftLog.ManifestRow("dv", f, _, _, Some(json)) =>
-            val d = GraftLog.decodeDv(json)
-            running(f) = d
-            // the newly-masked positions ARE this version's deletes —
-            // or, for a MoR update/merge, the UPDATE PREIMAGES (the
-            // descriptor carries the class)
-            Seq(PlannedFile(GraftLog.fileEntry(root, live(f)),
-              Some((d.cdcClass.getOrElse("delete"), v.toLong)),
-              dvEmit = Some(s"$root/${d.delta}")))
-          case _ => Seq.empty
-        }
-      }
-    }
+    } else GraftLog.changes(conf.value, root, cdcStart, version, cdc)
 
   /** Planner-visible stats for the snapshot: exact row count and bytes
     * from the MANIFEST (every add row carries them — the manifest read
@@ -1699,22 +1726,13 @@ case class GraftLogScan(root: String, version: Int, full: StructType,
       withRowIndex = entries.exists(pf =>
         pf.dvMask.isDefined || pf.dvEmit.isDefined))
 
-  /** The log as a STREAM: each committed version is a micro-batch —
-    * `readStream.format("graftlog")` tails the commit log the way
-    * lakehouse formats do. Offsets are version numbers (exactly-once
-    * via the standard checkpoint protocol), and column pruning / filter
-    * pushdown apply to the tail exactly as to the batch scan (same
-    * reader factory). APPEND-ONLY contract in snapshot mode: a version
-    * that removes files (compaction, delete, rewrite) is not
-    * representable as appended rows — the tail fails LOUDLY on it. In
-    * CDC mode (`readChangeFeed`) removes ARE representable — they emit
-    * as tagged delete rows — so the same rewrite streams through as
-    * (delete old, insert new).
+  /** The log as a STREAM: `readStream.format("graftlog")` tails the
+    * commit log one committed version per micro-batch, each planned as
+    * a copy of this scan ([[GraftLogMicroBatchStream]]).
     */
   override def toMicroBatchStream(
       checkpointLocation: String): streaming.MicroBatchStream =
-    new GraftLogMicroBatchStream(root, full, pruned, readerFilters, conf,
-      cdc, cdcStart, maxVersionsPerTrigger, streamStart)
+    new GraftLogMicroBatchStream(this)
 }
 
 /** One read task: a data file (absolute path) with its manifest byte
@@ -1734,43 +1752,38 @@ case class GraftLogOffset(version: Int)
 }
 
 /** Micro-batch tail over the commit log: offset N = "everything through
-  * version N"; a batch (start, end] reads the files ADDED by versions
-  * start+1..end (plus, in CDC mode, delete rows for files REMOVED).
-  * Torn commits are invisible (latestOffset stops before them), so a
-  * batch can never read a half-written version.
+  * version N". A batch (start, end] is the `scan` the stream was loaded
+  * with, copied and bounded to versions start+1..end — so it replays the
+  * log through [[GraftLog.changes]], as the batch change feed does, and
+  * plans through the batch scan's planner. In CDC mode it reads as the
+  * batch change feed of that range; in snapshot mode it reads the files
+  * those versions appended (APPEND-ONLY contract), and a deletion-vector
+  * commit contributes its appends only. Both modes refuse at planning,
+  * never at task time: a removed file that is gone, a remove or mask of
+  * a file that is not live, and in snapshot mode a remove that does not
+  * preserve content. Torn commits are invisible (latestOffset stops
+  * before them).
   *
-  * VACUUM SAFETY: a cold start of a VACUUMED log refuses loudly —
-  * versions below the watermark are expired (their data files may be
-  * gone; expanding them to an empty file list would be SILENT loss,
-  * the worst failure a tail can have), so skipping them must be an
-  * explicit decision: `option("startingVersion", n)` with n at or
-  * above the watermark acknowledges the gap and starts there. A
-  * checkpointed offset that has since fallen below the watermark
-  * refuses loudly the same way — the loud/silent handling of the
-  * identical gap is consistent on both paths. (CDC tails carry their
-  * own `startingVersion`, watermark-checked at load.)
-  *
-  * CONTENT-PRESERVING rewrites (compaction/OPTIMIZE, named by the
-  * commit's op row) emit NOTHING in either mode — the same logical
-  * rows merely moved files; deletion-vector commits emit their appends
-  * in snapshot mode and their delta positions as
-  * delete/update_preimage rows in CDC mode.
-  *
-  * ADMISSION CONTROL: `option("maxVersionsPerTrigger", n)` caps each
-  * micro-batch at n committed versions — a tail restarted after a long
-  * outage catches up in bounded batches instead of one giant one (at
-  * 100 TB, "read 10 000 versions in one trigger" is a driver OOM, not
-  * a plan).
+  * The stream's own concerns:
+  *  - VACUUM SAFETY: a cold start of a VACUUMED log refuses loudly —
+  *    versions below the watermark are expired, and expanding them to an
+  *    empty file list would be SILENT loss — unless
+  *    `option("startingVersion", n)` with n at or above the watermark
+  *    acknowledges the gap; a checkpointed offset that has since fallen
+  *    below the watermark refuses the same way. (CDC tails carry their
+  *    own `startingVersion`, watermark-checked at load.)
+  *  - ADMISSION CONTROL: `option("maxVersionsPerTrigger", n)` caps each
+  *    micro-batch at n committed versions, so a tail restarted after a
+  *    long outage catches up in bounded batches (at 100 TB, "read 10 000
+  *    versions in one trigger" is a driver OOM, not a plan);
+  *    `Trigger.AvailableNow` drains to the version pinned at its start.
   */
-class GraftLogMicroBatchStream(root: String, full: StructType,
-    pruned: StructType, filters: Array[Filter],
-    conf: SerializableConfiguration, cdc: Boolean, cdcStart: Int = 1,
-    maxVersionsPerTrigger: Option[Int] = None,
-    streamStart: Option[Int] = None)
+class GraftLogMicroBatchStream(scan: GraftLogScan)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming
       .SupportsTriggerAvailableNow {
   import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
+  import scan.{cdc, cdcStart, conf, root, streamStart}
 
   override def initialOffset(): Offset = {
     val wm = GraftLog.vacuumWatermark(conf.value, root)
@@ -1800,7 +1813,7 @@ class GraftLogMicroBatchStream(root: String, full: StructType,
       "latestOffset(start, limit) is the admission-control entry point")
 
   override def getDefaultReadLimit: ReadLimit =
-    maxVersionsPerTrigger
+    scan.maxVersionsPerTrigger
       .map(n => ReadLimit.maxFiles(n)) // unit here = committed versions
       .getOrElse(ReadLimit.allAvailable())
 
@@ -1830,113 +1843,30 @@ class GraftLogMicroBatchStream(root: String, full: StructType,
   override def deserializeOffset(json: String): Offset =
     GraftLogOffset(json.trim.toInt)
 
+  /** The batch planned last: Spark plans a batch's partitions before it
+    * asks for the reader factory, which is that batch's.
+    */
+  private var planned: Option[GraftLogScan] = None
+
   override def planInputPartitions(start: Offset,
       end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[GraftLogOffset].version
     val e = end.asInstanceOf[GraftLogOffset].version
-    val c = conf.value
-    val wm = GraftLog.vacuumWatermark(c, root)
+    val wm = GraftLog.vacuumWatermark(conf.value, root)
     if (s + 1 < wm && s + 1 <= e) throw new IllegalStateException(
       s"graftlog stream: checkpointed offset $s requires version " +
         s"${s + 1}, but the vacuum watermark is $wm — the expired " +
         "versions' files may be gone, and skipping them would be " +
         "silent data loss; start a fresh stream from a snapshot")
-    // live state as of the batch start: the add rows describe the
-    // files later versions remove or mask, and the DVs keep a
-    // rewrite's remove rows from re-deleting positions an earlier dv
-    // commit already emitted
-    lazy val st =
-      if (cdc && s >= 1) GraftLog.liveState(c, root, s)
-      else GraftLog.LiveState(Nil, Map.empty)
-    lazy val live = mutable.HashMap(st.adds.map(r => r.file -> r): _*)
-    lazy val running = mutable.HashMap(st.dvs.toSeq: _*)
-    def entry(v: Int, f: String) = GraftLog.fileEntry(root,
-      live.getOrElse(f, throw new IllegalStateException(
-        s"graftlog stream: version $v removes or masks $f, which is not " +
-          "live")))
-    (s + 1 to e).flatMap { v =>
-      val rows = GraftLog.versionRows(c, root, v)
-      val removed = rows.collect {
-        case GraftLog.ManifestRow("remove", f, _, _, _) => f }
-      val dvRows = rows.collect {
-        case GraftLog.ManifestRow("dv", f, _, _, Some(json)) =>
-          (f, GraftLog.decodeDv(json)) }
-      val opRow = rows.collectFirst {
-        case GraftLog.ManifestRow("op", o, _, _, _) => o }
-      // APPEND-ONLY contract, refined by the commit's OPERATION row:
-      //  - a CONTENT-PRESERVING rewrite (compaction / OPTIMIZE — same
-      //    logical rows, different files) emits NOTHING: its adds
-      //    re-house rows earlier batches already emitted, so skipping
-      //    the whole version is exactly correct;
-      //  - a DELETION-VECTOR commit emits its adds only (a MoR
-      //    update/merge's new row versions ARE appended rows); the
-      //    masked old positions are deletions, which an append-only
-      //    tail cannot retract — documented semantics, and a consumer
-      //    that needs them tails the change feed instead;
-      //  - any OTHER remove (copy-on-write DML, an overwrite) still
-      //    refuses loudly: its adds mix re-housed and new rows, so
-      //    neither skipping nor emitting is correct.
-      val preserving = removed.nonEmpty && opRow.contains("compact")
-      if (removed.nonEmpty && !preserving && !cdc)
-        throw new IllegalStateException(
-          s"graftlog stream: version $v of $root is not append-only " +
-            s"(${removed.map("removes " + _)
-              .take(3).mkString(", ")}...); the tail " +
-            "emits appended rows only — run maintenance rewrites on a " +
-            "separate log, start a fresh stream from a snapshot, or tail " +
-            "with option(\"readChangeFeed\", true) to consume removes as " +
-            "delete rows")
-      // a content-preserving rewrite emits NOTHING in EITHER mode: the
-      // snapshot tail already emitted these rows, and the change feed
-      // must not re-emit them as churn (Delta-CDF semantics) — only
-      // the dv/live bookkeeping folds through
-      val adds =
-        if (preserving) Seq.empty
-        else rows.collect {
-          case r @ GraftLog.ManifestRow("add", _, _, _, _) =>
-            GraftLog.fileEntry(root, r) }
-          .map(fe => GraftLogInputPartition(fe.path, fe.bytes.get,
-            if (cdc) Some((fe.stats.flatMap(_.cdcClass)
-              .getOrElse("insert"), v.toLong))
-            else None))
-      val dels =
-        if (!cdc) Seq.empty
-        else removed.flatMap { f =>
-          val mask = running.remove(f)
-          val e = entry(v, f)
-          live -= f
-          if (preserving) None
-          else Some(GraftLogInputPartition(e.path, e.bytes.get,
-            Some(("delete", v.toLong)),
-            dvMask = mask.map(d => s"$root/${d.dv}")))
-        }
-      if (cdc) rows.foreach {
-        case r @ GraftLog.ManifestRow("add", f, _, _, _) =>
-          live(f) = r; running -= f
-        case _ => ()
-      }
-      val dvDels =
-        if (!cdc) Seq.empty
-        else dvRows.map { case (f, d) =>
-          running(f) = d
-          val e = entry(v, f)
-          GraftLogInputPartition(e.path, e.bytes.get,
-            Some((d.cdcClass.getOrElse("delete"), v.toLong)),
-            dvEmit = Some(s"$root/${d.delta}"))
-        }
-      adds ++ dels ++ dvDels
-    }.map(p => p: InputPartition).toArray
+    val batch = scan.copy(version = e, cdcStart = s + 1, tail = true)
+    planned = Some(batch)
+    batch.planInputPartitions()
   }
 
-  // the micro-batch tail reads through the SAME factory the batch scan
-  // uses, so a streaming epoch's plan carries the identical
-  // ColumnarToRow span a batch read of that version would (StreamingSpec
-  // pins plan shape and batch/stream row parity). Only a change feed
-  // carries deletion vectors (masked removes, delta deletes); a
-  // snapshot tail emits adds only.
   override def createReaderFactory(): PartitionReaderFactory =
-    GraftLogReaderFactory(full, pruned, filters, conf, cdc,
-      withRowIndex = cdc)
+    planned.getOrElse(throw new IllegalStateException(
+      "graftlog stream: reader factory asked for before any batch was " +
+        "planned")).createReaderFactory()
 
   override def commit(end: Offset): Unit = ()
 

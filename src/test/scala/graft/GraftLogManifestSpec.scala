@@ -540,10 +540,10 @@ class GraftLogManifestSpec extends SparkSpecBase {
     // gap a below-watermark checkpoint already refuses on)
     def mkStream(start: Option[Int]) = {
       val schema = org.apache.spark.sql.types.StructType.fromDDL("id BIGINT")
-      new graft.sources.GraftLogMicroBatchStream(root, schema, schema,
-        Array.empty,
+      new graft.sources.GraftLogMicroBatchStream(graft.sources.GraftLogScan(
+        root, 3, schema, schema, Array.empty, Array.empty,
         new org.apache.spark.util.SerializableConfiguration(conf),
-        cdc = false, streamStart = start)
+        cdc = false, cdcStart = 1, streamStart = start))
     }
     val cold = intercept[IllegalStateException] { mkStream(None).initialOffset() }
     assert(cold.getMessage.contains("startingVersion") &&

@@ -193,7 +193,7 @@ class GraftCatalog extends TableCatalog
         s" not in the table schema [${schema.toDDL}]")
     val normalized = GraftLog.asNullable(schema)
     // refuse unstorable types at CREATE, not at the first append
-    GraftLogWrite.toMessageType(normalized)
+    GraftLog.requireStorable(normalized)
     // expectedVersion pins "the empty v1": losing a concurrent CREATE
     // race must refuse (not silently stack a second empty version onto
     // the winner's table); the declared PARTITIONED BY is persisted as
@@ -424,7 +424,7 @@ class GraftCatalog extends TableCatalog
     }
     val next = GraftLog.asNullable(StructType(fields))
     // refuse unstorable types now, not at the next append
-    GraftLogWrite.toMessageType(next)
+    GraftLog.requireStorable(next)
     // one empty commit carrying the new DDL (and the mapping, when one
     // exists) — pinned at latest+1 so a concurrent commit of ANY kind
     // refuses this ALTER instead of being silently clobbered by it

@@ -5,8 +5,10 @@ import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.KnownNullable
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.sources._
@@ -849,16 +851,41 @@ object GraftLogOps {
     (rows, dvMeta.map(m => relByNorm(m._1)).toSeq)
   }
 
-  /** Stage a DataFrame's rows as committed-shape part-files under
-    * `staging/<sub>` (PHYSICAL names — a positional rename; the
-    * manifest records the LOGICAL schema) and describe each.
+  /** Stage a DataFrame's rows under `staging/<sub>` through the
+    * connector's own writer ([[GraftLogWriterFactory]]) as ONE job:
+    * part-files under PHYSICAL names (a positional rename; the manifest
+    * records the LOGICAL schema), each described off its own footer
+    * with its NDV folded at write. A task with no rows writes no file.
+    * The CHANGE-FEED class rides in the stats JSON ("cdc" key): a MoR
+    * update/merge tags its transformed-row files update_postimage so
+    * the feed can tell moves from inserts.
     */
   private def stageFiles(snap: Snapshot, df: DataFrame, staging: String,
       sub: String, cdcClass: Option[String] = None)
       : Seq[GraftLogFileCommit] = {
-    val dir = s"$staging/$sub"
-    df.select(renamed(df.schema, snap.physSchema): _*).write.parquet(dir)
-    describeStaged(snap.conf, dir, snap.physSchema, cdcClass)
+    val factory = GraftLogWriterFactory(s"$staging/$sub", snap.physSchema,
+      Nil, new org.apache.spark.util.SerializableConfiguration(snap.conf))
+    val qe = df.select(renamed(df.schema, snap.physSchema): _*)
+      .queryExecution
+    val written = SQLExecution.withNewExecutionId(qe,
+        Some(s"graftlog stage $sub")) {
+      qe.toRdd.mapPartitionsWithIndex { (i, rows) =>
+        val w = factory.createWriter(i, TaskContext.get().taskAttemptId())
+        try {
+          rows.foreach(w.write)
+          Iterator(w.commit().asInstanceOf[GraftLogCommitMessage])
+        } catch { case t: Throwable => w.abort(); throw t }
+      }.collect()
+    }
+    written.toSeq.flatMap(_.files).map { fc =>
+      cdcClass.fold(fc) { c =>
+        import org.json4s._
+        import org.json4s.jackson.JsonMethods
+        val base = fc.stats.map(JsonMethods.parse(_)).getOrElse(JObject())
+        fc.copy(stats = Some(JsonMethods.compact(JsonMethods.render(
+          base.merge(JObject("cdc" -> JString(c)))))))
+      }
+    }
   }
 
   /** Stage parquet written by Spark's own writer for ONE commit: each
@@ -878,18 +905,17 @@ object GraftLogOps {
     (staging, files)
   }
 
-  /** The add-row payloads of one freshly written staging directory:
-    * each part-file's rows, bytes and statistics read off its footer,
-    * so the new snapshot plans from the manifest exactly like any
-    * connector write. Spark's `_SUCCESS` marker and empty part-files
-    * (a task whose whole input was deleted) are removed from disk and
-    * the commit. The directory is flat by construction; paths are
-    * rebuilt as dir + name (listings return scheme-qualified URIs, the
-    * commit compares raw root-relative strings).
+  /** The add-row payloads of one staging directory another writer
+    * filled: each part-file's rows, bytes and statistics read off its
+    * footer (NDV by re-reading the file), so the new snapshot plans from
+    * the manifest exactly like any connector write. Spark's `_SUCCESS`
+    * marker and empty part-files are removed from disk and the commit.
+    * The directory is flat by construction; paths are rebuilt as dir +
+    * name (listings return scheme-qualified URIs, the commit compares
+    * raw root-relative strings).
     */
   private[graft] def describeStaged(conf: Configuration, dir: String,
-      physSchema: StructType, cdcClass: Option[String] = None)
-      : Seq[GraftLogFileCommit] = {
+      physSchema: StructType): Seq[GraftLogFileCommit] = {
     val fs = new Path(dir).getFileSystem(conf)
     fs.delete(new Path(s"$dir/_SUCCESS"), false)
     fs.listStatus(new Path(dir))
@@ -902,25 +928,9 @@ object GraftLogOps {
           conf, s"$dir/$n", physSchema)
         if (rows == 0L) {
           fs.delete(new Path(s"$dir/$n"), false); None
-        } else {
-          // the CHANGE-FEED class rides in the stats JSON ("cdc" key):
-          // a MoR update/merge tags its transformed-row files
-          // update_postimage so the feed can tell moves from inserts
-          val tagged = cdcClass match {
-            case None => st
-            case Some(c) =>
-              import org.json4s._
-              import org.json4s.jackson.JsonMethods
-              val base = st.map(JsonMethods.parse(_))
-                .getOrElse(JObject())
-              Some(JsonMethods.compact(JsonMethods.render(
-                base.merge(JObject("cdc" -> JString(c))))))
-          }
-          Some(GraftLogFileCommit(s"$dir/$n", rows, bytes, tagged))
-        }
+        } else Some(GraftLogFileCommit(s"$dir/$n", rows, bytes, st))
       }
   }
-
 
   /** The table's partition columns for LAYOUT purposes: the declared
     * catalog `PARTITIONED BY` (manifest row) when present, else
@@ -1073,8 +1083,9 @@ object GraftLogOps {
           .newFixedThreadPool(math.min(bins.size, CompactJobParallelism))
         try {
           val tasks = bins.zipWithIndex.map { case (b, i) =>
-            pool.submit(new java.util.concurrent.Callable[Unit] {
-              override def call(): Unit = {
+            pool.submit(new java.util.concurrent.Callable[
+                Seq[GraftLogFileCommit]] {
+              override def call(): Seq[GraftLogFileCommit] = {
                 // pure file shuffling: read AND write physical names —
                 // no logical translation needed anywhere in the rewrite
                 // (deletion vectors applied at the read, so a masked
@@ -1083,15 +1094,15 @@ object GraftLogOps {
                 val d = maskedParquet(s, physSchema, physSchema,
                     b.map(f => s"$root/$f"), dvMap)
                   .select(physCols: _*).coalesce(1)
-                (if (clusterPhys.isEmpty) d
-                 else d.sortWithinPartitions(clusterPhys.map(col): _*))
-                  .write.parquet(s"$staging/bin-$i")
+                stageFiles(snap,
+                  if (clusterPhys.isEmpty) d
+                  else d.sortWithinPartitions(clusterPhys.map(col): _*),
+                  staging, s"bin-$i")
               }
             })
           }
-          tasks.foreach(_.get()) // propagate the first failure
-          val files = bins.indices.flatMap(i =>
-            describeStaged(conf, s"$staging/bin-$i", physSchema))
+          // propagate the first failure
+          val files = tasks.flatMap(_.get())
           GraftLogWrite.commitStaged(conf, root, staging, files,
             Some(snap.schema), removes = bins.flatten,
             readVersion = Some(latest),

@@ -623,6 +623,30 @@ object GraftLog {
   def asNullable(st: StructType): StructType =
     deepNullable(st).asInstanceOf[StructType]
 
+  /** Refuses a schema holding a type a log table cannot store. The
+    * storable types are the hash-stable primitives, DATE, TIMESTAMP,
+    * TIMESTAMP_NTZ and DECIMAL, and arrays, maps and structs of them;
+    * CREATE, ALTER and every write check through here.
+    */
+  def requireStorable(schema: StructType): Unit = {
+    def unstorable(name: String, dt: DataType): Option[(String, DataType)] =
+      dt match {
+        case LongType | IntegerType | DoubleType | FloatType | BooleanType |
+            StringType | BinaryType | DateType | TimestampType |
+            TimestampNTZType | _: DecimalType => None
+        case ArrayType(et, _) => unstorable("element", et)
+        case MapType(kt, vt, _) =>
+          unstorable("key", kt).orElse(unstorable("value", vt))
+        case StructType(fs) =>
+          fs.iterator.flatMap(f => unstorable(f.name, f.dataType)).nextOption()
+        case other => Some((name, other))
+      }
+    unstorable("", schema).foreach { case (name, dt) =>
+      throw new IllegalArgumentException(
+        s"graftlog write: unsupported type $dt for $name")
+    }
+  }
+
   /** Documented WIDENING: `next` extends `current` by appending new
     * columns — the existing fields an exact (name, type) prefix, in
     * order. The one schema evolution the log admits: readers null-fill
@@ -1640,7 +1664,22 @@ case class GraftLogScan(root: String, version: Int, full: StructType,
     }
   }
 
-  override def estimateStatistics(): Statistics = memoStats
+  /** Set once this scan serves a stream ([[toMicroBatchStream]]). Spark
+    * asks a stream's relation for statistics at every stream start, but
+    * no batch reads the load-time range: folding it would read every
+    * manifest in it and refuse files no batch covers. A stream reports
+    * no estimate, and each micro-batch folds only its own versions.
+    */
+  @volatile private var streamed = false
+
+  override def estimateStatistics(): Statistics =
+    if (!streamed) memoStats
+    else new Statistics {
+      override def sizeInBytes(): java.util.OptionalLong =
+        java.util.OptionalLong.empty()
+      override def numRows(): java.util.OptionalLong =
+        java.util.OptionalLong.empty()
+    }
 
   override def description(): String =
     s"GraftLogScan root=$root version=$version${if (cdc) " cdc" else ""} " +
@@ -1731,8 +1770,10 @@ case class GraftLogScan(root: String, version: Int, full: StructType,
     * a copy of this scan ([[GraftLogMicroBatchStream]]).
     */
   override def toMicroBatchStream(
-      checkpointLocation: String): streaming.MicroBatchStream =
+      checkpointLocation: String): streaming.MicroBatchStream = {
+    streamed = true
     new GraftLogMicroBatchStream(this)
+  }
 }
 
 /** One read task: a data file (absolute path) with its manifest byte
@@ -2033,9 +2074,10 @@ object GraftLogReaderFactory {
     hadoopConf.setBoolean(
       SQLConf.PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION.key,
       sqlConf.parquetReaderRespectUnknownTypeAnnotation)
-    // the connector's writer stores proleptic-Gregorian values with no
-    // Spark version in the footer, so its dates and timestamps read
-    // CORRECTED (files Spark wrote carry their own rebase metadata)
+    // a file Spark wrote carries its own rebase metadata (the
+    // connector's writer pins CORRECTED); one without a Spark version
+    // in its footer stores proleptic-Gregorian values, so it reads
+    // CORRECTED too
     val options = new ParquetOptions(Map(
       ParquetOptions.DATETIME_REBASE_MODE -> "CORRECTED",
       ParquetOptions.INT96_REBASE_MODE -> "CORRECTED"), sqlConf)

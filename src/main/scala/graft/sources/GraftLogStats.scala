@@ -63,12 +63,11 @@ object GraftLogStats {
     * across files, which is the whole point: per-file exact distinct
     * counts cannot be combined, sketches can — so a 10⁵-file
     * snapshot's NDV is a driver-side register fold, zero data I/O at
-    * plan time. The sketch is built from ONE extra executor-side read
-    * of the just-written file ([[describeFile]]) — amortized into the
-    * write like the footer read, and the uniform point every writer
-    * (connector append, rewrite, compaction) already passes through;
-    * disable via hadoop conf `graft.log.ndv.enabled=false` for
-    * ingest paths that don't want the write-time read tax.
+    * plan time. Every data file the engine writes (append, streaming
+    * epoch, DML rewrite, compaction) goes through the one encoder,
+    * [[graft.sources.GraftLogDataWriter]], which folds the sketches as
+    * rows stream through; [[ndvSketches]] builds the same registers
+    * by re-reading a file, for foreign files staged by other writers.
     */
   object NdvSketch {
     val Registers = 256 // p = 8
@@ -234,15 +233,10 @@ object GraftLogStats {
         }
       }
       nullsDropped.foreach(nulls.remove)
-      // the WRITER folds its own sketches as rows stream through
-      // (ndvOverride — zero extra I/O); the re-read below is the
-      // fallback for rewrites staged through Spark's parquet writer,
-      // where no per-row hook exists
-      val ndv = ndvOverride.getOrElse {
-        if (!conf.getBoolean("graft.log.ndv.enabled", true))
-          Map.empty[String, String]
-        else ndvSketches(footer)
-      }
+      // the connector's writer folds its own sketches as rows stream
+      // through (ndvOverride — zero extra I/O); the re-read below serves
+      // foreign files staged by other writers only
+      val ndv = ndvOverride.getOrElse(ndvSketches(footer))
       val json =
         if (mins.isEmpty && nulls.isEmpty && ndv.isEmpty) None
         else Some(JsonMethods.compact(JsonMethods.render(JObject(
@@ -270,11 +264,11 @@ object GraftLogStats {
     * including across TYPE WIDENINGS (an INT32 value hashes as its
     * long, identical to the INT64 a post-widening writer stores).
     *
-    * This re-read path is the FALLBACK (rewrites staged through
-    * Spark's writer); the connector's own writer folds identical
-    * sketches as rows stream through ([[graft.sources
-    * .GraftLogDataWriter]]) and passes them via `ndvOverride` —
-    * NdvWriteFoldSpec pins the two forms byte-identical.
+    * This re-read serves foreign files staged by other writers only
+    * (the maintenance fixtures, specs' Spark-written parquet); the
+    * connector's one writer folds identical sketches as rows stream
+    * through ([[graft.sources.GraftLogDataWriter]]) and passes them via
+    * `ndvOverride` — NdvWriteFoldSpec pins the two forms byte-identical.
     */
   private[graft] def ndvSketches(
       footer: ParquetFileReader): Map[String, String] = {

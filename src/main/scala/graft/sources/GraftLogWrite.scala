@@ -6,16 +6,19 @@ import scala.collection.mutable
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.Group
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.ParquetWriter
 import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupWriteSupport}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.io.api.Binary
+import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType, Types}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
+import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetUtils}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.util.SerializableConfiguration
 
@@ -48,6 +51,13 @@ import org.apache.spark.util.SerializableConfiguration
   *     attempt (retry/speculation) deletes its own uniquely-named
   *     files in its task abort, and files orphaned by a crashed
   *     executor are never referenced by any manifest.
+  *
+  * ONE ENCODER: every data file the engine writes — appends, streaming
+  * epochs, SQL DML, and the rewrites and compactions of [[GraftLogOps]]
+  * — goes through [[GraftLogDataWriter]], which encodes with Spark's own
+  * parquet writer ([[GraftLogEncoder]]) and folds the NDV sketches as
+  * rows stream through. Only the fixed-shape manifest and checkpoint
+  * files keep parquet-hadoop's example writer.
   *
   * The per-file statistics rows are what make scan planning a pure
   * manifest read (GraftLogScan serves `estimateStatistics` and the
@@ -121,135 +131,6 @@ class GraftLogClaimPendingException(msg: String)
 
 object GraftLogWrite {
 
-  /** One Spark field → parquet type, recursively: primitives as before,
-    * plus the STANDARD nested encodings (the same shapes Spark's own
-    * writer emits, so files interchange both ways) —
-    * `array<t>` as the 3-level LIST (`optional group (LIST) { repeated
-    * group list { optional t element } }`), `map<k,v>` as MAP
-    * (`repeated group key_value { required k key; optional v value }`),
-    * and `struct<...>` as a plain optional group. Everything optional
-    * (the log is all-nullable by contract) except map keys, which
-    * Spark's MapData cannot hold null for.
-    */
-  private[sources] def toParquetType(name: String, dt: DataType,
-      required: Boolean = false): org.apache.parquet.schema.Type = {
-    import PrimitiveType.PrimitiveTypeName._
-    def prim(p: PrimitiveType.PrimitiveTypeName,
-        ann: LogicalTypeAnnotation = null) = {
-      val b = if (required) Types.required(p) else Types.optional(p)
-      (if (ann == null) b else b.as(ann)).named(name)
-    }
-    dt match {
-      case LongType    => prim(INT64)
-      case IntegerType => prim(INT32)
-      case DoubleType  => prim(DOUBLE)
-      case FloatType   => prim(FLOAT)
-      case BooleanType => prim(BOOLEAN)
-      case StringType  => prim(BINARY, LogicalTypeAnnotation.stringType())
-      case BinaryType  => prim(BINARY)
-      case DateType    => prim(INT32, LogicalTypeAnnotation.dateType())
-      case TimestampType => prim(INT64,
-        LogicalTypeAnnotation.timestampType(true,
-          LogicalTypeAnnotation.TimeUnit.MICROS))
-      case TimestampNTZType => prim(INT64,
-        LogicalTypeAnnotation.timestampType(false,
-          LogicalTypeAnnotation.TimeUnit.MICROS))
-      // the standard parquet decimal physical ladder (what Spark's own
-      // writer picks): INT32 to precision 9, INT64 to 18, then
-      // fixed-length binary sized to the precision — the reference's
-      // own money DDL is DECIMAL(10,2), so the table format must not
-      // inherit the engine's documented double deviation
-      case dec: DecimalType =>
-        val ann = LogicalTypeAnnotation.decimalType(dec.scale,
-          dec.precision)
-        if (dec.precision <= 9) prim(INT32, ann)
-        else if (dec.precision <= 18) prim(INT64, ann)
-        else {
-          val bytes = GraftLogWrite.decimalFixedWidth(dec.precision)
-          val b = if (required) Types.required(FIXED_LEN_BYTE_ARRAY)
-                  else Types.optional(FIXED_LEN_BYTE_ARRAY)
-          b.length(bytes).as(ann).named(name)
-        }
-      case ArrayType(et, _) =>
-        Types.optionalList()
-          .element(toParquetType("element", et))
-          .named(name)
-      case MapType(kt, vt, _) =>
-        Types.optionalMap()
-          .key(toParquetType("key", kt, required = true))
-          .value(toParquetType("value", vt))
-          .named(name)
-      case StructType(fields) =>
-        val g = Types.optionalGroup()
-        fields.foreach(f => g.addField(toParquetType(f.name, f.dataType)))
-        g.named(name)
-      case other => throw new IllegalArgumentException(
-        s"graftlog write: unsupported type $other for $name")
-    }
-  }
-
-  /** Minimum FIXED_LEN_BYTE_ARRAY width whose two's-complement range
-    * covers `precision` decimal digits — parquet-format's prescribed
-    * sizing (the same table Spark's writer uses). Memoized per
-    * precision: the write path consults it PER VALUE for precision>18
-    * columns, and the BigInt exponentiation search must not run
-    * millions of times on a large decimal write.
-    */
-  private val fixedWidthByPrecision =
-    new java.util.concurrent.ConcurrentHashMap[Int, Int]()
-
-  private[sources] def decimalFixedWidth(precision: Int): Int =
-    fixedWidthByPrecision.computeIfAbsent(precision, p =>
-      (1 to 32).find(n =>
-        BigInt(10).pow(p) - 1 <= (BigInt(2).pow(8 * n - 1) - 1))
-        .getOrElse(throw new IllegalArgumentException(
-          s"decimal precision $p too large")))
-
-  /** Unscaled decimal → two's-complement big-endian bytes padded to the
-    * fixed width (sign-extended).
-    */
-  private[sources] def decimalFixedBytes(unscaled: java.math.BigInteger,
-      width: Int): Array[Byte] = {
-    val raw = unscaled.toByteArray // minimal two's complement
-    require(raw.length <= width,
-      s"decimal unscaled value needs ${raw.length} bytes > width $width")
-    val out = new Array[Byte](width)
-    val pad: Byte = if (unscaled.signum() < 0) -1 else 0
-    java.util.Arrays.fill(out, 0, width - raw.length, pad)
-    System.arraycopy(raw, 0, out, width - raw.length, raw.length)
-    out
-  }
-
-  /** Spark → parquet schema for the supported hash-stable type set
-    * (the same set the reader decodes; see [[GraftLog]]).
-    */
-  def toMessageType(schema: StructType): MessageType = {
-    val b = Types.buildMessage()
-    schema.fields.foreach(f => b.addField(toParquetType(f.name, f.dataType)))
-    b.named("spark_schema")
-  }
-
-  /** One staged part-file via parquet-hadoop's example writer — the
-    * mirror of the reader's Group decode, no Spark internals.
-    */
-  private[graft] def groupWriter(path: Path, schema: MessageType,
-      conf: Configuration): ParquetWriter[Group] = {
-    GroupWriteSupport.setSchema(schema, conf)
-    // row-group target: tunable via `graft.log.write.rowgroup.bytes`
-    // (e.g. spark.hadoop.graft.log.write.rowgroup.bytes) — smaller
-    // groups trade compression for finer predicate row-group skipping;
-    // specs also use it to force multi-group files at test scale
-    val rowGroupBytes = conf.getLong("graft.log.write.rowgroup.bytes",
-      ParquetWriter.DEFAULT_BLOCK_SIZE.toLong)
-    ExampleParquetWriter.builder(
-        org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(path, conf))
-      .withConf(conf)
-      .withCompressionCodec(CompressionCodecName.SNAPPY)
-      .withType(schema)
-      .withRowGroupSize(rowGroupBytes)
-      .build()
-  }
-
   /** Claim the next version put-if-absent; returns the claimed number.
     * Losing a claim to a COMMITTED winner means retry the next number;
     * losing to an UNCOMMITTED claim means another writer is in flight
@@ -310,12 +191,20 @@ object GraftLogWrite {
   }
 
   /** Write manifest-shaped rows to one parquet file — the shared
-    * low-level writer behind version manifests AND checkpoints.
+    * low-level writer behind version manifests AND checkpoints. The
+    * fixed 5-column shape is written with parquet-hadoop's example
+    * writer, the mirror of the `GroupReadSupport` that reads it back.
     */
   private[graft] def writeManifestRows(conf: Configuration, path: Path,
       rows: Seq[GraftLog.ManifestRow]): Unit = {
     val msg = manifestMessageType
-    val w = groupWriter(path, msg, new Configuration(conf))
+    val c = new Configuration(conf)
+    GroupWriteSupport.setSchema(msg, c)
+    val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(path, c))
+      .withConf(c)
+      .withCompressionCodec(CompressionCodecName.SNAPPY)
+      .withType(msg)
+      .build()
     try {
       val gf = new SimpleGroupFactory(msg)
       rows.foreach { r =>
@@ -840,40 +729,98 @@ class GraftLogStreamingWrite(root: String, schema: StructType,
   }
 }
 
+/** The one parquet encoder of `graftlog`: Spark's own
+  * `ParquetOutputWriter`, from the factory `ParquetUtils.prepareWrite`
+  * builds on the driver, the way `ParquetFileFormat.prepareWrite`
+  * prepares a file write. The Hadoop conf is prepared once, under
+  * settings no session conf changes: every field `optional` (the schema
+  * passes through [[GraftLog.asNullable]]), INT64 microsecond
+  * timestamps (which carry statistics, where INT96 carries none), the
+  * standard nested and decimal layouts (non-legacy), snappy pages, and
+  * CORRECTED dates and timestamps (stored as given, never rebased).
+  * Row groups follow parquet's own `parquet.block.size`.
+  */
+case class GraftLogEncoder(conf: SerializableConfiguration,
+    factory: OutputWriterFactory) {
+
+  /** A new file at `path`, written under the pinned settings. */
+  def open(path: String, schema: StructType): OutputWriter =
+    SQLConf.withExistingConf(GraftLogEncoder.pinned()) {
+      factory.newInstance(path, schema,
+        new TaskAttemptContextImpl(conf.value, new TaskAttemptID()))
+    }
+}
+
+object GraftLogEncoder {
+
+  /** The pinned settings; the write support reads the rebase modes from
+    * the active SQL conf when a file opens, the rest from the prepared
+    * Hadoop conf.
+    */
+  private def pinned(): SQLConf = {
+    val c = new SQLConf
+    c.setConfString(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key,
+      "TIMESTAMP_MICROS")
+    c.setConfString(SQLConf.PARQUET_WRITE_LEGACY_FORMAT.key, "false")
+    c.setConfString(SQLConf.PARQUET_REBASE_MODE_IN_WRITE.key, "CORRECTED")
+    c.setConfString(SQLConf.PARQUET_INT96_REBASE_MODE_IN_WRITE.key,
+      "CORRECTED")
+    c
+  }
+
+  /** Prepare on the driver; refuses a type a log table cannot store. */
+  def apply(conf: Configuration, schema: StructType): GraftLogEncoder = {
+    GraftLog.requireStorable(schema)
+    val sqlConf = pinned()
+    val job = Job.getInstance(new Configuration(conf))
+    val factory = ParquetUtils.prepareWrite(sqlConf, job,
+      GraftLog.asNullable(schema),
+      new ParquetOptions(Map("compression" -> "snappy"), sqlConf))
+    GraftLogEncoder(new SerializableConfiguration(job.getConfiguration),
+      factory)
+  }
+}
+
 /** Part-file names carry a per-ATTEMPT uuid besides partition/task ids:
   * files now live at their final path from the moment they're written,
   * so two attempts at the same work (a speculative twin, a task retry,
   * or a replayed streaming epoch after an app restart that reuses task
   * ids) must never target the same name — the loser's uniquely-named
   * file is deleted by its own abort (or by the replay check), never
-  * fought over.
+  * fought over. The encoder is prepared when the factory is built, on
+  * the driver, and ships to the tasks with it.
   */
 case class GraftLogWriterFactory(staging: String, schema: StructType,
-    partCols: Seq[String], conf: SerializableConfiguration)
+    partCols: Seq[String], @transient conf: SerializableConfiguration)
     extends DataWriterFactory {
+  // tasks read only the encoder's prepared conf, so `conf` stays home
+  private val encoder = GraftLogEncoder(conf.value, schema)
   override def createWriter(partitionId: Int,
       taskId: Long): DataWriter[InternalRow] =
     new GraftLogDataWriter(staging,
       s"part-$partitionId-$taskId-" +
         s"${UUID.randomUUID().toString.take(8)}.parquet",
-      schema, partCols, conf.value)
+      schema, partCols, encoder)
 }
 
 case class GraftLogStreamingWriterFactory(stagingBase: String,
     schema: StructType, partCols: Seq[String],
-    conf: SerializableConfiguration) extends StreamingDataWriterFactory {
+    @transient conf: SerializableConfiguration)
+    extends StreamingDataWriterFactory {
+  // tasks read only the encoder's prepared conf, so `conf` stays home
+  private val encoder = GraftLogEncoder(conf.value, schema)
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
     new GraftLogDataWriter(s"${stagingBase}_$epochId",
       s"part-$partitionId-$taskId-" +
         s"${UUID.randomUUID().toString.take(8)}.parquet",
-      schema, partCols, conf.value)
+      schema, partCols, encoder)
 }
 
-/** Per-task part-file writer: InternalRow → Group — one file per task
-  * per partition-value combination (Hive `k=v/` subdirectories when
-  * `partitionBy` is set), each described by its own footer at commit
-  * (rows, bytes, column min/max → the manifest statistics row),
+/** Per-task part-file writer: one file per task per partition-value
+  * combination (Hive `k=v/` subdirectories when `partitionBy` is set),
+  * encoded by [[GraftLogEncoder]], each described by its own footer at
+  * commit (rows, bytes, column min/max → the manifest statistics row),
   * deleted on abort.
   *
   * The Write requires clustering + ordering on the partition columns,
@@ -884,17 +831,15 @@ case class GraftLogStreamingWriterFactory(stagingBase: String,
   * collision-free either way.
   */
 class GraftLogDataWriter(staging: String, fileName: String,
-    schema: StructType, partCols: Seq[String], baseConf: Configuration)
+    schema: StructType, partCols: Seq[String], encoder: GraftLogEncoder)
     extends DataWriter[InternalRow] {
 
-  private val conf = new Configuration(baseConf)
-  private val msg = GraftLogWrite.toMessageType(schema)
-  private val factory = new SimpleGroupFactory(msg)
+  private val conf = encoder.conf.value
   private val partIdx: Array[Int] = partCols.map(schema.fieldIndex).toArray
 
   private var currentDir: String = null
   private var currentFile: String = null
-  private var currentWriter: ParquetWriter[Group] = null
+  private var currentWriter: OutputWriter = null
   private val finishedFiles = mutable.ArrayBuffer[String]()
   private val dirVisits = mutable.HashMap[String, Int]()
 
@@ -902,14 +847,12 @@ class GraftLogDataWriter(staging: String, fileName: String,
   // NDV fold-at-write: the per-column HyperLogLog sketches the manifest
   // carries are hashed HERE, as rows stream through — not by re-reading
   // the just-written file (the measured ~26% worst-case write tax the
-  // re-read form pays; it remains only as the fallback for rewrites
-  // staged through Spark's writer). Hashing mirrors
-  // GraftLogStats.ndvSketches' BY-PHYSICAL-VALUE rule exactly —
-  // NdvWriteFoldSpec pins the two forms byte-identical — and covers
-  // the same leaf set: top-level primitives plus plain-struct leaves,
-  // keyed by dotted path.
+  // re-read form pays; it remains only for foreign files staged by
+  // other writers). Hashing mirrors GraftLogStats.ndvSketches'
+  // BY-PHYSICAL-VALUE rule exactly — NdvWriteFoldSpec pins the two
+  // forms byte-identical — and covers the same leaf set: top-level
+  // primitives plus plain-struct leaves, keyed by dotted path.
   // ------------------------------------------------------------------
-  private val ndvEnabled = conf.getBoolean("graft.log.ndv.enabled", true)
 
   private def leafHash(dt: DataType): Option[
       (org.apache.spark.sql.catalyst.expressions.SpecializedGetters,
@@ -983,8 +926,7 @@ class GraftLogDataWriter(staging: String, fileName: String,
     }
 
   private val ndvLeaves: Array[(String, (InternalRow, Array[Byte]) => Unit)] =
-    (if (ndvEnabled) collectLeaves(schema, "", identity)
-     else Seq.empty).toArray
+    collectLeaves(schema, "", identity).toArray
   // parallel arrays for the hot loop (no tuple deref per value)
   private val ndvLeafFolds: Array[(InternalRow, Array[Byte]) => Unit] =
     ndvLeaves.map(_._2)
@@ -1003,28 +945,26 @@ class GraftLogDataWriter(staging: String, fileName: String,
   private def closeCurrent(): Unit = if (currentWriter != null) {
     currentWriter.close()
     finishedFiles += currentFile
-    if (currentRegs != null) fileNdv(currentFile) = currentRegs
+    fileNdv(currentFile) = currentRegs
     currentRegs = null
     currentWriter = null
     currentDir = null
     currentFile = null
   }
 
-  private def writerFor(dir: String): ParquetWriter[Group] = {
+  private def writerFor(dir: String): OutputWriter = {
     if (currentWriter == null || dir != currentDir) {
       closeCurrent()
       val visit = dirVisits.getOrElse(dir, 0)
       dirVisits(dir) = visit + 1
       currentFile = fileFor(dir, visit)
-      currentWriter = GraftLogWrite.groupWriter(new Path(currentFile),
-        msg, new Configuration(conf))
+      currentWriter = encoder.open(currentFile, schema)
       currentDir = dir
-      if (ndvEnabled)
-        // every sketchable leaf gets a register set up front — an
-        // all-null column records an EMPTY sketch, exactly like the
-        // re-read form (byte-identity is spec-pinned)
-        currentRegs = Array.fill(ndvLeaves.length)(
-          GraftLogStats.NdvSketch.empty())
+      // every sketchable leaf gets a register set up front — an
+      // all-null column records an EMPTY sketch, exactly like the
+      // re-read form (byte-identity is spec-pinned)
+      currentRegs = Array.fill(ndvLeaves.length)(
+        GraftLogStats.NdvSketch.empty())
     }
     currentWriter
   }
@@ -1054,83 +994,16 @@ class GraftLogDataWriter(staging: String, fileName: String,
       GraftLogWrite.partitionSegment(partCols(pi), v)
     }.mkString("/")
 
-  /** One value (InternalRow field or ArrayData element — both are
-    * SpecializedGetters) into field `idx` of `g`, recursing for the
-    * standard nested encodings [[GraftLogWrite.toParquetType]] builds.
-    * Callers have already null-checked.
-    */
-  private def addValue(g: Group, idx: Int, dt: DataType,
-      src: org.apache.spark.sql.catalyst.expressions.SpecializedGetters,
-      i: Int): Unit = dt match {
-    case LongType | TimestampType | TimestampNTZType =>
-      g.add(idx, src.getLong(i))
-    case IntegerType | DateType => g.add(idx, src.getInt(i))
-    case DoubleType             => g.add(idx, src.getDouble(i))
-    case FloatType              => g.add(idx, src.getFloat(i))
-    case BooleanType            => g.add(idx, src.getBoolean(i))
-    case StringType             => g.add(idx,
-      Binary.fromConstantByteArray(src.getUTF8String(i).getBytes))
-    case BinaryType             => g.add(idx,
-      Binary.fromConstantByteArray(src.getBinary(i)))
-    case dec: DecimalType =>
-      val d = src.getDecimal(i, dec.precision, dec.scale)
-      if (dec.precision <= 9) g.add(idx, d.toUnscaledLong.toInt)
-      else if (dec.precision <= 18) g.add(idx, d.toUnscaledLong)
-      else g.add(idx, Binary.fromConstantByteArray(
-        GraftLogWrite.decimalFixedBytes(
-          d.toJavaBigDecimal.unscaledValue(),
-          GraftLogWrite.decimalFixedWidth(dec.precision))))
-    case ArrayType(et, _) =>
-      val outer = g.addGroup(idx) // the LIST wrapper group
-      val arr = src.getArray(i)
-      var j = 0
-      while (j < arr.numElements()) {
-        val entry = outer.addGroup(0) // repeated group "list"
-        if (!arr.isNullAt(j)) addValue(entry, 0, et, arr, j)
-        j += 1
-      }
-    case MapType(kt, vt, _) =>
-      val outer = g.addGroup(idx)
-      val m = src.getMap(i)
-      val keys = m.keyArray(); val vals = m.valueArray()
-      var j = 0
-      while (j < m.numElements()) {
-        val kv = outer.addGroup(0) // repeated group "key_value"
-        addValue(kv, 0, kt, keys, j)
-        if (!vals.isNullAt(j)) addValue(kv, 1, vt, vals, j)
-        j += 1
-      }
-    case st: StructType =>
-      val nested = g.addGroup(idx)
-      val struct = src.getStruct(i, st.length)
-      var j = 0
-      while (j < st.length) {
-        if (!struct.isNullAt(j)) addValue(nested, j, st(j).dataType,
-          struct, j)
-        j += 1
-      }
-    case other => throw new IllegalArgumentException(
-      s"graftlog write: unsupported type $other")
-  }
-
   override def write(row: InternalRow): Unit = {
     val w = writerFor(partitionDir(row))
-    val g = factory.newGroup()
-    var i = 0
-    while (i < schema.length) {
-      if (!row.isNullAt(i)) addValue(g, i, schema(i).dataType, row, i)
-      i += 1
+    val regs = currentRegs
+    val folds = ndvLeafFolds
+    var l = 0
+    while (l < folds.length) {
+      folds(l)(row, regs(l))
+      l += 1
     }
-    if (currentRegs != null) {
-      val regs = currentRegs
-      val folds = ndvLeafFolds
-      var l = 0
-      while (l < folds.length) {
-        folds(l)(row, regs(l))
-        l += 1
-      }
-    }
-    w.write(g)
+    w.write(row)
   }
 
   override def commit(): WriterCommitMessage = {
@@ -1138,14 +1011,10 @@ class GraftLogDataWriter(staging: String, fileName: String,
     val files = finishedFiles.toSeq.map { f =>
       // the sketches were folded as rows streamed through — hand them
       // to describeFile so it reads ONLY the footer (bounds/nulls),
-      // never the data pages. A leaf with no non-null value has no
-      // register entry, same as the re-read form skipping it; the
-      // kill switch hands an empty override (no sketches recorded).
-      val folded: Map[String, String] =
-        fileNdv.get(f).map { regs =>
-          ndvLeaves.indices.map(i => ndvLeaves(i)._1 ->
-            GraftLogStats.NdvSketch.toB64(regs(i))).toMap
-        }.getOrElse(Map.empty)
+      // never the data pages
+      val regs = fileNdv(f)
+      val folded = ndvLeaves.indices.map(i => ndvLeaves(i)._1 ->
+        GraftLogStats.NdvSketch.toB64(regs(i))).toMap
       val (rows, bytes, stats) =
         GraftLogStats.describeFile(conf, f, schema,
           ndvOverride = Some(folded))

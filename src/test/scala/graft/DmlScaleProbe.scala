@@ -158,11 +158,9 @@ object DmlScaleProbe {
 
     // ---- WIDE-TABLE variant: the deletion-vector bytes gap is
     // data-width-proportional (a sidecar is rows x 16 B regardless of
-    // column count) — measure it on a 50-column table, and the NDV
-    // write tax beside it (sketches re-read the just-written file once)
-    val wideTimes =
-      scala.collection.mutable.LinkedHashMap[Boolean, Seq[Double]]()
-    def mkWide(name: String, ndv: Boolean): String = {
+    // column count) — measure it on a 50-column table, with the load
+    // time beside it
+    def mkWide(name: String): String = {
       val root = s"$wh/$name"
       val wideCols = Seq(col("o_orderkey"),
         pmod(col("o_orderkey"), lit(8L)).as("bucket")) ++
@@ -170,38 +168,21 @@ object DmlScaleProbe {
           (col("o_totalprice") + i).as(s"m$i"))
       val ddl = "o_orderkey BIGINT, bucket BIGINT, " +
         (0 until 48).map(i => s"m$i DOUBLE").mkString(", ")
-      // the kill switch is a hadoop conf: route it through the session
-      // by its BARE key — runtime session confs reach newHadoopConf
-      // verbatim (the spark.hadoop. prefix is only stripped from the
-      // startup SparkConf, so the prefixed form never arrives)
-      if (!ndv) spark.conf.set("graft.log.ndv.enabled", "false")
-      val t0 = System.nanoTime()
-      try graft.Tables.orders(spark, d).select(wideCols: _*)
-        .write.format(graft.sources.GraftLog.Format)
-        .option("path", root).option("schema", ddl)
-        .option("partitionBy", "bucket")
-        .mode("append").save()
-      finally if (!ndv) spark.conf.unset("graft.log.ndv.enabled")
-      wideTimes(ndv) =
-        wideTimes.getOrElse(ndv, Nil) :+ (System.nanoTime() - t0) / 1e9
+      timed(name) {
+        graft.Tables.orders(spark, d).select(wideCols: _*)
+          .write.format(graft.sources.GraftLog.Format)
+          .option("path", root).option("schema", ddl)
+          .option("partitionBy", "bucket")
+          .mode("append").save()
+      }
       root
     }
     // the FIRST wide write in the JVM pays one-time costs (codegen of
-    // the 50-column projection, committer init) that are not the tax
-    // under measurement — burn them on an unmeasured warm-up, then
-    // measure each leg TWICE in alternating order and report mins, so
-    // neither leg systematically absorbs warm-up or a load spike
-    mkWide("wide_warm", ndv = true)
-    wideTimes.clear()
-    val wCow = mkWide("wide_cow", ndv = true)
-    val wMor = mkWide("wide_mor", ndv = false)
-    mkWide("wide_cow_b", ndv = true)
-    mkWide("wide_mor_b", ndv = false)
-    Seq(true -> "ndv", false -> "nondv").foreach { case (k, tag) =>
-      val rs = wideTimes(k)
-      println(f"[dmlscale] wide_load_$tag%s ${rs.min}%8.2f s " +
-        s"(runs ${rs.map(t => f"$t%.2f").mkString(" ")})")
-    }
+    // the 50-column projection, committer init) that are not under
+    // measurement — burn them on a warm-up first
+    mkWide("wide_warm")
+    val wCow = mkWide("wide_cow")
+    val wMor = mkWide("wide_mor")
     timed("wdel_cow") {
       GraftLogOps.deleteFromLog(spark, wCow, cond,
         GraftLogOps.DeleteModeCow)

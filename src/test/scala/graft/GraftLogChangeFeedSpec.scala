@@ -83,10 +83,12 @@ class GraftLogChangeFeedSpec extends SparkSpecBase {
   }
 
   /** Every row `df` emits after `filter`, drained to the end with
-    * `Trigger.AvailableNow`; and the batch count.
+    * `Trigger.AvailableNow` from `checkpoint` (a fresh one by default);
+    * and the batch count.
     */
-  private def drain(df: DataFrame,
-      filter: Option[Column]): (Seq[Row], Int) = {
+  private def drain(df: DataFrame, filter: Option[Column],
+      checkpoint: String = Files.createTempDirectory("graft_cf_ckp")
+        .toString): (Seq[Row], Int) = {
     val rows = mutable.ArrayBuffer[Row]()
     var batches = 0
     filter.fold(df)(df.filter).writeStream
@@ -95,8 +97,7 @@ class GraftLogChangeFeedSpec extends SparkSpecBase {
         rows ++= b.collect()
         ()
       }
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft_cf_ckp").toString)
+      .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .start().awaitTermination()
     (rows.toSeq, batches)
@@ -184,5 +185,43 @@ class GraftLogChangeFeedSpec extends SparkSpecBase {
     val streamed = refusal(intercept[StreamingQueryException](
       drain(tail, None)))
     assert(streamed === batch)
+  }
+
+  test("a checkpointed change feed that consumed a removing version " +
+      "restarts after the removed file is gone, and reads on") {
+    val root = Files.createTempDirectory("graft_cf_restart").toString
+    val ckp = Files.createTempDirectory("graft_cf_restart_ckp").toString
+    val conf = spark.sessionState.newHadoopConf()
+    append(root, 0, 200)   // v1
+    append(root, 200, 400) // v2
+    assert(drain(stream(root, cdc = true, None), None, ckp)._1.size === 400)
+    val v1File = GraftLog.liveEntries(conf, root, 1).head
+    GraftLogOps.deleteFromLog(spark, root, col("id") < 20L,
+      GraftLogOps.DeleteModeCow) // v3: removes v1's file
+    assert(!GraftLog.liveEntries(conf, root, 3).contains(v1File))
+    val (v3Rows, _) = drain(stream(root, cdc = true, None), None, ckp)
+    // copy-on-write: the removed file's rows leave, its kept rows return
+    assert(v3Rows.groupBy(_.getAs[String](GraftLog.ChangeTypeCol))
+      .map { case (k, rs) => k -> rs.size } ===
+      Map("delete" -> 200, "insert" -> 180))
+    val path = new org.apache.hadoop.fs.Path(s"$root/$v1File")
+    assert(path.getFileSystem(conf).delete(path, false))
+    append(root, 400, 450) // v4
+    val (resumed, batches) =
+      drain(stream(root, cdc = true, None), None, ckp)
+    assert(batches === 1)
+    assert(sorted(resumed) === sorted((400L until 450L).map(i =>
+      Row(i, i % 4, (i * 10).toDouble, "insert", 4L))))
+    // a range that still covers the removal refuses at planning, with
+    // the batch feed's message
+    def refusal(e: Throwable): String =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).collectFirst {
+        case i: IllegalStateException => i.getMessage
+      }.getOrElse(fail("no planning refusal in the failure", e))
+    val batch = refusal(intercept[Exception](feed(root).collect()))
+    assert(batch.contains(s"version 3 removes $v1File but the file is gone"),
+      batch)
+    assert(refusal(intercept[StreamingQueryException](
+      drain(stream(root, cdc = true, None), None))) === batch)
   }
 }

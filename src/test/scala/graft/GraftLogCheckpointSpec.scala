@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.types.StructType
 
-import graft.sources.{GraftLog, GraftLogFileCommit, GraftLogStats, GraftLogWrite}
+import graft.sources.{GraftLog, GraftLogWrite}
 
 /** Round-13 control plane: manifest CHECKPOINTS make snapshot
   * resolution O(checkpoint + tail) instead of O(versions) — the direct
@@ -23,7 +23,6 @@ class GraftLogCheckpointSpec extends SparkSpecBase {
 
   private val ddl = "id BIGINT"
   private val schema = StructType.fromDDL(ddl)
-  private val msg = GraftLogWrite.toMessageType(schema)
 
   /** One committed append of `ids` through the REAL two-phase commit
     * (staged part-file → claim → manifest+stats → marker), without a
@@ -32,16 +31,8 @@ class GraftLogCheckpointSpec extends SparkSpecBase {
     */
   private def append(root: String, ids: Seq[Long]): Int = {
     val staging = s"$root/data/w_spec_${java.util.UUID.randomUUID()}"
-    val f = s"$staging/part-0-0.parquet"
-    val w = GraftLogWrite.groupWriter(new Path(f), msg,
-      new org.apache.hadoop.conf.Configuration(conf))
-    val gf = new org.apache.parquet.example.data.simple
-      .SimpleGroupFactory(msg)
-    ids.foreach { i => val g = gf.newGroup(); g.add("id", i); w.write(g) }
-    w.close()
-    val (r, by, st) = GraftLogStats.describeFile(conf, f, schema)
     GraftLogWrite.commitStaged(conf, root, staging,
-      Seq(GraftLogFileCommit(f, r, by, st)), Some(schema))
+      Seq(stageIds(staging, ids)), Some(schema))
   }
 
   private def readIds(root: String, version: Option[Int] = None): Seq[Long] = {

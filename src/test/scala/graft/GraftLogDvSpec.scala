@@ -529,13 +529,13 @@ class GraftLogDvSpec extends SparkSpecBase {
     // NOTE: runtime session confs reach newHadoopConf VERBATIM — the
     // spark.hadoop. prefix is only stripped from the STARTUP SparkConf,
     // so hadoop-conf knobs are set by their bare key here
-    spark.conf.set("graft.log.write.rowgroup.bytes", "8192")
+    spark.conf.set("parquet.block.size", "8192")
     try spark.range(0, 40000)
       .selectExpr("id", "id * 7 AS v")
       .coalesce(1)
       .write.format("graftlog").option("path", root)
       .option("schema", "id BIGINT, v BIGINT").mode("append").save()
-    finally spark.conf.unset("graft.log.write.rowgroup.bytes")
+    finally spark.conf.unset("parquet.block.size")
     val dataFile = GraftLog.dataFiles(conf, root, 1).head
     val footer = ParquetFileReader.open(
       HadoopInputFile.fromPath(new Path(dataFile), conf))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-import graft.sources.{GraftLog, GraftLogScan, GraftLogStats, GraftLogWrite}
+import graft.sources.{GraftLog, GraftLogScan, GraftLogWrite}
 
 /** Round-12 connector surface: manifest-embedded file statistics (zero
   * plan-time data-file footer I/O), the append schema contract, the
@@ -370,9 +370,10 @@ class GraftLogManifestSpec extends SparkSpecBase {
     // ordering was bypassed) closes per run and suffixes revisited
     // directories — never two open writers, never a name collision
     val wRoot = Files.createTempDirectory("graft_manunsorted").toString
-    val writer = new graft.sources.GraftLogDataWriter(
-      s"$wRoot/_staging", "part-0-0.parquet",
-      StructType.fromDDL("id BIGINT, k INT"), Seq("k"), conf)
+    val writer = graft.sources.GraftLogWriterFactory(s"$wRoot/_staging",
+      StructType.fromDDL("id BIGINT, k INT"), Seq("k"),
+      new org.apache.spark.util.SerializableConfiguration(conf))
+      .createWriter(0, 0)
     (0 until 20).foreach { i =>
       val row = new org.apache.spark.sql.catalyst.expressions
         .GenericInternalRow(2)
@@ -586,7 +587,6 @@ class GraftLogManifestSpec extends SparkSpecBase {
     val root = Files.createTempDirectory("graft_manepoch").toString
     val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(conf)
     val ddl = StructType.fromDDL("id BIGINT")
-    val msg = GraftLogWrite.toMessageType(ddl)
     val sink = new graft.sources.GraftLogStreamingWrite(root, ddl, Nil,
       "q", new org.apache.spark.util.SerializableConfiguration(conf))
     // files stage where the sink's OWN factory would put them (the
@@ -597,19 +597,9 @@ class GraftLogManifestSpec extends SparkSpecBase {
       .createStreamingWriterFactory(null)
       .asInstanceOf[graft.sources.GraftLogStreamingWriterFactory]
       .stagingBase
-    def stage(epoch: Long, ids: Seq[Long]): graft.sources.GraftLogCommitMessage = {
-      val f = s"${stagingBase}_$epoch/part-0-0-" +
-        s"${java.util.UUID.randomUUID().toString.take(8)}.parquet"
-      val w = GraftLogWrite.groupWriter(new org.apache.hadoop.fs.Path(f),
-        msg, new org.apache.hadoop.conf.Configuration(conf))
-      val gf = new org.apache.parquet.example.data.simple
-        .SimpleGroupFactory(msg)
-      ids.foreach { i => val g = gf.newGroup(); g.add("id", i); w.write(g) }
-      w.close()
-      val (r, by, st) = GraftLogStats.describeFile(conf, f, ddl)
+    def stage(epoch: Long, ids: Seq[Long]) =
       graft.sources.GraftLogCommitMessage(
-        Seq(graft.sources.GraftLogFileCommit(f, r, by, st)))
-    }
+        Seq(stageIds(s"${stagingBase}_$epoch", ids)))
     // TORN: a marker claiming v1 exists but v1 was never committed
     val marker = new org.apache.hadoop.fs.Path(s"$root/_log/_epoch_q_7")
     fs.mkdirs(new org.apache.hadoop.fs.Path(s"$root/_log"))
@@ -638,19 +628,9 @@ class GraftLogManifestSpec extends SparkSpecBase {
     val base2 = sink2.createStreamingWriterFactory(null)
       .asInstanceOf[graft.sources.GraftLogStreamingWriterFactory]
       .stagingBase
-    def stage2(epoch: Long, ids: Seq[Long]) = {
-      val f = s"${base2}_$epoch/part-0-0-" +
-        s"${java.util.UUID.randomUUID().toString.take(8)}.parquet"
-      val w = GraftLogWrite.groupWriter(new org.apache.hadoop.fs.Path(f),
-        msg, new org.apache.hadoop.conf.Configuration(conf))
-      val gf = new org.apache.parquet.example.data.simple
-        .SimpleGroupFactory(msg)
-      ids.foreach { i => val g = gf.newGroup(); g.add("id", i); w.write(g) }
-      w.close()
-      val (r, by, st) = GraftLogStats.describeFile(conf, f, ddl)
+    def stage2(epoch: Long, ids: Seq[Long]) =
       graft.sources.GraftLogCommitMessage(
-        Seq(graft.sources.GraftLogFileCommit(f, r, by, st)))
-    }
+        Seq(stageIds(s"${base2}_$epoch", ids)))
     sink2.commit(7L, Array(stage2(7, Seq(1L, 2L, 3L))))
     assert(GraftLog.latestVersion(conf, root) === 1)
     assert(spark.read.format("graftlog").option("path", root).load()

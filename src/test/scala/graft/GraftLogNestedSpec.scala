@@ -121,7 +121,7 @@ class GraftLogNestedSpec extends SparkSpecBase {
       "unpushed twin, and a file predating the leaf drops it per-file") {
     val root = Files.createTempDirectory("graft_nestpush").toString
     // one file, many row groups, monotone nested score
-    spark.conf.set("graft.log.write.rowgroup.bytes", "8192")
+    spark.conf.set("parquet.block.size", "8192")
     try spark.range(0, 40000)
       .selectExpr("id",
         "named_struct('score', CAST(id AS DOUBLE), " +
@@ -131,7 +131,7 @@ class GraftLogNestedSpec extends SparkSpecBase {
       .option("schema",
         "id BIGINT, meta STRUCT<score: DOUBLE, tag: STRING>")
       .mode("append").save()
-    finally spark.conf.unset("graft.log.write.rowgroup.bytes")
+    finally spark.conf.unset("parquet.block.size")
     val df = spark.read.format("graftlog").option("path", root).load()
     val want = df.collect().filter(_.getStruct(1).getDouble(0) >= 39000.0)
       .map(_.toSeq).sortBy(_.toString)

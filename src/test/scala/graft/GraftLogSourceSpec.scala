@@ -307,33 +307,18 @@ class GraftLogSourceSpec extends SparkSpecBase {
     import graft.sources.GraftLogWrite
     val root = Files.createTempDirectory("graft_logcommit").toString
     val staging = s"$root/data/w_test_commit"
-    val msg = GraftLogWrite.toMessageType(
-      org.apache.spark.sql.types.StructType.fromDDL("id BIGINT"))
     val conf = spark.sessionState.newHadoopConf()
-    def stage(name: String, ids: Seq[Long]): String = {
-      val p = s"$staging/$name"
-      val w = GraftLogWrite.groupWriter(
-        new org.apache.hadoop.fs.Path(p), msg,
-        new org.apache.hadoop.conf.Configuration(conf))
-      val gf = new org.apache.parquet.example.data.simple
-        .SimpleGroupFactory(msg)
-      ids.foreach { i => val g = gf.newGroup(); g.add("id", i); w.write(g) }
-      w.close(); p
-    }
-    val winner = stage("part-0-1.parquet", Seq(1L, 2L, 3L))
-    stage("part-0-2.parquet", Seq(1L, 2L, 3L)) // retried loser attempt
+    val winner = stageIds(staging, Seq(1L, 2L, 3L))
+    stageIds(staging, Seq(1L, 2L, 3L)) // retried loser attempt
     val ddl = org.apache.spark.sql.types.StructType.fromDDL("id BIGINT")
-    val (wRows, wBytes, wStats) =
-      graft.sources.GraftLogStats.describeFile(conf, winner, ddl)
-    val v = GraftLogWrite.commitStaged(conf, root, staging,
-      Seq(graft.sources.GraftLogFileCommit(winner, wRows, wBytes, wStats)),
+    val v = GraftLogWrite.commitStaged(conf, root, staging, Seq(winner),
       Some(ddl))
     assert(v === 1)
     val got = spark.read.format("graftlog").option("path", root).load()
       .collect().map(_.getLong(0)).sorted
     assert(got.toSeq === Seq(1L, 2L, 3L),
       s"loser attempt published: ${got.mkString(",")}")
-    assert(GraftLog.dataFiles(conf, root, 1) === Seq(winner),
+    assert(GraftLog.dataFiles(conf, root, 1) === Seq(winner.file),
       "the manifest references a file the commit did not name")
   }
 

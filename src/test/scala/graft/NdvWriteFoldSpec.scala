@@ -10,9 +10,9 @@ import org.apache.spark.sql.functions._
 import graft.sources.{GraftLog, GraftLogStats}
 
 /** The NDV sketches the manifest carries are folded AT WRITE (hashed as
-  * rows stream through the connector writer — zero extra I/O), with
-  * the re-read form kept as the fallback for Spark-staged rewrites.
-  * Pinned here:
+  * rows stream through the connector's one writer, which every data
+  * file the engine writes goes through — zero extra I/O); the re-read
+  * form serves foreign files staged by other writers only. Pinned here:
   *
   *  - the folded sketches are BYTE-IDENTICAL to what re-reading the
   *    file computes — same leaves (struct leaves included, dotted

@@ -33,6 +33,22 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
     files.map(_.file.stripPrefix(s"$root/"))
   }
 
+  /** `ids` as one `id BIGINT` part-file under `staging`, written
+    * job-free through the connector's own writer; returns the file with
+    * the statistics its writer recorded.
+    */
+  def stageIds(staging: String, ids: Seq[Long])
+      : graft.sources.GraftLogFileCommit = {
+    val w = graft.sources.GraftLogWriterFactory(staging,
+      StructType.fromDDL("id BIGINT"), Nil,
+      new org.apache.spark.util.SerializableConfiguration(
+        spark.sessionState.newHadoopConf())).createWriter(0, 0)
+    ids.foreach(i => w.write(org.apache.spark.sql.catalyst.InternalRow(i)))
+    val Seq(file) = w.commit()
+      .asInstanceOf[graft.sources.GraftLogCommitMessage].files
+    file
+  }
+
   /** `body`'s result with the records Spark's tasks report reading
     * while it runs (`inputMetrics.recordsRead`, summed over tasks).
     */

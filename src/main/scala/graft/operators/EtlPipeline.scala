@@ -13,10 +13,11 @@ import graft.streaming.Streams
   * to this library by calling [[processFile]] where the Lambda fired.
   *
   * The streaming form of the same topology (many files, incremental
-  * target) is `Streams.fileEtlPipeline` / `Streams.fileUpsertPipeline`;
-  * this batch form is the single-file unit of work the reference
-  * processes per invocation, which is why the JSON-array document output
-  * is bounded by design.
+  * target) is `Streams.fileEtlPipeline` / `Streams.fileUpsertPipeline`,
+  * the latter merging each micro-batch into a `graftlog` table as one
+  * atomic version; this batch form is the single-file unit of work the
+  * reference processes per invocation, which is why the JSON-array
+  * document output is bounded by design.
   */
 object EtlPipeline {
 

@@ -438,10 +438,9 @@ object Maintenance {
 
   /** The bucketed events layout with the forget cohort ALREADY erased —
     * built once per JVM: write the full layout, then re-write ONLY the
-    * buckets containing forgotten rows via dynamic partition overwrite
-    * (untouched bucket files are never opened or replaced — spec-pinned
-    * by modification time in MaintenanceSpec). The touched-bucket list
-    * is a ≤ [[ForgetBuckets]]-row collect — the catalog-read pattern.
+    * buckets containing forgotten rows (untouched bucket files are never
+    * opened or replaced). The touched-bucket list is a
+    * ≤ [[ForgetBuckets]]-row collect — the catalog-read pattern.
     */
   private[graft] def forgetLayoutDir(s: SparkSession, d: String): String = {
     val dir = SetupOnce.runtimeDir(d, "events_forget_layout")
@@ -453,31 +452,25 @@ object Maintenance {
       val touched = withB.filter(forget).select(bucket).distinct()
         .collect().map(_.getLong(0)).sorted
       val (withB2, _, forget2) = forgetParts(s, d)
-      val survivors = withB2.filter(!forget2 &&
-          col("bucket").isin(touched: _*))
+      val staging = s"$dir/_erase"
+      withB2.filter(!forget2 && col("bucket").isin(touched: _*))
         .drop("umax", "forget")
-      val prev = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try survivors
         .repartition(col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(dir)
-      finally prev match {
-        case Some(v) => s.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => s.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-      // dynamic overwrite's blind spot: a bucket whose EVERY row is
-      // forgotten produces zero survivor rows, so no partition is
-      // written and the old files silently survive — exactly the leak a
-      // privacy delete cannot have. Drop those partition dirs explicitly.
-      // (A table format runs the same two steps under one commit; the
-      // streaming sink's marker protocol shows the recovery shape.)
-      val surviving = survivors.select(col("bucket")).distinct()
-        .collect().map(_.getLong(0)).toSet
+        .write.mode("overwrite").partitionBy("bucket").parquet(staging)
+      // each touched bucket's directory is replaced by its survivors' —
+      // or just removed when every row was forgotten: a fully-erased
+      // bucket writes no survivor directory, and leaving its old files
+      // would be exactly the leak a privacy delete cannot have
       val fs = new org.apache.hadoop.fs.Path(dir)
         .getFileSystem(s.sessionState.newHadoopConf())
-      touched.filterNot(surviving).foreach { b =>
-        fs.delete(new org.apache.hadoop.fs.Path(dir, s"bucket=$b"), true)
+      touched.foreach { b =>
+        val live = new org.apache.hadoop.fs.Path(dir, s"bucket=$b")
+        val kept = new org.apache.hadoop.fs.Path(staging, s"bucket=$b")
+        fs.delete(live, true)
+        if (fs.exists(kept))
+          require(fs.rename(kept, live), s"rename $kept -> $live failed")
       }
+      fs.delete(new org.apache.hadoop.fs.Path(staging), true)
     }
     dir
   }

@@ -851,24 +851,38 @@ object GraftLogOps {
     (rows, dvMeta.map(m => relByNorm(m._1)).toSeq)
   }
 
-  /** Stage a DataFrame's rows under `staging/<sub>` through the
-    * connector's own writer ([[GraftLogWriterFactory]]) as ONE job:
-    * part-files under PHYSICAL names (a positional rename; the manifest
-    * records the LOGICAL schema), each described off its own footer
-    * with its NDV folded at write. A task with no rows writes no file.
-    * The CHANGE-FEED class rides in the stats JSON ("cdc" key): a MoR
-    * update/merge tags its transformed-row files update_postimage so
-    * the feed can tell moves from inserts.
+  /** Stage a DataFrame's rows under `staging/<sub>` through
+    * [[writeFiles]]. The CHANGE-FEED class rides in the stats JSON
+    * ("cdc" key): a MoR update/merge tags its transformed-row files
+    * update_postimage so the feed can tell moves from inserts.
     */
   private def stageFiles(snap: Snapshot, df: DataFrame, staging: String,
       sub: String, cdcClass: Option[String] = None)
-      : Seq[GraftLogFileCommit] = {
-    val factory = GraftLogWriterFactory(s"$staging/$sub", snap.physSchema,
-      Nil, new org.apache.spark.util.SerializableConfiguration(snap.conf))
-    val qe = df.select(renamed(df.schema, snap.physSchema): _*)
-      .queryExecution
+      : Seq[GraftLogFileCommit] =
+    writeFiles(snap.conf, snap.physSchema, df, s"$staging/$sub", sub)
+      .map { fc =>
+        cdcClass.fold(fc) { c =>
+          import org.json4s._
+          import org.json4s.jackson.JsonMethods
+          val base = fc.stats.map(JsonMethods.parse(_)).getOrElse(JObject())
+          fc.copy(stats = Some(JsonMethods.compact(JsonMethods.render(
+            base.merge(JObject("cdc" -> JString(c)))))))
+        }
+      }
+
+  /** Write a DataFrame's rows under `dir` through the connector's own
+    * writer ([[GraftLogWriterFactory]]) as ONE job: part-files under
+    * PHYSICAL names (a positional rename; the manifest records the
+    * LOGICAL schema), each described off its own footer with its NDV
+    * folded at write. A task with no rows writes no file.
+    */
+  private def writeFiles(conf: Configuration, physSchema: StructType,
+      df: DataFrame, dir: String, what: String): Seq[GraftLogFileCommit] = {
+    val factory = GraftLogWriterFactory(dir, physSchema, Nil,
+      new org.apache.spark.util.SerializableConfiguration(conf))
+    val qe = df.select(renamed(df.schema, physSchema): _*).queryExecution
     val written = SQLExecution.withNewExecutionId(qe,
-        Some(s"graftlog stage $sub")) {
+        Some(s"graftlog stage $what")) {
       qe.toRdd.mapPartitionsWithIndex { (i, rows) =>
         val w = factory.createWriter(i, TaskContext.get().taskAttemptId())
         try {
@@ -877,13 +891,52 @@ object GraftLogOps {
         } catch { case t: Throwable => w.abort(); throw t }
       }.collect()
     }
-    written.toSeq.flatMap(_.files).map { fc =>
-      cdcClass.fold(fc) { c =>
-        import org.json4s._
-        import org.json4s.jackson.JsonMethods
-        val base = fc.stats.map(JsonMethods.parse(_)).getOrElse(JObject())
-        fc.copy(stats = Some(JsonMethods.compact(JsonMethods.render(
-          base.merge(JObject("cdc" -> JString(c)))))))
+    written.toSeq.flatMap(_.files)
+  }
+
+  /** Commit one `foreachBatch` micro-batch of a streaming state sink as
+    * ONE version of the log table at `root`, at most once per (sink,
+    * batch id) — the epoch-marker protocol of the streaming sink
+    * ([[GraftLogWrite.commitEpoch]], writer = `sink`, epoch =
+    * `batchId`), so a replayed batch id returns before any job runs and
+    * a batch whose commit was torn is redone from the last committed
+    * state. `build` maps the committed state (an empty frame of
+    * `schema` before the first commit) to the rows this batch commits:
+    * appended to the state, or, with `replace`, replacing it (one
+    * remove + add of every live file). The rows must carry `schema`'s
+    * names and types in order.
+    */
+  private[graft] def commitBatch(s: SparkSession, root: String,
+      sink: String, batchId: Long, schema: StructType, replace: Boolean)(
+      build: DataFrame => DataFrame): Unit = {
+    val conf = s.sessionState.newHadoopConf()
+    GraftLogWrite.commitEpoch(conf, root, sink, batchId) { beforeOk =>
+      val latest = GraftLog.latestVersion(conf, root)
+      val state =
+        if (latest == 0) s.createDataFrame(
+          java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
+        else s.read.format(GraftLog.Format).option("path", root)
+          .option("version", latest).load()
+      val rows = build(state)
+      require(GraftLog.asNullable(rows.schema).fields
+          .map(f => (f.name, f.dataType)).toSeq ==
+        GraftLog.asNullable(schema).fields.map(f => (f.name, f.dataType))
+          .toSeq,
+        s"state sink $sink: rows [${rows.schema.toDDL}] do not match its " +
+          s"table schema [${schema.toDDL}]")
+      val staging = s"$root/data/w_${sink}_${java.util.UUID.randomUUID()}"
+      try {
+        GraftLogWrite.commitStaged(conf, root, staging,
+          writeFiles(conf, schema, rows, staging, sink), Some(schema),
+          beforeOk = beforeOk,
+          removes =
+            if (replace && latest > 0) GraftLog.liveEntries(conf, root, latest)
+            else Nil,
+          op = Some(if (replace) "overwrite" else "append"))
+      } catch { case NonFatal(e) =>
+        val p = new Path(staging)
+        p.getFileSystem(conf).delete(p, true)
+        throw e
       }
     }
   }

@@ -9,6 +9,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.ParquetFileWriter
 import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupWriteSupport}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopOutputFile
@@ -65,15 +66,19 @@ import org.apache.spark.util.SerializableConfiguration
   * executor that just wrote the file, instead of serially by the
   * driver at every plan.
   *
-  * Streaming exactly-once: the per-(query, epoch) marker
-  * `_log/_epoch_<queryId>_<epochId>` records the CLAIMED VERSION and is
+  * Streaming exactly-once: the per-(writer, epoch) marker
+  * `_log/_epoch_<writerId>_<epochId>` records the CLAIMED VERSION and is
   * written BETWEEN the manifest and the `_ok` marker, inside the
   * two-phase window — so a replayed epoch distinguishes "version
   * committed, checkpoint lagged" (marker + `_ok`: drop the replay)
   * from "crashed mid-commit" (marker without `_ok`: the version is
   * torn/invisible — clear the marker and redo). A marker written AFTER
   * `_ok` (the r11 shape) left a crash window where the replay
-  * re-committed the same rows as a duplicate version.
+  * re-committed the same rows as a duplicate version. One function,
+  * [[GraftLogWrite.commitEpoch]], runs this protocol for both callers:
+  * this streaming sink (writer = its query id) and the `foreachBatch`
+  * state sinks of `graft.streaming.Streams` (writer = the sink's name,
+  * epoch = the micro-batch id, through [[GraftLogOps.commitBatch]]).
   *
   * [[GraftLogWrite.commitStaged]] is the ONE commit path: appends,
   * row-level rewrites, compaction, catalog DDL and the maintenance
@@ -194,6 +199,9 @@ object GraftLogWrite {
     * low-level writer behind version manifests AND checkpoints. The
     * fixed 5-column shape is written with parquet-hadoop's example
     * writer, the mirror of the `GroupReadSupport` that reads it back.
+    * The file is overwritten: a manifest is only ever written under its
+    * version's claim, and a torn version (no `_ok`) whose stale claim
+    * was recovered leaves its manifest behind for the redo to replace.
     */
   private[graft] def writeManifestRows(conf: Configuration, path: Path,
       rows: Seq[GraftLog.ManifestRow]): Unit = {
@@ -204,6 +212,7 @@ object GraftLogWrite {
       .withConf(c)
       .withCompressionCodec(CompressionCodecName.SNAPPY)
       .withType(msg)
+      .withWriteMode(ParquetFileWriter.Mode.OVERWRITE)
       .build()
     try {
       val gf = new SimpleGroupFactory(msg)
@@ -465,6 +474,39 @@ object GraftLogWrite {
     n
   }
 
+  /** Commit one epoch of one writer at most once: `commit` runs the
+    * version commit and hands its `beforeOk` the hook that writes the
+    * `_log/_epoch_<writerId>_<epochId>` marker inside the torn-commit
+    * window. A marker whose version carries `_ok` means the epoch is
+    * already in the log: nothing runs and the result is false. A marker
+    * without `_ok` names a torn version: it is cleared and the commit
+    * redone (a stale claim blocks loudly with its documented recovery).
+    * The marker's content is the version number, written then renamed,
+    * so a crash can never leave a partial number that would point the
+    * replay check at the wrong, long-committed version.
+    */
+  private[graft] def commitEpoch(conf: Configuration, root: String,
+      writerId: String, epochId: Long)(commit: (Int => Unit) => Int)
+      : Boolean = {
+    val fs = new Path(root).getFileSystem(conf)
+    val marker = new Path(s"$root/_log/_epoch_${writerId}_$epochId")
+    if (fs.exists(marker)) {
+      val in = fs.open(marker)
+      val v = try scala.io.Source.fromInputStream(in, "UTF-8")
+        .mkString.trim.toInt finally in.close()
+      if (fs.exists(new Path(s"$root/_log/v$v._ok"))) return false
+      fs.delete(marker, false)
+    }
+    commit { n =>
+      val tmp = new Path(s"$marker.tmp")
+      val out = fs.create(tmp, true)
+      try out.write(n.toString.getBytes("UTF-8")) finally out.close()
+      require(fs.rename(tmp, marker),
+        s"graftlog write: rename $tmp -> $marker failed")
+    }
+    true
+  }
+
   /** Hive-style partition path segment for one column value. Values
     * render deterministically (dates as ISO dates, timestamps as
     * micros) and escape every byte outside the portable set — the
@@ -660,9 +702,6 @@ class GraftLogStreamingWrite(root: String, schema: StructType,
   private def staging(epochId: Long) =
     s"$root/data/w_${queryId}_${attemptId}_$epochId"
 
-  private def epochMarker(epochId: Long) =
-    new Path(s"$root/_log/_epoch_${queryId}_$epochId")
-
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory =
     GraftLogStreamingWriterFactory(s"$root/data/w_${queryId}_$attemptId",
@@ -684,42 +723,16 @@ class GraftLogStreamingWrite(root: String, schema: StructType,
   override def commit(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = {
     val c = conf.value
-    val fs = new Path(root).getFileSystem(c)
-    val marker = epochMarker(epochId)
-    if (fs.exists(marker)) {
-      // the marker names the version this epoch claimed (written
-      // atomically, so always a number); _ok decides whether that
-      // commit completed
-      val in = fs.open(marker)
-      val v = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .mkString.trim.toInt finally in.close()
-      if (fs.exists(new Path(s"$root/_log/v$v._ok"))) {
-        // replayed epoch (crash between version commit and checkpoint
-        // advance): the version is in the log — drop the replay
-        dropReplay(fs, messages)
-        return
-      }
-      // crashed between marker and _ok: the version is torn
-      // (invisible); clear the marker and redo the commit (the torn
-      // claim, if still present, blocks loudly with its documented
-      // recovery)
-      fs.delete(marker, false)
+    val committed = GraftLogWrite.commitEpoch(c, root, queryId, epochId) {
+      beforeOk =>
+        GraftLogWrite.commitStaged(c, root, staging(epochId),
+          messages.flatMap(_.asInstanceOf[GraftLogCommitMessage].files).toSeq,
+          Some(Option(recordSchema).getOrElse(schema)),
+          op = Some("append"), beforeOk = beforeOk)
     }
-    GraftLogWrite.commitStaged(c, root, staging(epochId),
-      messages.flatMap(_.asInstanceOf[GraftLogCommitMessage].files).toSeq,
-      Some(Option(recordSchema).getOrElse(schema)),
-      op = Some("append"),
-      beforeOk = { n =>
-        // atomic content: write-then-rename, so a crash can never leave
-        // a PARTIAL version number (a truncated "1" of "12" would make
-        // the replay check consult the wrong, long-committed version
-        // and silently drop this epoch's rows)
-        val tmp = new Path(s"${marker.toString}.tmp")
-        val out = fs.create(tmp, true)
-        try out.write(n.toString.getBytes("UTF-8")) finally out.close()
-        require(fs.rename(tmp, marker),
-          s"graftlog write: rename $tmp -> $marker failed")
-      })
+    // replayed epoch (crash between version commit and checkpoint
+    // advance): the version is in the log — drop the replay
+    if (!committed) dropReplay(new Path(root).getFileSystem(c), messages)
   }
 
   override def abort(epochId: Long,

@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateT
 import org.apache.spark.sql.types._
 
 import graft.operators.RefTransforms
-import graft.sources.JdbcUpsert
+import graft.sources.{GraftLog, GraftLogOps, JdbcUpsert}
 
 /** Structured Streaming re-expression of the reference's streaming model
   * (SURVEY.md §2k): the reference is event-per-file micro-batch — an S3
@@ -26,6 +26,12 @@ import graft.sources.JdbcUpsert
   * At scale the same topology runs continuously (ProcessingTime trigger):
   * state lives in the state store keyed by group, watermarks bound it, and
   * the sink is exactly-once via checkpoint + idempotent file commits.
+  *
+  * The `foreachBatch` state sinks (MV, SCD2, the ingest gates, as-of
+  * enrichment, uniques) keep their state in `graftlog` tables and commit
+  * each micro-batch as one version through
+  * [[graft.sources.GraftLogOps.commitBatch]], whose per-(sink, batch id)
+  * marker makes a replayed batch id a no-op.
   */
 object Streams {
 
@@ -112,23 +118,22 @@ object Streams {
       .select(col("user_id"), col("session_window.start").as("session_start"),
         col("n_events"))
 
-  /** Hash buckets in the upsert target layout (`bucket=N/` partitions).
-    * Sized so per-bucket rewrite I/O stays bounded: at scale you pick
-    * table-size / buckets ≈ a few hundred MB; a batch then rewrites only
-    * `touched-buckets × that`, not O(table).
+  /** Hash buckets in the upsert target layout (`bucket=N/` partitions
+    * of the table's first commit).
     */
   val UpsertBuckets = 16
 
   /** The reference's real topology, E1 end-to-end: files land → per-batch
     * upsert into the target table (lambda_function.py's INSERT..ON CONFLICT,
     * SURVEY §2b K3) — expressed as a foreachBatch sink running the
-    * set-oriented last-writer-wins merge INCREMENTALLY. The target is
-    * hash-bucketed by `transaction_id` into `bucket=N/` partitions; each
-    * micro-batch reads back only the buckets its keys hash into (partition
-    * pruning on the bucket column), merges LWW, and dynamic partition
-    * overwrite replaces exactly those buckets — untouched bucket files are
-    * never rewritten. Same shape a Delta/Iceberg MERGE compiles to; I/O per
-    * batch is O(touched buckets), not O(table).
+    * set-oriented last-writer-wins merge INCREMENTALLY. The target is a
+    * `graftlog` table hash-bucketed by `transaction_id` into `bucket=N/`
+    * partitions by its first commit; every later micro-batch lands through
+    * [[graft.sources.GraftLogOps.mergeIntoLog]], one atomic version that
+    * rewrites only the files whose key statistics may hold a batch key —
+    * untouched files stay live as they are. I/O per batch is O(touched
+    * files), not O(table), and a reader sees the table before or after a
+    * batch, never between.
     *
     * `trigger` defaults to drain-and-stop; pass `Trigger.ProcessingTime`
     * for the run-forever deployment — same topology, same checkpoint
@@ -138,150 +143,103 @@ object Streams {
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions.row_number
     val raw = spark.readStream
       .schema(transactionSchema)
       .option("header", "true")
       .csv(inDir)
-    val bucketOf = pmod(xxhash64(col("transaction_id")),
-      lit(UpsertBuckets.toLong))
     RefTransforms.transformTransactionsWithLineage(raw).writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // materialize the batch once: touched-bucket discovery and the
-        // merge both read it, and without this each would re-scan the
-        // batch's source files
-        val bucketed = batch.withColumn("bucket", bucketOf).localCheckpoint()
-        // target detection through the Hadoop filesystem of the PATH (not
-        // java.io.File, which silently answers "absent" for hdfs://|s3a://
-        // targets — on a remote warehouse that would make every batch
-        // treat the table as empty and dynamic-overwrite away previously
-        // merged rows), and guarded for a non-directory path
-        val targetPath = new org.apache.hadoop.fs.Path(targetDir)
-        val fs = targetPath.getFileSystem(
-          spark.sessionState.newHadoopConf())
-        val hasData = fs.exists(targetPath) &&
-          fs.getFileStatus(targetPath).isDirectory &&
-          fs.listStatus(targetPath)
-            .exists(_.getPath.getName.startsWith("bucket="))
-        // recompute `bucket` from the key instead of trusting partition-
-        // column type inference; the isin filter prunes to touched
-        // partition directories before any file is opened
-        val existing =
-          if (hasData) {
-            val touched = bucketed.select(col("bucket")).distinct()
-              .collect().map(_.getLong(0)) // bounded by UpsertBuckets
-            spark.read.parquet(targetDir)
-              .filter(col("bucket").isin(touched: _*))
-              .drop("bucket").withColumn("bucket", bucketOf)
-          } else bucketed.limit(0)
-        // batch beats target (__priority), and WITHIN the batch — one
-        // AvailableNow trigger can drain a file and its correction
-        // together — ties break on THE deterministic full-row hash
-        // JdbcUpsert.upsert uses (one shared null-pattern-aware
+        // the merge replaces a stored key with the batch's row; WITHIN
+        // the batch — one AvailableNow trigger can drain a file and its
+        // correction together — ties break on THE deterministic full-row
+        // hash JdbcUpsert.upsert uses (one shared null-pattern-aware
         // definition), never on partition/scan order: a replayed batch
-        // re-picks the same winner, which is what makes the
-        // checkpointed merge idempotent in fact, not just in shape
+        // re-picks the same winner and re-merges the same rows, which is
+        // what makes the checkpointed merge idempotent in fact, not just
+        // in shape
         val rowHash = JdbcUpsert.fullRowHash(batch.columns.toSeq)
-        val w = Window.partitionBy(col("transaction_id"))
-          .orderBy(col("__priority").desc, rowHash.desc)
-        val merged = bucketed.withColumn("__priority", lit(1))
-          .unionByName(existing.withColumn("__priority", lit(0)))
-          .withColumn("__rn", row_number().over(w))
+        val winners = batch
+          .withColumn("__rn", row_number().over(
+            Window.partitionBy(col("transaction_id")).orderBy(rowHash.desc)))
           .filter(col("__rn") === 1)
-          .drop("__priority", "__rn")
-          // materialize before the write: the merge reads the same bucket
-          // files dynamic overwrite is about to replace
-          .localCheckpoint()
-        merged.write
-          .partitionBy("bucket")
-          .option("partitionOverwriteMode", "dynamic")
-          .mode("overwrite")
-          .parquet(targetDir)
+          .drop("__rn")
+          .withColumn("bucket", pmod(xxhash64(col("transaction_id")),
+            lit(UpsertBuckets.toLong)))
+        if (GraftLog.latestVersion(spark.sessionState.newHadoopConf(),
+            targetDir) == 0)
+          winners.write.format(GraftLog.Format)
+            .option("schema", winners.schema.toDDL)
+            .option("partitionBy", "bucket")
+            .mode("append").save(targetDir)
+        else {
+          GraftLogOps.mergeIntoLog(spark, targetDir, winners,
+            Seq("transaction_id"))
+          ()
+        }
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .start()
   }
 
+  /** The committed state of a sink's `graftlog` table; refuses loudly
+    * (naming `what`) when no batch ever committed under `stateDir`.
+    */
+  private def committed(spark: SparkSession, stateDir: String,
+      what: String): DataFrame = {
+    if (GraftLog.latestVersion(spark.sessionState.newHadoopConf(),
+        stateDir) == 0)
+      sys.error(s"no committed $what under $stateDir")
+    spark.read.format(GraftLog.Format).option("path", stateDir).load()
+  }
+
+  private val MvStateSchema = StructType.fromDDL("category STRING, " +
+    "n BIGINT, sum_cents BIGINT, min_cents BIGINT, max_cents BIGINT")
+
   /** Applies ONE micro-batch to the stored MV summary state — exposed so
-    * the spec can replay a batch id and pin idempotence. The state layout
-    * under `stateDir` is versioned: `v<id>/` summary parquets plus
-    * zero-byte `applied_batch_<id>` commit markers, and the LIVE state is
-    * the `v` dir of the highest committed id. Additive aggregate state is
-    * NOT naturally idempotent under foreachBatch's at-least-once replay
-    * (a crash between sink write and checkpoint commit re-delivers the
-    * batch id), and a two-step write-then-mark over a single `data/` dir
-    * would still double-count when the crash lands BETWEEN the steps —
-    * so each batch writes a fresh version (never touching the live one)
-    * and the single-file marker create is the atomic commit point, the
-    * transaction-log entry a table format provides. A crash before the
-    * marker leaves an orphan `v` dir that the replay simply overwrites;
-    * a crash after it makes the replay a no-op. Superseded versions are
-    * cheap |groups|-row files (vacuuming them is routine housekeeping,
-    * out of scope here).
+    * the spec can replay a batch id and pin idempotence. The state is a
+    * `graftlog` table under `stateDir`, and each batch commits the merged
+    * summary as one version that replaces the previous one (remove +
+    * add) through [[graft.sources.GraftLogOps.commitBatch]]. Additive
+    * aggregate state is NOT naturally idempotent under foreachBatch's
+    * at-least-once replay (a crash between sink write and checkpoint
+    * commit re-delivers the batch id), so the batch id's marker is
+    * written inside the version commit: a replayed id whose version
+    * committed is a no-op, and one whose commit was torn merges again
+    * from the last committed version. The state is |groups| rows, and
+    * `GraftLogOps.vacuumLog` reclaims the superseded versions' files.
     */
   private[graft] def applyMvBatch(batch: DataFrame, batchId: Long,
-      stateDir: String): Unit = {
-    val spark = batch.sparkSession
-    val root = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val marker = new org.apache.hadoop.fs.Path(root, s"applied_batch_$batchId")
-    if (fs.exists(marker)) return
-    val batchPartials = batch
-      .select(col("category"),
-        RefTransforms.cents(expr("try_cast(amount AS DOUBLE)"))
-          .as("price_cents"))
-      .groupBy(col("category"))
-      .agg(count(lit(1)).as("n"), sum(col("price_cents")).as("sum_cents"),
-        min(col("price_cents")).as("min_cents"),
-        max(col("price_cents")).as("max_cents"))
-    val existing = committedStateDir(fs, stateDir) match {
-      case Some(dir) => spark.read.parquet(dir)
-      case None      => batchPartials.limit(0)
+      stateDir: String): Unit =
+    GraftLogOps.commitBatch(batch.sparkSession, stateDir, "mv", batchId,
+      MvStateSchema, replace = true) { existing =>
+      batch
+        .select(col("category"),
+          RefTransforms.cents(expr("try_cast(amount AS DOUBLE)"))
+            .as("price_cents"))
+        .groupBy(col("category"))
+        .agg(count(lit(1)).as("n"), sum(col("price_cents")).as("sum_cents"),
+          min(col("price_cents")).as("min_cents"),
+          max(col("price_cents")).as("max_cents"))
+        .unionByName(existing)
+        .groupBy(col("category"))
+        .agg(sum(col("n")).as("n"), sum(col("sum_cents")).as("sum_cents"),
+          min(col("min_cents")).as("min_cents"),
+          max(col("max_cents")).as("max_cents"))
     }
-    val merged = batchPartials.unionByName(existing)
-      .groupBy(col("category"))
-      .agg(sum(col("n")).as("n"), sum(col("sum_cents")).as("sum_cents"),
-        min(col("min_cents")).as("min_cents"),
-        max(col("max_cents")).as("max_cents"))
-    // fresh version dir: the live state's files are never rewritten, so
-    // no localCheckpoint is needed and a torn write cannot lose state
-    merged.write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-    fs.create(marker, true).close()
-  }
 
-  /** The current committed state directory under the versioned-state +
-    * marker commit protocol (highest `applied_batch_<id>` marker wins) —
-    * shared by the MV and SCD2 maintenance sinks.
+  /** Public reader for the committed MV state (callers get an error, not
+    * silent emptiness, when no batch ever committed).
     */
-  private def committedStateDir(fs: org.apache.hadoop.fs.FileSystem,
-      stateDir: String): Option[String] = {
-    val root = new org.apache.hadoop.fs.Path(stateDir)
-    if (!fs.exists(root)) None
-    else {
-      val ids = fs.listStatus(root).map(_.getPath.getName)
-        .filter(_.startsWith("applied_batch_"))
-        .map(_.stripPrefix("applied_batch_").toLong)
-      if (ids.isEmpty) None else Some(s"$stateDir/v${ids.max}")
-    }
-  }
-
-  /** Public reader for the committed MV state (empty-schema-free: callers
-    * get an error, not silent emptiness, when no batch ever committed).
-    */
-  def mvState(spark: SparkSession, stateDir: String): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    spark.read.parquet(committedStateDir(fs, stateDir).getOrElse(
-      sys.error(s"no committed MV state under $stateDir")))
-  }
+  def mvState(spark: SparkSession, stateDir: String): DataFrame =
+    committed(spark, stateDir, "MV state")
 
   /** Streaming materialized-view maintenance — the continuous form of
     * `operators.Maintenance.mvIncremental`: each landed transaction file
     * folds into a stored per-category count/sum/min/max summary, so the
     * "view" is refreshed at O(batch + |groups|) per micro-batch while
     * the raw history is never re-read. Restart-safe: the checkpoint
-    * resumes undrained files, and [[applyMvBatch]]'s marker protocol
+    * resumes undrained files, and [[applyMvBatch]]'s per-batch commit
     * makes replayed batch ids no-ops (StreamingSpec pins both paths).
     */
   def mvPipeline(spark: SparkSession, inDir: String, stateDir: String,
@@ -312,10 +270,10 @@ object Streams {
     StructField("eff_ms", LongType),
     StructField("priority", StringType)))
 
-  private val Scd2StateDdl =
+  private val Scd2StateSchema = StructType.fromDDL(
     "o_custkey BIGINT, version BIGINT, priority STRING, " +
       "valid_from_ms BIGINT, valid_to_ms BIGINT, is_current INT, " +
-      "n_updates BIGINT"
+      "n_updates BIGINT")
 
   /** Streaming SCD2 maintenance — the continuous twin of
     * `operators.Warehouse.scd2`, matching the MV-maintenance pattern:
@@ -323,9 +281,10 @@ object Streams {
     * dimension (open rows close, new versions append, an unchanged
     * priority extends the open run) at O(batch + touched keys) per
     * batch — history is never rebuilt from the raw update log.
-    * Exactly-once via the same versioned-state + marker protocol as
-    * [[applyMvBatch]]; StreamingSpec pins batch parity across a restart,
-    * a replayed batch id, and the crash-between-write-and-mark window.
+    * Exactly-once through the same per-batch `graftlog` commit as
+    * [[applyMvBatch]] (one overwrite version per batch); StreamingSpec
+    * pins batch parity across a restart, a replayed batch id, and a torn
+    * commit.
     *
     * `maxFilesPerTrigger=1` keeps one landed file per micro-batch so the
     * merge is exercised at file granularity; a production feed tunes it.
@@ -363,101 +322,85 @@ object Streams {
     *     valid_to within the fresh rows, and union with the untouched
     *     remainder of the state.
     *
-    * Only touched keys' open rows are rewritten logically; the demo state
-    * store rewrites the summary table per version (it is dimension-sized,
-    * not fact-sized). At warehouse scale the state lands hash-bucketed by
-    * key and each batch dynamic-overwrites only touched buckets — the
-    * [[fileUpsertPipeline]] layout, unchanged semantics.
+    * Only touched keys' open rows are rewritten logically; each batch
+    * commits the whole dimension as one version replacing the previous
+    * one (it is dimension-sized, not fact-sized).
     */
   private[graft] def applyScd2Batch(batch: DataFrame, batchId: Long,
-      stateDir: String): Unit = {
-    import org.apache.spark.sql.expressions.Window
-    val spark = batch.sparkSession
-    val root = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val marker = new org.apache.hadoop.fs.Path(root, s"applied_batch_$batchId")
-    if (fs.exists(marker)) return
-    val eot = graft.operators.Warehouse.EndOfTimeMs
-    val stateCols = Seq("o_custkey", "version", "priority", "valid_from_ms",
-      "valid_to_ms", "is_current", "n_updates").map(col)
-    val w = Window.partitionBy(col("o_custkey"))
-      .orderBy(col("eff_ms"), col("o_orderkey"))
-    // batch → runs: one row per (key, consecutive-priority run), exactly
-    // the batch build's shape. localCheckpoint: three consumers below.
-    val runs = batch
-      .withColumn("is_chg",
-        when(lag(col("priority"), 1).over(w).isNull ||
-          lag(col("priority"), 1).over(w) =!= col("priority"), 1L)
-          .otherwise(0L))
-      .withColumn("bver", sum(col("is_chg"))
-        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .groupBy(col("o_custkey"), col("bver"))
-      .agg(min(col("priority")).as("priority"),
-        min(col("eff_ms")).as("valid_from_ms"),
-        count(lit(1)).as("n_updates"))
-      .localCheckpoint()
-    val existing = committedStateDir(fs, stateDir) match {
-      case Some(dir) => spark.read.parquet(dir)
-      case None => spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        StructType.fromDDL(Scd2StateDdl))
+      stateDir: String): Unit =
+    GraftLogOps.commitBatch(batch.sparkSession, stateDir, "scd2", batchId,
+      Scd2StateSchema, replace = true) { existing =>
+      import org.apache.spark.sql.expressions.Window
+      val eot = graft.operators.Warehouse.EndOfTimeMs
+      val stateCols = Seq("o_custkey", "version", "priority", "valid_from_ms",
+        "valid_to_ms", "is_current", "n_updates").map(col)
+      val w = Window.partitionBy(col("o_custkey"))
+        .orderBy(col("eff_ms"), col("o_orderkey"))
+      // batch → runs: one row per (key, consecutive-priority run), exactly
+      // the batch build's shape. localCheckpoint: three consumers below.
+      val runs = batch
+        .withColumn("is_chg",
+          when(lag(col("priority"), 1).over(w).isNull ||
+            lag(col("priority"), 1).over(w) =!= col("priority"), 1L)
+            .otherwise(0L))
+        .withColumn("bver", sum(col("is_chg"))
+          .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        .groupBy(col("o_custkey"), col("bver"))
+        .agg(min(col("priority")).as("priority"),
+          min(col("eff_ms")).as("valid_from_ms"),
+          count(lit(1)).as("n_updates"))
+        .localCheckpoint()
+      val touched = runs.select(col("o_custkey")).distinct()
+      val open = existing.filter(col("is_current") === 1)
+        .join(touched, Seq("o_custkey"))
+      val keyInfo = runs.filter(col("bver") === 1L)
+        .select(col("o_custkey"), col("priority").as("first_priority"),
+          col("valid_from_ms").as("first_from"))
+        .join(open.select(col("o_custkey"), col("version").as("cur_version"),
+          col("priority").as("cur_priority"),
+          col("valid_from_ms").as("cur_from"),
+          col("n_updates").as("cur_n")), Seq("o_custkey"), "left")
+        .withColumn("merge_first",
+          coalesce(col("cur_priority") === col("first_priority"), lit(false)))
+        .withColumn("offset", coalesce(col("cur_version"), lit(0L)))
+      val fresh = runs.join(keyInfo.select(col("o_custkey"), col("merge_first"),
+          col("offset"), col("cur_from"), col("cur_n")), Seq("o_custkey"))
+        .withColumn("version",
+          col("offset") + col("bver") -
+            when(col("merge_first"), 1L).otherwise(0L))
+        .withColumn("valid_from_ms",
+          when(col("merge_first") && col("bver") === 1L, col("cur_from"))
+            .otherwise(col("valid_from_ms")))
+        .withColumn("n_updates",
+          when(col("merge_first") && col("bver") === 1L,
+            col("cur_n") + col("n_updates")).otherwise(col("n_updates")))
+      val wv = Window.partitionBy(col("o_custkey")).orderBy(col("version"))
+      val chained = fresh
+        .withColumn("valid_to_ms",
+          coalesce(lead(col("valid_from_ms"), 1).over(wv), lit(eot)))
+        .withColumn("is_current",
+          (col("valid_to_ms") === eot).cast("int"))
+        .select(stateCols: _*)
+      // a touched key's open row either closed here (priority changed) or
+      // was replaced by the merged run above — it never passes through
+      val closedPrev = open.join(keyInfo
+          .filter(col("cur_priority").isNotNull && !col("merge_first"))
+          .select(col("o_custkey"), col("first_from")), Seq("o_custkey"))
+        .withColumn("valid_to_ms", col("first_from"))
+        .withColumn("is_current", lit(0).cast("int"))
+        .select(stateCols: _*)
+      val untouchedOpen = existing.filter(col("is_current") === 1)
+        .join(touched, Seq("o_custkey"), "left_anti")
+        .select(stateCols: _*)
+      val history = existing.filter(col("is_current") === 0)
+        .select(stateCols: _*)
+      history.unionByName(untouchedOpen).unionByName(closedPrev)
+        .unionByName(chained)
     }
-    val touched = runs.select(col("o_custkey")).distinct()
-    val open = existing.filter(col("is_current") === 1)
-      .join(touched, Seq("o_custkey"))
-    val keyInfo = runs.filter(col("bver") === 1L)
-      .select(col("o_custkey"), col("priority").as("first_priority"),
-        col("valid_from_ms").as("first_from"))
-      .join(open.select(col("o_custkey"), col("version").as("cur_version"),
-        col("priority").as("cur_priority"),
-        col("valid_from_ms").as("cur_from"),
-        col("n_updates").as("cur_n")), Seq("o_custkey"), "left")
-      .withColumn("merge_first",
-        coalesce(col("cur_priority") === col("first_priority"), lit(false)))
-      .withColumn("offset", coalesce(col("cur_version"), lit(0L)))
-    val fresh = runs.join(keyInfo.select(col("o_custkey"), col("merge_first"),
-        col("offset"), col("cur_from"), col("cur_n")), Seq("o_custkey"))
-      .withColumn("version",
-        col("offset") + col("bver") - when(col("merge_first"), 1L).otherwise(0L))
-      .withColumn("valid_from_ms",
-        when(col("merge_first") && col("bver") === 1L, col("cur_from"))
-          .otherwise(col("valid_from_ms")))
-      .withColumn("n_updates",
-        when(col("merge_first") && col("bver") === 1L,
-          col("cur_n") + col("n_updates")).otherwise(col("n_updates")))
-    val wv = Window.partitionBy(col("o_custkey")).orderBy(col("version"))
-    val chained = fresh
-      .withColumn("valid_to_ms",
-        coalesce(lead(col("valid_from_ms"), 1).over(wv), lit(eot)))
-      .withColumn("is_current",
-        (col("valid_to_ms") === eot).cast("int"))
-      .select(stateCols: _*)
-    // a touched key's open row either closed here (priority changed) or
-    // was replaced by the merged run above — it never passes through
-    val closedPrev = open.join(keyInfo
-        .filter(col("cur_priority").isNotNull && !col("merge_first"))
-        .select(col("o_custkey"), col("first_from")), Seq("o_custkey"))
-      .withColumn("valid_to_ms", col("first_from"))
-      .withColumn("is_current", lit(0).cast("int"))
-      .select(stateCols: _*)
-    val untouchedOpen = existing.filter(col("is_current") === 1)
-      .join(touched, Seq("o_custkey"), "left_anti")
-      .select(stateCols: _*)
-    val history = existing.filter(col("is_current") === 0)
-      .select(stateCols: _*)
-    history.unionByName(untouchedOpen).unionByName(closedPrev)
-      .unionByName(chained)
-      .write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-    fs.create(marker, true).close()
-  }
 
   /** Public reader for the committed SCD2 dimension state. */
-  def scd2State(spark: SparkSession, stateDir: String): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    spark.read.parquet(committedStateDir(fs, stateDir).getOrElse(
-      sys.error(s"no committed SCD2 state under $stateDir")))
-  }
+  def scd2State(spark: SparkSession, stateDir: String): DataFrame =
+    committed(spark, stateDir, "SCD2 state")
 
   /** The reference's literal production topology: landed file → transform
     * → warehouse upsert (S3 notification → Lambda → Redshift ON CONFLICT,
@@ -719,11 +662,9 @@ object Streams {
     * O(corpus²), which is the entire point of deduplicating AT ingest
     * instead of re-running corpus-wide jobs.
     *
-    * Exactly-once via the versioned-state + marker protocol shared with
-    * the MV and SCD2 sinks. The demo state rewrites the corpus per
-    * version (it is testdata-sized); a deployment appends data files and
-    * commits them with the same marker semantics — the transaction-log
-    * pattern, unchanged.
+    * Exactly-once through the per-batch `graftlog` commit shared with
+    * the MV and SCD2 sinks; each batch's version adds only its
+    * survivors, so a batch writes O(batch) bytes, not O(corpus).
     */
   def dedupIngestPipeline(spark: SparkSession, inDir: String,
       stateDir: String, checkpointDir: String,
@@ -750,74 +691,61 @@ object Streams {
     * batch doc (the corpus doc arrived first).
     */
   private[graft] def applyDedupIngestBatch(batch: DataFrame, batchId: Long,
-      stateDir: String): Unit = {
-    import graft.operators.Dedup
-    val spark = batch.sparkSession
-    val root = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val marker = new org.apache.hadoop.fs.Path(root, s"applied_batch_$batchId")
-    if (fs.exists(marker)) return
-    val signed = batch.select(col("doc_id"), col("text"))
-      .withColumn("content_md5", md5(col("text")))
-      .join(Dedup.simhashPacked(batch.select(col("doc_id"), col("text"))),
-        Seq("doc_id"))
-      .localCheckpoint()
-    val existing = committedStateDir(fs, stateDir) match {
-      case Some(dir) => spark.read.parquet(dir)
-      case None => spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        StructType.fromDDL("doc_id BIGINT, text STRING, " +
-          "content_md5 STRING, b0 BIGINT, b1 BIGINT, b2 BIGINT, b3 BIGINT"))
+      stateDir: String): Unit =
+    GraftLogOps.commitBatch(batch.sparkSession, stateDir, "dedup", batchId,
+      DedupStateSchema, replace = false) { existing =>
+      import graft.operators.Dedup
+      val signed = batch.select(col("doc_id"), col("text"))
+        .withColumn("content_md5", md5(col("text")))
+        .join(Dedup.simhashPacked(batch.select(col("doc_id"), col("text"))),
+          Seq("doc_id"))
+        .localCheckpoint()
+      def bandExplode(df: DataFrame): DataFrame =
+        df.select(col("doc_id"), col("b0"), col("b1"), col("b2"), col("b3"))
+          .select(col("doc_id"),
+            posexplode(array(col("b0"), col("b1"), col("b2"), col("b3"))))
+          .select(col("doc_id"), col("pos").as("band"), col("col").as("bkey"))
+          .join(df.select(col("doc_id"), col("b0"), col("b1"), col("b2"),
+            col("b3")), Seq("doc_id"))
+      // within-batch near-dup candidates: band-bucket join, lower id wins
+      val bb = bandExplode(signed)
+      val nearInBatch = bb.as("x").join(bb.as("y"),
+          col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
+            col("x.doc_id") < col("y.doc_id"))
+        .filter(hamming("x.b0", "y.b0") + hamming("x.b1", "y.b1") +
+          hamming("x.b2", "y.b2") + hamming("x.b3", "y.b3") <=
+          Dedup.SimHammingMax)
+        .select(col("y.doc_id").as("doc_id")).distinct()
+      // within-batch exact: keep the lowest id per content hash
+      val wmin = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("content_md5"))
+      val exactInBatch = signed
+        .withColumn("keep_id", min(col("doc_id")).over(wmin))
+        .filter(col("doc_id") =!= col("keep_id"))
+        .select(col("doc_id")).distinct()
+      // against the stored corpus: exact hash + banded near-dup
+      val exactVsCorpus = signed.join(
+        existing.select(col("content_md5")).distinct(), Seq("content_md5"))
+        .select(col("doc_id")).distinct()
+      val eb = bandExplode(existing)
+      val nearVsCorpus = bb.as("x").join(eb.as("y"),
+          col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey"))
+        .filter(hamming("x.b0", "y.b0") + hamming("x.b1", "y.b1") +
+          hamming("x.b2", "y.b2") + hamming("x.b3", "y.b3") <=
+          Dedup.SimHammingMax)
+        .select(col("x.doc_id").as("doc_id")).distinct()
+      val dropped = nearInBatch.unionByName(exactInBatch)
+        .unionByName(exactVsCorpus).unionByName(nearVsCorpus).distinct()
+      signed.join(dropped, Seq("doc_id"), "left_anti")
     }
-    def bandExplode(df: DataFrame): DataFrame =
-      df.select(col("doc_id"), col("b0"), col("b1"), col("b2"), col("b3"))
-        .select(col("doc_id"),
-          posexplode(array(col("b0"), col("b1"), col("b2"), col("b3"))))
-        .select(col("doc_id"), col("pos").as("band"), col("col").as("bkey"))
-        .join(df.select(col("doc_id"), col("b0"), col("b1"), col("b2"),
-          col("b3")), Seq("doc_id"))
-    // within-batch near-dup candidates: band-bucket join, lower id wins
-    val bb = bandExplode(signed)
-    val nearInBatch = bb.as("x").join(bb.as("y"),
-        col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .filter(hamming("x.b0", "y.b0") + hamming("x.b1", "y.b1") +
-        hamming("x.b2", "y.b2") + hamming("x.b3", "y.b3") <=
-        Dedup.SimHammingMax)
-      .select(col("y.doc_id").as("doc_id")).distinct()
-    // within-batch exact: keep the lowest id per content hash
-    val wmin = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("content_md5"))
-    val exactInBatch = signed
-      .withColumn("keep_id", min(col("doc_id")).over(wmin))
-      .filter(col("doc_id") =!= col("keep_id"))
-      .select(col("doc_id")).distinct()
-    // against the stored corpus: exact hash + banded near-dup
-    val exactVsCorpus = signed.join(
-      existing.select(col("content_md5")).distinct(), Seq("content_md5"))
-      .select(col("doc_id")).distinct()
-    val eb = bandExplode(existing)
-    val nearVsCorpus = bb.as("x").join(eb.as("y"),
-        col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey"))
-      .filter(hamming("x.b0", "y.b0") + hamming("x.b1", "y.b1") +
-        hamming("x.b2", "y.b2") + hamming("x.b3", "y.b3") <=
-        Dedup.SimHammingMax)
-      .select(col("x.doc_id").as("doc_id")).distinct()
-    val dropped = nearInBatch.unionByName(exactInBatch)
-      .unionByName(exactVsCorpus).unionByName(nearVsCorpus).distinct()
-    val survivors = signed.join(dropped, Seq("doc_id"), "left_anti")
-    existing.unionByName(survivors)
-      .write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-    fs.create(marker, true).close()
-  }
+
+  private val DedupStateSchema = StructType.fromDDL("doc_id BIGINT, " +
+    "text STRING, content_md5 STRING, b0 BIGINT, b1 BIGINT, b2 BIGINT, " +
+    "b3 BIGINT")
 
   /** Public reader for the committed deduplicated corpus. */
-  def dedupCorpus(spark: SparkSession, stateDir: String): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    spark.read.parquet(committedStateDir(fs, stateDir).getOrElse(
-      sys.error(s"no committed dedup corpus under $stateDir")))
-  }
+  def dedupCorpus(spark: SparkSession, stateDir: String): DataFrame =
+    committed(spark, stateDir, "dedup corpus")
 
   // ---------- streaming decontamination gate ----------
 
@@ -843,10 +771,12 @@ object Streams {
     * (doc_id ≡ 0 mod EvalMod — the holdout itself) pass through without
     * probing, mirroring the batch report's train-side-only output.
     *
-    * Exactly-once via the shared versioned-state + marker protocol; each
-    * version holds `report/` (accumulated probe rows) and `corpus/` (the
-    * admitted documents). A deployment appends data files per version and
-    * commits them with the same marker semantics.
+    * Exactly-once through the shared per-batch `graftlog` commit. The
+    * state is ONE table with one row per processed document (`doc_id`,
+    * `text`, and the probe columns, null where the doc was not probed),
+    * so a batch's report rows and admitted docs commit in one version:
+    * a replay can never find the one committed without the other.
+    * [[decontamReport]] and [[decontamCorpus]] are projections of it.
     */
   def decontamIngestPipeline(spark: SparkSession, inDir: String,
       evalDocs: DataFrame, stateDir: String, checkpointDir: String,
@@ -868,75 +798,50 @@ object Streams {
   }
 
   /** One micro-batch through the decontamination gate: dedupe against
-    * committed state, probe, split, accumulate, commit. Replay-safe
-    * (marker short-circuit) and torn-commit-safe (a crash before the
-    * marker leaves the previous version committed; the replayed batch
-    * overwrites the torn files). The anti-join against already-committed
-    * doc_ids (corpus ∪ report — every previously processed doc lands in
-    * at least one: admitted docs in corpus, flagged train docs in report)
-    * is what keeps a doc_id arriving in TWO DIFFERENT input files from
-    * being re-probed and re-admitted — without it the accumulated state
-    * would carry duplicate rows and diverge from the batch
+    * committed state, probe, append one row per processed doc, commit.
+    * The anti-join against already-committed doc_ids is what keeps a
+    * doc_id arriving in TWO DIFFERENT input files from being re-probed
+    * and re-admitted — without it the accumulated state would carry
+    * duplicate rows and diverge from the batch
     * `bloomDecontaminateUncapped` equality the spec pins.
     */
   private[graft] def applyDecontamBatch(batch: DataFrame, batchId: Long,
-      bloom: DataFrame, stateDir: String): Unit = {
-    import graft.operators.Dedup
-    val spark = batch.sparkSession
-    val root = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val marker = new org.apache.hadoop.fs.Path(root, s"applied_batch_$batchId")
-    if (fs.exists(marker)) return
-    val (prevReport, prevCorpus) = committedStateDir(fs, stateDir) match {
-      case Some(dir) =>
-        (spark.read.parquet(s"$dir/report"), spark.read.parquet(s"$dir/corpus"))
-      case None =>
-        val emptyRows = java.util.Collections
-          .emptyList[org.apache.spark.sql.Row]()
-        (spark.createDataFrame(emptyRows, StructType.fromDDL(
-          "train_id BIGINT, n_sh BIGINT, n_hit BIGINT, " +
-            "hit_frac DOUBLE, flagged BOOLEAN")),
-          spark.createDataFrame(emptyRows,
-            StructType.fromDDL("doc_id BIGINT, text STRING")))
+      bloom: DataFrame, stateDir: String): Unit =
+    GraftLogOps.commitBatch(batch.sparkSession, stateDir, "decontam",
+      batchId, DecontamStateSchema, replace = false) { seen =>
+      import graft.operators.Dedup
+      val docs = batch.select(col("doc_id"), col("text"))
+        .join(seen.select(col("doc_id")), Seq("doc_id"), "left_anti")
+        .localCheckpoint()
+      val isEval = pmod(col("doc_id"), lit(Dedup.EvalMod)) === 0
+      val report = Dedup.bloomProbeIndex(
+        Dedup.uncappedShingleIndexOf(docs.filter(!isEval)), bloom)
+      // eval-slice pass-throughs and shingle-less docs have no probe row
+      docs.join(report.withColumnRenamed("train_id", "doc_id"),
+        Seq("doc_id"), "left")
     }
-    val seen = prevCorpus.select(col("doc_id"))
-      .unionByName(prevReport.select(col("train_id").as("doc_id")))
-    val docs = batch.select(col("doc_id"), col("text"))
-      .join(seen, Seq("doc_id"), "left_anti")
-      .localCheckpoint()
-    val isEval = pmod(col("doc_id"), lit(Dedup.EvalMod)) === 0
-    val report = Dedup.bloomProbeIndex(
-      Dedup.uncappedShingleIndexOf(docs.filter(!isEval)), bloom)
-      .localCheckpoint()
-    // quarantine = flagged train docs; everything else (clean train docs,
-    // shingle-less short docs, eval-slice pass-throughs) is admitted
-    val admitted = docs.join(
-      report.filter(col("flagged")).select(col("train_id").as("doc_id")),
-      Seq("doc_id"), "left_anti")
-    prevReport.unionByName(report)
-      .write.mode("overwrite").parquet(s"$stateDir/v$batchId/report")
-    prevCorpus.unionByName(admitted)
-      .write.mode("overwrite").parquet(s"$stateDir/v$batchId/corpus")
-    fs.create(marker, true).close()
-  }
+
+  private val DecontamStateSchema = StructType.fromDDL("doc_id BIGINT, " +
+    "text STRING, n_sh BIGINT, n_hit BIGINT, hit_frac DOUBLE, " +
+    "flagged BOOLEAN")
 
   /** Committed accumulated decontamination report (one row per probed
     * train doc across all committed batches).
     */
-  def decontamReport(spark: SparkSession, stateDir: String): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    spark.read.parquet(committedStateDir(fs, stateDir).map(d => s"$d/report")
-      .getOrElse(sys.error(s"no committed decontam state under $stateDir")))
-  }
+  def decontamReport(spark: SparkSession, stateDir: String): DataFrame =
+    committed(spark, stateDir, "decontam state")
+      .filter(col("n_sh").isNotNull)
+      .select(col("doc_id").as("train_id"), col("n_sh"), col("n_hit"),
+        col("hit_frac"), col("flagged"))
 
-  /** Committed admitted training corpus (quarantined docs excluded). */
-  def decontamCorpus(spark: SparkSession, stateDir: String): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    spark.read.parquet(committedStateDir(fs, stateDir).map(d => s"$d/corpus")
-      .getOrElse(sys.error(s"no committed decontam state under $stateDir")))
-  }
+  /** Committed admitted training corpus: every processed doc but the
+    * quarantined (flagged) train docs — clean train docs, shingle-less
+    * short docs and eval-slice pass-throughs.
+    */
+  def decontamCorpus(spark: SparkSession, stateDir: String): DataFrame =
+    committed(spark, stateDir, "decontam state")
+      .filter(!coalesce(col("flagged"), lit(false)))
+      .select(col("doc_id"), col("text"))
 
   // ---------- streaming embedding near-dup admission gate ----------
 
@@ -959,7 +864,8 @@ object Streams {
     * codes): the probe is a band equi-join, O(batch × bucket), never
     * O(corpus × batch) — the entire point of gating at ingest.
     *
-    * Exactly-once via the shared versioned-state + marker protocol.
+    * Exactly-once through the shared per-batch `graftlog` commit; each
+    * batch's version adds only its survivors.
     * StreamingSpec pins parity with the batch LSH pair report: the kept
     * set equals a greedy id-ordered fold of `q_embed_lsh_pairs`' found
     * pairs, across restart, replay, and torn commits.
@@ -983,70 +889,56 @@ object Streams {
     * re-rank of candidates only, append survivors, commit.
     */
   private[graft] def applyEmbedIngestBatch(batch: DataFrame, batchId: Long,
-      stateDir: String): Unit = {
-    import graft.operators.Ann
-    import graft.functions.VectorFunctions.cosineSim
-    val spark = batch.sparkSession
-    val root = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val marker = new org.apache.hadoop.fs.Path(root, s"applied_batch_$batchId")
-    if (fs.exists(marker)) return
-    val existing = committedStateDir(fs, stateDir) match {
-      case Some(dir) => spark.read.parquet(dir)
-      case None => spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        StructType.fromDDL("vec_id BIGINT, embedding ARRAY<FLOAT>, " +
-          "codes ARRAY<BIGINT>"))
+      stateDir: String): Unit =
+    GraftLogOps.commitBatch(batch.sparkSession, stateDir, "embed", batchId,
+      EmbedStateSchema, replace = false) { existing =>
+      import graft.operators.Ann
+      import graft.functions.VectorFunctions.cosineSim
+      // duplicate ARRIVALS (same vec_id in two input files) are not
+      // re-probed or re-admitted — the decontam gate's committed-state
+      // anti-join discipline
+      val signed = batch.select(col("vec_id"), col("embedding"))
+        .join(existing.select(col("vec_id")), Seq("vec_id"), "left_anti")
+        .withColumn("codes", Ann.pairBandKeys(col("embedding")))
+        .localCheckpoint()
+      def bandExplode(df: DataFrame): DataFrame =
+        df.select(col("vec_id"), posexplode(col("codes")))
+          .select(col("vec_id"), col("pos").as("band"), col("col").as("bkey"))
+      val bb = bandExplode(signed)
+      def rerank(cand: DataFrame, left: DataFrame,
+          right: DataFrame): DataFrame =
+        cand
+          .join(left.select(col("vec_id").as("a"), col("embedding").as("ea")),
+            Seq("a"))
+          .join(right.select(col("vec_id").as("b"), col("embedding").as("eb")),
+            Seq("b"))
+          .filter(cosineSim(col("ea"), col("eb")) >= Ann.NearDupThreshold)
+      // within-batch: candidates meet in (band, key) buckets, lower id wins
+      val nearInBatch = rerank(
+        bb.as("x").join(bb.as("y"),
+            col("x.band") === col("y.band") &&
+              col("x.bkey") === col("y.bkey") &&
+              col("x.vec_id") < col("y.vec_id"))
+          .select(col("x.vec_id").as("a"), col("y.vec_id").as("b")).distinct(),
+        signed, signed)
+        .select(col("b").as("vec_id")).distinct()
+      // against the stored corpus: the stored vector arrived first
+      val nearVsCorpus = rerank(
+        bb.as("x").join(bandExplode(existing).as("y"),
+            col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey"))
+          .select(col("y.vec_id").as("a"), col("x.vec_id").as("b")).distinct(),
+        existing, signed)
+        .select(col("b").as("vec_id")).distinct()
+      val dropped = nearInBatch.unionByName(nearVsCorpus).distinct()
+      signed.join(dropped, Seq("vec_id"), "left_anti")
     }
-    // duplicate ARRIVALS (same vec_id in two input files) are not
-    // re-probed or re-admitted — the decontam gate's committed-state
-    // anti-join discipline
-    val signed = batch.select(col("vec_id"), col("embedding"))
-      .join(existing.select(col("vec_id")), Seq("vec_id"), "left_anti")
-      .withColumn("codes", Ann.pairBandKeys(col("embedding")))
-      .localCheckpoint()
-    def bandExplode(df: DataFrame): DataFrame =
-      df.select(col("vec_id"), posexplode(col("codes")))
-        .select(col("vec_id"), col("pos").as("band"), col("col").as("bkey"))
-    val bb = bandExplode(signed)
-    def rerank(cand: DataFrame, left: DataFrame,
-        right: DataFrame): DataFrame =
-      cand
-        .join(left.select(col("vec_id").as("a"), col("embedding").as("ea")),
-          Seq("a"))
-        .join(right.select(col("vec_id").as("b"), col("embedding").as("eb")),
-          Seq("b"))
-        .filter(cosineSim(col("ea"), col("eb")) >= Ann.NearDupThreshold)
-    // within-batch: candidates meet in (band, key) buckets, lower id wins
-    val nearInBatch = rerank(
-      bb.as("x").join(bb.as("y"),
-          col("x.band") === col("y.band") &&
-            col("x.bkey") === col("y.bkey") &&
-            col("x.vec_id") < col("y.vec_id"))
-        .select(col("x.vec_id").as("a"), col("y.vec_id").as("b")).distinct(),
-      signed, signed)
-      .select(col("b").as("vec_id")).distinct()
-    // against the stored corpus: the stored vector arrived first
-    val nearVsCorpus = rerank(
-      bb.as("x").join(bandExplode(existing).as("y"),
-          col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey"))
-        .select(col("y.vec_id").as("a"), col("x.vec_id").as("b")).distinct(),
-      existing, signed)
-      .select(col("b").as("vec_id")).distinct()
-    val dropped = nearInBatch.unionByName(nearVsCorpus).distinct()
-    val survivors = signed.join(dropped, Seq("vec_id"), "left_anti")
-    existing.unionByName(survivors)
-      .write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-    fs.create(marker, true).close()
-  }
+
+  private val EmbedStateSchema = StructType.fromDDL("vec_id BIGINT, " +
+    "embedding ARRAY<FLOAT>, codes ARRAY<BIGINT>")
 
   /** Public reader for the committed admitted embedding corpus. */
-  def embedCorpus(spark: SparkSession, stateDir: String): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    spark.read.parquet(committedStateDir(fs, stateDir).getOrElse(
-      sys.error(s"no committed embedding corpus under $stateDir")))
-  }
+  def embedCorpus(spark: SparkSession, stateDir: String): DataFrame =
+    committed(spark, stateDir, "embedding corpus")
 
   // ---------- streaming as-of enrichment ----------
 
@@ -1070,9 +962,10 @@ object Streams {
     * carries over unchanged — at scale the per-batch cost is
     * O(batch + dim) with no timeline union and no window state.
     *
-    * Exactly-once via the shared versioned-state + marker protocol;
-    * duplicate ARRIVALS (same event_id landing twice) are dropped by the
-    * committed-state anti-join, the decontam gate's discipline.
+    * Exactly-once through the shared per-batch `graftlog` commit, each
+    * batch's version adding only its enriched rows; duplicate ARRIVALS
+    * (same event_id landing twice) are dropped by the committed-state
+    * anti-join, the decontam gate's discipline.
     * StreamingSpec pins parity with the batch `asofJoin` result across
     * file splits, restart, replayed batch ids, and torn commits.
     */
@@ -1098,41 +991,29 @@ object Streams {
   private[graft] def applyAsofEnrichBatch(batch: DataFrame, batchId: Long,
       dimDir: String, stateDir: String): Unit = {
     val spark = batch.sparkSession
-    val root = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val marker = new org.apache.hadoop.fs.Path(root, s"applied_batch_$batchId")
-    if (fs.exists(marker)) return
-    val existing = committedStateDir(fs, stateDir) match {
-      case Some(dir) => spark.read.parquet(dir)
-      case None => spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        StructType.fromDDL("event_id BIGINT, user_id BIGINT, " +
-          "ts_ms BIGINT, o_orderkey BIGINT, order_ms BIGINT"))
+    GraftLogOps.commitBatch(spark, stateDir, "asof", batchId,
+      AsofStateSchema, replace = false) { existing =>
+      val fresh = batch
+        .select(col("event_id"), col("user_id"), col("ts_ms"))
+        .join(existing.select(col("event_id")), Seq("event_id"), "left_anti")
+        .localCheckpoint()
+      val dim = spark.read.parquet(dimDir)
+        .select(col("user_id").as("r_user_id"), col("o_orderkey"),
+          col("order_ms"))
+        .filter(col("order_ms").isNotNull) // never matches (join + oracle)
+      graft.plans.AsOfJoin(fresh, dim,
+          "user_id", "r_user_id", "ts_ms", "order_ms", "o_orderkey")
+        .select(col("event_id"), col("user_id"), col("ts_ms"),
+          col("o_orderkey"), col("order_ms"))
     }
-    val fresh = batch
-      .select(col("event_id"), col("user_id"), col("ts_ms"))
-      .join(existing.select(col("event_id")), Seq("event_id"), "left_anti")
-      .localCheckpoint()
-    val dim = spark.read.parquet(dimDir)
-      .select(col("user_id").as("r_user_id"), col("o_orderkey"),
-        col("order_ms"))
-      .filter(col("order_ms").isNotNull) // never matches (join + oracle)
-    val enriched = graft.plans.AsOfJoin(fresh, dim,
-        "user_id", "r_user_id", "ts_ms", "order_ms", "o_orderkey")
-      .select(col("event_id"), col("user_id"), col("ts_ms"),
-        col("o_orderkey"), col("order_ms"))
-    existing.unionByName(enriched)
-      .write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-    fs.create(marker, true).close()
   }
 
+  private val AsofStateSchema = StructType.fromDDL("event_id BIGINT, " +
+    "user_id BIGINT, ts_ms BIGINT, o_orderkey BIGINT, order_ms BIGINT")
+
   /** Public reader for the committed enriched-event state. */
-  def asofEnriched(spark: SparkSession, stateDir: String): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    spark.read.parquet(committedStateDir(fs, stateDir).getOrElse(
-      sys.error(s"no committed as-of enrichment state under $stateDir")))
-  }
+  def asofEnriched(spark: SparkSession, stateDir: String): DataFrame =
+    committed(spark, stateDir, "as-of enrichment state")
 
   // ---------- streaming cumulative-uniques gate ----------
 
@@ -1144,19 +1025,10 @@ object Streams {
   private val UniquesDayMs = 24L * 3600 * 1000
 
   /** Streaming cumulative-uniques maintenance — the continuous twin of
-    * `operators.EventOps.cumulativeUniques`' new/cumulative series, with
-    * a deliberately DIFFERENT state topology from the MV/SCD2/dedup
-    * sinks: the first-seen table is APPEND-ONLY. A user, once seen, can
-    * never become unseen, so each micro-batch writes ONLY its newly
-    * discovered users to a fresh `new_b<id>` directory — per-batch write
-    * cost is O(new users), not O(|state|) as in the rewrite-the-snapshot
-    * protocol (the right trade when state is user-sized and mostly
-    * frozen; the snapshot rewrite remains right when any row can mutate).
-    * Exactly-once still holds with the same marker discipline: a batch id
-    * is applied at most once (marker short-circuit), a replayed batch
-    * OVERWRITES its own deterministic directory before marking (so a
-    * torn write cannot double-count), and readers union exactly the
-    * directories whose markers exist.
+    * `operators.EventOps.cumulativeUniques`' new/cumulative series. The
+    * first-seen table is append-only: a user, once seen, can never
+    * become unseen, so each micro-batch's version adds ONLY its newly
+    * discovered users through the shared per-batch `graftlog` commit.
     *
     * First-seen semantics are ARRIVAL-ORDER (the ingest gate's natural
     * clock): a user's recorded day is the minimum event day within the
@@ -1179,59 +1051,27 @@ object Streams {
       .trigger(trigger)
       .start()
 
-  private val UniquesStateDdl = "user_id BIGINT, first_day BIGINT, " +
-    "batch_id BIGINT"
-
-  /** Directories of committed first-seen rows (marker-gated). */
-  private def committedNewUserDirs(fs: org.apache.hadoop.fs.FileSystem,
-      stateDir: String): Seq[String] = {
-    val root = new org.apache.hadoop.fs.Path(stateDir)
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).map(_.getPath.getName).toSeq
-      .filter(_.startsWith("applied_batch_"))
-      .map(_.stripPrefix("applied_batch_").toLong).sorted
-      .map(id => s"$stateDir/new_b$id")
-  }
+  private val UniquesStateSchema = StructType.fromDDL("user_id BIGINT, " +
+    "first_day BIGINT, batch_id BIGINT")
 
   /** One micro-batch through the uniques gate: probe the committed
-    * first-seen table, append only the unseen users, commit the marker.
+    * first-seen table, append only the unseen users, commit.
     */
   private[graft] def applyUniquesBatch(batch: DataFrame, batchId: Long,
-      stateDir: String): Unit = {
-    val spark = batch.sparkSession
-    val root = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val marker = new org.apache.hadoop.fs.Path(root, s"applied_batch_$batchId")
-    if (fs.exists(marker)) return
-    val dirs = committedNewUserDirs(fs, stateDir)
-    // explicit schema: a batch that discovered no one leaves an empty
-    // directory, which schema'd reads handle and inference would not
-    val existing =
-      if (dirs.isEmpty)
-        spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          StructType.fromDDL(UniquesStateDdl))
-      else spark.read.schema(StructType.fromDDL(UniquesStateDdl))
-        .parquet(dirs: _*)
-    val batchFirst = batch
-      .select(col("user_id"),
-        expr(s"ts_ms div $UniquesDayMs").as("first_day"))
-      .groupBy(col("user_id")).agg(min(col("first_day")).as("first_day"))
-    batchFirst
-      .join(existing.select(col("user_id")), Seq("user_id"), "left_anti")
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").parquet(s"$stateDir/new_b$batchId")
-    fs.create(marker, true).close()
-  }
+      stateDir: String): Unit =
+    GraftLogOps.commitBatch(batch.sparkSession, stateDir, "uniques",
+      batchId, UniquesStateSchema, replace = false) { existing =>
+      batch
+        .select(col("user_id"),
+          expr(s"ts_ms div $UniquesDayMs").as("first_day"))
+        .groupBy(col("user_id")).agg(min(col("first_day")).as("first_day"))
+        .join(existing.select(col("user_id")), Seq("user_id"), "left_anti")
+        .withColumn("batch_id", lit(batchId))
+    }
 
   /** Committed first-seen table (one row per distinct user ever seen). */
-  def uniquesState(spark: SparkSession, stateDir: String): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val dirs = committedNewUserDirs(fs, stateDir)
-    if (dirs.isEmpty) sys.error(s"no committed uniques state under $stateDir")
-    spark.read.schema(StructType.fromDDL(UniquesStateDdl)).parquet(dirs: _*)
-  }
+  def uniquesState(spark: SparkSession, stateDir: String): DataFrame =
+    committed(spark, stateDir, "uniques state")
 
   /** The new/cumulative daily series from the committed state — the
     * streaming read of the batch query's last two columns (the prefix

@@ -20,6 +20,31 @@ class StreamingSpec extends SparkSpecBase {
   private def tmp(prefix: String) =
     Files.createTempDirectory(prefix).toString
 
+  /** Simulates a crash inside a state sink's commit of `batchId`: the
+    * batch's data is written but its commit record is lost, so a replay
+    * must converge instead of double-applying. The crash lands after the
+    * batch's epoch marker and before its version's `_ok`; the stale
+    * claim is then recovered as documented (deleted).
+    */
+  private def tear(stateRoot: String, batchId: Long): Unit = {
+    val log = new org.apache.hadoop.fs.Path(stateRoot, "_log")
+    val fs = log.getFileSystem(spark.sessionState.newHadoopConf())
+    val marker = fs.listStatus(log).map(_.getPath)
+      .filter(p => p.getName.startsWith("_epoch_") &&
+        p.getName.endsWith(s"_$batchId")).toSeq match {
+      case Seq(m) => m
+      case ms => fail(s"expected one marker for batch $batchId, got $ms")
+    }
+    val in = fs.open(marker)
+    val v = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
+      finally in.close()
+    fs.delete(new org.apache.hadoop.fs.Path(log, s"v$v._ok"), false)
+    fs.delete(new org.apache.hadoop.fs.Path(log, s"v$v._claim"), false)
+  }
+
+  private def readLog(root: String) =
+    spark.read.format("graftlog").option("path", root).load()
+
   test("file-source ETL pipeline: land CSVs, stream-transform, parquet out") {
     val in  = tmp("graft_stream_in")
     val out = tmp("graft_stream_out")
@@ -150,32 +175,27 @@ class StreamingSpec extends SparkSpecBase {
     }
     land("a.csv", Seq("T1" -> "10.0", "T2" -> "20.0"))
     Streams.fileUpsertPipeline(spark, in, out, ckp).awaitTermination()
-    def parquetMtimes: Map[String, Long] = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-      walk(new java.io.File(out)).filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getPath -> f.lastModified()).toMap
-    }
-    val before = parquetMtimes
+    def liveFiles: Seq[String] = graft.operators.Maintenance.liveFiles(
+      spark, out, graft.sources.GraftLog.latestVersion(
+        spark.sessionState.newHadoopConf(), out))
+    val before = liveFiles
     land("b.csv", Seq("T2" -> "99.0", "T3" -> "30.0")) // T2 updated
     Streams.fileUpsertPipeline(spark, in, out, ckp).awaitTermination()
-    val state = spark.read.parquet(out)
+    // through the log: a plain parquet read would also read removed files
+    val state = readLog(out)
       .select("transaction_id", "amount").as[(String, Double)]
       .collect().toMap
     assert(state === Map("T1" -> 10.0, "T2" -> 99.0, "T3" -> 30.0))
-    // incremental: buckets NOT touched by batch b keep their exact files
-    def bucketOf(id: String): Long = spark.range(1)
-      .select(pmod(xxhash64(lit(id)), lit(Streams.UpsertBuckets.toLong)))
-      .as[Long].head()
-    val touchedB = Set("T2", "T3").map(b => s"bucket=${bucketOf(b)}")
-    val untouchedBefore = before.filter { case (p, _) =>
-      !touchedB.exists(p.contains)
+    // incremental: every file holding no key of batch b is still live
+    val keysB = Set("T2", "T3")
+    val untouchedBefore = before.filter { f =>
+      spark.read.parquet(s"$out/$f").select("transaction_id").as[String]
+        .collect().forall(k => !keysB.contains(k))
     }
-    assert(untouchedBefore.nonEmpty, "test needs an untouched bucket")
-    val after = parquetMtimes
-    untouchedBefore.foreach { case (path, mtime) =>
-      assert(after.get(path).contains(mtime),
-        s"untouched bucket file was rewritten: $path")
+    assert(untouchedBefore.nonEmpty, "test needs a file batch b cannot touch")
+    val after = liveFiles.toSet
+    untouchedBefore.foreach { f =>
+      assert(after.contains(f), s"untouched file was rewritten: $f")
     }
   }
 
@@ -212,7 +232,7 @@ class StreamingSpec extends SparkSpecBase {
       "travel"  -> ((1L, 525L, 525L, 525L)),
       "grocery" -> ((1L, 10000L, 10000L, 10000L))))
     // replay safety: re-applying an already-committed batch id must not
-    // double-count (the applied_batch marker is the commit record)
+    // double-count (the batch's marker is the commit record)
     val replay = spark.read.schema(Streams.transactionSchema)
       .option("header", "true").csv(s"$in/b.csv")
     Streams.applyMvBatch(replay, 1L, state)
@@ -226,9 +246,7 @@ class StreamingSpec extends SparkSpecBase {
     // between sink write and commit) — the re-apply must CONVERGE to the
     // same state, not double-count, because it merges from the previous
     // COMMITTED version and overwrites the orphan
-    val fs = new org.apache.hadoop.fs.Path(state)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(state, "applied_batch_99"), false)
+    tear(state, 99L)
     Streams.applyMvBatch(replay, 99L, state)
     assert(snap("grocery") === ((2L, 20000L, 10000L, 10000L)),
       "partial-commit replay double-counted")
@@ -255,7 +273,7 @@ class StreamingSpec extends SparkSpecBase {
       while (System.currentTimeMillis() < deadline &&
           !last.contains(expect)) {
         last =
-          try Some(spark.read.parquet(out)
+          try Some(readLog(out)
             .select("transaction_id", "amount").as[(String, Double)]
             .collect().toMap)
           catch { case _: Exception => None }
@@ -434,9 +452,7 @@ class StreamingSpec extends SparkSpecBase {
     // torn commit: version written but marker lost (crash between write
     // and mark) — the re-apply merges from the previous COMMITTED state
     // and converges instead of double-applying
-    val fs = new org.apache.hadoop.fs.Path(state)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(state, "applied_batch_1"), false)
+    tear(state, 1L)
     Streams.applyScd2Batch(updatesDf(wave2), 1L, state)
     assert(asSet(Streams.scd2State(spark, state)) === expected,
       "torn-commit replay diverged")
@@ -525,9 +541,7 @@ class StreamingSpec extends SparkSpecBase {
     assert(corpusIds === Set(1L, 2L, 7L))
     // torn commit: drop the marker, re-apply — must converge, not
     // double-append
-    val fs = new org.apache.hadoop.fs.Path(state)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(state, "applied_batch_1"), false)
+    tear(state, 1L)
     Streams.applyDedupIngestBatch(replay, 1L, state)
     assert(corpusIds === Set(1L, 2L, 7L))
   }
@@ -585,9 +599,7 @@ class StreamingSpec extends SparkSpecBase {
     val replay = docs.filter(col("doc_id") > mid)
     Streams.applyDecontamBatch(replay, 1L, bloom, state)
     assert(reportRows === want)
-    val fs = new org.apache.hadoop.fs.Path(state)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(state, "applied_batch_1"), false)
+    tear(state, 1L)
     Streams.applyDecontamBatch(replay, 1L, bloom, state)
     assert(reportRows === want)
     assert(corpusIds === (ids.toSet -- flagged))
@@ -651,9 +663,7 @@ class StreamingSpec extends SparkSpecBase {
     val replay = emb.filter(col("vec_id") > mid)
     Streams.applyEmbedIngestBatch(replay, 1L, state)
     assert(corpusIds === kept)
-    val fs = new org.apache.hadoop.fs.Path(state)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(state, "applied_batch_1"), false)
+    tear(state, 1L)
     Streams.applyEmbedIngestBatch(replay, 1L, state)
     assert(corpusIds === kept)
     // duplicate arrivals in a NEW batch id: committed-state anti-join
@@ -830,11 +840,127 @@ class StreamingSpec extends SparkSpecBase {
     Streams.applyAsofEnrichBatch(extra, 2L, dims, state)
     assert(asMap(Streams.asofEnriched(spark, state)) === snapshot,
       "replayed batch id was applied twice")
-    val fs = new org.apache.hadoop.fs.Path(state)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(state, "applied_batch_2"), false)
+    tear(state, 2L)
     Streams.applyAsofEnrichBatch(extra, 2L, dims, state)
     assert(asMap(Streams.asofEnriched(spark, state)) === snapshot,
       "torn-commit replay diverged")
+  }
+
+  test("streaming cumulative uniques equal the batch new/cumulative series " +
+      "across a restart, a replayed batch id, and a torn commit") {
+    import graft.operators.EventOps
+    val in    = tmp("graft_uq_in")
+    val state = tmp("graft_uq_state")
+    val ckp   = tmp("graft_uq_ckp")
+    val events = EventOps.withTsMs(Tables.events(spark, sfDir))
+      .select(col("user_id"), col("ts_ms"))
+    def land(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
+      val stage = tmp("graft_uq_stage")
+      df.coalesce(1).write.mode("overwrite").parquet(stage)
+      val part = new java.io.File(stage).listFiles()
+        .find(_.getName.endsWith(".parquet")).get
+      Files.move(part.toPath, java.nio.file.Paths.get(in, name))
+    }
+    // split by TIME: every event of the first file precedes every event
+    // of the second, so arrival-order first-seen days are the true ones
+    val bounds = events.agg(min(col("ts_ms")), max(col("ts_ms"))).head()
+    val cut = bounds.getLong(0) + (bounds.getLong(1) - bounds.getLong(0)) / 2
+    val late = events.filter(col("ts_ms") > cut)
+    land(events.filter(col("ts_ms") <= cut), "f0.parquet")
+    Streams.uniquesPipeline(spark, in, state, ckp).awaitTermination()
+    land(late, "f1.parquet")
+    Streams.uniquesPipeline(spark, in, state, ckp).awaitTermination()
+    def series = Streams.uniquesSeries(spark, state)
+      .select("day", "new_users", "cumulative_users")
+      .as[(Long, Long, Long)].collect().toSeq
+    // the batch series also lists active days with no first-timer; the
+    // streamed one has a row only where someone was first seen
+    val want = EventOps.cumulativeUniques(spark, sfDir)
+      .filter(col("new_users") > 0)
+      .select("day", "new_users", "cumulative_users")
+      .as[(Long, Long, Long)].collect().toSeq
+    assert(want.nonEmpty && late.count() > 0)
+    assert(series === want)
+    Streams.applyUniquesBatch(late, 1L, state)
+    assert(series === want, "replayed batch id was applied twice")
+    tear(state, 1L)
+    Streams.applyUniquesBatch(late, 1L, state)
+    assert(series === want, "torn-commit replay diverged")
+  }
+
+  test("append-only state sinks commit only each batch's new rows, one " +
+      "version per batch, and earlier batches' files stay live") {
+    import graft.operators.Dedup
+    import graft.sources.GraftLog
+    val conf = spark.sessionState.newHadoopConf()
+    def adds(root: String, v: Int) =
+      GraftLog.versionRows(conf, root, v).filter(_.action == "add")
+    def median(df: org.apache.spark.sql.DataFrame, c: String): Long =
+      df.agg(percentile_approx(col(c), lit(0.5), lit(10000))).head.getLong(0)
+    // dedup gate: batch 1's version adds exactly batch 1's survivors
+    val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
+    val dmid = median(docs, "doc_id")
+    val dd = tmp("graft_amp_dd")
+    Streams.applyDedupIngestBatch(docs.filter(col("doc_id") <= dmid), 0L, dd)
+    Streams.applyDedupIngestBatch(docs.filter(col("doc_id") > dmid), 1L, dd)
+    assert(GraftLog.latestVersion(conf, dd) === 2)
+    val ddSurvivors = Streams.dedupCorpus(spark, dd)
+      .filter(col("doc_id") > dmid).count()
+    assert(ddSurvivors > 0)
+    assert(adds(dd, 2).flatMap(_.rows).sum === ddSurvivors)
+    assert(adds(dd, 1).map(_.file).toSet
+      .subsetOf(GraftLog.liveEntries(conf, dd, 2).toSet))
+    // embedding gate: the same
+    val emb = Tables.embeddings(spark, sfDir)
+      .select(col("vec_id"), col("embedding"))
+    val emid = median(emb, "vec_id")
+    val em = tmp("graft_amp_em")
+    Streams.applyEmbedIngestBatch(emb.filter(col("vec_id") <= emid), 0L, em)
+    Streams.applyEmbedIngestBatch(emb.filter(col("vec_id") > emid), 1L, em)
+    assert(GraftLog.latestVersion(conf, em) === 2)
+    val emSurvivors = Streams.embedCorpus(spark, em)
+      .filter(col("vec_id") > emid).count()
+    assert(emSurvivors > 0)
+    assert(adds(em, 2).flatMap(_.rows).sum === emSurvivors)
+    assert(adds(em, 1).map(_.file).toSet
+      .subsetOf(GraftLog.liveEntries(conf, em, 2).toSet))
+    // decontamination gate: report and corpus rows land in ONE version
+    // per batch
+    val bloom = Dedup.bloomBitsetFromIndex(Dedup.uncappedShingleIndexOf(
+      docs.filter(pmod(col("doc_id"), lit(Dedup.EvalMod)) === 0)))
+    val dc = tmp("graft_amp_dc")
+    Streams.applyDecontamBatch(docs.filter(col("doc_id") <= dmid), 0L,
+      bloom, dc)
+    assert(GraftLog.latestVersion(conf, dc) === 1)
+    Streams.applyDecontamBatch(docs.filter(col("doc_id") > dmid), 1L,
+      bloom, dc)
+    assert(GraftLog.latestVersion(conf, dc) === 2)
+  }
+
+  test("superseded MV state versions are reclaimable: vacuum deletes " +
+      "their files and the state reads the same") {
+    import graft.sources.{GraftLog, GraftLogOps}
+    val state = tmp("graft_mv_vac") + "/mv"
+    val conf = spark.sessionState.newHadoopConf()
+    def batch(rows: (String, String)*) = rows.toDF("category", "amount")
+    Streams.applyMvBatch(batch("food" -> "10.00", "travel" -> "5.25"), 0L,
+      state)
+    Streams.applyMvBatch(batch("food" -> "4.00"), 1L, state)
+    Streams.applyMvBatch(batch("grocery" -> "100.00"), 2L, state)
+    val latest = GraftLog.latestVersion(conf, state)
+    assert(latest === 3)
+    def snap = Streams.mvState(spark, state).collect().toSet
+    val before = snap
+    val superseded = (1 until latest)
+      .flatMap(v => GraftLog.liveEntries(conf, state, v)).toSet --
+      GraftLog.liveEntries(conf, state, latest)
+    assert(superseded.nonEmpty)
+    val (deleted, _) = GraftLogOps.vacuumLog(spark, state, keepFrom = latest)
+    assert(deleted >= superseded.size)
+    val fs = new org.apache.hadoop.fs.Path(state).getFileSystem(conf)
+    superseded.foreach(f =>
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(state, f)),
+        s"superseded state file $f survived vacuum"))
+    assert(snap === before)
   }
 }

@@ -6,13 +6,17 @@ import scala.util.control.NonFatal
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.TaskContext
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.KnownNullable
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Alias, KnownNullable,
+  Literal, UnsafeProjection}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Row-level operations on the transaction log — DELETE, UPDATE and
   * MERGE (the LWW key-match upsert) — plus OPTIMIZE (compaction) and
@@ -36,14 +40,19 @@ import org.apache.spark.sql.types._
   *     source's key profile tested PER FILE (exact distinct keys when
   *     few, per-range-bucket exact bounds when many), so a CDC batch
   *     whose keys span the domain still prunes to the files that
-  *     actually overlap them — zero data I/O;
-  *  2. one distributed scan of the candidates, deletion vectors
-  *     applied, whose driver-collected result is per-file MATCH COUNTS
-  *     — bounded by the file count, never row count;
+  *     actually overlap them — zero data I/O. A MERGE source of at most
+  *     [[MaxInlineKeys]] rows profiles in ONE job that brings its key
+  *     tuples back whole; they then match table rows as a literal set,
+  *     with no join;
+  *  2. one distributed, shuffle-free scan of the candidates, deletion
+  *     vectors applied, whose tasks fold their matches per file — the
+  *     driver sees which files matched, bounded by the file count,
+  *     never row count;
   *  3. COPY-ON-WRITE rewrites every touched file, reading only those
   *     (shuffles scale with touched data + source, not table size);
-  *     MERGE-ON-READ masks the matched positions of sparsely touched
-  *     files with deletion vectors, rewrites only the densely touched
+  *     MERGE-ON-READ's scan instead brings each file's matched
+  *     positions together and writes the sparsely touched files'
+  *     deletion vectors right there, rewrites only the densely touched
   *     ones ([[DvRewriteFraction]]) and appends what the operation
   *     re-emits (UPDATE's transformed rows, MERGE's source);
   *  4. one commit — remove + add, plus dv rows — which the change feed
@@ -66,7 +75,9 @@ object GraftLogOps {
 
   /** How many distinct source keys are collected exactly for per-file
     * candidate pruning before falling back to range-bucket profiles
-    * (matches the In() width [[GraftLogStats.mayMatch]] accepts).
+    * (matches the In() width [[GraftLogStats.mayMatch]] accepts). A
+    * MERGE source of at most this many rows is matched through its key
+    * tuples collected on the driver, larger ones through joins.
     */
   val MaxInlineKeys = 1000
 
@@ -104,20 +115,29 @@ object GraftLogOps {
     new Path(p).toUri.getPath
 
   /** Per-row sidecar-membership predicate — the mask evaluation of
-    * [[maskedParquet]].
+    * [[maskedParquet]]. Rows arrive file by file, so the mask resolves
+    * once per file, not per row: the last file seen and its positions
+    * (empty without a sidecar) sit in one immutable pair, which a
+    * concurrent caller replaces whole and never sees half-written.
     */
   private def dvMaskUdf(s: SparkSession,
       dvByNormPath: Map[String, String])
       : org.apache.spark.sql.expressions.UserDefinedFunction = {
     val cnf = new org.apache.spark.util.SerializableConfiguration(
       s.sessionState.newHadoopConf())
+    val none = Array.empty[Long]
+    var last: (String, Array[Long]) = ("", none)
     udf { (file: String, pos: Long) =>
-      dvByNormPath.get(normPath(file)) match {
-        case Some(sidecar) =>
-          java.util.Arrays.binarySearch(
-            GraftLog.DvSidecarCache.get(cnf.value, sidecar), pos) >= 0
-        case None => false
-      }
+      val seen = last
+      val mask =
+        if (seen._1 == file) seen._2
+        else {
+          val m = dvByNormPath.get(normPath(file))
+            .fold(none)(GraftLog.DvSidecarCache.get(cnf.value, _))
+          last = (file, m)
+          m
+        }
+      mask.length > 0 && java.util.Arrays.binarySearch(mask, pos) >= 0
     }
   }
 
@@ -244,6 +264,86 @@ object GraftLogOps {
       schema: StructType, keys: Seq[String]): Option[Seq[Filter]] = {
     val fs = keys.map(k => sourceKeyFilter(src, k, schema(k).dataType))
     if (fs.exists(_.isEmpty)) None else Some(fs.flatten)
+  }
+
+  /** A merge source's key tuples, one per source row, when it has at
+    * most [[MaxInlineKeys]] rows; None when it has more. One job: each
+    * partition returns at most `MaxInlineKeys + 1` tuples. Float keys
+    * are normalized (one zero, one NaN), so the tuples compare as
+    * `distinct` compares them: the source's count, key uniqueness and
+    * exact key set are then driver arithmetic.
+    */
+  private def inlineKeys(src: DataFrame, keys: Seq[String])
+      : Option[Array[InternalRow]] = {
+    val keyed = src.select(keys.map(col): _*)
+    val qe = keyed.select(keyed.queryExecution.analyzed.output.map(a =>
+      ColumnBridge.column(Alias(ColumnBridge.normalizeFloats(a),
+        a.name)())): _*).queryExecution
+    val n = MaxInlineKeys + 1
+    val got = mutable.ArrayBuffer[InternalRow]()
+    SQLExecution.withNewExecutionId(qe, Some("graftlog merge keys")) {
+      val schema = qe.analyzed.schema
+      val firstN = qe.toRdd.mapPartitions { rows =>
+        val unsafe = UnsafeProjection.create(schema)
+        rows.take(n).map(r => unsafe(r).copy(): InternalRow)
+      }
+      src.sparkSession.sparkContext.runJob(firstN,
+        (rows: Iterator[InternalRow]) => rows.toArray,
+        (_: Int, part: Array[InternalRow]) =>
+          got ++= part.take(n - got.length))
+    }
+    if (got.length > MaxInlineKeys) None else Some(got.toArray)
+  }
+
+  /** The per-key data-source filters of a source whose key tuples came
+    * back whole: each key's distinct non-null values as an `In` (what
+    * [[sourceKeysFilters]] computes with jobs); None when some key is
+    * NULL in every tuple.
+    */
+  private def inlineKeyFilters(keys: Seq[String], schema: StructType,
+      tuples: Array[InternalRow]): Option[Seq[Filter]] = {
+    val fs = keys.zipWithIndex.map { case (k, i) =>
+      val dt = schema(k).dataType
+      val vals = tuples.iterator.filterNot(_.isNullAt(i))
+        .map(t => CatalystTypeConverters.convertToScala(t.get(i, dt), dt))
+        .toArray.distinct
+      if (vals.isEmpty) None else Some(In(k, vals))
+    }
+    if (fs.exists(_.isEmpty)) None else Some(fs.flatten)
+  }
+
+  /** Is a row's key one of `tuples`? A literal `isin` — of a `struct`
+    * of the keys when there are several — over the tuples that have no
+    * NULL part, since those alone can equi-match. NULL for a row whose
+    * single key is NULL.
+    */
+  private def keyIn(keys: Seq[String], schema: StructType,
+      tuples: Seq[InternalRow]): Column = {
+    val types = keys.map(schema(_).dataType)
+    val whole = tuples.filter(t => types.indices.forall(!t.isNullAt(_)))
+    if (whole.isEmpty) lit(false)
+    else if (keys.size == 1)
+      col(keys.head).isin(whole.map(t =>
+        ColumnBridge.column(Literal(t.get(0, types.head), types.head))): _*)
+    else {
+      val st = StructType(keys.zip(types).map { case (k, t) =>
+        StructField(k, t) })
+      struct(keys.map(col): _*).isin(whole.map(t =>
+        ColumnBridge.column(Literal(t, st))): _*)
+    }
+  }
+
+  /** Semi and anti match of rows against a set of merge-key tuples: the
+    * literal set of [[keyIn]], or a frame of keys joined.
+    */
+  private def keyMatch(keys: Seq[String], schema: StructType,
+      set: Either[Seq[InternalRow], DataFrame])
+      : (DataFrame => DataFrame, DataFrame => DataFrame) = set match {
+    case Left(tuples) =>
+      val hit = keyIn(keys, schema, tuples)
+      (_.filter(hit), _.filter(!coalesce(hit, lit(false))))
+    case Right(frame) =>
+      (_.join(frame, keys, "left_semi"), _.join(frame, keys, "left_anti"))
   }
 
   /** The DELETE condition as a (physical-named) data-source Filter for
@@ -393,7 +493,11 @@ object GraftLogOps {
     checkMode("merge", mode)
     val src = source.cache()
     try {
-      val srcCount = src.count()
+      // the source's profile, taken once across retries: a small
+      // source's key tuples come back whole in one job, so its count,
+      // uniqueness and key set need no further job
+      lazy val inline = inlineKeys(src, keys)
+      lazy val srcCount = inline.fold(src.count())(_.length.toLong)
       rowLevel(s, root, mode) { snap =>
         val schema = snap.schema
         require(keys.nonEmpty && keys.forall(schema.fieldNames.contains),
@@ -408,41 +512,47 @@ object GraftLogOps {
             "order)")
         if (srcCount == 0) None // no-op: nothing matched or inserted
         else {
-          require(
-            src.select(keys.map(col): _*).distinct().count() == srcCount,
+          val srcKeys = src.select(keys.map(col): _*)
+          require(inline.fold(srcKeys.distinct().count() == srcCount)(
+              ts => ts.toSet.size == ts.length),
             "merge source keys must be unique (one LWW winner per key)")
           // the source's key profile (exact keys or per-bucket bounds),
           // under the PHYSICAL names the manifest statistics speak
-          val keyFilters = sourceKeysFilters(src, schema, keys)
+          val keyFilters = inline
+            .fold(sourceKeysFilters(src, schema, keys))(
+              inlineKeyFilters(keys, schema, _))
             .map(_.map(f => GraftLog.renameFilter(f, snap.meta.colMap)))
           def mayHold(st: Option[GraftLogStats.ColStats],
               rows: Option[Long]): Boolean =
             mayHoldKeys(snap.physSchema, keyFilters, st, rows)
-          val srcKeys = src.select(keys.map(col): _*)
+          // table rows meet the source keys as a literal set when they
+          // came back whole, through joins otherwise
+          val (matches, misses) = keyMatch(keys, schema,
+            inline.map(_.toSeq).toLeft(srcKeys))
           val srcRows = src.select(snap.cols: _*)
           Some(RowLevelOp("merge",
             candidates = snap.entries.filter { case (_, fe) =>
               mayHold(fe.stats, fe.rows) },
-            matching = _.join(srcKeys, keys, "left_semi")
-              .select(FilePos ++ keys.map(col): _*),
-            rewrite = _.join(srcKeys, keys, "left_anti")
-              .unionByName(srcRows),
+            matching = matches(_).select(FilePos ++ keys.map(col): _*),
+            rewrite = misses(_).unionByName(srcRows),
             source = Some(srcRows),
+            hitKeys = if (inline.isDefined) keys else Nil,
             // an all-sparse commit splits the source by match, so the
             // feed tags updates' new versions as postimages and
-            // genuinely-new keys as inserts (the matched keys are
-            // bounded by the source's key cardinality and fold off the
-            // cached match); otherwise the source rides in the dense
-            // rewrite
-            reemit = (matched, classify) =>
-              if (!classify) Nil
-              else {
-                val hit = matched.select(keys.map(col): _*).distinct()
-                Seq(("srcu", src.join(hit, keys, "left_semi")
-                    .select(snap.cols: _*), Some("update_postimage")),
-                  ("srci", src.join(hit, keys, "left_anti")
-                    .select(snap.cols: _*), None))
-              },
+            // genuinely-new keys as inserts (the matched tuples came
+            // back from the match pass, or fold off a re-read of the
+            // matches); otherwise the source rides in the dense rewrite
+            reemit = m =>
+              if (!m.classify) Nil
+              else m.sparse.map(rows => keyMatch(keys, schema,
+                  if (inline.isDefined) Left(m.hits)
+                  else Right(rows.select(keys.map(col): _*).distinct())))
+                match {
+                  case None => Seq(("srci", srcRows, None))
+                  case Some((hit, miss)) =>
+                    Seq(("srcu", hit(srcRows), Some("update_postimage")),
+                      ("srci", miss(srcRows), None))
+                },
             // adds committed after the read whose stats may hold our
             // keys refuse → the retry re-plans with those files included
             addConflict = Some((snap.latest,
@@ -522,9 +632,9 @@ object GraftLogOps {
         // matched rows re-enter transformed as new files — classified
         // as postimages (their masked old versions the preimages) when
         // the commit classifies at all
-        reemit = (matched, classify) =>
-          Seq(("upd", matched.select(assign((_, v) => v): _*),
-            if (classify) Some("update_postimage") else None))))
+        reemit = m => m.sparse.toSeq.map(rows =>
+          ("upd", rows.select(assign((_, v) => v): _*),
+            if (m.classify) Some("update_postimage") else None))))
     }
   }
 
@@ -598,8 +708,11 @@ object GraftLogOps {
     * @param rewrite    a touched file's logical rows → the rows that
     *                   replace them
     * @param source     rows committed even when nothing matches
-    * @param reemit     merge-on-read: (matched rows of the sparsely
-    *                   touched files, does the commit classify) → the
+    * @param hitKeys    columns whose distinct matched tuples the
+    *                   merge-on-read match pass brings to the driver —
+    *                   set only where the caller bounds them (MERGE, for
+    *                   a source of at most [[MaxInlineKeys]] rows)
+    * @param reemit     merge-on-read: what the match pass found → the
     *                   rows appended as new files, each as (staging
     *                   subdirectory, rows, change-feed class)
     * @param addConflict the commit's guard against concurrently added
@@ -611,9 +724,21 @@ object GraftLogOps {
       matching: DataFrame => DataFrame,
       rewrite: DataFrame => DataFrame,
       source: Option[DataFrame] = None,
-      reemit: (DataFrame, Boolean) =>
-        Seq[(String, DataFrame, Option[String])] = (_, _) => Nil,
+      hitKeys: Seq[String] = Nil,
+      reemit: Matches => Seq[(String, DataFrame, Option[String])] =
+        _ => Nil,
       addConflict: Option[(Int, GraftLog.ManifestRow => Boolean)] = None)
+
+  /** What merge-on-read's match pass found, as a re-emit reads it.
+    *
+    * @param sparse   the matched rows of the sparsely touched files, a
+    *                 re-read of the snapshot (None when no file is
+    *                 sparse)
+    * @param classify whether the commit classifies its change feed
+    * @param hits     the distinct matched tuples of the op's `hitKeys`
+    */
+  private final case class Matches(sparse: Option[DataFrame],
+      classify: Boolean, hits: Seq[InternalRow])
 
   /** The one row-level driver: inside the optimistic retry, resolve the
     * latest snapshot, let `plan` build the operation against it (None =
@@ -633,22 +758,63 @@ object GraftLogOps {
       }
     }
 
-  /** Per-file counts of `matched` rows as (file URI as read,
-    * manifest-relative path, count), in candidate order — one row per
-    * touched file reaches the driver, never row data. URIs resolve
+  /** One task's matches in one file: the file as read, the matched
+    * positions (when asked for) and the distinct matched key tuples
+    * (when asked for).
+    */
+  private final case class FileMatch(file: String, pos: Array[Long],
+      keys: Array[InternalRow])
+
+  private final class FileAcc {
+    val pos = mutable.ArrayBuilder.make[Long]
+    val keys = mutable.HashSet[InternalRow]()
+  }
+
+  /** Run `job` over the matched rows folded per (task, file) inside the
+    * scan's own tasks — no shuffle: a task emits one [[FileMatch]] per
+    * file it read a match from. Rows arrive file by file, so the file
+    * column is compared, not re-hashed, per row.
+    */
+  private def foldMatches[T](matched: DataFrame, positions: Boolean,
+      keys: Seq[String])(job: RDD[FileMatch] => T): T = {
+    val qe = matched.select(FilePos ++
+      (if (keys.isEmpty) Nil else Seq(struct(keys.map(col): _*))): _*)
+      .queryExecution
+    val nk = keys.size
+    SQLExecution.withNewExecutionId(qe, Some("graftlog match")) {
+      val schema = qe.analyzed.schema
+      job(qe.toRdd.mapPartitions { rows =>
+        val unsafe = UnsafeProjection.create(schema)
+        val byFile = mutable.LinkedHashMap[String, FileAcc]()
+        var file: UTF8String = null
+        var acc: FileAcc = null
+        rows.foreach { r =>
+          val f = r.getUTF8String(0)
+          if (f != file) {
+            file = f.clone()
+            acc = byFile.getOrElseUpdate(file.toString, new FileAcc)
+          }
+          if (positions) acc.pos += r.getLong(1)
+          if (nk > 0) acc.keys += unsafe(r).getStruct(2, nk).copy()
+        }
+        byFile.iterator.map { case (f, a) =>
+          FileMatch(f, a.pos.result(), a.keys.toArray) }
+      })
+    }
+  }
+
+  /** The candidates holding a `matched` row (manifest-relative, in
+    * candidate order) — one shuffle-free job, and one row per (task,
+    * touched file) reaches the driver, never row data. Files resolve
     * against the candidates by canonical path (scheme/authority
     * rendering differs across filesystems).
     */
-  private def matchCounts(snap: Snapshot, op: RowLevelOp,
-      matched: DataFrame): Seq[(String, String, Long)] = {
-    val hits = matched.groupBy("_g_file").count().collect()
-      .map(r => normPath(r.getString(0)) ->
-        ((r.getString(0), r.getLong(1))))
-      .toMap
-    op.candidates.flatMap { case (rel, _) =>
-      hits.get(normPath(s"${snap.root}/$rel")).map { case (uri, n) =>
-        (uri, rel, n) }
-    }
+  private def touchedFiles(snap: Snapshot, op: RowLevelOp,
+      matched: DataFrame): Seq[String] = {
+    val hit = foldMatches(matched, positions = false, Nil)(
+      _.map(m => normPath(m.file)).collect()).toSet
+    op.candidates.map(_._1).filter(rel =>
+      hit.contains(normPath(s"${snap.root}/$rel")))
   }
 
   /** Copy-on-write: find the touched files, rewrite them whole, and
@@ -659,35 +825,36 @@ object GraftLogOps {
   private def copyOnWrite(snap: Snapshot, op: RowLevelOp): Int = {
     val touched =
       if (op.candidates.isEmpty) Nil
-      else matchCounts(snap, op, snap.readWithPos(op.candidates.map(_._1))
-        .transform(op.matching)).map(_._2)
+      else touchedFiles(snap, op, snap.readWithPos(op.candidates.map(_._1))
+        .transform(op.matching))
     val rows =
       if (touched.isEmpty) op.source
       else Some(op.rewrite(snap.read(touched)))
     rows.fold(snap.latest)(df =>
-      stageAndCommit(snap, op, removes = touched) { staging =>
-        (stageFiles(snap, df, staging, "rewrite"), Nil, Nil) })
+      stageAndCommit(snap, op) { staging =>
+        Some(Staged(stageFiles(snap, df, staging, "rewrite"),
+          removes = touched)) })
   }
 
   /** Merge-on-read: write amplification proportional to MATCHED rows,
     * not touched FILES. The scale shape:
     *
-    *  1. one distributed scan over the candidate files computes the
-    *     matched rows with their (file, row position) via the parquet
-    *     reader's own `_metadata.row_index` — cached, since the density
-    *     decision, the sidecar job and the re-emitted rows all read it;
-    *     prior masks apply at the read, so an already-deleted row never
-    *     re-matches (a re-emitted copy would resurrect it) and the
-    *     density decision counts LIVE rows;
-    *  2. per-file matched COUNTS (one row per file) come back to pick
-    *     dense files ([[DvRewriteFraction]]) for a copy-on-write
-    *     rewrite;
-    *  3. executors write one sidecar pair per sparse file (prior mask ∪
-    *     matches, matches \ prior) under the operation's write-scoped
-    *     directory — the same zero-rename publication data files use:
-    *     nothing references the sidecars until the manifest row does;
-    *     the operation's re-emitted rows stage beside them;
-    *  4. ONE commit: `dv` rows for sparse files, remove+add for dense
+    *  1. ONE match pass ([[maskMatches]]) over the candidate files reads
+    *     the matched rows with their (file, row position) via the
+    *     parquet reader's own `_metadata.row_index`, brings each file's
+    *     positions together, and per file decides dense (at least
+    *     [[DvRewriteFraction]] of its rows: rewritten copy-on-write) or
+    *     sparse, whose sidecar pair (prior mask ∪ matches, matches \
+    *     prior) it writes right there, under the operation's
+    *     write-scoped directory — the same zero-rename publication data
+    *     files use: nothing references the sidecars until the manifest
+    *     row does. Prior masks apply at the read, so an already-deleted
+    *     row never re-matches (a re-emitted copy would resurrect it) and
+    *     the density decision counts LIVE rows;
+    *  2. the operation's re-emitted rows (UPDATE's transformed matches,
+    *     re-read from the sparse files; MERGE's source, split by the
+    *     matched keys) and the dense files' rewrite stage beside them;
+    *  3. ONE commit: `dv` rows for sparse files, remove+add for dense
     *     ones, adds for the re-emitted rows, guarded by liveness AND
     *     dv-conflict revalidation (a concurrent re-mask of the same
     *     file refuses — complete-mask replacement semantics would
@@ -706,134 +873,105 @@ object GraftLogOps {
     * (a row selection over each batch), so OPTIMIZE's fold is a
     * compaction decision, not a read rescue.
     */
-  private def mergeOnRead(snap: Snapshot, op: RowLevelOp): Int = {
-    val matched = snap.readWithPos(op.candidates.map(_._1))
-      .transform(op.matching).cache()
-    try {
-      val counts = matchCounts(snap, op, matched)
-      if (counts.isEmpty && op.source.isEmpty) return snap.latest
-      val rowsByRel = op.candidates.map { case (rel, fe) =>
-        rel -> fe.rows.get }.toMap
-      val (dense, sparse) = counts.partition { case (_, rel, n) =>
-        n >= (rowsByRel(rel) * DvRewriteFraction).ceil.toLong }
-      val classify = dense.isEmpty
-      // a dense file's matched rows ride in its rewrite; only the
-      // sparse files' are re-emitted
-      val reemitted = op.reemit(
-        if (classify) matched
-        else matched.filter(col("_g_file").isin(sparse.map(_._1): _*)),
-        classify)
-      stageAndCommit(snap, op, removes = dense.map(_._2)) { staging =>
-        val (dvRows, dvFiles) = writeDvSidecars(snap, s"$staging/dv",
-          matched.select(FilePos: _*), sparse.map(_._2),
-          op.candidates.map(c => normPath(s"${snap.root}/${c._1}") -> c._1)
-            .toMap,
-          cdcClass =
-            if (classify && reemitted.nonEmpty) Some("update_preimage")
-            else None)
+  private def mergeOnRead(snap: Snapshot, op: RowLevelOp): Int =
+    stageAndCommit(snap, op) { staging =>
+      val (touched, hits) = maskMatches(snap, op, s"$staging/dv")
+      if (touched.isEmpty && op.source.isEmpty) None
+      else {
+        val (dense, sparse) = touched.partition(_._2.isEmpty)
+        val classify = dense.isEmpty
+        // a dense file's matched rows ride in its rewrite; only the
+        // sparse files' are re-emitted
+        val reemitted = op.reemit(Matches(
+          if (sparse.isEmpty) None
+          else Some(snap.readWithPos(sparse.map(_._1))
+            .transform(op.matching)),
+          classify, hits))
+        val cdcClass =
+          if (classify && reemitted.nonEmpty) Some("update_preimage")
+          else None
+        val dvRows = sparse.map { case (rel, dv) =>
+          GraftLog.ManifestRow("dv", rel, stats = Some(GraftLog.encodeDv(
+            dv.get.copy(cdcClass = cdcClass))))
+        }
         val adds = reemitted.flatMap { case (sub, df, cdc) =>
             stageFiles(snap, df, staging, sub, cdc) } ++
           (if (dense.isEmpty) Nil
-           else stageFiles(snap, op.rewrite(snap.read(dense.map(_._2))),
+           else stageFiles(snap, op.rewrite(snap.read(dense.map(_._1))),
              staging, "dense"))
-        (adds, dvRows, dvFiles)
+        Some(Staged(adds, removes = dense.map(_._1), dvRows = dvRows,
+          dvFiles = sparse.map(_._1)))
       }
-    } finally matched.unpersist()
-  }
-
-  /** Land an operation's new files and sidecars under ONE write-scoped
-    * directory (`data/w_<op>_<uuid>`, the connector's zero-rename
-    * publication: nothing references them until the manifest does) and
-    * commit them as one version — `removes`, the staged adds and dv
-    * rows, and the layout this operation observed, re-recorded as a
-    * `partcols` row (rewrites land files OUTSIDE the Hive directory
-    * layout, which would otherwise erase a path-inferred layout for
-    * later compaction grouping and catalog write defaults). The commit
-    * revalidates removed and re-masked files against concurrent
-    * rewrites and dv commits since the snapshot, plus the operation's
-    * add-conflict guard. Any failure — a staging job or a refused
-    * commit — deletes the directory before rethrowing, so the
-    * optimistic retry re-plans from a clean slate.
-    */
-  private def stageAndCommit(snap: Snapshot, op: RowLevelOp,
-      removes: Seq[String])(stage: String =>
-        (Seq[GraftLogFileCommit], Seq[GraftLog.ManifestRow], Seq[String]))
-      : Int = {
-    val staging =
-      s"${snap.root}/data/w_${op.name}_${java.util.UUID.randomUUID()}"
-    try {
-      val (adds, dvRows, dvFiles) = stage(staging)
-      GraftLogWrite.commitStaged(snap.conf, snap.root, staging, adds,
-        Some(snap.schema), removes = removes,
-        extraRows = GraftLog.partColsRow(snap.layout) ++ dvRows,
-        dvFiles = dvFiles, addConflict = op.addConflict,
-        readVersion = Some(snap.latest), op = Some(op.name))
-    } catch { case NonFatal(e) =>
-      val p = new Path(staging)
-      p.getFileSystem(snap.conf).delete(p, true)
-      throw e
     }
-  }
 
-  /** The deletion-vector WRITE job of merge-on-read: one sidecar pair
-    * (complete mask ∪ prior, this-commit delta) per sparse file,
-    * written by EXECUTORS under the write-scoped `dvBase` directory —
-    * positions never reach the driver; the returned manifest rows (and
-    * the dv-file list the commit revalidates) are one small row per
-    * file. `matched` comes from the masked read, so its positions are
-    * live at the snapshot — disjoint from each file's prior mask.
+  /** Merge-on-read's match pass, ONE job: the candidates' matched
+    * positions fold per file inside the scan's tasks, one shuffle
+    * brings each file's folds together, and there the file's count
+    * decides dense or sparse ([[DvRewriteFraction]] of its manifest
+    * rows) and a sparse file's sidecar pair — complete mask (prior ∪
+    * matches) and this commit's delta — is written by the EXECUTOR
+    * under `dvBase`. Positions never reach the driver; per touched file
+    * comes back (manifest-relative path, descriptor of the sidecars,
+    * written for sparse files only — root-relative paths, no
+    * change-feed class yet), in candidate order, plus the distinct
+    * matched tuples of the op's `hitKeys`. The matches come from the
+    * masked read, so their positions are live at the snapshot — disjoint
+    * from each file's prior mask.
     */
-  private def writeDvSidecars(snap: Snapshot, dvBase: String,
-      matched: DataFrame, sparseRels: Seq[String],
-      relByNorm: Map[String, String],
-      cdcClass: Option[String])
-      : (Seq[GraftLog.ManifestRow], Seq[String]) = {
-    if (sparseRels.isEmpty) return (Nil, Nil)
+  private def maskMatches(snap: Snapshot, op: RowLevelOp, dvBase: String)
+      : (Seq[(String, Option[GraftLog.DvDescriptor])], Seq[InternalRow]) = {
     val root = snap.root
     val fs = new Path(root).getFileSystem(snap.conf)
     val cnf = new org.apache.spark.util.SerializableConfiguration(snap.conf)
-    val priorByNorm: Map[String, String] = sparseRels.flatMap { rel =>
-      snap.dvs.get(rel).map(d =>
-        (normPath(s"$root/$rel"), s"$root/${d.dv}")) }.toMap
-    val sparseNorm = sparseRels.map(r => normPath(s"$root/$r")).toSet
-    val spark = matched.sparkSession
-    import spark.implicits._
-    val dvMeta: Array[(String, String, Long, String, Long)] =
-      matched.as[(String, Long)]
-        .filter(r => sparseNorm.contains(normPath(r._1)))
-        .groupByKey(r => normPath(r._1))
-        .mapGroups { (fnorm, it) =>
-          val delta = it.map(_._2).toArray
+    val rowsByNorm = op.candidates.map { case (rel, fe) =>
+      normPath(s"$root/$rel") -> fe.rows.get }.toMap
+    val priorByNorm = op.candidates.flatMap { case (rel, _) =>
+      snap.dvs.get(rel).map(d => normPath(s"$root/$rel") -> s"$root/${d.dv}")
+    }.toMap
+    val touched = foldMatches(snap.readWithPos(op.candidates.map(_._1))
+        .transform(op.matching), positions = true, op.hitKeys) {
+      _.map(m => (normPath(m.file), m)).groupByKey().map {
+        case (fnorm, parts) =>
+          val delta = parts.iterator.flatMap(_.pos.iterator).toArray
           java.util.Arrays.sort(delta)
-          val complete = priorByNorm.get(fnorm)
-            .map(p => GraftLog.DvSidecarCache.get(cnf.value, p))
-            .getOrElse(Array.empty[Long]) ++ delta
-          java.util.Arrays.sort(complete)
-          val tag = java.security.MessageDigest.getInstance("SHA-1")
-            .digest(fnorm.getBytes("UTF-8"))
-            .take(8).map("%02x".format(_)).mkString
-          // ATTEMPT-unique names: a retried or speculative task must
-          // never collide with a dead twin's put-if-absent create —
-          // only the winning attempt's metadata rows reach the driver
-          // (Spark task-commit semantics), so loser files are simply
-          // never referenced (and die with the staging dir on abort)
-          val attempt = Option(org.apache.spark.TaskContext.get())
-            .map(_.taskAttemptId().toString).getOrElse("0")
-          val dvPath = s"$dvBase/$tag-a$attempt.dv"
-          val deltaPath = s"$dvBase/$tag-a$attempt.delta.dv"
-          GraftLog.writeDv(cnf.value, new Path(dvPath), complete)
-          GraftLog.writeDv(cnf.value, new Path(deltaPath), delta)
-          (fnorm, dvPath, complete.length.toLong, deltaPath,
-            delta.length.toLong)
-        }.collect()
+          val keys = parts.iterator.flatMap(_.keys.iterator).toSet.toArray
+          val n = delta.length.toLong
+          val dv =
+            if (n >= (rowsByNorm(fnorm) * DvRewriteFraction).ceil.toLong)
+              None // dense: rewritten, no sidecar
+            else {
+              val complete = priorByNorm.get(fnorm)
+                .map(p => GraftLog.DvSidecarCache.get(cnf.value, p))
+                .getOrElse(Array.empty[Long]) ++ delta
+              java.util.Arrays.sort(complete)
+              val tag = java.security.MessageDigest.getInstance("SHA-1")
+                .digest(fnorm.getBytes("UTF-8"))
+                .take(8).map("%02x".format(_)).mkString
+              // ATTEMPT-unique names: a retried or speculative task must
+              // never collide with a dead twin's put-if-absent create —
+              // only the winning attempt's descriptors reach the driver
+              // (Spark task-commit semantics), so loser files are simply
+              // never referenced (and die with the staging dir on abort)
+              val attempt = Option(TaskContext.get())
+                .map(_.taskAttemptId().toString).getOrElse("0")
+              val dvPath = s"$dvBase/$tag-a$attempt.dv"
+              val deltaPath = s"$dvBase/$tag-a$attempt.delta.dv"
+              GraftLog.writeDv(cnf.value, new Path(dvPath), complete)
+              GraftLog.writeDv(cnf.value, new Path(deltaPath), delta)
+              Some(GraftLog.DvDescriptor(dvPath, complete.length.toLong,
+                deltaPath, n))
+            }
+          (fnorm, dv, keys)
+      }.collect()
+    }
     // LOSER task attempts (retried or speculative) wrote attempt-named
-    // sidecars that no collected row references — and a committed
-    // staging directory is permanent. Sweep now: keep the winning
-    // attempts' files, delete the rest. Best-effort (a zombie attempt
-    // may still be writing AFTER this listing — its debris is then
-    // caught by VACUUM's age-guarded orphan sweep); one listing RPC.
-    val winning = dvMeta.iterator
-      .flatMap(m => Iterator(m._2, m._4))
+    // sidecars that no collected descriptor references — and a
+    // committed staging directory is permanent. Sweep now: keep the
+    // winning attempts' files, delete the rest. Best-effort (a zombie
+    // attempt may still be writing AFTER this listing — its debris is
+    // then caught by VACUUM's age-guarded orphan sweep); one listing RPC.
+    val winning = touched.iterator.flatMap(_._2)
+      .flatMap(d => Iterator(d.dv, d.delta))
       .map(p => new Path(p).getName).toSet
     val basePath = new Path(dvBase)
     if (fs.exists(basePath))
@@ -841,14 +979,50 @@ object GraftLogOps {
         if (!winning.contains(st.getPath.getName))
           fs.delete(st.getPath, false)
       }
-    val rows = dvMeta.toSeq.sortBy(_._1).map {
-      case (fnorm, dv, card, delta, dcard) =>
-        GraftLog.ManifestRow("dv", relByNorm(fnorm),
-          stats = Some(GraftLog.encodeDv(GraftLog.DvDescriptor(
-            dv.stripPrefix(s"$root/"), card,
-            delta.stripPrefix(s"$root/"), dcard, cdcClass))))
+    val found = touched.map(t => t._1 -> t).toMap
+    val perFile = op.candidates.flatMap { case (rel, _) =>
+      found.get(normPath(s"$root/$rel")).map { case (_, dv, _) =>
+        (rel, dv.map(d => d.copy(dv = d.dv.stripPrefix(s"$root/"),
+          delta = d.delta.stripPrefix(s"$root/"))))
+      }
     }
-    (rows, dvMeta.map(m => relByNorm(m._1)).toSeq)
+    (perFile, touched.iterator.flatMap(_._3).toSeq)
+  }
+
+  /** What an operation staged for its commit. */
+  private final case class Staged(adds: Seq[GraftLogFileCommit],
+      removes: Seq[String] = Nil, dvRows: Seq[GraftLog.ManifestRow] = Nil,
+      dvFiles: Seq[String] = Nil)
+
+  /** Land an operation's new files and sidecars under ONE write-scoped
+    * directory (`data/w_<op>_<uuid>`, the connector's zero-rename
+    * publication: nothing references them until the manifest does) and
+    * commit them as one version — the staged removes, adds and dv
+    * rows, and the layout this operation observed, re-recorded as a
+    * `partcols` row (rewrites land files OUTSIDE the Hive directory
+    * layout, which would otherwise erase a path-inferred layout for
+    * later compaction grouping and catalog write defaults); None from
+    * `stage` commits nothing. The commit revalidates removed and
+    * re-masked files against concurrent rewrites and dv commits since
+    * the snapshot, plus the operation's add-conflict guard. Any failure
+    * — a staging job or a refused commit — deletes the directory before
+    * rethrowing, so the optimistic retry re-plans from a clean slate.
+    */
+  private def stageAndCommit(snap: Snapshot, op: RowLevelOp)(
+      stage: String => Option[Staged]): Int = {
+    val staging =
+      s"${snap.root}/data/w_${op.name}_${java.util.UUID.randomUUID()}"
+    try stage(staging).fold(snap.latest) { st =>
+      GraftLogWrite.commitStaged(snap.conf, snap.root, staging, st.adds,
+        Some(snap.schema), removes = st.removes,
+        extraRows = GraftLog.partColsRow(snap.layout) ++ st.dvRows,
+        dvFiles = st.dvFiles, addConflict = op.addConflict,
+        readVersion = Some(snap.latest), op = Some(op.name))
+    } catch { case NonFatal(e) =>
+      val p = new Path(staging)
+      p.getFileSystem(snap.conf).delete(p, true)
+      throw e
+    }
   }
 
   /** Stage a DataFrame's rows under `staging/<sub>` through

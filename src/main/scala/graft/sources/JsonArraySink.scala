@@ -1,7 +1,13 @@
 package graft.sources
 
+import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.util.UUID
 
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.DataFrame
 
 /** Faithful form of the reference's JSON output (lambda_function.py:285-298):
@@ -11,53 +17,68 @@ import org.apache.spark.sql.DataFrame
   * default JSON sink is JSON-lines (the scalable shape); this writer closes
   * the fidelity gap for consumers that expect the reference's exact format.
   *
-  * Records serialize distributed (`Dataset.toJSON`, ISO date/timestamp
-  * formats); only the final array assembly runs in a single task — which is
-  * the honest mapping, because the reference's unit of work is one landed
-  * input file, so each output document is bounded by design. Object
-  * metadata lands in a `<file>.meta.json` sidecar (the filesystem stand-in
-  * for S3 object metadata).
+  * One job lands the document: records serialize in `Dataset.toJSON` (ISO
+  * date/timestamp formats) and a single task streams them into the array,
+  * counting as it goes, in a temp file beside the output — which is the
+  * honest mapping, because the reference's unit of work is one landed
+  * input file, so each output document is bounded by design. The driver
+  * moves that file into place. Object metadata lands in a
+  * `<file>.meta.json` sidecar (the filesystem stand-in for S3 object
+  * metadata). Paths are local.
   */
 object JsonArraySink {
 
   /** Writes `df` to `outFile` as a single JSON array document plus the
     * metadata sidecar. Returns the record count (the reference's
-    * `record_count` metadata field).
+    * `record_count` metadata field). A caller-managed cache on `df` is
+    * left as it is; the write reads `df` once.
     */
   def write(df: DataFrame, outFile: String, originalFile: String,
       processedTimestamp: String): Long = {
-    // one upstream execution: the count and the serialization pass share
-    // cached rows instead of re-running the whole transform chain. Respect
-    // a caller-managed cache (don't persist-then-unpersist under them).
-    val callerCached = df.storageLevel !=
-      org.apache.spark.storage.StorageLevel.NONE
-    val cached = if (callerCached) df else df.persist()
-    val count  = cached.count()
-    val tmp    = outFile + ".tmpdir"
-    // a crashed prior run can leave the tmp dir behind, and Hadoop refuses
-    // to write to an existing path — clear it so write() is retry-safe
-    deleteRecursively(new java.io.File(tmp))
-    cached.toJSON.coalesce(1).rdd.mapPartitions { it =>
-      var first = true
-      val body = it.map { rec =>
-        val line = if (first) rec else "," + rec
-        first = false
-        line
-      }
-      Iterator.single("[") ++ body ++ Iterator.single("]")
-    }.saveAsTextFile(tmp)
-    if (!callerCached) cached.unpersist()
-    val out = Paths.get(outFile)
-    Option(out.getParent).foreach(Files.createDirectories(_))
-    val part = Option(new java.io.File(tmp).listFiles()).toSeq.flatten
-      .find(_.getName.startsWith("part-"))
-    part match {
-      case Some(p) =>
-        Files.move(p.toPath, out, StandardCopyOption.REPLACE_EXISTING)
-      case None => // zero-partition input: an empty array
-        Files.writeString(out, "[]")
+    val out = Paths.get(outFile).toAbsolutePath
+    val dir = out.getParent
+    Files.createDirectories(dir)
+    // temp names unique to this write and task attempt: a retried task
+    // never reuses a dead attempt's file, only the file the winning
+    // attempt reports moves into place, and debris of a crashed earlier
+    // write is never picked up
+    val prefix = s"${out.getFileName}.${UUID.randomUUID()}-a"
+    val dirName = dir.toString
+    def sweep(): Unit = {
+      val ls = Files.list(dir)
+      try ls.iterator().asScala
+        .filter(_.getFileName.toString.startsWith(prefix))
+        .foreach(Files.deleteIfExists(_))
+      finally ls.close()
     }
-    deleteRecursively(new java.io.File(tmp))
+    val landed = try {
+      df.toJSON.coalesce(1).rdd.mapPartitions { recs =>
+        val tmp = Paths.get(dirName,
+          s"$prefix${TaskContext.get().taskAttemptId()}.tmp")
+        val w = Files.newBufferedWriter(tmp, StandardCharsets.UTF_8)
+        var n = 0L
+        try {
+          w.write("[\n")
+          recs.foreach { rec =>
+            if (n > 0) w.write(',')
+            w.write(rec)
+            w.write('\n')
+            n += 1
+          }
+          w.write("]\n")
+        } finally w.close()
+        Iterator.single((tmp.toString, n))
+      }.collect()
+    } catch { case NonFatal(e) => sweep(); throw e }
+    val count = landed match {
+      case Array((tmp, n)) =>
+        Files.move(Paths.get(tmp), out, StandardCopyOption.REPLACE_EXISTING)
+        n
+      case _ => // zero-partition input: an empty array
+        Files.writeString(out, "[]")
+        0L
+    }
+    sweep()
     val meta = Map(
       "original_file"       -> originalFile,
       "processed_timestamp" -> processedTimestamp,
@@ -78,11 +99,5 @@ object JsonArraySink {
     case '\t'         => "\\t"
     case c if c < ' ' => f"\\u${c.toInt}%04x"
     case c            => c.toString
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory)
-      Option(f.listFiles()).toSeq.flatten.foreach(deleteRecursively)
-    f.delete()
   }
 }

@@ -2,6 +2,7 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Bridge into Spark's `private[sql]` Column↔Expression conversions, needed
@@ -13,4 +14,10 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object ColumnBridge {
   def column(e: Expression): Column    = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** A resolved expression with its floating-point values normalized
+    * (one zero, one NaN), as grouping and joins compare them.
+    */
+  def normalizeFloats(e: Expression): Expression =
+    NormalizeFloatingNumbers.normalize(e)
 }

@@ -48,6 +48,20 @@ class JsonArraySinkSpec extends SparkSpecBase {
     assert(back.select(col("name")).as[String].collect().toSeq === Seq("fresh"))
   }
 
+  test("a stale temp file from a crashed attempt never reaches the output") {
+    val dir = Files.createTempDirectory("graft_jsonarr_s").toString
+    val out = s"$dir/landed.json"
+    // what crashed attempts of earlier writes leave beside the output
+    val stale = """[{"id":99,"name":"stale"}]"""
+    Seq(s"$out.0-a0.tmp", s"$out.tmp", s"$out.1-a7.tmp").foreach(p =>
+      Files.writeString(Paths.get(p), stale))
+    val df = Seq((1L, "fresh"), (2L, "also")).toDF("id", "name")
+    assert(JsonArraySink.write(df, out, "raw/f.csv", "t") === 2L)
+    val back = spark.read.option("multiLine", "true").json(out)
+    assert(back.select(col("name")).as[String].collect().toSeq.sorted ===
+      Seq("also", "fresh"))
+  }
+
   test("empty input produces a valid empty array") {
     val dir = Files.createTempDirectory("graft_jsonarr_e").toString
     val out = s"$dir/empty.json"

@@ -203,22 +203,17 @@ object Ann {
     val banded = Tables.embeddings(s, d)
       .select(col("vec_id"), lshBits(col("embedding")).as("bits"))
       .select(col("vec_id"),
-        posexplode_outer(array((0 until LshBands).map { b =>
+        array((0 until LshBands).map { b =>
           (0 until 4).map { k =>
             element_at(col("bits"), b * 4 + k + 1) * lit(1L << k)
           }.reduce(_ + _)
-        }: _*)))
-      .select(col("vec_id"), col("pos").as("band"), col("col").as("bkey"))
-    // Candidate pairs dedup on IDs ONLY (a pair can collide in several
-    // bands); embeddings are joined back after — the distinct's shuffle
-    // moves 16 bytes/row instead of two 64-float payloads.
-    val cand = banded.as("x")
-      .join(banded.as("y"),
-        col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
-          col("x.vec_id") < lit(NumQueries) &&
-          col("x.vec_id") =!= col("y.vec_id"))
+        }: _*).as("keys"))
+    // the queries are the x side, so their filter reaches the scan;
+    // candidates travel as ids and embeddings are joined back after
+    val cand = BandPairs(banded.filter(col("vec_id") < lit(NumQueries)),
+        banded, "keys", LshBands, "ann_lsh",
+        col("x.vec_id") =!= col("y.vec_id"))
       .select(col("x.vec_id").as("q_id"), col("y.vec_id").as("n_id"))
-      .distinct()
     exactRerank(s, d, cand)
   }
 
@@ -366,23 +361,6 @@ object Ann {
       codes
     }
 
-  /** Shared candidate-pair generation from a banded signature frame
-    * `(id, band, bkey)`: pairs meet iff some band key matches, oriented
-    * `a < b`, deduped on ids BEFORE any payload joins (the distinct's
-    * shuffle moves two ids, not two payloads). Used by the embedding
-    * pair-LSH below and the perceptual-hash image near-dup; the minhash
-    * and simhash document paths carry the same shape with extra capping/
-    * broadcast gates that do not generalize across key types.
-    */
-  private[operators] def bandCandidates(banded: DataFrame,
-      idCol: String): DataFrame =
-    banded.as("x")
-      .join(banded.as("y"),
-        col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
-          col(s"x.$idCol") < col(s"y.$idCol"))
-      .select(col(s"x.$idCol").as("a"), col(s"y.$idCol").as("b"))
-      .distinct()
-
   /** Subquadratic all-pairs embedding near-dup — the pair-GENERATION
     * analogue of the minhash/LSH document dedup: vectors meet only inside
     * (band, key) buckets, candidate pairs travel as ids, and the exact
@@ -397,9 +375,10 @@ object Ann {
     */
   def embedLshPairs(s: SparkSession, d: String): DataFrame = {
     val banded = Tables.embeddings(s, d)
-      .select(col("vec_id"), posexplode(pairBandKeys(col("embedding"))))
-      .select(col("vec_id"), col("pos").as("band"), col("col").as("bkey"))
-    val cand = bandCandidates(banded, "vec_id").toDF("v1", "v2")
+      .select(col("vec_id"), pairBandKeys(col("embedding")).as("keys"))
+    val cand = BandPairs(banded, banded, "keys", PairLshBands,
+        "embed_lsh_pairs", col("x.vec_id") < col("y.vec_id"))
+      .select(col("x.vec_id").as("v1"), col("y.vec_id").as("v2"))
     val e = Tables.embeddings(s, d)
     cand
       .join(e.select(col("vec_id").as("v1"), col("embedding").as("e1")),
@@ -425,8 +404,10 @@ object Ann {
     import org.apache.spark.sql.graft.PlanBridge.stripPresentationSort
     val found = stripPresentationSort(embedLshPairs(s, d))
       .select(col("v1"), col("v2"), lit(true).as("hit"))
+    // found ⊆ truth (both keep exact cosine ≥ the threshold): the
+    // smaller side builds, and neither side shuffles for the flag join
     stripPresentationSort(embeddingNearDup(s, d))
-      .join(found, Seq("v1", "v2"), "left")
+      .join(broadcast(found), Seq("v1", "v2"), "left")
       .select(col("v1"), col("v2"), col("sim"),
         coalesce(col("hit"), lit(false)).as("lsh_found"))
       .orderBy(col("v1"), col("v2"))

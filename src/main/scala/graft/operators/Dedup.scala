@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -66,7 +66,9 @@ object Dedup {
     * consume its whole arrays directly — so every dedup family and both
     * DuckDB oracles see the SAME capped universe: without this, a corpus
     * where the cap engages would make `q_dedup_minhash` disagree with
-    * both `q_dedup_ngram` and its own registered oracle.
+    * both `q_dedup_ngram` and its own registered oracle. The cap reports
+    * the shingles it drops as the observation `hot_shingles` (one
+    * capped frame per plan: a second one would redefine the name).
     */
   private def cappedShingledOf(docs: DataFrame, cap: Int): DataFrame = {
     val sh = shingledOf(docs)
@@ -74,6 +76,7 @@ object Dedup {
       .groupBy(col("s")).agg(count(lit(1)).as("df"))
       .filter(col("df") > cap && col("s").isNotNull)
       .agg(collect_list(col("s")).as("hot"))
+      .observe("hot_shingles", sum(size(col("hot"))).as("hot_shingles"))
     sh.crossJoin(broadcast(hot))
       .select(col("doc_id"), array_except(col("sh"), col("hot")).as("sh"))
       .withColumn("n_sh", size(col("sh")).cast("long"))
@@ -110,7 +113,10 @@ object Dedup {
     * satisfy the downstream equi-join.
     */
   private[graft] def cappedShingleIndex(docs: DataFrame, cap: Int): DataFrame =
-    cappedShingledOf(docs, cap)
+    hashedShinglesOf(cappedShingledOf(docs, cap))
+
+  private def hashedShinglesOf(capped: DataFrame): DataFrame =
+    capped
       .select(col("doc_id"), col("n_sh"), explode_outer(col("sh")).as("s"))
       .select(col("doc_id"), col("n_sh"),
         when(col("s").isNotNull, xxhash64(col("s"))).as("h"))
@@ -181,7 +187,10 @@ object Dedup {
       .filter(col("jaccard") >= JaccardThreshold)
       .select(col("d1"), col("d2"), col("jaccard"))
 
-  private[graft] def ngramPairsOf(docs: DataFrame, cap: Int): DataFrame = {
+  private[graft] def ngramPairsOf(docs: DataFrame, cap: Int): DataFrame =
+    postingPairsOf(cappedShingleIndex(docs, cap))
+
+  private def postingPairsOf(index: DataFrame): DataFrame = {
     // r17 optimization (guide §1.2/§2.4): ONE exchange on the shingle
     // hash builds per-shingle POSTING LISTS and pairs are generated
     // in-row from each sorted list (two chained codegen'd generators),
@@ -194,7 +203,6 @@ object Dedup {
     // != guard covers the pathological same-doc double entry an
     // xxhash64 collision inside one document would create, which the
     // old a.doc_id < b.doc_id condition also excluded).
-    val index = cappedShingleIndex(docs, cap)
     val postings = index
       .groupBy(col("h"))
       .agg(sort_array(collect_list(struct(col("doc_id"), col("n_sh"))))
@@ -1049,14 +1057,13 @@ object Dedup {
     * (≈6σ) sanity flag are all deterministic — no probabilistic gate.
     */
   def minhashEstimate(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d)
-    val sig = signaturesOf(cappedShingledOf(docs, MaxPostingList))
-      .select(col("doc_id"), col("sig"))
+    val capped = cappedShingledOf(Tables.documents(s, d), MaxPostingList)
+    val sig = signaturesOf(capped).select(col("doc_id"), col("sig"))
     val matches = aggregate(
       zip_with(col("sig1"), col("sig2"),
         (x, y) => when(x === y, lit(1L)).otherwise(lit(0L))),
       lit(0L), (acc, v) => acc + v)
-    ngramPairsOf(docs, MaxPostingList)
+    postingPairsOf(hashedShinglesOf(capped))
       .join(sig.select(col("doc_id").as("d1"), col("sig").as("sig1")), Seq("d1"))
       .join(sig.select(col("doc_id").as("d2"), col("sig").as("sig2")), Seq("d2"))
       .withColumn("est_jaccard",
@@ -1115,14 +1122,11 @@ object Dedup {
     // here was measured SLOWER (2.2 vs 1.8 s steady-state at sf0.1): the
     // array materialization costs more than the recompute it saves
     val capped = cappedShingledOf(docs, cap)
-    val sig = signaturesOf(capped)
-    val banded = sig.select(col("doc_id"), posexplode_outer(bandKeys(col("sig"))))
-      .select(col("doc_id"), col("pos").as("band"), col("col").as("bkey"))
-    val cand = banded.as("x").join(banded.as("y"),
-        col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
-          col("x.doc_id") < col("y.doc_id"))
+    val banded = signaturesOf(capped)
+      .select(col("doc_id"), bandKeys(col("sig")).as("keys"))
+    val cand = BandPairs(banded, banded, "keys", Bands, "minhash_lsh",
+        col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
-      .distinct()
     // exact verification over the SAME capped sets the signatures hashed —
     // signature recall and verified Jaccard agree with ngramPairs (and the
     // shared oracle) even on a corpus where the cap engages
@@ -1216,86 +1220,36 @@ object Dedup {
       }.reduce(_ + _)
     }: _*)
 
-  /** The linear signature stage of [[simhashPairs]] exposed on its own —
-    * (doc_id, band, bkey) band-bucket membership — so scale diagnostics
-    * (ScaleStats) can measure the bucket histogram, and with it the pair
-    * join's true candidate volume Σ C(m,2), without running the join those
-    * numbers exist to predict.
-    */
-  def simhashBandKeys(s: SparkSession, d: String): DataFrame =
-    simhashDf(s, d)
-      .select(col("doc_id"), simhashBands(col("bits")).as("bands"))
-      .select(col("doc_id"), posexplode_outer(col("bands")))
-      .select(col("doc_id"), col("pos").as("band"), col("col").as("bkey"))
-
-  /** Conf key overriding the banded-table broadcast gate of
-    * [[simhashPairs]] (documents, not rows — each document contributes
-    * [[SimBands]] banded rows of ~80 bytes plus hash-relation overhead, so
-    * the default 1M-doc ceiling builds a ≲1 GiB broadcast relation).
-    */
-  val MaxBroadcastSimDocsKey = "graft.simhash.maxBroadcastDocs"
-
   /** SimHash near-dup pairs with hamming distance ≤ 3: candidates from
-    * 15-bit band equality (pigeonhole-exact at this threshold), verified by
-    * popcount — `bit_count(xor)` over the four packed band words, 8 integer
-    * ops per pair instead of 60 array lookups.
-    *
-    * Each side of the band join carries its packed band words, and a pair
-    * colliding in several bands is emitted ONLY from its first matching
-    * band — so every candidate pair exists exactly once by construction
-    * and flows straight into the popcount filter. The previous shape
-    * (IDs-only candidates → `distinct()` → two payload rejoins) priced the
-    * dedup at one shuffle of the FULL candidate volume: on a
-    * band-collapsed corpus (the degenerate fixed-vocabulary regime at
-    * 100×, Σ C(m,2) ≈ 8.4B) that one exchange moves ~130 GB and dominated
-    * a run that never finished; first-band-wins removes it entirely, at
-    * the cost of 32 extra bytes per banded row through the join input —
-    * linear in documents, not in candidates.
-    *
-    * The build side is broadcast below a document-count gate (conf
-    * [[MaxBroadcastSimDocsKey]], same size-gate pattern as
-    * [[GraphOps.copurchaseRank]]): with a broadcast hash join the stream
-    * side's rows distribute a dense bucket's C(m,2) pair generation across
-    * all of its scan partitions, where the sort-merge fallback necessarily
-    * colocates each bucket in one task — and a dense bucket is exactly
-    * what AQE's byte-based skew split cannot see (54,777 banded rows are
-    * ~1.3 MB of input but 1.5B output pairs). Past the gate the join
-    * falls back to hash-partitioned SMJ, the normal distributed shape.
+    * 15-bit band equality (pigeonhole-exact at this threshold) through
+    * [[BandPairs]], whose key arrays are the four packed band words the
+    * popcount verification reads — 8 integer ops per pair instead of 60
+    * array lookups, with no payload rejoin.
     */
-  def simhashPairs(s: SparkSession, d: String): DataFrame = {
+  def simhashPairs(s: SparkSession, d: String): DataFrame =
+    simhashPairsOf(s, d, BandPairs.MaxBroadcastRows)
+
+  /** [[simhashPairs]] with the kernel's broadcast gate at
+    * `maxBroadcastRows` documents (0: the sort-merge path).
+    */
+  private[graft] def simhashPairsOf(s: SparkSession, d: String,
+      maxBroadcastRows: Long): DataFrame = {
     // the signature table is tiny (doc_id + 4 longs) but referenced twice
     // (both join sides) — materialize it once instead of re-running the
-    // explode + 60-lane aggregation per reference; eager, so the count
-    // below is a cheap metadata action on the checkpointed blocks
+    // explode + 60-lane aggregation per reference; the checkpoint's own
+    // job counts its rows for the broadcast gate
+    val rows = Observation()
     val docs = simhashDf(s, d)
-      .select(col("doc_id"), simhashBands(col("bits")).as("bands"))
+      .select(col("doc_id"), simhashBands(col("bits")).as("keys"))
+      .observe(rows, count(lit(1)).as("n"))
       .localCheckpoint()
-    val banded = docs
-      .select(col("doc_id"), col("bands"), posexplode_outer(col("bands")))
-    val x = banded.select(col("doc_id").as("d1"), col("bands").as("bands1"),
-      col("pos").as("band"), col("col").as("bkey"))
-    val y0 = banded.select(col("doc_id").as("d2"), col("bands").as("bands2"),
-      col("pos").as("band_y"), col("col").as("bkey_y"))
-    val maxBroadcastDocs = s.conf.getOption(MaxBroadcastSimDocsKey)
-      .map(_.toLong).getOrElse(1000000L)
-    val y = if (docs.count() <= maxBroadcastDocs) broadcast(y0) else y0
-    // first matching band index for the pair — emitting only there keeps
-    // the pair set identical to the distinct() of all collisions
-    val firstBand = (0 until SimBands).foldRight(lit(-1): Column) { (j, acc) =>
-      when(element_at(col("bands1"), j + 1) === element_at(col("bands2"), j + 1),
-        lit(j)).otherwise(acc)
-    }
-    val hamming = (1 to SimBands).map { b =>
-      bit_count(element_at(col("bands1"), b)
-        .bitwiseXOR(element_at(col("bands2"), b))).cast("long")
-    }.reduce(_ + _)
-    x.join(y,
-        col("band") === col("band_y") && col("bkey") === col("bkey_y") &&
-          col("d1") < col("d2"))
-      .filter(col("band") === firstBand)
-      .withColumn("hamming", hamming)
+    BandPairs(docs, docs, "keys", SimBands, "simhash",
+        col("x.doc_id") < col("y.doc_id"),
+        Some(rows.get("n").asInstanceOf[Long]), maxBroadcastRows)
+      .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"),
+        BandPairs.hamming(col("x.keys"), col("y.keys"), SimBands)
+          .as("hamming"))
       .filter(col("hamming") <= SimHammingMax)
-      .select(col("d1"), col("d2"), col("hamming"))
       .orderBy(col("d1"), col("d2"))
   }
 

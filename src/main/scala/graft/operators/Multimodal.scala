@@ -353,37 +353,25 @@ object Multimodal {
       .as[(Long, Array[Byte])]
       .mapPartitions { it =>
         it.collect { case (id, bytes) if bytes != null && bytes.nonEmpty =>
-          val b = aHashBands(bytes)
-          (id, b(0), b(1), b(2), b(3))
+          (id, aHashBands(bytes))
         }
-      }.toDF("doc_id", "b0", "b1", "b2", "b3")
+      }.toDF("doc_id", "keys")
     hammingBandPairs(hashed)
   }
 
   /** Shared tail of the perceptual-hash near-dup variants: band-bucket
-    * candidate generation over a `(doc_id, b0..b3)` hash frame, then
-    * exact 64-bit hamming keeps pairs ≤ [[PhashHammingMax]].
+    * candidates ([[BandPairs]]) over a `(doc_id, keys)` frame of
+    * [[aHashBands]] words, whose exact hamming ≤ [[PhashHammingMax]]
+    * check reads the same key arrays.
     */
-  private def hammingBandPairs(hashed: DataFrame): DataFrame = {
-    val banded = hashed.select(col("doc_id"),
-      posexplode(array(col("b0"), col("b1"), col("b2"), col("b3"))))
-      .select(col("doc_id"), col("pos").as("band"), col("col").as("bkey"))
-    val cand = Ann.bandCandidates(banded, "doc_id")
-      .toDF("d1", "d2")
-    def ham(a: String, b: String): org.apache.spark.sql.Column =
-      bit_count(expr(s"$a ^ $b"))
-    cand
-      .join(hashed.select(col("doc_id").as("d1"), col("b0").as("x0"),
-        col("b1").as("x1"), col("b2").as("x2"), col("b3").as("x3")), Seq("d1"))
-      .join(hashed.select(col("doc_id").as("d2"), col("b0").as("y0"),
-        col("b1").as("y1"), col("b2").as("y2"), col("b3").as("y3")), Seq("d2"))
-      .withColumn("hamming",
-        (ham("x0", "y0") + ham("x1", "y1") + ham("x2", "y2") +
-          ham("x3", "y3")).cast("long"))
+  private def hammingBandPairs(hashed: DataFrame): DataFrame =
+    BandPairs(hashed, hashed, "keys", PhashBands, "phash_near_dup",
+        col("x.doc_id") < col("y.doc_id"))
+      .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"),
+        BandPairs.hamming(col("x.keys"), col("y.keys"), PhashBands)
+          .as("hamming"))
       .filter(col("hamming") <= PhashHammingMax)
-      .select(col("d1"), col("d2"), col("hamming"))
       .orderBy(col("d1"), col("d2"))
-  }
 
   // ---------- real decode: binary Netpbm (PPM P6 / PGM P5) ----------
 
@@ -502,12 +490,9 @@ object Multimodal {
       .as[(Long, Array[Byte])]
       .mapPartitions { it =>
         it.flatMap { case (id, bytes) =>
-          decodeNetpbm(bytes).map { img =>
-            val b = aHashBands(img.pixels)
-            (id, b(0), b(1), b(2), b(3))
-          }
+          decodeNetpbm(bytes).map(img => (id, aHashBands(img.pixels)))
         }
-      }.toDF("doc_id", "b0", "b1", "b2", "b3")
+      }.toDF("doc_id", "keys")
     hammingBandPairs(hashed)
   }
 

@@ -681,9 +681,6 @@ object Streams {
       .trigger(trigger)
       .start()
 
-  private def hamming(a: String, b: String): Column =
-    bit_count(expr(s"$a ^ $b"))
-
   /** One micro-batch through the admission gate. Within-batch rule:
     * a doc is dropped if it exactly or nearly duplicates ANY lower-id
     * batch doc (the SemDeDup keep-lowest convention — deterministic and
@@ -694,28 +691,22 @@ object Streams {
       stateDir: String): Unit =
     GraftLogOps.commitBatch(batch.sparkSession, stateDir, "dedup", batchId,
       DedupStateSchema, replace = false) { existing =>
-      import graft.operators.Dedup
+      import graft.operators.{BandPairs, Dedup}
       val signed = batch.select(col("doc_id"), col("text"))
         .withColumn("content_md5", md5(col("text")))
         .join(Dedup.simhashPacked(batch.select(col("doc_id"), col("text"))),
           Seq("doc_id"))
         .localCheckpoint()
-      def bandExplode(df: DataFrame): DataFrame =
-        df.select(col("doc_id"), col("b0"), col("b1"), col("b2"), col("b3"))
-          .select(col("doc_id"),
-            posexplode(array(col("b0"), col("b1"), col("b2"), col("b3"))))
-          .select(col("doc_id"), col("pos").as("band"), col("col").as("bkey"))
-          .join(df.select(col("doc_id"), col("b0"), col("b1"), col("b2"),
-            col("b3")), Seq("doc_id"))
+      def banded(df: DataFrame): DataFrame =
+        df.select(col("doc_id"),
+          array(col("b0"), col("b1"), col("b2"), col("b3")).as("keys"))
+      val near = BandPairs.hamming(col("x.keys"), col("y.keys"),
+        Dedup.SimBands) <= Dedup.SimHammingMax
       // within-batch near-dup candidates: band-bucket join, lower id wins
-      val bb = bandExplode(signed)
-      val nearInBatch = bb.as("x").join(bb.as("y"),
-          col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
-            col("x.doc_id") < col("y.doc_id"))
-        .filter(hamming("x.b0", "y.b0") + hamming("x.b1", "y.b1") +
-          hamming("x.b2", "y.b2") + hamming("x.b3", "y.b3") <=
-          Dedup.SimHammingMax)
-        .select(col("y.doc_id").as("doc_id")).distinct()
+      val bb = banded(signed)
+      val nearInBatch = BandPairs(bb, bb, "keys", Dedup.SimBands,
+          "dedup_in_batch", col("x.doc_id") < col("y.doc_id"))
+        .filter(near).select(col("y.doc_id").as("doc_id"))
       // within-batch exact: keep the lowest id per content hash
       val wmin = org.apache.spark.sql.expressions.Window
         .partitionBy(col("content_md5"))
@@ -727,13 +718,9 @@ object Streams {
       val exactVsCorpus = signed.join(
         existing.select(col("content_md5")).distinct(), Seq("content_md5"))
         .select(col("doc_id")).distinct()
-      val eb = bandExplode(existing)
-      val nearVsCorpus = bb.as("x").join(eb.as("y"),
-          col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey"))
-        .filter(hamming("x.b0", "y.b0") + hamming("x.b1", "y.b1") +
-          hamming("x.b2", "y.b2") + hamming("x.b3", "y.b3") <=
-          Dedup.SimHammingMax)
-        .select(col("x.doc_id").as("doc_id")).distinct()
+      val nearVsCorpus = BandPairs(bb, banded(existing), "keys",
+          Dedup.SimBands, "dedup_vs_corpus")
+        .filter(near).select(col("x.doc_id").as("doc_id"))
       val dropped = nearInBatch.unionByName(exactInBatch)
         .unionByName(exactVsCorpus).unionByName(nearVsCorpus).distinct()
       signed.join(dropped, Seq("doc_id"), "left_anti")
@@ -892,7 +879,7 @@ object Streams {
       stateDir: String): Unit =
     GraftLogOps.commitBatch(batch.sparkSession, stateDir, "embed", batchId,
       EmbedStateSchema, replace = false) { existing =>
-      import graft.operators.Ann
+      import graft.operators.{Ann, BandPairs}
       import graft.functions.VectorFunctions.cosineSim
       // duplicate ARRIVALS (same vec_id in two input files) are not
       // re-probed or re-admitted — the decontam gate's committed-state
@@ -901,10 +888,7 @@ object Streams {
         .join(existing.select(col("vec_id")), Seq("vec_id"), "left_anti")
         .withColumn("codes", Ann.pairBandKeys(col("embedding")))
         .localCheckpoint()
-      def bandExplode(df: DataFrame): DataFrame =
-        df.select(col("vec_id"), posexplode(col("codes")))
-          .select(col("vec_id"), col("pos").as("band"), col("col").as("bkey"))
-      val bb = bandExplode(signed)
+      val bb = signed.select(col("vec_id"), col("codes"))
       def rerank(cand: DataFrame, left: DataFrame,
           right: DataFrame): DataFrame =
         cand
@@ -915,20 +899,18 @@ object Streams {
           .filter(cosineSim(col("ea"), col("eb")) >= Ann.NearDupThreshold)
       // within-batch: candidates meet in (band, key) buckets, lower id wins
       val nearInBatch = rerank(
-        bb.as("x").join(bb.as("y"),
-            col("x.band") === col("y.band") &&
-              col("x.bkey") === col("y.bkey") &&
-              col("x.vec_id") < col("y.vec_id"))
-          .select(col("x.vec_id").as("a"), col("y.vec_id").as("b")).distinct(),
+        BandPairs(bb, bb, "codes", Ann.PairLshBands, "embed_in_batch",
+            col("x.vec_id") < col("y.vec_id"))
+          .select(col("x.vec_id").as("a"), col("y.vec_id").as("b")),
         signed, signed)
-        .select(col("b").as("vec_id")).distinct()
+        .select(col("b").as("vec_id"))
       // against the stored corpus: the stored vector arrived first
       val nearVsCorpus = rerank(
-        bb.as("x").join(bandExplode(existing).as("y"),
-            col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey"))
-          .select(col("y.vec_id").as("a"), col("x.vec_id").as("b")).distinct(),
+        BandPairs(bb, existing.select(col("vec_id"), col("codes")), "codes",
+            Ann.PairLshBands, "embed_vs_corpus")
+          .select(col("y.vec_id").as("a"), col("x.vec_id").as("b")),
         existing, signed)
-        .select(col("b").as("vec_id")).distinct()
+        .select(col("b").as("vec_id"))
       val dropped = nearInBatch.unionByName(nearVsCorpus).distinct()
       signed.join(dropped, Seq("vec_id"), "left_anti")
     }

@@ -88,13 +88,32 @@ class DedupSpec extends SparkSpecBase {
   test("simhash SMJ fallback (past the broadcast gate) emits identical pairs") {
     withDocs { dir =>
       val broadcastPath = Dedup.simhashPairs(spark, dir).collect().toSet
-      spark.conf.set(Dedup.MaxBroadcastSimDocsKey, "0")
-      try {
-        val shufflePath = Dedup.simhashPairs(spark, dir).collect().toSet
-        assert(shufflePath === broadcastPath)
-        assert(broadcastPath.nonEmpty)
-      } finally spark.conf.unset(Dedup.MaxBroadcastSimDocsKey)
+      val shufflePath = Dedup.simhashPairsOf(spark, dir, 0L).collect().toSet
+      assert(shufflePath === broadcastPath)
+      assert(broadcastPath.nonEmpty)
     }
+  }
+
+  test("the posting-list cap reports no hot shingles on the testdata") {
+    val df = Dedup.minhashLsh(spark, sfDir)
+    df.collect()
+    assert(df.queryExecution.observedMetrics("hot_shingles").getLong(0) === 0L)
+  }
+
+  test("the posting-list cap reports the hot shingles it drops") {
+    // "alpha beta gamma" is in three documents, one past a cap of 2;
+    // documents 0 and 1 stay a near-dup pair on their other shingles
+    val tail = "one two three four five six seven eight nine ten"
+    val corpus = Seq(
+      (0L, s"alpha beta gamma $tail"),
+      (1L, s"alpha beta gamma $tail eleven"),
+      (2L, "alpha beta gamma twelve thirteen fourteen fifteen"),
+      (3L, "unrelated words in a fourth document here"))
+      .toDF("doc_id", "text")
+    val df = Dedup.minhashLshOf(corpus, cap = 2)
+    assert(df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ===
+      Seq((0L, 1L)))
+    assert(df.queryExecution.observedMetrics("hot_shingles").getLong(0) === 1L)
   }
 
   test("sub-3-token docs never pair up (no NaN jaccard from empty shingle sets)") {

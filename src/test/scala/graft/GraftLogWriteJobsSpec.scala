@@ -1,10 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.sources.{GraftLogOps, JsonArraySink}
@@ -16,23 +13,6 @@ import graft.sources.{GraftLogOps, JsonArraySink}
   */
 class GraftLogWriteJobsSpec extends SparkSpecBase {
   import spark.implicits._
-
-  /** `body`'s result and the Spark jobs it started. */
-  private def jobs[T](body: => T): (T, Int) = {
-    val n = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    try {
-      val r = body
-      ListenerBusDrain(sc)
-      (r, n.get)
-    } finally sc.removeSparkListener(listener)
-  }
 
   /** 400 rows, Hive-partitioned on bucket = id mod 4. */
   private def mkTable(prefix: String): String = {

@@ -13,7 +13,7 @@ import graft.operators.Dedup
   * (shingle df table, band-bucket histogram) instead of timing a join the
   * operators are designed to avoid in exactly that regime. Uses the same
   * shingle constructor ([[Dedup.shinglesOfTokens]], per-doc distinct) and
-  * the same signature stage ([[Dedup.simhashBandKeys]]) as the operators,
+  * the same signature stage ([[Dedup.simhashPacked]]) as the operators,
   * so the printed volumes are the joins' true input cardinalities.
   * Prints one JSON line.
   *
@@ -54,7 +54,11 @@ object ScaleStats {
       s""""cap$c":{"pairs":$v,"shingles_kept":$kept}"""
     }
 
-    val buckets = Dedup.simhashBandKeys(spark, dir)
+    // (band, bkey) membership of the SimHash pair join's banded rows
+    val buckets = Dedup.simhashPacked(
+        Tables.spread(Tables.documents(spark, dir), col("doc_id")))
+      .select(posexplode_outer(array((0 until Dedup.SimBands)
+        .map(b => col(s"b$b")): _*)).as(Seq("band", "bkey")))
       .groupBy(col("band"), col("bkey")).agg(count(lit(1)).as("m"))
     val (simVol, maxBucket, nBuckets) = volume(buckets, "m")
 

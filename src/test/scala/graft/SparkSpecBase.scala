@@ -1,9 +1,9 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.StructType
 import org.scalatest.BeforeAndAfterAll
@@ -47,6 +47,23 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
     val Seq(file) = w.commit()
       .asInstanceOf[graft.sources.GraftLogCommitMessage].files
     file
+  }
+
+  /** `body`'s result and the Spark jobs it started. */
+  def jobs[T](body: => T): (T, Int) = {
+    val n = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      ListenerBusDrain(sc)
+      (r, n.get)
+    } finally sc.removeSparkListener(listener)
   }
 
   /** `body`'s result with the records Spark's tasks report reading

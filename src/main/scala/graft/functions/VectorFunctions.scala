@@ -35,8 +35,6 @@ object VectorFunctions {
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  def normN(a: Column, dim: Int): Column = sqrt(dotN(a, a, dim))
-
   /** Cosine similarity; formula spelled out identically in oracle SQL. */
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (norm(a) * norm(b))

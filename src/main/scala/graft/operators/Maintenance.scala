@@ -1860,12 +1860,12 @@ object Maintenance {
     * [[graft.sources.GraftCatalog]], mutated by THREE SQL statements —
     * UPDATE (doubles prices of keys ≡3 mod 16), DELETE (keys ≡11 mod
     * 16; the `%` predicate is inexpressible as a data-source filter, so
-    * it runs as the group-based row-level rewrite), MERGE INTO (triples
-    * prices of keys ≡5 mod 16 and inserts their negations). Each
-    * statement commits ONE remove+add version whose rewrite touched
-    * only the files Spark's runtime `_file` group filter selected
-    * (GraftLogSqlDmlSpec pins the group discipline; the query hash-
-    * gates the cumulative semantics).
+    * no file prunes on statistics), MERGE INTO (triples prices of keys
+    * ≡5 mod 16 and inserts their negations). Each statement runs
+    * [[graft.sources.GraftLogOps]]' row-level body and commits ONE
+    * remove+add version whose rewrite touched only the files its match
+    * pass found (GraftLogSqlDmlSpec pins that; the query hash-gates the
+    * cumulative semantics).
     */
   private[graft] def sqlDmlTableDir(s: SparkSession, d: String): String = {
     val wh = SetupOnce.runtimeDir(d, "dml_warehouse")

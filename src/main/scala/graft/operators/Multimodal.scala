@@ -33,13 +33,6 @@ object Multimodal {
         (col("n_chars") % 64 + 1).cast("int").as("width"),
         (col("doc_id") % 48 + 1).cast("int").as("height")).as("meta"))
 
-  /** Feature row produced by the batch extractor. `None` fields mean the
-    * payload itself was NULL (an undecodable blob) — features propagate the
-    * null rather than NPE-ing the task, mirroring SQL NULL-in/NULL-out.
-    */
-  case class BlobFeatures(doc_id: Long, n_bytes: Option[Long],
-      header_byte: Option[Long], checksum: Option[Long])
-
   /** STUB decoder: stands in for an image/audio decode. Deterministic pure
     * function of the bytes so tests and the oracle can pin it; a real
     * deployment swaps only this function body for e.g. a JNI codec call.
@@ -50,26 +43,6 @@ object Multimodal {
     while (i < payload.length) { sum = (sum * 31 + (payload(i) & 0xff)) % 1000000007L; i += 1 }
     val header = if (payload.isEmpty) 0L else (payload(0) & 0xff).toLong
     (header, sum)
-  }
-
-  /** Partition-batched feature extraction: one decoder instance per
-    * partition (the `init` line), then a streaming pass over the iterator —
-    * never materializes a partition in memory.
-    */
-  def extractFeatures(s: SparkSession, blobs: DataFrame): DataFrame = {
-    import s.implicits._
-    val pruned = blobs.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-    pruned.mapPartitions { it =>
-      // per-partition init would go here (codec/model load) — amortized
-      it.map { case (id, bytes) =>
-        if (bytes == null) BlobFeatures(id, None, None, None)
-        else {
-          val (header, sum) = decodeStub(bytes)
-          BlobFeatures(id, Some(bytes.length.toLong), Some(header), Some(sum))
-        }
-      }
-    }.toDF()
   }
 
   /** The oracle-checkable slice of the multimodal path: byte length, header

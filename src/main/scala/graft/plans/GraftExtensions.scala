@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.analysis.FunctionRegistryBase
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
 import graft.functions.{CmsEstimate, CosineSimilarity, LatticeArgMin, PolyCharHash}
+import graft.sources.GraftLogDml
 
 /** SparkSessionExtensions entry point: registers the engine's native
   * expressions into the session FunctionRegistry, so plain SQL can call
@@ -35,6 +36,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // whole-operator tier: the native backward AS-OF merge join
     // (AsOfJoinPlan -> AsOfJoinExec)
     ext.injectPlannerStrategy(_ => GraftStrategy)
+    // SQL DELETE, UPDATE and MERGE INTO on a graftlog table run its
+    // row-level bodies (GraftLogOps), once the statement is resolved
+    ext.injectPostHocResolutionRule(_ => GraftLogDml)
     val (info: ExpressionInfo, builder) =
       FunctionRegistryBase.build[CosineSimilarity]("cosine_sim", since = None)
     ext.injectFunction((FunctionIdentifier("cosine_sim"), info,

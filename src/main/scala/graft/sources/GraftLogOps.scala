@@ -22,11 +22,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * MERGE (the LWW key-match upsert) — plus OPTIMIZE (compaction) and
   * VACUUM, each committed as ONE version through the connector's
   * zero-rename publication. The SQL surface reaches the same code:
-  * `DELETE FROM graft.t WHERE <filter>` through [[GraftLogTable]]'s
-  * SupportsDelete, `CALL graft.system.optimize(...)` / `vacuum(...)`
-  * through the catalog's procedures. (SQL UPDATE, MERGE INTO and
-  * DELETEs no data-source filter expresses run Spark's group-based
-  * rewrite, [[GraftLogRowLevelOperation]].)
+  * `DELETE FROM`, `UPDATE` and the keyed-upsert `MERGE INTO` on a
+  * `graft.t` table through the [[GraftLogDml]] analysis rule, TRUNCATE
+  * through [[GraftLogTable]], `CALL graft.system.optimize(...)` /
+  * `vacuum(...)` through the catalog's procedures.
   *
   * DELETE, UPDATE and MERGE share one core, [[rowLevel]]. Each is a
   * small [[RowLevelOp]] — its candidate prune, its match over the
@@ -489,7 +488,17 @@ object GraftLogOps {
     * conflict guards and LWW semantics either way.
     */
   def mergeIntoLog(s: SparkSession, root: String,
-      source: DataFrame, keys: Seq[String], mode: String): Int = {
+      source: DataFrame, keys: Seq[String], mode: String): Int =
+    mergeIntoLog(s, root, source, keys, mode, oneRowPerKey = false)
+
+  /** [[mergeIntoLog]] that refuses, with `oneRowPerKey`, when a source
+    * key matches more than one table row: SQL MERGE replaces each such
+    * row, while this merge keeps one. The match pass then brings the
+    * matched key tuples to the driver, at most one per source row.
+    */
+  private[sources] def mergeIntoLog(s: SparkSession, root: String,
+      source: DataFrame, keys: Seq[String], mode: String,
+      oneRowPerKey: Boolean): Int = {
     checkMode("merge", mode)
     val src = source.cache()
     try {
@@ -536,7 +545,8 @@ object GraftLogOps {
             matching = matches(_).select(FilePos ++ keys.map(col): _*),
             rewrite = misses(_).unionByName(srcRows),
             source = Some(srcRows),
-            hitKeys = if (inline.isDefined) keys else Nil,
+            hitKeys = if (inline.isDefined || oneRowPerKey) keys else Nil,
+            oneRowPerHit = oneRowPerKey,
             // an all-sparse commit splits the source by match, so the
             // feed tags updates' new versions as postimages and
             // genuinely-new keys as inserts (the matched tuples came
@@ -595,9 +605,9 @@ object GraftLogOps {
   /** Row-level UPDATE on the log: every row matching `cond` gets the
     * `assignments` applied (each value expression may reference the
     * row's own columns; SQL semantics — a NULL condition leaves the
-    * row untouched), committed as one version. The utility twin of
-    * SQL `UPDATE graft.t SET ...` for option-path tables, with the
-    * same write-shape choice as DELETE/MERGE: copy-on-write rewrites
+    * row untouched), committed as one version. SQL
+    * `UPDATE graft.t SET ...` runs it copy-on-write; it has the same
+    * write-shape choice as DELETE/MERGE: copy-on-write rewrites
     * every touched file; merge-on-read MASKS the matched old versions
     * via deletion vectors and appends the transformed rows — write
     * amplification ∝ matched rows, the scattered-update shape. Returns
@@ -710,8 +720,11 @@ object GraftLogOps {
     * @param source     rows committed even when nothing matches
     * @param hitKeys    columns whose distinct matched tuples the
     *                   merge-on-read match pass brings to the driver —
-    *                   set only where the caller bounds them (MERGE, for
-    *                   a source of at most [[MaxInlineKeys]] rows)
+    *                   set only where the caller bounds them (MERGE, by
+    *                   its source's row count)
+    * @param oneRowPerHit refuse when a matched tuple of `hitKeys` is
+    *                   more than one table row (either match pass then
+    *                   brings the tuples to the driver)
     * @param reemit     merge-on-read: what the match pass found → the
     *                   rows appended as new files, each as (staging
     *                   subdirectory, rows, change-feed class)
@@ -725,6 +738,7 @@ object GraftLogOps {
       rewrite: DataFrame => DataFrame,
       source: Option[DataFrame] = None,
       hitKeys: Seq[String] = Nil,
+      oneRowPerHit: Boolean = false,
       reemit: Matches => Seq[(String, DataFrame, Option[String])] =
         _ => Nil,
       addConflict: Option[(Int, GraftLog.ManifestRow => Boolean)] = None)
@@ -758,17 +772,30 @@ object GraftLogOps {
       }
     }
 
-  /** One task's matches in one file: the file as read, the matched
-    * positions (when asked for) and the distinct matched key tuples
-    * (when asked for).
+  /** One task's matches in one file: the file as read, how many rows
+    * matched, the matched positions (when asked for) and the distinct
+    * matched key tuples (when asked for).
     */
-  private final case class FileMatch(file: String, pos: Array[Long],
-      keys: Array[InternalRow])
+  private final case class FileMatch(file: String, rows: Long,
+      pos: Array[Long], keys: Array[InternalRow])
 
   private final class FileAcc {
+    var rows = 0L
     val pos = mutable.ArrayBuilder.make[Long]
     val keys = mutable.HashSet[InternalRow]()
   }
+
+  /** [[RowLevelOp.oneRowPerHit]]'s check over the whole match: `rows`
+    * matched rows against their `tuples`, each set the distinct tuples
+    * of one part of the match.
+    */
+  private def checkOneRowPerHit(op: RowLevelOp, rows: Long,
+      tuples: Iterator[Array[InternalRow]]): Unit =
+    if (op.oneRowPerHit && rows > tuples.flatMap(_.iterator).toSet.size)
+      throw new IllegalStateException(s"graftlog ${op.name}: the table " +
+        s"holds a value of (${op.hitKeys.mkString(", ")}) matched by the " +
+        "source in more than one row — SQL MERGE would replace each of " +
+        "them, the upsert keeps one; refusing")
 
   /** Run `job` over the matched rows folded per (task, file) inside the
     * scan's own tasks — no shuffle: a task emits one [[FileMatch]] per
@@ -794,11 +821,12 @@ object GraftLogOps {
             file = f.clone()
             acc = byFile.getOrElseUpdate(file.toString, new FileAcc)
           }
+          acc.rows += 1
           if (positions) acc.pos += r.getLong(1)
           if (nk > 0) acc.keys += unsafe(r).getStruct(2, nk).copy()
         }
         byFile.iterator.map { case (f, a) =>
-          FileMatch(f, a.pos.result(), a.keys.toArray) }
+          FileMatch(f, a.rows, a.pos.result(), a.keys.toArray) }
       })
     }
   }
@@ -811,8 +839,11 @@ object GraftLogOps {
     */
   private def touchedFiles(snap: Snapshot, op: RowLevelOp,
       matched: DataFrame): Seq[String] = {
-    val hit = foldMatches(matched, positions = false, Nil)(
-      _.map(m => normPath(m.file)).collect()).toSet
+    val found = foldMatches(matched, positions = false,
+        if (op.oneRowPerHit) op.hitKeys else Nil)(
+      _.map(m => m.copy(file = normPath(m.file))).collect())
+    checkOneRowPerHit(op, found.map(_.rows).sum, found.iterator.map(_.keys))
+    val hit = found.map(_.file).toSet
     op.candidates.map(_._1).filter(rel =>
       hit.contains(normPath(s"${snap.root}/$rel")))
   }
@@ -961,9 +992,10 @@ object GraftLogOps {
               Some(GraftLog.DvDescriptor(dvPath, complete.length.toLong,
                 deltaPath, n))
             }
-          (fnorm, dv, keys)
+          (fnorm, dv, keys, n)
       }.collect()
     }
+    checkOneRowPerHit(op, touched.map(_._4).sum, touched.iterator.map(_._3))
     // LOSER task attempts (retried or speculative) wrote attempt-named
     // sidecars that no collected descriptor references — and a
     // committed staging directory is permanent. Sweep now: keep the
@@ -981,7 +1013,7 @@ object GraftLogOps {
       }
     val found = touched.map(t => t._1 -> t).toMap
     val perFile = op.candidates.flatMap { case (rel, _) =>
-      found.get(normPath(s"$root/$rel")).map { case (_, dv, _) =>
+      found.get(normPath(s"$root/$rel")).map { case (_, dv, _, _) =>
         (rel, dv.map(d => d.copy(dv = d.dv.stripPrefix(s"$root/"),
           delta = d.delta.stripPrefix(s"$root/"))))
       }
@@ -1446,34 +1478,5 @@ object GraftLogOps {
       sweep(dataRoot) // data/ itself stays (committed writes land there)
     }
     (deleted + orphans, keep.size)
-  }
-
-  /** Data-source Filter → Column, for the shapes SQL `DELETE FROM`
-    * hands a SupportsDelete table. None = not expressible (the DELETE
-    * then refuses during analysis via canDeleteWhere, never silently
-    * deleting the wrong rows). Values arrive as external types
-    * (java.sql.Date, strings, numbers) — `lit` maps them back.
-    */
-  def filterToColumn(f: Filter): Option[Column] = f match {
-    case EqualTo(c, v)            => Some(col(c) === lit(v))
-    case EqualNullSafe(c, v)      => Some(col(c) <=> lit(v))
-    case GreaterThan(c, v)        => Some(col(c) > lit(v))
-    case GreaterThanOrEqual(c, v) => Some(col(c) >= lit(v))
-    case LessThan(c, v)           => Some(col(c) < lit(v))
-    case LessThanOrEqual(c, v)    => Some(col(c) <= lit(v))
-    case In(c, vs)                => Some(col(c).isin(vs.toSeq: _*))
-    case IsNull(c)                => Some(col(c).isNull)
-    case IsNotNull(c)             => Some(col(c).isNotNull)
-    case StringStartsWith(c, v)   => Some(col(c).startsWith(v))
-    case StringEndsWith(c, v)     => Some(col(c).endsWith(v))
-    case StringContains(c, v)     => Some(col(c).contains(v))
-    case AlwaysTrue()             => Some(lit(true))
-    case AlwaysFalse()            => Some(lit(false))
-    case And(l, r) =>
-      for { a <- filterToColumn(l); b <- filterToColumn(r) } yield a && b
-    case Or(l, r) =>
-      for { a <- filterToColumn(l); b <- filterToColumn(r) } yield a || b
-    case Not(x) => filterToColumn(x).map(!_)
-    case _      => None
   }
 }

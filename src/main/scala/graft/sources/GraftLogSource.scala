@@ -107,10 +107,7 @@ object GraftLog {
 
   /** File-provenance METADATA column (SupportsMetadataColumns): the
     * absolute path of the data file each row came from — selectable as
-    * `SELECT _file, ...`, and the group-identity attribute Spark's
-    * row-level commands (UPDATE/MERGE/complex DELETE) use to runtime-
-    * filter the copy-on-write scan down to the files that actually
-    * contain matched rows.
+    * `SELECT _file, ...`.
     */
   val FileCol = "_file"
 
@@ -1060,6 +1057,12 @@ class GraftLogSource extends TableProvider with DataSourceRegister {
   }
 }
 
+/** A log table as Spark sees it: snapshot, change-feed and streaming
+  * reads, batch and streaming appends, the `_file` metadata column and
+  * TRUNCATE. SQL DELETE, UPDATE and MERGE INTO reach [[GraftLogOps]]'
+  * row-level bodies through the [[GraftLogDml]] analysis rule, not
+  * through a table capability.
+  */
 case class GraftLogTable(root: String, asOfVersion: Int,
     tableSchema: StructType,
     conf: SerializableConfiguration, cdc: Boolean = false,
@@ -1068,9 +1071,8 @@ case class GraftLogTable(root: String, asOfVersion: Int,
     tombstones: Set[String] = Set.empty)
     extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite
-    with org.apache.spark.sql.connector.catalog.SupportsDelete
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns
-    with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations {
+    with org.apache.spark.sql.connector.catalog.TruncatableTable {
   // no backticks/quoting: Spark renders this name inside error messages
   // that are themselves parsed as identifiers
   override def name(): String =
@@ -1110,8 +1112,7 @@ case class GraftLogTable(root: String, asOfVersion: Int,
       colMap, tombstones)
   }
 
-  /** `_file` — file provenance per row, and the group identity Spark's
-    * row-level commands runtime-filter on. Hidden when the table's OWN
+  /** `_file` — file provenance per row. Hidden when the table's OWN
     * schema uses the name (stored data wins, same policy as the CDC
     * meta names).
     */
@@ -1127,56 +1128,21 @@ case class GraftLogTable(root: String, asOfVersion: Int,
           "absolute path of the data file this row came from"
       })
 
-  /** SQL UPDATE / MERGE INTO / complex DELETE: the group-based
-    * (copy-on-write) row-level operation — Spark rewrites the command
-    * into a ReplaceData plan over this table, runtime-filters the scan
-    * to the files that contain matched rows (via the `_file` metadata
-    * column), and the write commits remove(those files)+add(rewrite)
-    * as ONE version. See [[GraftLogRowLevelOperation]].
+  /** SQL `TRUNCATE TABLE graft.t`: every row deleted as one version,
+    * the same body as SQL `DELETE FROM graft.t` ([[GraftLogDml]]).
     */
-  override def newRowLevelOperationBuilder(
-      info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
-      : org.apache.spark.sql.connector.write.RowLevelOperationBuilder = {
-    require(!cdc,
-      "graftlog: row-level operations are not valid on a change-feed read")
-    require(!tableSchema.fieldNames.contains(GraftLog.FileCol),
-      s"graftlog: row-level SQL needs the ${GraftLog.FileCol} metadata " +
-        "column, which this table's own schema shadows")
-    new GraftLogRowLevelBuilder(root, conf, info)
-  }
-
-  /** SQL `DELETE FROM graft.t WHERE ...` (and TRUNCATE, which arrives
-    * as AlwaysTrue): expressible predicates route to the row-level
-    * rewrite ([[GraftLogOps.deleteFromLog]] — only the files containing
-    * matching rows are rewritten, one remove+add version, CDC-visible).
-    * Inexpressible predicates rewrite through the group-based row-level
-    * plan instead (Spark's OptimizeMetadataOnlyDeleteFromTable picks
-    * this path only when canDeleteWhere holds).
-    */
-  override def canDeleteWhere(filters: Array[Filter]): Boolean =
-    !cdc && asOfVersion >= 1 &&
-      filters.forall(f => GraftLogOps.filterToColumn(f).isDefined)
-
-  override def deleteWhere(filters: Array[Filter]): Unit = {
-    require(!cdc, "graftlog: cannot DELETE FROM a change-feed read")
-    val spark = SparkSession.active
-    val cond = filters.flatMap(GraftLogOps.filterToColumn)
-      .reduceOption(_ && _)
-      .getOrElse(org.apache.spark.sql.functions.lit(true))
-    // write-shape choice: copy-on-write (default) rewrites touched
-    // files; merge-on-read commits deletion vectors — the scattered-
-    // delete shape where CoW amplification dominates at 100 TB
-    val mode = spark.conf.getOption(GraftLogOps.DeleteModeConf)
-      .getOrElse(GraftLogOps.DeleteModeCow)
-    GraftLogOps.deleteFromLog(spark, root, cond, mode)
+  override def truncateTable(): Boolean = {
+    require(!cdc, "graftlog: cannot TRUNCATE a change-feed read")
+    GraftLogDml.delete(SparkSession.active, root,
+      org.apache.spark.sql.functions.lit(true))
+    true
   }
 }
 
 class GraftLogScanBuilder(root: String, version: Int, tableSchema: StructType,
     conf: SerializableConfiguration, cdc: Boolean, cdcStart: Int,
     maxVersionsPerTrigger: Option[Int] = None,
-    streamStart: Option[Int] = None, rowLevel: Boolean = false,
-    onBuild: GraftLogScan => Unit = _ => (),
+    streamStart: Option[Int] = None,
     colMap: Map[String, String] = Map.empty)
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters
@@ -1232,15 +1198,8 @@ class GraftLogScanBuilder(root: String, version: Int, tableSchema: StructType,
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     val usable = filters.filter(f => f.references.forall(c =>
       GraftLogStats.fieldAt(dataSchema, colMap.getOrElse(c, c)).isDefined))
-    // COPY-ON-WRITE scans (rowLevel): a row-group skip would drop the
-    // KEPT rows of a partially-matching row group — the rewrite must
-    // read every row of every touched file, so filters participate in
-    // the FILE-level skip only (a wholly-pruned file is neither read
-    // nor removed — still live, still correct)
-    accepted =
-      if (rowLevel) Array.empty
-      else usable.filter(f =>
-        GraftLog.readerPushable(dataSchema, physFilter(f)))
+    accepted = usable.filter(f =>
+      GraftLog.readerPushable(dataSchema, physFilter(f)))
     val acceptedSet = accepted.toSet
     skipOnly = usable.filterNot(acceptedSet.contains)
     filters
@@ -1386,14 +1345,12 @@ class GraftLogScanBuilder(root: String, version: Int, tableSchema: StructType,
       val (meta, data) = pruned.fields.partition(f =>
         GraftLog.synthesized(f.name, cdc, dataSchema))
       val ordered = StructType(data ++ meta)
-      val scan = GraftLogScan(root, version, dataSchema, physSchema(ordered),
+      GraftLogScan(root, version, dataSchema, physSchema(ordered),
         accepted.map(_.toString), accepted.map(physFilter), conf, cdc,
         cdcStart, maxVersionsPerTrigger,
-        skipOnly.map(physFilter), streamStart, rowLevel,
+        skipOnly.map(physFilter), streamStart,
         presented = if (colMap.isEmpty) None else Some(ordered),
         colMap = colMap)
-      onBuild(scan)
-      scan
   }
 }
 
@@ -1461,7 +1418,7 @@ case class GraftLogScan(root: String, version: Int, full: StructType,
     cdc: Boolean, cdcStart: Int,
     maxVersionsPerTrigger: Option[Int] = None,
     skipOnlyFilters: Array[Filter] = Array.empty,
-    streamStart: Option[Int] = None, rowLevel: Boolean = false,
+    streamStart: Option[Int] = None,
     presented: Option[StructType] = None,
     colMap: Map[String, String] = Map.empty,
     tail: Boolean = false)
@@ -1485,51 +1442,22 @@ case class GraftLogScan(root: String, version: Int, full: StructType,
   private var runtimeFilters: Array[Filter] = Array.empty
   private[sources] var runtimeDesc: Array[String] = Array.empty
 
-  /** Runtime GROUP filter on the `_file` metadata column — the one
-    * Spark's row-level commands push after computing which files hold
-    * matched rows. Paths are compared in canonical URI-path form
-    * (scheme/authority rendering varies across filesystems).
-    */
-  private var fileFilter: Option[Set[String]] = None
-
-  private def normPath(p: String): String = new Path(p).toUri.getPath
-
-  /** Attributes runtime filters may target. A COPY-ON-WRITE scan
-    * advertises ONLY the `_file` group identity: Spark's runtime group
-    * filtering builds its pruning key from this exact set, so listing
-    * data columns here would make it prune on a whole-row struct —
-    * inconvertible to a file skip — instead of the file list. Ordinary
-    * scans advertise their OUTPUT columns (DPP on join keys): Spark's
-    * PartitionPruning resolves every advertised name against the scan
-    * relation's output and throws on a miss, so a column pruned away
-    * must not be advertised.
+  /** Attributes runtime filters may target: the scan's OUTPUT columns
+    * (DPP on join keys), in LOGICAL names. Spark's PartitionPruning
+    * resolves every advertised name against the scan relation's output
+    * and throws on a miss, so a column pruned away must not be
+    * advertised.
     */
   override def filterAttributes():
-      Array[org.apache.spark.sql.connector.expressions.NamedReference] = {
-    // advertised in LOGICAL names (Spark resolves them against the
-    // relation's output)
-    val names =
-      if (rowLevel) Array(GraftLog.FileCol)
-      else presented.getOrElse(pruned).fieldNames
-    names.map(org.apache.spark.sql.connector.expressions.Expressions.column)
-  }
+      Array[org.apache.spark.sql.connector.expressions.NamedReference] =
+    presented.getOrElse(pruned).fieldNames
+      .map(org.apache.spark.sql.connector.expressions.Expressions.column)
 
   override def filter(filters: Array[Filter]): Unit = {
-    val (fileFilters, dataFilters) = filters.partition(
-      _.references.contains(GraftLog.FileCol))
-    if (!full.fieldNames.contains(GraftLog.FileCol)) fileFilters.foreach {
-      case In(GraftLog.FileCol, vs) if vs != null =>
-        val set = vs.iterator.collect { case s: String => normPath(s) }
-          .toSet
-        fileFilter = Some(fileFilter.fold(set)(_ intersect set))
-      case EqualTo(GraftLog.FileCol, v: String) =>
-        val set = Set(normPath(v))
-        fileFilter = Some(fileFilter.fold(set)(_ intersect set))
-      case _ => () // conservative: unknown shapes keep every file
-    }
     // runtime filters arrive in LOGICAL names — rename to physical
-    // before anything file-facing consumes them
-    val usable = dataFilters
+    // before anything file-facing consumes them; one on a column the
+    // files do not hold (`_file`, the CDC tags) skips nothing
+    val usable = filters
       .map(f => if (colMap.isEmpty) f else GraftLog.renameFilter(f, colMap))
       .filter(f => f.references.forall(full.fieldNames.contains))
     if (usable.nonEmpty) {
@@ -1538,18 +1466,12 @@ case class GraftLogScan(root: String, version: Int, full: StructType,
     }
   }
 
-  /** Static + runtime filters for the reader's row-group skip. A
-    * COPY-ON-WRITE scan passes none: the rewrite must read every row of
-    * every touched file (file-level skip still applies).
-    */
+  /** Static + runtime filters for the reader's row-group skip. */
   private def readerFilters: Array[Filter] =
-    if (rowLevel) Array.empty
-    else staticFilters ++
-      runtimeFilters.filter(GraftLog.readerPushable(full, _))
+    staticFilters ++ runtimeFilters.filter(GraftLog.readerPushable(full, _))
 
   /** Every filter usable for the manifest-stats file skip (wider than
-    * the reader's set: decimal filters and every filter of a
-    * copy-on-write scan included).
+    * the reader's set: decimal filters included).
     */
   private def skipFilters: Array[Filter] =
     staticFilters ++ skipOnlyFilters ++ runtimeFilters
@@ -1688,21 +1610,6 @@ case class GraftLogScan(root: String, version: Int, full: StructType,
 
   override def toBatch: Batch = this
 
-  /** Files a copy-on-write plan actually covered (manifest-relative,
-    * post every skip including the runtime group filter) — the EXACT
-    * remove set the paired replace-data write commits: a file that was
-    * never read must never be removed, and every file whose rows were
-    * fed to the rewrite must be. POSITIVE provenance invariant
-    * (upgrading the one-scan refusal): re-planning may only ever
-    * NARROW the set (runtime filters arriving), so the final plan —
-    * the one whose tasks actually execute — is provably a subset of
-    * every earlier one; a plan that ADDED files would make the
-    * captured remove set untrustworthy and refuses before any task
-    * runs.
-    */
-  @volatile private[sources] var plannedRelFiles: Seq[String] = Seq.empty
-  @volatile private[sources] var planCount: Int = 0
-
   /** Files whose statistics rule out every matching row under the
     * combined (static + runtime) filters are never scheduled at all —
     * at 100 TB a selective key predicate over a clustered log version
@@ -1725,27 +1632,8 @@ case class GraftLogScan(root: String, version: Int, full: StructType,
       val e = pf.entry
       // stats describe the UNMASKED file — a superset of the served
       // rows, so the skip stays conservative under DVs
-      fileFilter.forall(_.contains(normPath(e.path))) &&
-        e.stats.forall(st =>
-          filters.forall(f => GraftLogStats.mayMatch(full, st, e.rows, f)))
-    }
-    if (rowLevel) this.synchronized {
-      val rel = survivors.map { pf =>
-        val r = pf.entry.path.stripPrefix(s"$root/")
-        require(r != pf.entry.path,
-          s"graftlog row-level scan: ${pf.entry.path} not under $root")
-        r
-      }.distinct
-      if (planCount > 0 && !rel.toSet.subsetOf(plannedRelFiles.toSet))
-        throw new IllegalStateException(
-          "graftlog row-level scan: a re-plan WIDENED the planned " +
-            s"file set (${rel.diff(plannedRelFiles).take(3)
-              .mkString(", ")} appeared) — runtime filtering may only " +
-            "narrow it, so the captured remove set would no longer " +
-            "describe the rows feeding the rewrite; refusing before " +
-            "any task runs")
-      plannedRelFiles = rel
-      planCount += 1
+      e.stats.forall(st =>
+        filters.forall(f => GraftLogStats.mayMatch(full, st, e.rows, f)))
     }
     survivors.flatMap { pf =>
       val e = pf.entry

@@ -303,7 +303,7 @@ object GraftLogWrite {
       }
     }
     // REMOVE-SET revalidation under the claim: a row-level rewrite
-    // (merge/delete/replace-data) computed its remove set against the
+    // (merge/update/delete) computed its remove set against the
     // snapshot it read, but a concurrent rewrite may have replaced one
     // of those files in between — committing the stale remove would
     // silently drop the OTHER writer's rewrite (a lost update). Every

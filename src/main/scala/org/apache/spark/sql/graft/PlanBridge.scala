@@ -1,6 +1,6 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Sort, Statistics}
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.classic.Dataset
@@ -23,6 +23,11 @@ object PlanBridge {
       plan: LogicalPlan): DataFrame =
     Dataset.ofRows(
       s.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** An analysis-time refusal whose message is `message` as written. */
+  def analysisError(message: String): AnalysisException =
+    new AnalysisException(message, None, None, None, None, Map.empty,
+      Array.empty)
 
   /** A checkpointed frame sized by its counted `rows`, not by its source
     * plan's estimate (a join's is the product of its inputs' sizes).

@@ -1,10 +1,10 @@
 import org.apache.spark.sql.functions._
 
 /** Dev-loop scale probe (not a spec): times each SQL DML statement
-  * through SupportsRowLevelOperations on a bucket-partitioned orders
-  * log at the given scale directory — the 1×/10×/100× ladder PLANS.md
-  * records for the group-filter thesis (rewrite cost scales with
-  * touched files + source, not table size). Mirrors the q_log_dml
+  * (the GraftLogDml front door) on a bucket-partitioned orders log at
+  * the given scale directory — the 1×/10×/100× ladder PLANS.md records
+  * for the touched-files thesis (rewrite cost scales with touched
+  * files + source, not table size). Mirrors the q_log_dml
   * fixture shape exactly (bucket = key mod 8; UPDATE keys ≡3 mod 16,
   * DELETE ≡11 mod 16, MERGE ≡5 mod 16).
   */

@@ -53,7 +53,7 @@ class GraftLogColumnMapNestedSpec extends SparkSpecBase {
     val v2 = spark.sql("SELECT meta.score FROM graft.n1 VERSION AS OF 2")
     assert(v2.collect().map(_.getDouble(0)).sum
       === (0 until 10).sum.toDouble)
-    // DML through the renamed field (replace-data reads+writes mapped)
+    // DML through the renamed field (the rewrite reads+writes mapped)
     spark.sql("UPDATE graft.n1 SET meta = " +
       "named_struct('amount', meta.amount * 10, 'tag', meta.tag) " +
       "WHERE id = 3")

@@ -153,9 +153,9 @@ class GraftLogColumnMapSpec extends SparkSpecBase {
     spark.sql("INSERT INTO graft.m SELECT id, id % 4, CAST(id * 10 AS " +
       "DOUBLE) FROM range(50, 100)")                              // v3
     spark.sql("ALTER TABLE graft.m RENAME COLUMN v TO amount")    // v4
-    // SQL UPDATE through the renamed column (group-based rewrite)
+    // SQL UPDATE through the renamed column (copy-on-write rewrite)
     spark.sql("UPDATE graft.m SET amount = -amount WHERE id % 16 = 3")
-    // SQL DELETE (metadata path on an expressible predicate)
+    // SQL DELETE
     spark.sql("DELETE FROM graft.m WHERE id = 7")
     // utility merge with the RENAMED logical schema
     import spark.implicits._

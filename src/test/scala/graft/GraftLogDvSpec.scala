@@ -150,7 +150,7 @@ class GraftLogDvSpec extends SparkSpecBase {
   }
 
   test("SQL front door: DELETE routes merge-on-read via the session " +
-      "conf; a later SQL UPDATE (replace-data) over the DV'd table " +
+      "conf; a later SQL UPDATE (copy-on-write) over the DV'd table " +
       "reads masked and its rewrite folds the vector for touched files") {
     val wh = Files.createTempDirectory("graft_dv_sql").toString
     spark.conf.set("spark.sql.catalog.graft",
@@ -164,16 +164,14 @@ class GraftLogDvSpec extends SparkSpecBase {
     spark.sql("INSERT INTO graft.t_dv SELECT * FROM dv_src")
     try {
       spark.conf.set(GraftLogOps.DeleteModeConf, GraftLogOps.DeleteModeMor)
-      // the predicate must be data-source-Filter expressible to route
-      // through deleteWhere (an arithmetic predicate takes the
-      // replace-data path instead); id < 25 masks 6-7 rows in each of
-      // the 4 bucket files — sparse everywhere
+      // id < 25 masks 6-7 rows in each of the 4 bucket files — sparse
+      // everywhere
       spark.sql("DELETE FROM graft.t_dv WHERE id < 25")
       val root = s"$wh/t_dv"
       val latest = GraftLog.latestVersion(conf, root)
       assert(GraftLog.liveState(conf, root, latest).dvs.size === 4)
       assert(spark.table("graft.t_dv").count() === 375L)
-      // replace-data UPDATE over the DV'd table: reads masked, and its
+      // copy-on-write UPDATE over the DV'd table: reads masked, and its
       // remove+add of the touched (bucket=3) file folds that vector
       spark.sql("UPDATE graft.t_dv SET v = -1.0 WHERE id % 16 = 11")
       assert(spark.table("graft.t_dv")

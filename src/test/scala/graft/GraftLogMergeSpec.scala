@@ -107,10 +107,9 @@ class GraftLogMergeSpec extends SparkSpecBase {
     assert(GraftLog.latestVersion(conf, legacy) === 1)
   }
 
-  test("SQL DELETE FROM routes through the metadata-path rewrite for " +
-      "expressible predicates (one remove+add version, CDC-visible); " +
-      "TRUNCATE empties the table; inexpressible predicates take the " +
-      "group-based row-level plan") {
+  test("SQL DELETE FROM runs the row-level delete for expressible and " +
+      "inexpressible predicates alike (one remove+add version, " +
+      "CDC-visible); TRUNCATE empties the table") {
     val root = mkTable()
     val parent = root.substring(0, root.lastIndexOf('/'))
     val name = root.substring(root.lastIndexOf('/') + 1)
@@ -128,9 +127,9 @@ class GraftLogMergeSpec extends SparkSpecBase {
       .filter(_.action == "remove")
     assert(removes.size === 1, removes.map(_.file).mkString(", "))
     assert(removes.head.file.contains("bucket=2"), removes.head.file)
-    // an inexpressible predicate can't use the metadata path — it runs
-    // as the group-based row-level rewrite instead (GraftLogSqlDmlSpec
-    // pins that path's group discipline in detail)
+    // an inexpressible predicate prunes no file on statistics; the
+    // match pass still rewrites only the files holding matched rows
+    // (GraftLogSqlDmlSpec pins that in detail)
     spark.sql(s"DELETE FROM graft.`$name` WHERE id % 2 = 0")
     assert(GraftLog.latestVersion(conf, root) === 3)
     assert(spark.sql(s"SELECT id FROM graft.`$name`")

@@ -6,12 +6,14 @@ import org.apache.spark.sql.functions._
 
 import graft.sources.{GraftLog, GraftLogWrite}
 
-/** SQL DML over the log through SupportsRowLevelOperations: UPDATE,
-  * MERGE INTO, and rewrite-path DELETE run as group-based copy-on-write
+/** SQL DML over the log through the [[graft.sources.GraftLogDml]] front
+  * door: UPDATE, the keyed-upsert MERGE INTO and DELETE run
+  * [[graft.sources.GraftLogOps]]' row-level bodies as copy-on-write
   * versions — only the files containing matched rows are rewritten
-  * (pinned via the manifest's remove rows, which prove the runtime
-  * `_file` group filter reached the scan), results match the command's
-  * semantics row-for-row, and a concurrent rewrite of the same files
+  * (pinned via the manifest's remove rows, which prove the match pass,
+  * not file statistics, chose them), results match the command's
+  * semantics row-for-row, other MERGE shapes and nested assignments
+  * refuse at analysis, and a concurrent rewrite of the same files
   * refuses at commit instead of losing an update. The `_file` metadata
   * column itself is part of the read surface.
   */
@@ -57,11 +59,11 @@ class GraftLogSqlDmlSpec extends SparkSpecBase {
   }
 
   test("SQL UPDATE rewrites ONLY the files holding matched rows (the " +
-      "runtime _file group filter, not stats, narrows bounds-overlapping " +
-      "files), updates them exactly, and commits one remove+add version") {
+      "match pass, not stats, narrows bounds-overlapping files), " +
+      "updates them exactly, and commits one remove+add version") {
     val (root, name) = mkTable()
     // ids 5 and 9 both live in the bucket=1 file, but [5, 9] overlaps
-    // every file's id bounds — only the runtime group filter can narrow
+    // every file's id bounds — only the match pass can narrow
     // the rewrite to one file
     spark.sql(s"UPDATE graft.`$name` SET v = -1.0 WHERE id IN (5, 9)")
     assert(GraftLog.latestVersion(conf, root) === 2)
@@ -110,8 +112,8 @@ class GraftLogSqlDmlSpec extends SparkSpecBase {
       "rewrites through the row-level plan; TRUNCATE-then-read and " +
       "time travel stay intact") {
     val (root, name) = mkTable()
-    // id % 10 = 3 is not a data-source filter: canDeleteWhere refuses,
-    // the group-based rewrite handles it
+    // id % 10 = 3 is not a data-source filter: no file prunes on
+    // statistics, and the match pass finds the files to rewrite
     spark.sql(s"DELETE FROM graft.`$name` WHERE id % 10 = 3")
     assert(GraftLog.latestVersion(conf, root) === 2)
     val got = spark.sql(s"SELECT id FROM graft.`$name`")
@@ -126,6 +128,78 @@ class GraftLogSqlDmlSpec extends SparkSpecBase {
     // v1 still time-travels complete
     assert(spark.read.format("graftlog").option("path", root)
       .option("version", 1).load().count() === 100L)
+  }
+
+  /** The analyzed plan of `sql`, without running it. */
+  private def analyze(sql: String) = {
+    val st = spark.sessionState
+    st.analyzer.executeAndCheck(st.sqlParser.parsePlan(sql),
+      new org.apache.spark.sql.catalyst.QueryPlanningTracker)
+  }
+
+  /** `sql` refuses at analysis with a message holding `shape`, and
+    * running it commits no version of the table at `root`.
+    */
+  private def refused(root: String, sql: String, shape: String): Unit = {
+    val before = GraftLog.latestVersion(conf, root)
+    val e = intercept[Exception](analyze(sql))
+    assert(e.getMessage.contains(shape), e.getMessage)
+    intercept[Exception](spark.sql(sql))
+    assert(GraftLog.latestVersion(conf, root) === before, sql)
+  }
+
+  test("MERGE shapes other than the keyed upsert refuse at analysis, " +
+      "name the supported shape and commit nothing") {
+    import spark.implicits._
+    val (root, name) = mkTable()
+    Seq((2L, 2L, -2.0), (1002L, 2L, -1002.0))
+      .toDF("id", "bucket", "v").createOrReplaceTempView("shape_src")
+    val upsert = "WHEN MATCHED THEN UPDATE SET * " +
+      "WHEN NOT MATCHED THEN INSERT *"
+    val into = s"MERGE INTO graft.`$name` t USING shape_src s"
+    Seq(
+      s"$into ON t.id = s.id WHEN MATCHED AND s.v < 0 THEN UPDATE SET * " +
+        "WHEN NOT MATCHED THEN INSERT *",
+      s"$into ON t.id = s.id WHEN MATCHED THEN DELETE " +
+        "WHEN NOT MATCHED THEN INSERT *",
+      s"$into ON t.id = s.id $upsert " +
+        "WHEN NOT MATCHED BY SOURCE THEN DELETE",
+      s"$into ON t.id < s.id $upsert"
+    ).foreach(refused(root, _, upsert))
+    assert(spark.sql(s"SELECT * FROM graft.`$name`").count() === 100L)
+  }
+
+  test("an UPDATE that assigns a nested field refuses at analysis and " +
+      "commits nothing") {
+    mkTable()
+    val wh = Files.createTempDirectory("graft_dml_nested").toString
+    spark.conf.set("spark.sql.catalog.graft.warehouse", wh)
+    spark.sql("CREATE TABLE graft.nested_upd (id BIGINT, " +
+      "meta STRUCT<score: DOUBLE, tag: STRING>)")
+    spark.sql("INSERT INTO graft.nested_upd SELECT 1L, " +
+      "named_struct('score', 0.5D, 'tag', 'a')")
+    val root = s"$wh/nested_upd"
+    refused(root, "UPDATE graft.nested_upd SET meta.score = 0.9D " +
+      "WHERE id = 1", "SET meta = named_struct(")
+  }
+
+  test("SQL MERGE INTO on a table that already holds a matched key twice " +
+      "refuses and commits nothing") {
+    import spark.implicits._
+    val (root, name) = mkTable()
+    // a second copy of id 5 (bucket 1) lands in its own file
+    spark.sql(s"INSERT INTO graft.`$name` SELECT 5L, 1L, 55.0D")
+    Seq((5L, 1L, -5.0), (1005L, 1L, -1005.0))
+      .toDF("id", "bucket", "v").createOrReplaceTempView("dup_src")
+    val before = GraftLog.latestVersion(conf, root)
+    val e = intercept[Exception](spark.sql(
+      s"""MERGE INTO graft.`$name` t USING dup_src s ON t.id = s.id
+         |WHEN MATCHED THEN UPDATE SET *
+         |WHEN NOT MATCHED THEN INSERT *""".stripMargin))
+    assert(e.getMessage.contains("more than one"), e.getMessage)
+    assert(GraftLog.latestVersion(conf, root) === before)
+    assert(spark.sql(s"SELECT v FROM graft.`$name` WHERE id = 5")
+      .collect().map(_.getDouble(0)).sorted.toSeq === Seq(50.0, 55.0))
   }
 
   test("a concurrent rewrite of the same files refuses at commit (the " +

@@ -48,6 +48,29 @@ class GraftLogWriteJobsSpec extends SparkSpecBase {
     landed(root)
   }
 
+  test("a small-source SQL MERGE INTO runs as many Spark jobs as the " +
+      "copy-on-write merge, at most five") {
+    val cowRoot = mkTable("graft_jobs_cmp")
+    val (_, cow) = jobs(GraftLogOps.mergeIntoLog(spark, cowRoot, source,
+      Seq("id"), GraftLogOps.DeleteModeCow))
+    val root = mkTable("graft_jobs_sql")
+    spark.conf.set("spark.sql.catalog.graft",
+      classOf[graft.sources.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.graft.warehouse",
+      root.substring(0, root.lastIndexOf('/')))
+    source.createOrReplaceTempView("jobs_src")
+    val (_, n) = jobs(spark.sql(
+      s"""MERGE INTO graft.`${root.substring(root.lastIndexOf('/') + 1)}` t
+         |USING jobs_src s ON t.id = s.id
+         |WHEN MATCHED THEN UPDATE SET *
+         |WHEN NOT MATCHED THEN INSERT *""".stripMargin))
+    assert(graft.sources.GraftLog.latestVersion(
+      spark.sessionState.newHadoopConf(), root) === 2)
+    assert(n <= 5, s"$n jobs")
+    assert(n === cow, s"SQL $n jobs, copy-on-write $cow")
+    landed(root)
+  }
+
   test("a small-source merge-on-read merge runs at most seven Spark jobs") {
     val root = mkTable("graft_jobs_mor")
     val (v, n) = jobs(GraftLogOps.mergeIntoLog(spark, root, source,

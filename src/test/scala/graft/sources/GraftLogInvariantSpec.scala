@@ -4,18 +4,11 @@ import java.nio.file.Files
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.SerializableConfiguration
 
 /** Internal invariants of the log's commit/plan machinery, pinned from
   * inside the package:
   *
-  *  1. REPLACE-DATA PROVENANCE — the copy-on-write remove set is
-  *     trustworthy because (a) one operation builds ONE scan (a second
-  *     build refuses at commit) and (b) re-planning that scan may only
-  *     NARROW its file set (a widened re-plan refuses before any task
-  *     runs). Together: the committed removes are exactly the files
-  *     whose rows fed the rewrite.
-  *  2. PLAN-CACHE KEYS — manifests/checkpoints cache on the FILE's
+  *  1. PLAN-CACHE KEYS — manifests/checkpoints cache on the FILE's
   *     (path, length, mtime). That is sound because committed log
   *     objects are IMMUTABLE (nothing in the protocol ever rewrites
   *     one in place); the spec demonstrates the hazard the invariant
@@ -23,7 +16,7 @@ import org.apache.spark.util.SerializableConfiguration
   *     stale — the documented object-store assumption) and that the
   *     protocol's own maintenance operations never touch a committed
   *     manifest's identity.
-  *  3. ONE DECODER — a snapshot read equals [[GraftLogOps.maskedParquet]]
+  *  2. ONE DECODER — a snapshot read equals [[GraftLogOps.maskedParquet]]
   *     (Spark's reader plus the deletion-vector mask, what every
   *     rewrite reads) over the same live files, on the fixtures that
   *     stress decoding: deletion vectors, widened columns, nested
@@ -42,47 +35,6 @@ class GraftLogInvariantSpec extends graft.SparkSpecBase {
         .option("schema", "id BIGINT, v DOUBLE").mode("append").save()
     }
     root
-  }
-
-  test("a WIDENED re-plan of a row-level scan refuses loudly (runtime " +
-      "filtering may only narrow the planned file set)") {
-    val root = mkTable("graft_prov")
-    val schema = GraftLog.inferSchema(conf, root, 2)
-    val scan = GraftLogScan(root, 2, schema, schema,
-      Array.empty, Array.empty,
-      new SerializableConfiguration(conf), cdc = false, cdcStart = 1,
-      rowLevel = true)
-    scan.planInputPartitions()
-    assert(scan.plannedRelFiles.size >= 2) // multiple part-files live
-    // simulate Spark having first planned NARROW (post-group-filter),
-    // then re-planning wider: the provenance guard must refuse
-    scan.plannedRelFiles = scan.plannedRelFiles.take(1)
-    val err = intercept[IllegalStateException] {
-      scan.planInputPartitions()
-    }
-    assert(err.getMessage.contains("WIDENED"))
-  }
-
-  test("a SECOND scan built for one row-level operation refuses at " +
-      "commit (the one-scan contract the remove-set derivation needs)") {
-    val root = mkTable("graft_prov2")
-    val op = new GraftLogRowLevelOperation(root,
-      new SerializableConfiguration(conf),
-      org.apache.spark.sql.connector.write.RowLevelOperation.Command
-        .DELETE)
-    val opts = new org.apache.spark.sql.util.CaseInsensitiveStringMap(
-      java.util.Collections.emptyMap())
-    op.newScanBuilder(opts).build()
-    op.newScanBuilder(opts).build()
-    val write = new GraftLogReplaceDataWrite(root,
-      GraftLog.inferSchema(conf, root, 2),
-      GraftLog.inferSchema(conf, root, 2),
-      s"$root/data/w_replace_test", new SerializableConfiguration(conf),
-      op)
-    val err = intercept[IllegalStateException] {
-      write.commit(Array.empty)
-    }
-    assert(err.getMessage.contains("scans were built"))
   }
 
   test("DELETE candidate pruning: a translatable condition prunes to " +
